@@ -73,12 +73,22 @@ class DedupConfig:
     shuffle_partitions: int = 32
     arrow_batch_rows: int = 2048  # bound UDF working-set memory
     cc_max_iters: int = 50        # connected-components fixpoint guard
-    # Edge sets at or below this ride a driver union-find (16 B/edge ->
-    # 32 MB at the default, the same order as what a broadcast join ships
-    # through the driver); larger sets take the distributed
-    # large-star/small-star loop. Output is bit-identical either way —
-    # this is a physical-strategy knob like autoBroadcastJoinThreshold,
-    # and the chosen path is logged to metrics.json (no silent decisions).
+    # The driver budget of two two-path operators. (1) Connected
+    # components: edge sets at or below this ride a driver union-find
+    # (16 B/edge -> 32 MB at the default, the same order as what a
+    # broadcast join ships through the driver); larger sets take the
+    # distributed large-star/small-star loop. (2) Transcript delta
+    # admission (functions/incremental.py): a delta is admitted on the
+    # driver when, on narrow columns, its rows x ``bands``, the touched
+    # corpus bucket memberships, the candidate pair rows, the pair list
+    # and the touched label rows each fit this budget, and the shingles
+    # and minhash of the candidate endpoints (sized from n_tokens before
+    # they are fetched) fit 16 B x this budget; otherwise the distributed
+    # plan runs. The admission crossover was not measured: the budget is
+    # reused, not tuned. Output is bit-identical either way — a
+    # physical-strategy knob like autoBroadcastJoinThreshold; 0 forces
+    # both distributed paths. The chosen path is logged (metrics.json;
+    # the ``stats`` dicts).
     cc_local_edges: int = 2_000_000
 
     def __post_init__(self) -> None:

@@ -3,12 +3,13 @@ admission pass a web-scale training-data pipeline actually runs.
 
 Reference analog: pcompress's pipe/global mode probes a PERSISTENT
 segmented similarity index instead of rebuilding it per invocation
-(/root/reference/rabin/global/index.c:140-151); the streaming twin of this
-module (streaming/dedup_stream._near_dup_process) does the same per
-micro-batch. This is the BATCH form: a new delta of documents is admitted
-against an existing corpus without re-banding or re-pairing the corpus.
+(rabin/global/index.c:140-151); the streaming twin of this module
+(streaming/dedup_stream._near_dup_process) does the same per micro-batch.
+This is the BATCH form: a new delta is admitted against an existing corpus
+without re-banding or re-pairing the corpus.
 
-Scale shape (the whole point at 100 TB):
+Scale shape, distributed path (the document twins always; the transcript
+functions above the driver budget):
   - signatures are computed for the DELTA only when corpus signatures are
     supplied (at scale they are persisted stage tables from the corpus's
     own dedup run — pass them via ``corpus_sig``/``corpus_bands``);
@@ -23,6 +24,29 @@ Scale shape (the whole point at 100 TB):
     delta endpoint. The DuckDB oracle exploits that equivalence: it
     computes the full pair set in SQL and filters on the endpoint
     predicate, pinning the incremental plan to full-batch semantics.
+
+Scale shape, driver path (the transcript functions, small deltas): on
+perfbench's ingest_delta workload a distributed admission is ~180 Spark
+jobs of fixed scheduling cost on a few hundred rows, slower than
+rebuilding the corpus.
+When the delta and what it touches fit the driver budget
+(``cfg.cc_local_edges`` — the same budget that puts connected components
+on its driver union-find), each function instead pulls its inputs in a
+few bounded fetches — the delta's narrow signature rows, ONE map-only
+scan of the corpus signature table for the bucket memberships and
+content-hash rows the delta touches, the shingles and minhash of the
+candidate endpoints only, the pair list, the touched label rows — and
+computes the same answer on the driver with the same rules (bucket
+salting and cap, est-Jaccard prefilter, exact Jaccard, content-hash star,
+first-occurrence admission, union-find). Each fetch is either capped by
+``limit(n + 1)`` on narrow columns or sized in advance from n_tokens, so
+no wide array is fetched before the path is decided. Driver key sets
+reach the executors as broadcast relations. The result returns as a
+small local DataFrame, so writing it is one job. A step over budget
+discards what it fetched and the distributed plan runs unchanged;
+``cc_local_edges=0`` forces it. Both paths are bit-identical
+(tests/test_incremental_transcripts.py pins the parity), and the
+optional ``stats`` dict records which one ran and why.
 """
 
 from __future__ import annotations
@@ -272,52 +296,300 @@ def incremental_clusters(
     return untouched.select("doc_id", "cluster_id").unionByName(cc)
 
 
+# ---- transcript driver path -------------------------------------------
+_PAIR_SCHEMA = ("conv_id_a string, conv_id_b string, jaccard double, "
+               "match_kind string, ih_a long, ih_b long")
+# Driver bytes per budget unit for the one wide fetch (shingles + minhash
+# of the candidate endpoints): the 16 B/edge of connected components' edge
+# fetch, so the default budget bounds it at 32 MB.
+_BYTES_PER_EDGE = 16
+
+
+def _fetch(df: DataFrame, limit: int):
+    """At most ``limit + 1`` rows of ``df`` as pandas — one bounded job. A
+    result longer than ``limit`` means the frame is over budget."""
+    return df.limit(limit + 1).toPandas()
+
+
+def _fetch_with_ids(pairs: DataFrame, cols: tuple, ids: DataFrame, limit: int):
+    """The string ``cols`` of ``pairs`` and the ``conv_id`` of ``ids`` in
+    ONE bounded job of at most 2 x ``limit`` + 1 rows: (pair rows, id
+    list). If the fetch was cut, one side holds more than ``limit``."""
+    blank = [F.lit(None).cast("string").alias(c) for c in cols[1:]]
+    rows = _fetch(
+        pairs.select(*cols, F.lit(False).alias("is_id")).unionByName(
+            ids.select(F.col("conv_id").alias(cols[0]), *blank,
+                       F.lit(True).alias("is_id"))),
+        2 * limit)
+    is_id = rows["is_id"].to_numpy(dtype=bool)
+    return rows.loc[~is_id, list(cols)], rows.loc[is_id, cols[0]].tolist()
+
+
+def _where_in(df: DataFrame, col: str, keys, negate: bool = False) -> DataFrame:
+    """Rows of ``df`` whose ``col`` is (``negate``: is not) in the driver
+    key collection, shipped as a broadcast relation: a map-only semi (anti)
+    join, with no key literals in the plan."""
+    import pandas as pd
+
+    dtype = df.schema[col].dataType.simpleString()
+    keys = pd.DataFrame({col: sorted(set(keys))},
+                        dtype="int64" if dtype == "bigint" else object)
+    rel = df.sparkSession.createDataFrame(keys, f"{col} {dtype}")
+    return df.join(F.broadcast(rel), col, "left_anti" if negate else "left_semi")
+
+
+def _band_hashes(sig: DataFrame, cfg: DedupConfig):
+    """The per-row band-key array: the stored ``band_hashes`` column when
+    present, else the identical expression compute_signatures writes."""
+    if "band_hashes" in sig.columns:
+        return F.col("band_hashes")
+    r = cfg.rows
+    return F.expr(f"transform(sequence(0, {cfg.bands - 1}), "
+                  f"b -> xxhash64(b, slice(minhash, b * {r} + 1, {r})))")
+
+
+def _delta_keys(drows, cfg: DedupConfig):
+    """The delta's probe keys (ih, b, h): one per band above the shingle
+    floor, like band_explode, and for every row the content key
+    (b = ``bands``, h = xxhash64(content_hash))."""
+    import numpy as np
+    import pandas as pd
+
+    keyed = drows[drows["n_tokens"] >= cfg.shingle_k]
+    bh = (np.stack(keyed["bh"].to_numpy()) if len(keyed)
+          else np.empty((0, cfg.bands), dtype=np.int64))
+    return pd.DataFrame({
+        "ih": np.concatenate([
+            np.repeat(keyed["id_hash"].to_numpy(dtype=np.int64), cfg.bands),
+            drows["id_hash"].to_numpy(dtype=np.int64)]),
+        "b": np.concatenate([np.tile(np.arange(cfg.bands), len(keyed)),
+                             np.full(len(drows), cfg.bands)]).astype(np.int32),
+        "h": np.concatenate([bh.ravel(), drows["ch_key"].to_numpy()]
+                            ).astype(np.int64),
+    })
+
+
+def _corpus_hits(csig: DataFrame, dkeys, cfg: DedupConfig) -> DataFrame:
+    """One map-only pass over the corpus signature table, narrow columns
+    only, probed with ONE broadcast relation of the delta's keys
+    (_delta_keys): (id_hash, n_tokens, band_idx, band_hash) for every
+    membership of a bucket the delta touches (above the shingle floor),
+    and, with band_idx = ``bands``, (id_hash, n_tokens, conv_id,
+    content_hash) for every row whose content key matches the delta's."""
+    keys = csig.sparkSession.createDataFrame(
+        dkeys[["b", "h"]].drop_duplicates().set_axis(
+            ["band_idx", "band_hash"], axis=1),
+        "band_idx int, band_hash long")
+    is_ch = F.col("band_idx") == cfg.bands
+    return (
+        csig.select("id_hash", "n_tokens", "conv_id", "content_hash",
+                    F.posexplode(F.concat(_band_hashes(csig, cfg),
+                                          F.array(F.xxhash64("content_hash"))))
+                    .alias("band_idx", "band_hash"))
+        .where(is_ch | (F.col("n_tokens") >= cfg.shingle_k))
+        .join(F.broadcast(keys), ["band_idx", "band_hash"], "left_semi")
+        .select("id_hash", "n_tokens", "band_idx", "band_hash",
+                F.when(is_ch, F.col("conv_id")).alias("conv_id"),
+                F.when(is_ch, F.col("content_hash")).alias("content_hash"))
+    )
+
+
+def _driver_candidates(dkeys, hits, d_ih: set, cfg: DedupConfig, budget: int):
+    """Candidate pairs (a, b), a < b signed, with >= 1 delta endpoint, from
+    the full membership of every bucket the delta touches — bucket_members'
+    salting, signed sort and cap, then each delta member x every other
+    member of its capped bucket: O(delta members x cap), the same pair set
+    as bucket_pairs restricted to a delta endpoint. Self pairs (a replayed
+    row listed twice) are dropped; near_pairs drops them anyway, for their
+    shared content hash. Returns None when the pair rows would exceed
+    ``budget``, with the pair row count."""
+    import numpy as np
+    import pandas as pd
+
+    cmem = hits.loc[hits["band_idx"] < cfg.bands,
+                    ["id_hash", "band_idx", "band_hash"]]
+    mem = pd.concat([cmem.set_axis(["ih", "b", "h"], axis=1),
+                     dkeys[dkeys["b"] < cfg.bands]], ignore_index=True)
+    raw = mem.groupby(["b", "h"])["ih"].transform("size").to_numpy()
+    # pmod(id_hash, ceil(raw / cap)) == 0; the divisor is 1 below the cap
+    mem = mem[mem["ih"].to_numpy() % -(-raw // cfg.bucket_cap) == 0]
+    mem = mem.sort_values(["b", "h", "ih"])
+    mem = mem[mem.groupby(["b", "h"]).cumcount().to_numpy() < cfg.bucket_cap]
+    is_d = mem["ih"].isin(d_ih).to_numpy()
+    size = mem.groupby(["b", "h"])["ih"].transform("size").to_numpy()
+    n_rows = int((size[is_d] - 1).sum())
+    if n_rows > budget:
+        return None, n_rows
+    pr = mem[is_d].merge(mem, on=["b", "h"], suffixes=("_x", "_y"))
+    x, y = pr["ih_x"].to_numpy(), pr["ih_y"].to_numpy()
+    keep = x != y
+    cand = pd.DataFrame({"a": np.minimum(x, y)[keep], "b": np.maximum(x, y)[keep]})
+    return cand.drop_duplicates(), n_rows
+
+
+def _verify(cand, wide, cfg: DedupConfig) -> list[tuple]:
+    """operators.verify.near_pairs on the driver: est-Jaccard prefilter,
+    the content-hash exclusion, exact Jaccard, lexicographic conv_id order."""
+    import numpy as np
+
+    by_ih = dict(zip(wide["id_hash"].tolist(), wide.itertuples(index=False)))
+    out = []
+    for x, y in sorted(zip(cand["a"].tolist(), cand["b"].tolist())):
+        a, b = by_ih[x], by_ih[y]
+        agree = np.count_nonzero(np.asarray(a.minhash) == np.asarray(b.minhash))
+        if (int(agree) / cfg.num_perm < cfg.minhash_prefilter
+                or a.content_hash == b.content_hash):
+            continue
+        inter = np.intersect1d(a.shingles, b.shingles).size
+        union = len(a.shingles) + len(b.shingles) - inter
+        jac = inter / union if union > 0 else 1.0
+        if jac < cfg.jaccard_threshold:
+            continue
+        if a.conv_id > b.conv_id:
+            a, b = b, a
+        out.append((a.conv_id, b.conv_id, jac, "near",
+                    int(a.id_hash), int(b.id_hash)))
+    return out
+
+
+def _exact_star(drows, hits, d_ih: set, cfg: DedupConfig) -> list[tuple]:
+    """exact_pairs' star over the content groups the delta touches, kept
+    where an endpoint is a delta row. A corpus row whose content key only
+    collides with the delta's forms a group without a delta row: no edge."""
+    import pandas as pd
+
+    cols = ["conv_id", "id_hash", "content_hash"]
+    rows = pd.concat([hits.loc[hits["band_idx"] == cfg.bands, cols], drows[cols]])
+    exact = set()
+    for _, grp in rows.groupby("content_hash"):
+        group = sorted(zip(grp["conv_id"], grp["id_hash"].tolist()))
+        rep, rep_ih = group[0]
+        for cid, ih in group[1:]:
+            if cid != rep and (ih in d_ih or rep_ih in d_ih):
+                exact.add((rep, cid, 1.0, "exact", rep_ih, ih))
+    return sorted(exact)
+
+
 def incremental_transcript_pairs(
     corpus_tr: DataFrame,
     delta_tr: DataFrame,
     cfg: DedupConfig | None = None,
     corpus_sig: DataFrame | None = None,
     delta_sig: DataFrame | None = None,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Delta-vs-corpus admission for the PRIMARY axis: verified duplicate
-    pairs (conv_id_a, conv_id_b, jaccard, match_kind) between a delta of
-    new conversations and (corpus ∪ delta), every pair with >= 1 delta
-    endpoint — the batch daily-ingest form of the transcript pipeline
-    (the streaming twin is streaming/dedup_stream._near_dup_process; the
-    documents twin is incremental_lsh_pairs above). At the 10^12-turn
-    design point the corpus pipeline runs once and each day's
+    pairs (conv_id_a, conv_id_b, jaccard, match_kind, ih_a, ih_b) between
+    a delta of new conversations and (corpus ∪ delta), every pair with
+    >= 1 delta endpoint — the batch daily-ingest form of the transcript
+    pipeline (the streaming twin is streaming/dedup_stream._near_dup_process;
+    the documents twin is incremental_lsh_pairs above). At the
+    10^12-turn design point the corpus pipeline runs once and each day's
     conversations are admitted against its checkpointed stage tables —
     corpus text is never re-read, re-shingled, or re-paired.
 
     ``corpus_sig``/``delta_sig``: precomputed signature tables
     (operators.signatures.compute_signatures; the pipeline checkpoints
     corpus_sig under work_dir/signatures). When omitted they are computed
-    here — correct but O(corpus) for the corpus side.
+    here — correct but O(corpus) for the corpus side. ``stats`` (optional
+    dict) receives ``path`` ('driver' or 'distributed'), ``why``, and the
+    fetched row counts.
 
-    Scale shape (same as the doc twin): the corpus band table is derived
-    map-only from the signature table's precomputed ``band_hashes`` column
-    (a bands x 8 B scan — no kernel re-run) and probed with a BROADCAST of
-    the delta's distinct bucket keys, so only corpus rows in TOUCHED
-    buckets survive a map-side filter; hot-bucket salting/capping sees the
-    union membership of each touched bucket, which is bit-identical to the
-    full run's membership there — emitted pairs are EXACTLY the full run's
-    pairs restricted to >= 1 delta endpoint (the DuckDB oracle pins that
+    Scale shape, driver path: every decision is made from narrow columns
+    before any wide array leaves the executors. (1) The delta's narrow
+    rows (ids, n_tokens, content hash, band keys) — at most
+    ``cfg.cc_local_edges // bands`` rows. (2) One map-only scan of the
+    corpus signature table, probed with one broadcast relation of the
+    delta's band keys and content keys, for the bucket memberships and
+    content-hash rows the delta touches (_corpus_hits) — at most
+    ``cfg.cc_local_edges`` rows. (3)
+    Candidates on the driver (_driver_candidates) — at most
+    ``cfg.cc_local_edges`` pair rows. (4) Shingles and minhash of the
+    candidate endpoints only, fetched when their size estimated from
+    n_tokens fits ``_BYTES_PER_EDGE x cfg.cc_local_edges`` bytes; then
+    _verify and _exact_star. Distributed path (any step over budget): the
+    corpus band table is derived map-only from the signature table's
+    precomputed ``band_hashes`` column (a bands x 8 B scan — no kernel
+    re-run) and probed with a BROADCAST of the delta's distinct bucket
+    keys, so only corpus rows in TOUCHED buckets survive a map-side
+    filter; hot-bucket salting/capping sees the union membership of each
+    touched bucket, which is bit-identical to the full run's membership
+    there. Either way the emitted pairs are EXACTLY the full run's pairs
+    restricted to >= 1 delta endpoint (the DuckDB oracle pins that
     equivalence). Verification rides operators.verify.near_pairs (bare
     pair list broadcast to both probes — no corpus-keyed array exchange);
     the exact channel stars only content-hash groups the delta touches.
 
     Reference analog: pipe-mode probes of the persistent segmented index
-    (/root/reference/rabin/global/index.c:140-151, 485-558)."""
+    (rabin/global/index.c:140-151, 485-558)."""
     from ..operators.assemble import assemble
-    from ..operators.candidates import band_explode, bucket_members, bucket_pairs
     from ..operators.signatures import compute_signatures
-    from ..operators.verify import exact_pairs, near_pairs
 
     cfg = cfg or DedupConfig()
-    csig = cache.persist(corpus_sig if corpus_sig is not None
-                         else compute_signatures(assemble(corpus_tr), cfg))
-    dsig = cache.persist(delta_sig if delta_sig is not None
-                         else compute_signatures(assemble(delta_tr), cfg))
+    stats = {} if stats is None else stats
+    # stored tables are scanned as they are: the driver path reads each once
+    csig = (corpus_sig if corpus_sig is not None
+            else cache.persist(compute_signatures(assemble(corpus_tr), cfg)))
+    dsig = (delta_sig if delta_sig is not None
+            else cache.persist(compute_signatures(assemble(delta_tr), cfg)))
+    budget = cfg.cc_local_edges
+
+    def distributed(why: str) -> DataFrame:
+        stats.update(path="distributed", why=why)
+        return _distributed_pairs(csig, dsig, cfg)
+
+    max_rows = budget // cfg.bands
+    if max_rows <= 0:
+        return distributed(f"cc_local_edges={budget} fits no delta row x "
+                           f"{cfg.bands} bands")
+    drows = _fetch(dsig.select("conv_id", "id_hash", "n_tokens", "content_hash",
+                               F.xxhash64("content_hash").alias("ch_key"),
+                               _band_hashes(dsig, cfg).alias("bh")), max_rows)
+    stats["delta_rows"] = len(drows)
+    if len(drows) > max_rows:
+        return distributed(f"delta rows x {cfg.bands} bands over "
+                           f"cc_local_edges={budget}")
+    if not len(drows):
+        stats.update(path="driver", why="empty delta")
+        return dsig.sparkSession.createDataFrame([], _PAIR_SCHEMA)
+    dkeys = _delta_keys(drows, cfg)
+    hits = _fetch(_corpus_hits(csig, dkeys, cfg), budget)
+    stats["corpus_rows"] = len(hits)
+    if len(hits) > budget:
+        return distributed("touched corpus bucket members and content-hash "
+                           f"rows over cc_local_edges={budget}")
+    d_ih = set(drows["id_hash"].tolist())
+    cand, n_rows = _driver_candidates(dkeys, hits, d_ih, cfg, budget)
+    stats["candidate_rows"] = n_rows
+    if cand is None:
+        return distributed(f"candidate pair rows over cc_local_edges={budget}")
+    ends = set(cand["a"].tolist()) | set(cand["b"].tolist())
+    n_tok = dict(zip(hits["id_hash"].tolist(), hits["n_tokens"].tolist()))
+    n_tok.update(zip(drows["id_hash"].tolist(), drows["n_tokens"].tolist()))
+    # a row's shingles are at most n_tokens longs; its minhash num_perm
+    est = sum(8 * (n_tok[i] + cfg.num_perm) for i in ends)
+    stats.update(endpoint_rows=len(ends), endpoint_bytes_est=est)
+    if est > _BYTES_PER_EDGE * budget:
+        return distributed(f"candidate endpoints' shingles and minhash (~{est} B) "
+                           f"over {_BYTES_PER_EDGE} B x cc_local_edges={budget}")
+    near = []
+    if ends:
+        wide_cols = ("id_hash", "conv_id", "content_hash", "shingles", "minhash")
+        wide = _where_in(csig.select(*wide_cols).unionByName(
+            dsig.select(*wide_cols)), "id_hash", ends).toPandas()
+        near = _verify(cand, wide, cfg)
+    stats.update(path="driver", why=f"every fetch within cc_local_edges={budget}")
+    return dsig.sparkSession.createDataFrame(
+        near + _exact_star(drows, hits, d_ih, cfg), _PAIR_SCHEMA)
+
+
+def _distributed_pairs(csig: DataFrame, dsig: DataFrame,
+                       cfg: DedupConfig) -> DataFrame:
+    """The distributed plan of incremental_transcript_pairs."""
+    from ..operators.candidates import band_explode
+    from ..operators.verify import exact_pairs, near_pairs
+
+    csig, dsig = cache.persist(csig), cache.persist(dsig)
     dbands = band_explode(dsig, cfg)
     touched = band_explode(csig, cfg).join(
         F.broadcast(dbands.select("band_idx", "band_hash").distinct()),
@@ -361,7 +633,8 @@ def incremental_transcript_pairs(
 
 
 def incremental_transcript_admission(
-    delta_ids: DataFrame, pairs: DataFrame
+    delta_ids: DataFrame, pairs: DataFrame, cfg: DedupConfig | None = None,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Per-delta-conversation admission verdict from the evidence pairs
     (incremental_transcript_pairs): (conv_id, keep, dup_kind, dup_of) —
@@ -369,19 +642,54 @@ def incremental_transcript_admission(
     the materialized pair table (no second verify pass).
 
     Rule (deterministic, first-occurrence-wins with corpus priority —
-    reference first-writer-wins at the index,
-    /root/reference/rabin/global/index.c:485-558): a delta conversation's
-    duplicate partner is the MIN conv_id over its pair neighbors that are
-    either corpus conversations (priority regardless of lexicographic
-    order) or EARLIER (smaller conv_id) delta conversations; exact
-    outranks near when both exist. The exact channel's star edges suffice
-    for this rule: the star representative is the content group's global
-    min, so every member's min valid neighbor IS the representative, and
-    a delta representative of a group containing corpus members sees them
-    as member-side neighbors. dup_of = '' when kept (null-free output).
+    reference first-writer-wins at the index, rabin/global/index.c:485-558):
+    a delta conversation's duplicate partner is the MIN conv_id over its
+    pair neighbors that are either corpus conversations (priority
+    regardless of lexicographic order) or EARLIER (smaller conv_id) delta
+    conversations; exact outranks near when both exist. The exact
+    channel's star edges suffice for this rule: the star representative is
+    the content group's global min, so every member's min valid neighbor
+    IS the representative, and a delta representative of a group
+    containing corpus members sees them as member-side neighbors.
+    dup_of = '' when kept (null-free output).
 
     ``delta_ids``: one conv_id per delta conversation (the admission
-    universe — kept conversations appear with keep=1)."""
+    universe — kept conversations appear with keep=1). When the pair list
+    and the delta ids each fit ``cfg.cc_local_edges`` rows, both are
+    fetched and the rule runs on the driver; otherwise as a Spark plan.
+    ``stats``: as incremental_transcript_pairs."""
+    budget = (cfg or DedupConfig()).cc_local_edges
+    stats = {} if stats is None else stats
+    if budget <= 0:
+        stats.update(path="distributed", why="cc_local_edges=0 forces it")
+        return _distributed_admission(delta_ids, pairs)
+    prs, ids = _fetch_with_ids(
+        pairs, ("conv_id_a", "conv_id_b", "match_kind"), delta_ids, budget)
+    stats.update(pair_rows=len(prs), delta_rows=len(ids))
+    if len(prs) > budget or len(ids) > budget:
+        stats.update(path="distributed", why=(
+            f"pair or delta rows over cc_local_edges={budget}"))
+        return _distributed_admission(delta_ids, pairs)
+    stats.update(path="driver", why=f"pair and delta rows within "
+                 f"cc_local_edges={budget}")
+    delta = set(ids)
+    best: dict[tuple[str, str], str] = {}
+    for a, b, kind in prs.itertuples(index=False):
+        for me, nbr in ((a, b), (b, a)):
+            if me in delta and (nbr not in delta or nbr < me):
+                key = (me, kind)
+                best[key] = min(best.get(key, nbr), nbr)
+    rows = []
+    for c in sorted(delta):
+        kind = ("exact" if (c, "exact") in best
+                else "near" if (c, "near") in best else "none")
+        rows.append((c, int(kind == "none"), kind, best.get((c, kind), "")))
+    return delta_ids.sparkSession.createDataFrame(
+        rows, "conv_id string, keep int, dup_kind string, dup_of string")
+
+
+def _distributed_admission(delta_ids: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The Spark plan of incremental_transcript_admission."""
     d_ids = delta_ids.select("conv_id").distinct()
     sym = pairs.select(
         F.col("conv_id_a").alias("conv_id"),
@@ -417,6 +725,31 @@ def incremental_transcript_admission(
     )
 
 
+def _driver_clusters(edges, nodes: set, members, max_iters: int) -> list[tuple]:
+    """Connected components over conv_ids on the driver, with
+    connected_components' label rule: edges are the evidence pairs plus
+    each touched label member's star edge to its old cluster_id; every
+    conv_id in ``nodes`` gets the min node conv_id of its component."""
+    import numpy as np
+
+    from ..operators.cluster import union_find
+
+    star = members[members["conv_id"] != members["cluster_id"]]
+    us = edges["conv_id_a"].tolist() + star["cluster_id"].tolist()
+    vs = edges["conv_id_b"].tolist() + star["conv_id"].tolist()
+    code = {n: i for i, n in enumerate(sorted(nodes.union(us, vs)))}
+    uv = np.array([(code[u], code[v]) for u, v in zip(us, vs) if u != v],
+                  dtype=np.int64).reshape(-1, 2)
+    ids, labs = union_find(uv[:, 0], uv[:, 1], max_iters)
+    root = dict(zip(ids.tolist(), labs.tolist()))
+    rep: dict[int, str] = {}
+    out = []
+    for n in sorted(nodes):
+        c = code[n]
+        out.append((n, rep.setdefault(root.get(c, c), n)))
+    return out
+
+
 def incremental_transcript_clusters(
     corpus_tr: DataFrame,
     delta_tr: DataFrame,
@@ -425,6 +758,7 @@ def incremental_transcript_clusters(
     corpus_sig: DataFrame | None = None,
     delta_sig: DataFrame | None = None,
     pairs: DataFrame | None = None,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Incremental cluster maintenance for TRANSCRIPTS: merge a delta's
     duplicate evidence (incremental_transcript_pairs) into the corpus
@@ -432,88 +766,121 @@ def incremental_transcript_clusters(
     corpus — (conv_id, cluster_id) over corpus ∪ delta, cluster_id = min
     conv_id of the merged component (the pipeline's own label rule).
     The transcript twin of incremental_clusters: untouched components
-    pass through an anti-join verbatim; CC runs only over touched members
-    + delta conversations + evidence endpoints (string labels ride 64-bit
-    id_hash edges through the CC, exactly like the pipeline).
+    pass through one filter verbatim; CC runs only over touched members
+    + delta conversations + evidence endpoints, with each touched member
+    linked to its old cluster_id (the label star preserves corpus
+    connectivity exactly). Nodes are keyed by conv_id alone, so a touched
+    member that has no signature row (a conversation admitted by an
+    earlier delta, or this delta on a replay) keeps its place.
 
     ``corpus_labels``: the pipeline's checkpointed clusters table. When
     omitted (ad-hoc/test use) the corpus's own cluster pass runs here —
     correct but O(corpus). ``pairs``: precomputed evidence (callers that
     materialize the pair output pass it back, same contract as the doc
-    twin). Member id_hashes resolve against the corpus signature table
-    behind an evidence-bounded join — the label table itself stays a
-    narrow 2-column scan."""
+    twin). ``stats``: as incremental_transcript_pairs.
+
+    Scale shape: when the evidence, the delta and the touched label rows
+    each fit ``cfg.cc_local_edges`` rows, one fetch of the evidence and
+    the delta ids and one filtered fetch of the label table (every row of
+    a cluster an endpoint sits in) feed a driver union-find
+    (operators.cluster.union_find). Otherwise the
+    label table is scanned map-side against BROADCAST delta-bounded key
+    sets and connected_components runs over xxhash64(conv_id) node keys."""
     from ..operators.assemble import assemble
-    from ..operators.candidates import candidate_pairs
-    from ..operators.cluster import connected_components
     from ..operators.signatures import compute_signatures
-    from ..operators.verify import verify_pairs
 
     cfg = cfg or DedupConfig()
-    csig = cache.persist(corpus_sig if corpus_sig is not None
-                         else compute_signatures(assemble(corpus_tr), cfg))
-    dsig = cache.persist(delta_sig if delta_sig is not None
-                         else compute_signatures(assemble(delta_tr), cfg))
+    stats = {} if stats is None else stats
+    dsig = (delta_sig if delta_sig is not None
+            else cache.persist(compute_signatures(assemble(delta_tr), cfg)))
+    if corpus_labels is None or pairs is None:
+        csig = cache.persist(corpus_sig if corpus_sig is not None
+                             else compute_signatures(assemble(corpus_tr), cfg))
     if corpus_labels is None:
+        from ..operators.candidates import candidate_pairs
+        from ..operators.cluster import connected_components
+        from ..operators.verify import verify_pairs
+
         ccand, _ = candidate_pairs(csig, cfg, persist_sizes=False)
         corpus_labels = connected_components(
             csig.select("conv_id", "id_hash"), verify_pairs(csig, ccand, cfg), cfg
         )
-    labels = cache.persist(corpus_labels)
+    labels = corpus_labels.select("conv_id", "cluster_id")
     if pairs is None:
         pairs = incremental_transcript_pairs(
             corpus_tr, delta_tr, cfg, corpus_sig=csig, delta_sig=dsig
         )
-    edges = cache.persist(
-        pairs.select("conv_id_a", "conv_id_b", "ih_a", "ih_b").distinct()
-    )
+    edges = pairs.select("conv_id_a", "conv_id_b")
+    budget = cfg.cc_local_edges
+    if budget <= 0:
+        stats.update(path="distributed", why="cc_local_edges=0 forces it")
+        return _distributed_clusters(labels, edges, dsig, cfg)
+    ev, delta = _fetch_with_ids(edges, ("conv_id_a", "conv_id_b"), dsig, budget)
+    stats.update(edge_rows=len(ev), delta_rows=len(delta))
+    if len(ev) > budget or len(delta) > budget:
+        stats.update(path="distributed", why=(
+            f"evidence or delta rows over cc_local_edges={budget}"))
+        return _distributed_clusters(labels, edges, dsig, cfg)
+    endpoints = set(delta) | set(ev["conv_id_a"]) | set(ev["conv_id_b"])
+    touched = _where_in(labels, "conv_id", endpoints).select("cluster_id")
+    members = _fetch(labels.join(F.broadcast(touched), "cluster_id", "left_semi"),
+                     budget)
+    stats["label_rows"] = len(members)
+    if len(members) > budget:
+        stats.update(path="distributed", why=(
+            f"touched label rows over cc_local_edges={budget}"))
+        return _distributed_clusters(labels, edges, dsig, cfg)
+    stats.update(path="driver", why="evidence, delta and touched label rows "
+                 f"within cc_local_edges={budget}")
+    nodes = endpoints | set(members["conv_id"])
+    cc = labels.sparkSession.createDataFrame(
+        _driver_clusters(ev, nodes, members, cfg.cc_max_iters),
+        "conv_id string, cluster_id string")
+    # every row of a touched cluster (conv_id is unique in ``labels``) and
+    # every delta conversation (a replayed delta already sits in
+    # ``labels``) exits through the CC side
+    untouched = _where_in(labels, "conv_id", nodes, negate=True)
+    return untouched.unionByName(cc)
+
+
+def _distributed_clusters(labels: DataFrame, edges: DataFrame, dsig: DataFrame,
+                          cfg: DedupConfig) -> DataFrame:
+    """The Spark plan of incremental_transcript_clusters: the same node
+    and edge sets as _driver_clusters, keyed by xxhash64(conv_id)."""
+    from ..operators.cluster import connected_components
+
+    labels = cache.persist(labels)
+    edges = cache.persist(edges.distinct())
+    d_ids = dsig.select("conv_id")
     ep = (
         edges.select(F.col("conv_id_a").alias("conv_id"))
         .unionByName(edges.select(F.col("conv_id_b").alias("conv_id")))
-        .unionByName(dsig.select("conv_id"))
+        .unionByName(d_ids)
         .distinct()
     )
+    # delta-bounded key sets broadcast against the corpus-sized label scan
     touched = (
         labels.join(F.broadcast(ep), "conv_id", "left_semi")
         .select("cluster_id")
         .distinct()
     )
     members = labels.join(F.broadcast(touched), "cluster_id", "left_semi")
-    # id_hash for touched members: evidence-bounded join against the
-    # signature table (AQE broadcasts the member side while it is small)
-    mem = members.join(csig.select("conv_id", "id_hash"), "conv_id")
-    rep_ih = mem.where(F.col("conv_id") == F.col("cluster_id")).select(
-        "cluster_id", F.col("id_hash").alias("rih")
+    star = members.where(F.col("conv_id") != F.col("cluster_id")).select(
+        F.col("cluster_id").alias("conv_id_a"), F.col("conv_id").alias("conv_id_b")
     )
-    star = (
-        mem.join(rep_ih, "cluster_id")
-        .where(F.col("conv_id") != F.col("cluster_id"))
-        .select(F.col("rih").alias("ih_a"), F.col("id_hash").alias("ih_b"))
-    )
-    # evidence endpoints enter the node set straight from the edge rows
-    # (same invariant as the streaming labels store — connectivity must
-    # never depend on the label table being complete)
-    ep_nodes = (
-        edges.select(F.col("conv_id_a").alias("conv_id"),
-                     F.col("ih_a").alias("id_hash"))
-        .unionByName(edges.select(F.col("conv_id_b").alias("conv_id"),
-                                  F.col("ih_b").alias("id_hash")))
-    )
-    nodes = (
-        mem.select("conv_id", "id_hash")
-        .unionByName(dsig.select("conv_id", "id_hash"))
-        .unionByName(ep_nodes)
-        .distinct()
-    )
+    nodes = members.select("conv_id").unionByName(ep).distinct()
     cc = connected_components(
-        nodes, edges.select("ih_a", "ih_b").unionByName(star), cfg
+        nodes.select("conv_id", F.xxhash64("conv_id").alias("id_hash")),
+        edges.unionByName(star).select(F.xxhash64("conv_id_a").alias("ih_a"),
+                                       F.xxhash64("conv_id_b").alias("ih_b")),
+        cfg,
     )
     # replay safety: delta conversations always exit through the CC side
     # (same rule as the doc twin)
     untouched = labels.join(F.broadcast(touched), "cluster_id", "left_anti").join(
-        F.broadcast(dsig.select("conv_id")), "conv_id", "left_anti"
+        F.broadcast(d_ids), "conv_id", "left_anti"
     )
-    return untouched.select("conv_id", "cluster_id").unionByName(cc)
+    return untouched.unionByName(cc)
 
 
 def incremental_admission(

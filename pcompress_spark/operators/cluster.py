@@ -91,11 +91,14 @@ def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _local_labels(pdf, spark, cfg: DedupConfig) -> DataFrame:
-    """Driver union-find over a SMALL collected edge frame (pandas columns
-    u, v) -> (id_hash, lab) labels with lab = component-min id_hash.
-    Vectorized numpy min-hooking with full path compression; bit-identical
-    labels to the distributed fixpoint.
+def union_find(u, v, max_iters: int):
+    """Driver union-find over int64 edge arrays ``u``/``v`` -> (ids, labs):
+    the sorted distinct endpoint values and, per id, the minimum value of
+    its component. Spark-free: vectorized numpy
+    min-hooking with full path compression, bit-identical labels to the
+    distributed star fixpoint. The single union-find of the engine — the
+    connected-components fast path and the incremental clusters driver
+    path (functions/incremental.py) both call it.
 
     This is the physical fast path behind ``cfg.cc_local_edges``: when the
     verified pair list fits in the same budget a broadcast join would ship
@@ -104,18 +107,14 @@ def _local_labels(pdf, spark, cfg: DedupConfig) -> DataFrame:
     dominates the clusters stage at bench scale and is pure Amdahl fraction
     at N->4N. The reference makes the same move in the opposite direction:
     its index auto-switches simple->segmented only past a memory budget
-    (/root/reference/rabin/global/index.c:119-215)."""
+    (rabin/global/index.c:119-215)."""
     import numpy as np
-    import pandas as pd
 
-    if len(pdf) == 0:
-        return spark.createDataFrame([], "id_hash long, lab long")
-    u = pdf["u"].to_numpy(dtype=np.int64)
-    v = pdf["v"].to_numpy(dtype=np.int64)
+    u, v = np.asarray(u), np.asarray(v)
     ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
     eu, ev = inv[: u.size], inv[u.size:]
     parent = np.arange(ids.size, dtype=np.int64)
-    for _ in range(cfg.cc_max_iters):
+    for _ in range(max_iters):
         pu, pv = parent[eu], parent[ev]
         if np.array_equal(pu, pv):
             break
@@ -130,9 +129,8 @@ def _local_labels(pdf, spark, cfg: DedupConfig) -> DataFrame:
             parent = pp
     else:
         raise RuntimeError(
-            f"local union-find did not converge in {cfg.cc_max_iters} iters")
-    out = pd.DataFrame({"id_hash": ids, "lab": ids[parent]})
-    return spark.createDataFrame(out)
+            f"local union-find did not converge in {max_iters} iters")
+    return ids, ids[parent]
 
 
 def connected_components(
@@ -174,7 +172,14 @@ def connected_components(
         if stats is not None:
             stats["n_edges"] = int(len(probe))
             stats["path"] = "local_union_find"
-        labels = _local_labels(probe, pairs.sparkSession, cfg)
+        import pandas as pd
+
+        ids, labs = union_find(probe["u"].to_numpy(dtype="int64"),
+                               probe["v"].to_numpy(dtype="int64"),
+                               cfg.cc_max_iters)
+        labels = pairs.sparkSession.createDataFrame(
+            pd.DataFrame({"id_hash": ids, "lab": labs}),
+            "id_hash long, lab long")
     else:
         edges = cached = edges.cache()
         prev = _edge_checksum(edges)

@@ -199,9 +199,36 @@ class DedupPipeline:
         )
 
     # ---- the pipeline ---------------------------------------------------
+    def _file_listing(self, files: list[str]) -> list[str]:
+        """``path<TAB>size<TAB>mtime`` per input file, from ONE listStatus
+        per parent directory (one metadata request per directory on an
+        object store, not one per file). A file missing from its
+        directory's listing keeps its path alone."""
+        jvm = self.spark._jvm
+        conf = self.spark._jsc.hadoopConfiguration()
+        parents: dict[str, dict] = {}
+        listing = []
+        for f in files:
+            path = jvm.org.apache.hadoop.fs.Path(f)
+            parent = path.getParent()
+            key = parent.toString()
+            if key not in parents:
+                parents[key] = {
+                    st.getPath().getName(): st
+                    for st in parent.getFileSystem(conf).listStatus(parent)
+                }
+            st = parents[key].get(path.getName())
+            listing.append(f if st is None else
+                           f"{f}\t{st.getLen()}\t{st.getModificationTime()}")
+        return listing
+
     def _input_fingerprint(self, df: DataFrame) -> str:
         """Cheap input-identity key for resume safety: hash of the input
-        file listing when the DataFrame reads files (no Spark job). The
+        file listing, with each file's size and modification time, when
+        the DataFrame reads files (no Spark job — one directory listing
+        per parent, _file_listing; paths alone if the listing fails), so
+        an input rewritten in place under the same path invalidates
+        resume. The
         fallback for non-file-backed input is a row count — and that count
         is CACHED in the work_dir keyed by the input plan's semantic hash
         (``df.semanticHash()``, a driver-side canonicalized-plan hash, no
@@ -222,7 +249,14 @@ class DedupPipeline:
         except Exception:
             files = []
         if files:
-            return "files:" + hashlib.sha256("\n".join(files).encode()).hexdigest()[:16]
+            from py4j.protocol import Py4JJavaError
+
+            try:
+                listing = self._file_listing(files)
+            except Py4JJavaError:   # metadata unavailable: paths alone
+                listing = files
+            return "files:" + hashlib.sha256(
+                "\n".join(listing).encode()).hexdigest()[:16]
         try:
             plan_hash = int(df.semanticHash())
         except Exception:

@@ -118,6 +118,21 @@ def test_pipeline_config_change_invalidates(spark, smoke_transcripts, tmp_path):
     assert all(not s.resumed for s in res.stages)
 
 
+def test_input_rewritten_in_place_invalidates_resume(spark, smoke_data, tmp_path):
+    """An input file rewritten in place under the same path (here with
+    twice the conversations) must not resume the earlier run's stages."""
+    tr = smoke_data.transcripts
+    ids = sorted(tr["conv_id"].unique())
+    path = str(tmp_path / "in.parquet")
+    wd = str(tmp_path / "wd")
+    for n in (30, 60):
+        tr[tr["conv_id"].isin(ids[:n])].to_parquet(path, index=False)
+        res = DedupPipeline(spark, CFG, work_dir=wd).run(
+            spark.read.parquet(path), with_substring=False)
+    assert not any(s.resumed for s in res.stages)
+    assert res.tables["signatures"].count() == 60
+
+
 def test_pipeline_no_workdir(spark, smoke_transcripts):
     res = DedupPipeline(spark, CFG, work_dir=None).run(smoke_transcripts, with_substring=False)
     assert res.tables["clusters"].count() > 0

@@ -431,17 +431,21 @@ def _transcripts_run(spark, ap, args, cfg) -> int:
     delta_sig = spark.read.parquet(f"{args.out}/delta_sig")
     empty_tr = spark.createDataFrame(
         [], "conv_id string, turn_idx int, text string")
+    # which path (driver or distributed) each step took, and why
+    steps = {"pairs": {}, "admission": {}, "clusters": {}}
     pairs = incremental.incremental_transcript_pairs(
-        empty_tr, empty_tr, cfg, corpus_sig=corpus_sig, delta_sig=delta_sig)
+        empty_tr, empty_tr, cfg, corpus_sig=corpus_sig, delta_sig=delta_sig,
+        stats=steps["pairs"])
     pairs.write.mode("overwrite").parquet(f"{args.out}/pairs")
     pairs = spark.read.parquet(f"{args.out}/pairs")
     adm = incremental.incremental_transcript_admission(
-        delta_sig.select("conv_id"), pairs)
+        delta_sig.select("conv_id"), pairs, cfg, stats=steps["admission"])
     adm.write.mode("overwrite").parquet(f"{args.out}/admission")
     adm = spark.read.parquet(f"{args.out}/admission")
     labels = incremental.incremental_transcript_clusters(
         empty_tr, empty_tr, cfg, corpus_labels=corpus_labels,
-        corpus_sig=corpus_sig, delta_sig=delta_sig, pairs=pairs)
+        corpus_sig=corpus_sig, delta_sig=delta_sig, pairs=pairs,
+        stats=steps["clusters"])
     _stage_replace(spark, labels, paths["labels"])
     delta_sig.join(
         adm.where(F.col("keep") == 1).select("conv_id"), "conv_id", "left_semi"
@@ -458,6 +462,7 @@ def _transcripts_run(spark, ap, args, cfg) -> int:
         "dropped_exact": int(counts.get("exact", 0)),
         "dropped_near": int(counts.get("near", 0)),
         "out": args.out,
+        "steps": steps,
     }))
     from pcompress_spark.cache import release_persisted
     release_persisted()  # a reused session must not pin this run's frames
