@@ -5,9 +5,9 @@ more than once in the plan they return (signature tables fanned out to
 banding + both verify probes, ANN prep tables probed per method). Spark's
 cache holds strong references, so in a long-lived driver session that
 builds many queries (the driver's correctness gate iterates all of them;
-bench.py runs a suite) untracked persists accumulate MEMORY_AND_DISK
-entries for the life of the session — executor memory pressure and LRU
-churn that evicts the caches that matter.
+perfbench runs many jobs in one session) untracked persists accumulate
+MEMORY_AND_DISK entries for the life of the session — executor memory
+pressure and LRU churn that evicts the caches that matter.
 
 ``persist(df)`` is a drop-in replacement for ``df.persist()`` that records
 the frame in a module registry; harness loops call ``release_persisted()``

@@ -69,9 +69,7 @@ class DedupConfig:
     # --- determinism ---
     seed: int = 42
 
-    # --- execution tuning (local sandbox defaults; scale notes in docstrings) ---
-    shuffle_partitions: int = 32
-    arrow_batch_rows: int = 2048  # bound UDF working-set memory
+    # --- execution tuning (session sizing lives in session.get_spark) ---
     cc_max_iters: int = 50        # connected-components fixpoint guard
     # The driver budget of two two-path operators. (1) Connected
     # components: edge sets at or below this ride a driver union-find

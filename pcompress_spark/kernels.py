@@ -1097,9 +1097,9 @@ def signatures_for_texts(texts: pd.Series, cfg) -> pd.DataFrame:
 def arrow_list_array(values: np.ndarray, offsets: np.ndarray):
     """pyarrow list<int64> column from flat (values, offsets) — the
     zero-per-row-object bridge the Arrow signature UDFs use. Offsets are
-    int32 per Arrow's list spec: fine for UDF batches (arrow_batch_rows
-    rows per batch — far under 2^31 values), NOT for whole-corpus
-    arrays."""
+    int32 per Arrow's list spec: fine for UDF batches
+    (spark.sql.execution.arrow.maxRecordsPerBatch rows — far under 2^31
+    values), NOT for whole-corpus arrays."""
     import pyarrow as pa
 
     return pa.ListArray.from_arrays(

@@ -52,22 +52,11 @@ from pyspark.sql import functions as F
 from ..config import DedupConfig
 
 
-def band_explode(
-    sig: DataFrame, cfg: DedupConfig, band_range: tuple[int, int] | None = None
-) -> DataFrame:
+def band_explode(sig: DataFrame, cfg: DedupConfig) -> DataFrame:
     """signatures -> (id_hash, band_idx, band_hash); docs below the
     shingle floor (empty shingle set) take the exact-hash path only, exactly
-    like the reference's trailing-block handling
-    (/root/reference/rabin/rabin_dedup.c:717-757).
-
-    band_range=(lo, hi) explodes only bands lo..hi-1 — the knob for running
-    banding as several sequential passes when the full
-    n_convs x bands exploded shuffle must be bounded in-flight at extreme
-    scale (buckets are independent across bands, so pass-splitting is
-    semantics-preserving: union the per-pass pairs and sum n_bands)."""
-    lo, hi = band_range if band_range is not None else (0, cfg.bands)
-    if not (0 <= lo < hi <= cfg.bands):
-        raise ValueError(f"band_range {band_range} outside [0, {cfg.bands})")
+    like the reference's trailing-block handling (rabin/rabin_dedup.c:717-757
+    in pcompress)."""
     r = cfg.rows
     # n_tokens >= k  <=>  non-empty shingle set (shingle count per doc is
     # max(n_tokens - (k-1), 0) before distinct; kernels.shingle_hashes_flat).
@@ -84,21 +73,12 @@ def band_explode(
     # Fallback computes the identical xxhash64-over-slice expression from
     # minhash (streaming batches and ad-hoc frames without the column).
     if "band_hashes" in sig.columns:
-        arr = (F.col("band_hashes") if (lo, hi) == (0, cfg.bands)
-               else F.slice("band_hashes", lo + 1, hi - lo))
-        return (
-            base.select(
-                "id_hash",
-                F.posexplode(arr).alias("band_pos", "band_hash"),
-            )
-            .select(
-                "id_hash",
-                (F.col("band_pos") + F.lit(lo)).cast("int").alias("band_idx"),
-                "band_hash",
-            )
+        return base.select(
+            "id_hash",
+            F.posexplode("band_hashes").alias("band_idx", "band_hash"),
         )
     band_expr = (
-        f"transform(sequence({lo}, {hi - 1}), b -> "
+        f"transform(sequence(0, {cfg.bands - 1}), b -> "
         f"struct(b as band_idx, "
         f"xxhash64(b, slice(minhash, b * {r} + 1, {r})) as band_hash))"
     )
@@ -191,13 +171,10 @@ def candidate_pairs(
     sig: DataFrame,
     cfg: DedupConfig,
     persist_sizes: bool = True,
-    band_range: tuple[int, int] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """signatures -> ((ih_a, ih_b, n_bands) with ih_a < ih_b signed, stats).
-    Long keys only — conv_ids are resolved at verify time. band_range
-    restricts to one banding pass (see band_explode; the planner splits
-    passes when rows x bands would exceed the in-flight budget)."""
-    banded = band_explode(sig, cfg, band_range=band_range)
+    Long keys only — conv_ids are resolved at verify time."""
+    banded = band_explode(sig, cfg)
     buckets, stats = bucket_members(banded, cfg, persist_sizes=persist_sizes)
     pairs = bucket_pairs(buckets, "ih_a", "ih_b")
     agg = pairs.groupBy("ih_a", "ih_b").agg(

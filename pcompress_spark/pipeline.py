@@ -29,6 +29,7 @@ storage / an Iceberg warehouse; outputs are plain columnar tables.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
@@ -82,19 +83,10 @@ class DedupPipeline:
         spark: SparkSession,
         cfg: DedupConfig | None = None,
         work_dir: str | None = None,
-        auto_plan: bool = False,
     ) -> None:
-        """auto_plan: derive shuffle_partitions / arrow_batch_rows /
-        bucket_cap / banding pass count from input stats at run() time
-        (planner.derive_exec_plan — the reference's memory-budgeted index
-        auto-configuration, /root/reference/rabin/global/index.c:119-215)
-        and log the decision to metrics.json. Off by default: an explicit
-        cfg always means exactly what it says."""
         self.spark = spark
         self.cfg = cfg or DedupConfig()
         self.work_dir = work_dir
-        self.auto_plan = auto_plan
-        self.exec_plan = None
         self._stages: list[StageResult] = []
         self._input_fp: str | None = None
 
@@ -140,19 +132,30 @@ class DedupPipeline:
         # skipping footer inference removes one driver round-trip per stage
         # (fixed serial cost — Amdahl fraction at N->4N). Resume is handled
         # before construction in _run_stage; this path always writes.
+        #
+        # The old manifest goes BEFORE the write: a run killed after the
+        # write's _SUCCESS but before the new manifest must leave no
+        # manifest at all, never the previous run's next to this run's
+        # output. The new one lands atomically (temp file + os.replace), so
+        # a kill mid-dump cannot leave a truncated manifest either.
         from pyspark.sql import Observation
 
+        mp = self._manifest_path(name)
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(mp)
         obs = Observation()
         df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
             "overwrite"
         ).parquet(sd)
         rows = int(obs.get["rows"])
-        with open(self._manifest_path(name), "w") as f:
+        tmp = f"{mp}.tmp"
+        with open(tmp, "w") as f:
             json.dump(
                 {"stage": name, "config_hash": self.cfg.config_hash(),
                  "rows": rows, "format": PIPELINE_FORMAT, "input": self._input_fp},
                 f,
             )
+        os.replace(tmp, mp)
         return self.spark.read.schema(df.schema).parquet(sd), rows, False
 
     def _run_stage(self, name: str, build) -> DataFrame:
@@ -160,8 +163,9 @@ class DedupPipeline:
         some operators run driver-synchronized jobs at build time (the CC
         local-path probe, convergence checksums/localCheckpoints) — a fixed,
         core-count-independent cost that is pure Amdahl serial fraction at
-        N->4N. Keeping it visible per stage is what lets the scaling probe
-        attribute the wall-vs-stage-sum gap instead of guessing.
+        N->4N. Keeping it visible per stage (metrics.json
+        ``construct_seconds``) attributes the wall-vs-stage-sum gap instead
+        of guessing.
 
         Resume is checked BEFORE construction: a resumed stage must not pay
         the operator's build-time driver jobs for output it is about to
@@ -288,42 +292,7 @@ class DedupPipeline:
         conversation: exact / near / substring / kept + removed_by —
         operators/tiers.tier_attribution) and log per-tier counts to
         metrics.json. Off by default: it pays the substring LCS verify over
-        the flagged pairs, which callers that only need clusters skip.
-
-        Effective-width guard: before anything runs, the session's real
-        concurrency budget is measured (widthprobe.effective_width — cached
-        per process) and, when the host sustains fewer concurrent tasks
-        than the master advertises (the hypervisor knee in CLAUDE.md), UDF
-        parallelism and shuffle partitions are capped at the measured width
-        for the duration of the run. The decision is logged to
-        metrics.json["width_guard"]; SPARK_GRAFT_EFFECTIVE_WIDTH pins or
-        disables it. Physical-only knob: outputs are bit-identical at any
-        width, so resume manifests do not key on it."""
-        from .widthprobe import effective_width
-
-        wg = effective_width(self.spark)
-        prev_shuffle = None
-        if wg["width"] < wg["session_width"]:
-            # concurrency = min(task slots, partitions) in local mode; the
-            # partition count is the only runtime lever, so the cap must
-            # hold for every exchange in the run
-            prev_shuffle = self.spark.conf.get("spark.sql.shuffle.partitions")
-            self.spark.conf.set(
-                "spark.sql.shuffle.partitions", str(wg["width"]))
-        try:
-            return self._run_inner(transcripts, with_substring, with_tiers, wg)
-        finally:
-            if prev_shuffle is not None:
-                self.spark.conf.set(
-                    "spark.sql.shuffle.partitions", prev_shuffle)
-
-    def _run_inner(
-        self,
-        transcripts: DataFrame,
-        with_substring: bool | None,
-        with_tiers: bool,
-        wg: dict,
-    ) -> PipelineResult:
+        the flagged pairs, which callers that only need clusters skip."""
         cfg = self.cfg
         self._stages = []
         self._input_fp = self._input_fingerprint(transcripts) if self.work_dir else None
@@ -339,90 +308,11 @@ class DedupPipeline:
             except (OSError, json.JSONDecodeError):
                 pass
 
-        band_passes = 1
-        if self.auto_plan:
-            import dataclasses
-
-            from .planner import derive_exec_plan
-
-            # unit_col: transcripts is TURN-level; plan budgets are per
-            # conversation (the row the UDF/banding stages actually see)
-            plan = derive_exec_plan(self.spark, transcripts, cfg.bands,
-                                    cores=wg["width"], unit_col="conv_id")
-            self.exec_plan = plan
-            cfg = dataclasses.replace(
-                cfg,
-                bucket_cap=plan.bucket_cap,
-                shuffle_partitions=plan.shuffle_partitions,
-                arrow_batch_rows=plan.arrow_batch_rows,
-            )
-            self.cfg = cfg  # manifests/resume key on the DERIVED config
-            if wg["width"] >= wg["session_width"]:
-                # a width-capped run keeps shuffle partitions at the capped
-                # width (set in run()); the plan's value still governs the
-                # cluster-scale config and is logged either way
-                self.spark.conf.set(
-                    "spark.sql.shuffle.partitions",
-                    str(plan.shuffle_partitions))
-            self.spark.conf.set(
-                "spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(plan.arrow_batch_rows))
-            band_passes = plan.band_passes
-
-        # uncapped: 2 waves at full width for load balancing (status quo).
-        # capped: exactly `width` partitions — any more and local mode would
-        # schedule past the measured knee (slots > effective cores).
-        if wg["width"] < wg["session_width"]:
-            par = wg["width"]
-        else:
-            par = self.spark.sparkContext.defaultParallelism * 2
-        asm = assemble(transcripts, parallelism=par)
+        asm = assemble(
+            transcripts,
+            parallelism=self.spark.sparkContext.defaultParallelism * 2)
         sig = self._run_stage("signatures", lambda: compute_signatures(asm, cfg))
-
-        if band_passes > 1:
-            from .planner import band_ranges
-
-            # each pass is MATERIALIZED (stage checkpoint / eager
-            # localCheckpoint) before the next is constructed — a lazy
-            # union would fuse all passes into one job whose in-flight
-            # exploded-band footprint is the single-pass total, defeating
-            # the very budget band_passes was derived to enforce. The
-            # final candidates stage unions the materialized pass outputs
-            # (pair rows only) and combines n_bands.
-            pass_frames, pass_stats = [], []
-            for i, rng in enumerate(band_ranges(cfg.bands, band_passes)):
-                holder: dict = {}
-
-                def _build(rng=rng, holder=holder):
-                    df, st = candidate_pairs(sig, cfg, band_range=rng)
-                    holder["stats"] = st
-                    return df
-
-                pass_frames.append(
-                    self._run_stage(f"candidates_p{i}", _build))
-                pass_stats.append(holder.get("stats"))
-            cand_df = pass_frames[0]
-            for p in pass_frames[1:]:
-                cand_df = cand_df.unionByName(p)
-            cand_df = cand_df.groupBy("ih_a", "ih_b").agg(
-                F.sum("n_bands").cast("int").alias("n_bands")
-            )
-            if all(s is not None for s in pass_stats):
-                all_stats = pass_stats[0]
-                for s in pass_stats[1:]:
-                    all_stats = all_stats.unionByName(s)
-                bucket_stats = all_stats.select(
-                    F.sum("n_buckets").alias("n_buckets"),
-                    F.sum("n_hot_buckets").alias("n_hot_buckets"),
-                    F.sum("hot_member_rows").alias("hot_member_rows"),
-                    F.max("max_bucket_size").alias("max_bucket_size"),
-                )
-            else:
-                # >= 1 pass resumed: its stats frame was never built; the
-                # prior run's recorded stats stand (finalize falls back)
-                bucket_stats = None
-        else:
-            cand_df, bucket_stats = candidate_pairs(sig, cfg)
+        cand_df, bucket_stats = candidate_pairs(sig, cfg)
         cand = self._run_stage("candidates", cand_df)
         # exact pair count from the stage manifest (zero extra jobs) drives
         # the verify stage's broadcast-vs-shuffle decision for the pair list
@@ -481,11 +371,9 @@ class DedupPipeline:
             # for numbers the prior run already wrote
             if resumed.get("candidates") and "lsh_buckets" in prior_metrics:
                 lsh_buckets = prior_metrics["lsh_buckets"]
-            elif bucket_stats is not None:
+            else:
                 bucket_row = [r.asDict() for r in bucket_stats.collect()]
                 lsh_buckets = bucket_row[0] if bucket_row else {}
-            else:
-                lsh_buckets = prior_metrics.get("lsh_buckets", {})
             t_bucket = time.monotonic()
             metrics = {
                 "config_hash": cfg.config_hash(),
@@ -513,9 +401,6 @@ class DedupPipeline:
                         .agg(F.count(F.lit(1)).alias("n"))
                         .collect()
                     }
-            if self.exec_plan is not None:
-                metrics["exec_plan"] = self.exec_plan.as_dict()
-            metrics["width_guard"] = wg
             t_stats = time.monotonic()
             # lineage derives purely from the signatures/clusters stage
             # outputs: when BOTH resumed (same config + input fingerprint),
@@ -547,6 +432,5 @@ def run_dedup(
     transcripts: DataFrame,
     cfg: DedupConfig | None = None,
     work_dir: str | None = None,
-    auto_plan: bool = False,
 ) -> PipelineResult:
-    return DedupPipeline(spark, cfg, work_dir, auto_plan=auto_plan).run(transcripts)
+    return DedupPipeline(spark, cfg, work_dir).run(transcripts)

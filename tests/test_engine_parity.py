@@ -63,8 +63,11 @@ def test_signatures_match_oracle(engine_sig, oracle_result):
                               np.asarray(orc.loc[i, "shingles"])), eng.loc[i, "conv_id"]
 
 
-def test_candidates_match_oracle(spark, engine_sig, oracle_result):
-    cand, stats = candidate_pairs(engine_sig, CFG)
+def _assert_candidates_match_oracle(engine_sig, oracle_result, cfg):
+    """Signatures do not depend on the cap, so every config reuses the
+    cached engine and oracle signatures. Returns the bucket stats row."""
+    cand, stats = candidate_pairs(engine_sig, cfg)
+    orc_cand = oracle.lsh_candidates(oracle_result.signatures, cfg)
     ih_to_cid = dict(zip(*map(list, (
         engine_sig.toPandas()["id_hash"], engine_sig.toPandas()["conv_id"]))))
     cpdf = cand.toPandas()
@@ -72,7 +75,7 @@ def test_candidates_match_oracle(spark, engine_sig, oracle_result):
         tuple(sorted((ih_to_cid[a], ih_to_cid[b])))
         for a, b in zip(cpdf["ih_a"], cpdf["ih_b"])
     }
-    orc = set(zip(oracle_result.candidates["conv_id_a"], oracle_result.candidates["conv_id_b"]))
+    orc = set(zip(orc_cand["conv_id_a"], orc_cand["conv_id_b"]))
     assert eng == orc
     # n_bands evidence counts must agree pair-for-pair
     eng_counts = {
@@ -81,9 +84,8 @@ def test_candidates_match_oracle(spark, engine_sig, oracle_result):
     }
     orc_counts = {
         (a, b): int(n)
-        for a, b, n in zip(oracle_result.candidates["conv_id_a"],
-                           oracle_result.candidates["conv_id_b"],
-                           oracle_result.candidates["n_bands"])
+        for a, b, n in zip(orc_cand["conv_id_a"], orc_cand["conv_id_b"],
+                           orc_cand["n_bands"])
     }
     assert eng_counts == orc_counts
     srow = stats.collect()[0]
@@ -91,6 +93,21 @@ def test_candidates_match_oracle(spark, engine_sig, oracle_result):
     # id_hash must be injective on the fixture (the long-key invariant)
     sig_pdf = engine_sig.toPandas()
     assert sig_pdf["id_hash"].nunique() == sig_pdf["conv_id"].nunique()
+    return srow
+
+
+def test_candidates_match_oracle(spark, engine_sig, oracle_result):
+    _assert_candidates_match_oracle(engine_sig, oracle_result, CFG)
+
+
+def test_candidates_match_oracle_salted(spark, engine_sig, oracle_result):
+    """A cap the fixture's buckets exceed (its largest raw bucket has 3
+    members): the hot-bucket salting and the id_hash-sorted cap run on
+    both sides and must still agree exactly."""
+    cfg = DedupConfig(bucket_cap=2)
+    srow = _assert_candidates_match_oracle(engine_sig, oracle_result, cfg)
+    assert srow["max_bucket_size"] > cfg.bucket_cap, "salting never fired"
+    assert srow["hot_member_rows"] > 0
 
 
 def test_verified_pairs_match_oracle(spark, engine_sig, oracle_result):
@@ -132,31 +149,6 @@ def test_substring_matches_oracle(spark, engine_sig, oracle_result):
     orc = set(zip(oracle_result.substring_pairs["conv_id_a"],
                   oracle_result.substring_pairs["conv_id_b"]))
     assert eng == orc
-
-
-def test_band_pass_splitting_is_semantics_preserving(spark, engine_sig):
-    """band_range sequential passes (the bounded-shuffle knob for extreme
-    scale) must reproduce the single-pass candidate set and n_bands counts
-    exactly: buckets are independent across bands."""
-    import pandas as pd
-    from pcompress_spark.operators.candidates import band_explode, bucket_members
-    from pyspark.sql import functions as F
-
-    whole, _ = candidate_pairs(engine_sig, CFG)
-    whole = whole.toPandas().set_index(["ih_a", "ih_b"]).sort_index()
-
-    step = CFG.bands // 4
-    parts = []
-    for lo in range(0, CFG.bands, step):
-        banded = band_explode(engine_sig, CFG, band_range=(lo, lo + step))
-        buckets, _ = bucket_members(banded, CFG, persist_sizes=False)
-        from pcompress_spark.operators.candidates import bucket_pairs
-        pairs = bucket_pairs(buckets, "ih_a", "ih_b")
-        parts.append(pairs.groupBy("ih_a", "ih_b").agg(
-            F.count(F.lit(1)).cast("int").alias("n_bands")).toPandas())
-    merged = (pd.concat(parts).groupby(["ih_a", "ih_b"])["n_bands"]
-              .sum().astype("int32").to_frame().sort_index())
-    assert merged["n_bands"].to_dict() == whole["n_bands"].to_dict()
 
 
 def test_bucket_members_min_size_keeps_singletons(spark):

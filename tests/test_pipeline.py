@@ -133,6 +133,59 @@ def test_input_rewritten_in_place_invalidates_resume(spark, smoke_data, tmp_path
     assert res.tables["signatures"].count() == 60
 
 
+def test_kill_before_manifest_and_truncated_manifest_recompute(
+    spark, smoke_data, tmp_path, monkeypatch
+):
+    """Two ways a stage's manifest can disagree with its output directory;
+    both must recompute the stage, never resume it.
+
+    (1) A run on input B is killed after its signatures write (``_SUCCESS``
+    on disk) but before that stage's manifest is written. A later run on
+    input A must not find A's manifest from the first run sitting next to
+    B's output and resume it. (2) A manifest cut off mid-write."""
+    from pyspark.sql import Observation
+
+    tr = smoke_data.transcripts
+    ids = sorted(tr["conv_id"].unique())
+    inputs = {}
+    for name, n in (("a", 30), ("b", 60)):
+        inputs[name] = str(tmp_path / f"{name}.parquet")
+        tr[tr["conv_id"].isin(ids[:n])].to_parquet(inputs[name], index=False)
+    wd = str(tmp_path / "wd")
+
+    def run(name):
+        return DedupPipeline(spark, CFG, work_dir=wd).run(
+            spark.read.parquet(inputs[name]), with_substring=False)
+
+    run("a")
+
+    class Killed(Exception):
+        pass
+
+    def kill(_obs):
+        raise Killed   # first step after the stage write returns
+
+    monkeypatch.setattr(Observation, "get", property(kill))
+    with pytest.raises(Killed):
+        run("b")
+    monkeypatch.undo()
+    assert os.path.exists(os.path.join(wd, "signatures", "_SUCCESS"))
+
+    res = run("a")
+    assert not res.stages[0].resumed
+    assert res.tables["signatures"].count() == 30
+    assert res.tables["clusters"].count() == 30
+
+    mp = os.path.join(wd, "signatures.manifest.json")
+    with open(mp) as f:
+        text = f.read()
+    with open(mp, "w") as f:
+        f.write(text[: len(text) // 2])
+    res = run("a")
+    assert [s.name for s in res.stages if not s.resumed] == ["signatures"]
+    assert res.tables["signatures"].count() == 30
+
+
 def test_pipeline_no_workdir(spark, smoke_transcripts):
     res = DedupPipeline(spark, CFG, work_dir=None).run(smoke_transcripts, with_substring=False)
     assert res.tables["clusters"].count() > 0

@@ -69,48 +69,6 @@ def test_run_pipeline_script_end_to_end(tmp_path, smoke_data):
     assert sum(tiers.values()) == res["clusters_rows"]
 
 
-def test_run_pipeline_auto_plan_flag(tmp_path, smoke_data):
-    """--auto-plan derives and logs execution parameters from the CLI
-    (exec_plan lands in metrics.json with file-backed byte stats)."""
-    inp = str(tmp_path / "transcripts.parquet")
-    smoke_data.transcripts.to_parquet(inp, index=False)
-    env = dict(os.environ, SPARK_GRAFT_CPUS="4", SPARK_GRAFT_DRIVER_MEM="4g")
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "tools", "run_pipeline.py"),
-         "--input", inp, "--work-dir", str(tmp_path / "wd"),
-         "--master", "local[4]", "--auto-plan"],
-        capture_output=True, text=True, timeout=600, cwd=REPO, env=env,
-    )
-    assert out.returncode == 0, out.stderr[-3000:]
-    with open(tmp_path / "wd" / "metrics.json") as f:
-        plan = json.load(f)["exec_plan"]
-    assert plan["input_bytes"] > 0 and plan["input_rows"] > 0
-    assert plan["bucket_cap"] in (128, 256, 1024)
-
-
-def test_bench_emits_one_json_line(tmp_path):
-    """Driver contract: bench.py prints exactly one parseable JSON line with
-    the agreed keys (smoke scale so the test stays fast)."""
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-        SPARK_GRAFT_CPUS="4",
-        SPARK_GRAFT_DRIVER_MEM="4g",
-        SPARK_GRAFT_BENCH_RUNS="1",
-        SPARK_GRAFT_BENCH_CONVS="200",
-    )
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py")],
-        capture_output=True, text=True, timeout=600, cwd=REPO, env=env,
-    )
-    assert out.returncode == 0, out.stderr[-3000:]
-    res = json.loads(out.stdout.strip().splitlines()[-1])
-    for key in ("metric", "value", "unit", "queries", "sf", "turns_per_sec"):
-        assert key in res, key
-    assert res["unit"] == "sec" and res["value"] > 0
-    assert "dedup_pipeline" in res["queries"]
-
-
 def test_get_spark_inherit_honors_launcher_master(tmp_path):
     """master='inherit' must leave spark.master to the launcher. Simulate a
     spark-submit-style launch by passing --master through the gateway args

@@ -48,12 +48,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--config-json", default=None,
                     help="JSON dict of DedupConfig field overrides")
-    ap.add_argument("--auto-plan", action="store_true",
-                    help="derive shuffle/batch/skew knobs from input stats "
-                         "(planner.derive_exec_plan; decision logged to "
-                         "metrics.json). Explicit --config-json/--shuffle-"
-                         "partitions values are overridden by the plan when "
-                         "this is set")
     ap.add_argument("--tiers", action="store_true",
                     help="also materialize the per-conversation tier table "
                          "(exact/near/substring/kept + removed_by) and log "
@@ -76,9 +70,8 @@ def main(argv: list[str] | None = None) -> int:
     else:
         transcripts = spark.read.table(args.input)
 
-    result = DedupPipeline(
-        spark, cfg, work_dir=args.work_dir, auto_plan=args.auto_plan
-    ).run(transcripts, with_tiers=args.tiers)
+    result = DedupPipeline(spark, cfg, work_dir=args.work_dir).run(
+        transcripts, with_tiers=args.tiers)
 
     if args.output:
         names = ["clusters", "pairs", "signatures"]
