@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 from .. import cache
 from ..config import DedupConfig
 from ..kernels import signatures_for_texts, splitmix64, trim_after
+from ..operators.signatures import band_hashes_col
 from .text import norm_words
 
 
@@ -255,21 +256,12 @@ def doc_band_explode(sig: DataFrame, cfg: DedupConfig) -> DataFrame:
     """doc signatures -> (doc_id, id_hash, band_idx, band_hash) exploded
     band rows (docs below the shingle floor contribute nothing — they are
     covered by the exact-hash path). Shared by the ad-hoc LSH query and the
-    incremental delta-vs-corpus path, so both band identically."""
-    r = cfg.rows
-    return (
-        sig.where(F.size("shingles") > 0)
-        .select(
-            "doc_id",
-            "id_hash",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {cfg.bands - 1}), b -> "
-                    f"struct(b as band_idx, xxhash64(b, slice(minhash, b * {r} + 1, {r})) as band_hash))"
-                )
-            ).alias("band"),
-        )
-        .select("doc_id", "id_hash", "band.band_idx", "band.band_hash")
+    incremental delta-vs-corpus path, so both band identically; the band
+    keys are the transcript engine's (signatures.band_hashes_col)."""
+    return sig.where(F.size("shingles") > 0).select(
+        "doc_id",
+        "id_hash",
+        F.posexplode(band_hashes_col(cfg)).alias("band_idx", "band_hash"),
     )
 
 

@@ -3,10 +3,12 @@ admission pass a web-scale training-data pipeline actually runs.
 
 Reference analog: pcompress's pipe/global mode probes a PERSISTENT
 segmented similarity index instead of rebuilding it per invocation
-(rabin/global/index.c:140-151); the streaming twin of this module
-(streaming/dedup_stream._near_dup_process) does the same per micro-batch.
-This is the BATCH form: a new delta is admitted against an existing corpus
-without re-banding or re-pairing the corpus.
+(rabin/global/index.c:140-151). A new delta is admitted against an existing
+corpus without re-banding or re-pairing the corpus. Batch and stream share
+the transcript admission: streaming/dedup_stream._near_dup_process admits
+each micro-batch through incremental_transcript_pairs, with the stream's
+accumulated signature store as the corpus, so the signature table's
+``band_hashes`` column is the one band index both probe.
 
 Scale shape, distributed path (the document twins always; the transcript
 functions above the driver budget):
@@ -245,7 +247,7 @@ def incremental_clusters(
     # from an earlier incremental_lsh_pairs run — callers that materialize
     # the pair parquet anyway (tools/run_incremental.py) pass it back in so
     # the banding/verify chain executes ONCE per run, not once per surface
-    # (the streaming twin reads its just-written pair parquet for the same
+    # (the near-dup stream reads its just-written pair parquet for the same
     # reason, streaming/dedup_stream.py _near_dup_process).
     near = (
         pairs if pairs is not None else incremental_lsh_pairs(
@@ -338,16 +340,6 @@ def _where_in(df: DataFrame, col: str, keys, negate: bool = False) -> DataFrame:
     return df.join(F.broadcast(rel), col, "left_anti" if negate else "left_semi")
 
 
-def _band_hashes(sig: DataFrame, cfg: DedupConfig):
-    """The per-row band-key array: the stored ``band_hashes`` column when
-    present, else the identical expression compute_signatures writes."""
-    if "band_hashes" in sig.columns:
-        return F.col("band_hashes")
-    r = cfg.rows
-    return F.expr(f"transform(sequence(0, {cfg.bands - 1}), "
-                  f"b -> xxhash64(b, slice(minhash, b * {r} + 1, {r})))")
-
-
 def _delta_keys(drows, cfg: DedupConfig):
     """The delta's probe keys (ih, b, h): one per band above the shingle
     floor, like band_explode, and for every row the content key
@@ -383,7 +375,7 @@ def _corpus_hits(csig: DataFrame, dkeys, cfg: DedupConfig) -> DataFrame:
     is_ch = F.col("band_idx") == cfg.bands
     return (
         csig.select("id_hash", "n_tokens", "conv_id", "content_hash",
-                    F.posexplode(F.concat(_band_hashes(csig, cfg),
+                    F.posexplode(F.concat("band_hashes",
                                           F.array(F.xxhash64("content_hash"))))
                     .alias("band_idx", "band_hash"))
         .where(is_ch | (F.col("n_tokens") >= cfg.shingle_k))
@@ -481,9 +473,11 @@ def incremental_transcript_pairs(
     """Delta-vs-corpus admission for the PRIMARY axis: verified duplicate
     pairs (conv_id_a, conv_id_b, jaccard, match_kind, ih_a, ih_b) between
     a delta of new conversations and (corpus ∪ delta), every pair with
-    >= 1 delta endpoint — the batch daily-ingest form of the transcript
-    pipeline (the streaming twin is streaming/dedup_stream._near_dup_process;
-    the documents twin is incremental_lsh_pairs above). At the
+    >= 1 delta endpoint — the daily-ingest form of the transcript pipeline,
+    and the admission of every streaming micro-batch
+    (streaming/dedup_stream._near_dup_process passes its signature store as
+    ``corpus_sig`` and the batch as ``delta_sig``; the documents twin is
+    incremental_lsh_pairs above). At the
     10^12-turn design point the corpus pipeline runs once and each day's
     conversations are admitted against its checkpointed stage tables —
     corpus text is never re-read, re-shingled, or re-paired.
@@ -544,7 +538,7 @@ def incremental_transcript_pairs(
                            f"{cfg.bands} bands")
     drows = _fetch(dsig.select("conv_id", "id_hash", "n_tokens", "content_hash",
                                F.xxhash64("content_hash").alias("ch_key"),
-                               _band_hashes(dsig, cfg).alias("bh")), max_rows)
+                               F.col("band_hashes").alias("bh")), max_rows)
     stats["delta_rows"] = len(drows)
     if len(drows) > max_rows:
         return distributed(f"delta rows x {cfg.bands} bands over "
@@ -589,7 +583,6 @@ def _distributed_pairs(csig: DataFrame, dsig: DataFrame,
     from ..operators.candidates import band_explode
     from ..operators.verify import exact_pairs, near_pairs
 
-    csig, dsig = cache.persist(csig), cache.persist(dsig)
     dbands = band_explode(dsig, cfg)
     touched = band_explode(csig, cfg).join(
         F.broadcast(dbands.select("band_idx", "band_hash").distinct()),
@@ -603,16 +596,18 @@ def _distributed_pairs(csig: DataFrame, dsig: DataFrame,
         F.count(F.lit(1)).cast("int").alias("n_bands")
     )
     d_ih = dsig.select("id_hash")
-    cand = (
-        cand.join(F.broadcast(d_ih.withColumnRenamed("id_hash", "ih_a")),
-                  "ih_a", "left_semi")
-        .unionByName(
-            cand.join(F.broadcast(d_ih.withColumnRenamed("id_hash", "ih_b")),
-                      "ih_b", "left_semi"))
-        .distinct()
-    )
+
+    def touching_delta(pairs: DataFrame) -> DataFrame:
+        return pairs.join(
+            F.broadcast(d_ih.withColumnRenamed("id_hash", "ih_a")), "ih_a",
+            "left_semi",
+        ).unionByName(pairs.join(
+            F.broadcast(d_ih.withColumnRenamed("id_hash", "ih_b")), "ih_b",
+            "left_semi",
+        )).distinct()
+
     sig_all = csig.unionByName(dsig)
-    near = near_pairs(sig_all, cand, cfg)
+    near = near_pairs(sig_all, touching_delta(cand), cfg)
     # exact channel: star only the content-hash groups the delta touches
     # (identical to the full run's star for those groups — group membership
     # is hash-determined), then keep edges with a delta endpoint
@@ -620,16 +615,7 @@ def _distributed_pairs(csig: DataFrame, dsig: DataFrame,
         F.broadcast(dsig.select("content_hash").distinct()),
         "content_hash", "left_semi",
     )
-    ex = exact_pairs(sig_exact)
-    ex = (
-        ex.join(F.broadcast(d_ih.withColumnRenamed("id_hash", "ih_a")),
-                "ih_a", "left_semi")
-        .unionByName(
-            ex.join(F.broadcast(d_ih.withColumnRenamed("id_hash", "ih_b")),
-                    "ih_b", "left_semi"))
-        .distinct()
-    )
-    return near.unionByName(ex)
+    return near.unionByName(touching_delta(exact_pairs(sig_exact)))
 
 
 def incremental_transcript_admission(

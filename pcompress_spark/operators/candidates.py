@@ -57,34 +57,16 @@ def band_explode(sig: DataFrame, cfg: DedupConfig) -> DataFrame:
     shingle floor (empty shingle set) take the exact-hash path only, exactly
     like the reference's trailing-block handling (rabin/rabin_dedup.c:717-757
     in pcompress)."""
-    r = cfg.rows
     # n_tokens >= k  <=>  non-empty shingle set (shingle count per doc is
     # max(n_tokens - (k-1), 0) before distinct; kernels.shingle_hashes_flat).
     # Filtering on the scalar lets Parquet prune the wide array columns
     # from this stage's scan entirely.
-    base = sig.where(F.col("n_tokens") >= cfg.shingle_k)
-    # Prefer the precomputed band_hashes column (compute_signatures writes
-    # it): the scan reads bands x 8 B per row instead of decoding the
-    # num_perm-long minhash array and re-hashing — and this stage scans the
-    # signature table twice (sizes + salted membership). posexplode the
-    # stored array DIRECTLY (pos IS the band index) instead of building an
-    # intermediate transform(sequence -> struct) array per row: one fewer
-    # per-row array materialization in the hottest generator of the run.
-    # Fallback computes the identical xxhash64-over-slice expression from
-    # minhash (streaming batches and ad-hoc frames without the column).
-    if "band_hashes" in sig.columns:
-        return base.select(
-            "id_hash",
-            F.posexplode("band_hashes").alias("band_idx", "band_hash"),
-        )
-    band_expr = (
-        f"transform(sequence(0, {cfg.bands - 1}), b -> "
-        f"struct(b as band_idx, "
-        f"xxhash64(b, slice(minhash, b * {r} + 1, {r})) as band_hash))"
-    )
-    return (
-        base.select("id_hash", F.explode(F.expr(band_expr)).alias("band"))
-        .select("id_hash", "band.band_idx", "band.band_hash")
+    # The band keys are the stored ``band_hashes`` column
+    # (signatures.band_hashes_col); posexplode it DIRECTLY (pos IS the
+    # band index): no intermediate per-row struct array.
+    return sig.where(F.col("n_tokens") >= cfg.shingle_k).select(
+        "id_hash",
+        F.posexplode("band_hashes").alias("band_idx", "band_hash"),
     )
 
 

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import DedupConfig
@@ -123,20 +124,15 @@ def compute_signatures(
     # trim_after: workers release arena RSS once their partition is done, so
     # idle (reused) Python workers don't starve the following shuffle stage
     out = assembled.mapInArrow(trim_after(_sign), schema=schema)
-    # Precompute the LSH band keys as a compact column (bands x 8B vs the
-    # num_perm x 8B minhash array): the candidates stage scans the
-    # signature table TWICE (bucket sizes + salted membership), and reading
-    # 256 B/row of ready keys instead of decoding + slicing + hashing the
-    # 1 KB minhash array measurably lifts that stage's core-scaling (JVM
-    # array decode is allocation/GC-heavy). Same xxhash64-over-slice
-    # expression band_explode would compute — values identical.
-    from pyspark.sql import functions as F
+    return out.withColumn("band_hashes", band_hashes_col(cfg))
 
+
+def band_hashes_col(cfg: DedupConfig):
+    """THE LSH band-key formula: band b's key is xxhash64(b, minhash[b*rows
+    : (b+1)*rows]). Batch and stream store it at signing time as the
+    ``band_hashes`` column (bands x 8 B per row: banding then scans ready
+    keys instead of decoding and re-hashing the 1 KB minhash array); the
+    document path bands with it directly."""
     r = cfg.rows
-    return out.withColumn(
-        "band_hashes",
-        F.expr(
-            f"transform(sequence(0, {cfg.bands - 1}), "
-            f"b -> xxhash64(b, slice(minhash, b * {r} + 1, {r})))"
-        ),
-    )
+    return F.expr(f"transform(sequence(0, {cfg.bands - 1}), "
+                  f"b -> xxhash64(b, slice(minhash, b * {r} + 1, {r})))")

@@ -1,5 +1,5 @@
-"""Structured Streaming front-end: incremental signature computation and
-exact dedup over an arriving transcript stream.
+"""Structured Streaming front-end: incremental signatures, exact dedup and
+near-duplicate admission over an arriving transcript stream.
 
 Reference analog: pipe mode (`pcompress -p < in > out`,
 /root/reference/pcompress.c:2397-2420) — same single-pass pipeline, with the
@@ -9,10 +9,11 @@ are assembled per event-time window, signatures computed by the SAME Arrow
 kernels as batch, and exact dedup runs with dropDuplicates within the
 watermark horizon.
 
-Like the reference (global-dedup decompress "not possible in pipe mode",
-/root/reference/rabin/rabin_dedup.c:1615-1617), cross-horizon near-dup
-clustering is out of streaming scope — the batch pipeline handles it; the
-stream handles ingest-time signatures + same-window exact suppression.
+Cross-horizon near-dup detection is the pipe-mode index probe: each
+micro-batch of closed conversations is admitted as a delta against the
+accumulated signature store by functions/incremental's
+incremental_transcript_pairs — one admission path and one band index (the
+stored ``band_hashes`` column) for batch and stream.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
-from ..operators.signatures import compute_signatures
+from ..operators.signatures import band_hashes_col, compute_signatures
 
 
 def assemble_windowed(stream: DataFrame, watermark: str = "10 minutes",
@@ -86,9 +87,11 @@ def stateful_assemble_signatures(
     one conversation's turns — bounded and sharded across executors by the
     state store.
 
-    Emits the FULL batch signature schema (operators/signatures.py
-    SIGNATURE_SCHEMA), so downstream batch operators (LSH candidates,
-    verify) run unchanged on the stream's output.
+    Emits the FULL batch signature schema — operators/signatures.py
+    SIGNATURE_SCHEMA plus the stored ``band_hashes`` column, in
+    compute_signatures' column order — so a streamed row equals the batch
+    row and downstream batch operators (LSH candidates, verify, delta
+    admission) run unchanged on the stream's output.
     """
     import numpy as np
     import pandas as pd
@@ -164,6 +167,7 @@ def stateful_assemble_signatures(
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
+        .withColumn("band_hashes", band_hashes_col(cfg))
     )
 
 
@@ -224,9 +228,10 @@ def _recover_compaction(spark, fs, root: str, batch_dirs, tmp_dirs) -> None:
 
 def _store_state(spark, root: str, batch_id: int) -> tuple[list[str], int]:
     """(prior batch dir paths excluding this batch's own, compacted-through
-    watermark) from ONE Hadoop listing — _near_dup_process needs both per
-    store per micro-batch, and on S3A each listing is a LIST round-trip of
-    driver latency."""
+    watermark) from ONE Hadoop listing (on S3A each is a LIST round-trip).
+    The watermark is the highest batch id merged into a ``batch=c<N>`` dir
+    (-1 if none): the dir NAME, written atomically by the compaction
+    rename — no side marker file to drift."""
     _, _, listing = _store_listing(spark, root)
     dirs = [p for name, p in listing if name != f"batch={batch_id}"]
     wm = max(
@@ -244,16 +249,8 @@ def _prior_batch_dirs(spark, root: str, batch_id: int) -> list[str]:
 
 
 def _compacted_through(spark, root: str) -> int:
-    """Highest original batch id merged into a ``batch=c<N>`` compacted dir
-    (-1 if none). The watermark is the dir NAME, written atomically by the
-    compaction rename — no side marker file to drift."""
-    _, _, listing = _store_listing(spark, root)
-    tags = [
-        int(name.split("=", 1)[1][1:])
-        for name, _ in listing
-        if name.startswith("batch=c")
-    ]
-    return max(tags, default=-1)
+    """The store's compaction watermark (see _store_state)."""
+    return _store_state(spark, root, -1)[1]
 
 
 def _update_labels_store(spark, root: str, batch_id: int,
@@ -277,7 +274,7 @@ def _update_labels_store(spark, root: str, batch_id: int,
     whose rows were already compacted into a ``batch=c<N>`` dir restores
     its pre-batch view by filtering src_batch == batch_id (no id anti-join
     needed) and skips its own rewrite — same idempotence rule as the
-    signature/band stores. Incremental-CC correctness: collapsing each
+    signature store. Incremental-CC correctness: collapsing each
     prior component to its label star preserves connectivity exactly, and
     CC over (stars ∪ new edges) on the touched subgraph equals a full
     recompute over the accumulated edge set restricted to those
@@ -408,130 +405,52 @@ def read_stream_labels(spark, work_dir: str) -> DataFrame:
 
 def _near_dup_process(batch_df: DataFrame, batch_id: int, *, store: str,
                       pairs_out: str, cfg: DedupConfig,
-                      band_store: str | None = None,
                       labels_store: str | None = None) -> None:
     """foreachBatch body for start_near_dup_stream (module-level so replay
     idempotence is directly testable).
 
-    INCREMENTAL index probe — per-batch work is proportional to the batch,
-    never to stream lifetime (the reference's pipe-mode segmented index
-    probes a persistent index instead of rebuilding it,
-    /root/reference/rabin/global/index.c:140-151):
-
-      1. band only the NEW batch (band_explode — O(batch));
-      2. broadcast the new batch's distinct bucket keys against the
-         PERSISTED banded store (band_store/batch=N parquet of
-         (id_hash, band_idx, band_hash)) — prior banding is never
-         recomputed, and only store rows in TOUCHED buckets survive the
-         broadcast semi-join (a map-side filter over a 3-long-column scan);
-      3. bucket_members + pair-gen over (touched store bands ∪ new bands),
-         keeping candidate pairs with a new endpoint;
-      4. verify: near pairs join the signature store on id_hash (AQE
-         broadcasts the small candidate side, so the store is scanned, not
-         shuffled); exact star edges run only over content_hash groups
-         present in the batch (semi-join).
+    The micro-batch is a delta admitted by incremental_transcript_pairs
+    against the signature store minus this batch's own rows — the
+    reference's pipe-mode probe of a persistent index
+    (rabin/global/index.c:140-151 in pcompress): a small batch takes the
+    driver path, a large one the distributed plan, and neither rebuilds
+    the store's band index. The pairs touching the batch are written, then
+    the batch joins the store.
 
     Writes are keyed by batch_id and overwritten on replay; store reads
-    EXCLUDE this batch's own subdirs, so a replayed batch joins against
-    exactly the state it saw first. If a store was compacted past this
-    batch (batch_id <= that store's c<N> watermark — possible only when
-    compact_near_dup_store ran against a stream stopped MID-batch), the
-    batch's own rows hide inside the merged dir, so they are anti-joined
-    back out by id_hash before probing and the batch=<id> rewrite is
-    skipped — decided PER STORE, because a mid-batch crash can leave the
-    batch committed to the signature store but not the band store."""
+    EXCLUDE this batch's own subdir, so a replayed batch is admitted
+    against exactly the state it saw first. If the store was compacted past
+    this batch (batch_id <= its c<N> watermark — possible only when
+    compact_near_dup_store ran against a stream stopped MID-batch), its own
+    rows hide inside the merged dir: they are anti-joined back out by
+    id_hash before the probe, and the batch=<id> rewrite is skipped."""
     import os
 
-    from ..operators.candidates import band_explode, bucket_members, bucket_pairs
-    from ..operators.verify import exact_pairs, near_pairs
+    from ..functions.incremental import incremental_transcript_pairs
 
-    band_store = band_store or store + "_bands"
     spark = batch_df.sparkSession
     batch_df = batch_df.persist()
     try:
         if batch_df.count() == 0:
             return
-        # one listing per store yields both the prior dirs and the
-        # compaction watermark. Per-STORE replay watermarks: a crash
-        # between the two store writes followed by a quiesced compaction
-        # leaves this batch inside one compacted store but absent from the
-        # other — the skip-rewrite and the own-row anti-join must each
-        # follow their own store's state, or the missing store never
-        # receives this batch's rows
-        prior_sig, sig_wm = _store_state(spark, store, batch_id)
-        prior_band, band_wm = _store_state(spark, band_store, batch_id)
-        own_in_sig = batch_id <= sig_wm
-        own_in_band = batch_id <= band_wm
-        own_ihs = (
-            batch_df.select("id_hash").distinct()
-            if (own_in_sig or own_in_band) else None
-        )
-
-        batch_bands = band_explode(batch_df, cfg)
-        new_buckets = batch_bands.select("band_idx", "band_hash").distinct()
-        if prior_band:
-            store_bands = spark.read.parquet(*prior_band)
-            if own_in_band:
-                store_bands = store_bands.join(
-                    F.broadcast(own_ihs), "id_hash", "left_anti"
-                )
-            touched_store = store_bands.join(
-                F.broadcast(new_buckets), ["band_idx", "band_hash"], "left_semi"
-            )
-            all_bands = touched_store.unionByName(batch_bands)
+        # one listing yields both the prior dirs and the compaction watermark
+        prior, wm = _store_state(spark, store, batch_id)
+        own_in_store = batch_id <= wm
+        if prior:
+            corpus = spark.read.parquet(*prior)
+            if own_in_store:
+                corpus = corpus.join(
+                    F.broadcast(batch_df.select("id_hash").distinct()),
+                    "id_hash", "left_anti")
         else:
-            all_bands = batch_bands
-        # persist_sizes=False: stats aren't collected here — persisting per
-        # micro-batch would leak cache entries over a long-running stream
-        buckets, _stats = bucket_members(all_bands, cfg, persist_sizes=False)
-        cand = bucket_pairs(buckets, "ih_a", "ih_b").groupBy("ih_a", "ih_b").agg(
-            F.count(F.lit(1)).cast("int").alias("n_bands")
-        )
-
-        new_ids = batch_df.select("conv_id")
-        new_ihs = batch_df.select("id_hash")
-
-        def touching_new(df: DataFrame, a: str, b: str, keys: DataFrame,
-                         key: str) -> DataFrame:
-            return (
-                df.join(keys.withColumnRenamed(key, a), a, "left_semi")
-                .unionByName(df.join(keys.withColumnRenamed(key, b), b, "left_semi"))
-                .distinct()
-            )
-
-        if prior_sig:
-            store_sigs = spark.read.parquet(*prior_sig)
-            if own_in_sig:
-                store_sigs = store_sigs.join(
-                    F.broadcast(own_ihs), "id_hash", "left_anti"
-                )
-            all_sigs = batch_df.unionByName(store_sigs)
-        else:
-            all_sigs = batch_df
-        near = near_pairs(
-            all_sigs, touching_new(cand, "ih_a", "ih_b", new_ihs, "id_hash"), cfg
-        )
-        # exact star: only content-hash groups the batch touches
-        sig_exact = all_sigs.join(
-            batch_df.select("content_hash").distinct(), "content_hash", "left_semi"
-        )
-        verified = near.unionByName(exact_pairs(sig_exact))
-        incremental = touching_new(
-            verified, "conv_id_a", "conv_id_b", new_ids, "conv_id"
-        )
-        incremental.write.mode("overwrite").parquet(
+            corpus = spark.createDataFrame([], batch_df.schema)
+        incremental_transcript_pairs(
+            None, None, cfg, corpus_sig=corpus, delta_sig=batch_df
+        ).write.mode("overwrite").parquet(
             os.path.join(pairs_out, f"batch={batch_id}"))
-        if not own_in_sig:
+        if not own_in_store:
             batch_df.write.mode("overwrite").parquet(
                 os.path.join(store, f"batch={batch_id}"))
-        if not own_in_band:
-            batch_bands.write.mode("overwrite").parquet(
-                os.path.join(band_store, f"batch={batch_id}"))
-        # a store whose c<N> watermark already covers this batch holds its
-        # rows inside the compacted dir — rewriting batch=<id> there would
-        # duplicate them for every future probe; the OTHER store may still
-        # be missing the batch (crash between the two writes), hence the
-        # per-store decision
         if labels_store:
             # evidence = the just-written (materialized) pair parquet, so
             # the verify join is never re-executed for the label update
@@ -561,6 +480,18 @@ def _near_dup_process(batch_df: DataFrame, batch_id: int, *, store: str,
         batch_df.unpersist()
 
 
+def _refuse_old_layout(spark, work_dir: str) -> None:
+    """Raise on a work dir of the older layout, which kept a separate band
+    store: its signature rows have no ``band_hashes``, so reading the store
+    would fail or drop those rows from every probe (null band keys)."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(
+        work_dir.rstrip("/") + "/sig_store_bands")
+    if path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
+        raise ValueError(
+            f"{work_dir} has the old near-dup stream layout (a separate "
+            "sig_store_bands/ band store); start the stream in a new work dir")
+
+
 def start_near_dup_stream(
     stream: DataFrame,
     work_dir: str,
@@ -584,10 +515,10 @@ def start_near_dup_stream(
     Conversations are closed by the stateful sessionizer
     (stateful_assemble_signatures: event-time quiescence, never split
     mid-stream), so each conv_id emits exactly ONE full signature row —
-    window-straddling fragments cannot occur. Per micro-batch the
-    INCREMENTAL probe in _near_dup_process runs (band the batch, probe the
-    persisted banded store, verify, append pairs touching the batch) — a
-    near pair is emitted exactly once, when its later endpoint arrives.
+    window-straddling fragments cannot occur. Each micro-batch is admitted
+    as a delta against the signature store by incremental_transcript_pairs
+    (_near_dup_process) — a near pair is emitted exactly once, when its
+    later endpoint arrives.
 
     Equivalence to the batch pipeline, precisely scoped: with no hot
     buckets the accumulated NEAR pair set equals the batch pipeline's near
@@ -599,15 +530,17 @@ def start_near_dup_stream(
     cap applies to incremental bucket sizes, so drops can differ from batch
     order (same recall bound, logged caps).
 
-    Layout under ``work_dir``: ``sig_store/batch=N/``,
-    ``sig_store_bands/batch=N/`` (the persisted banded index) and
+    Layout under ``work_dir``: ``sig_store/batch=N/`` (the batch
+    signature schema, ``band_hashes`` included — the one band index) and
     ``pairs/batch=N/`` (parquet, one subdir per micro-batch — foreachBatch
     is at-least-once, so a replayed batch OVERWRITES its own subdirs
     instead of double-appending; same idempotent-resume rule as the batch
     pipeline's checkpoints), ``ckpt/`` (streaming checkpoint). Returns the
     started StreamingQuery; read results with
     ``spark.read.parquet(work_dir + "/pairs")`` (the ``batch`` partition
-    column records provenance).
+    column records provenance). A work dir of the older layout, with a
+    separate band store beside ``sig_store/``, is refused with a ValueError
+    before any query starts.
 
     ``with_labels=True`` additionally maintains a ``labels/batch=N/``
     store: per-batch incremental cluster maintenance (_update_labels_store
@@ -620,7 +553,7 @@ def start_near_dup_stream(
     scoping as the pair equivalence above.
 
     Store compaction: pass ``compact_every=K`` to auto-compact the
-    signature/band/label stores every K micro-batches. The hook runs at the
+    signature and label stores every K micro-batches. The hook runs at the
     START of batch B — a quiesced window: every batch < B is committed
     (so will never replay) and B's own possibly-half-written dirs are
     excluded via ``exclude_batch`` — so it is exactly as safe as running
@@ -630,6 +563,7 @@ def start_near_dup_stream(
     import functools
     import os
 
+    _refuse_old_layout(stream.sparkSession, work_dir)
     cfg = cfg or DedupConfig()
     store = os.path.join(work_dir, "sig_store")
     pairs_out = os.path.join(work_dir, "pairs")
@@ -658,8 +592,8 @@ def start_near_dup_stream(
 
 def compact_near_dup_store(spark, work_dir: str,
                            exclude_batch: int | None = None) -> None:
-    """Maintenance: merge the per-batch signature/band store dirs into one
-    ``batch=c<maxN>`` dir each and delete the originals — bounds the file
+    """Maintenance: merge the per-batch signature and label store dirs into
+    one ``batch=c<maxN>`` dir each and delete the originals — bounds the file
     listing a long-lived stream accumulates. Entirely on the Hadoop
     FileSystem API (listStatus/delete/rename), so it works wherever the
     stream writes — HDFS, S3A, or local ``file:`` paths — not just the
@@ -672,8 +606,10 @@ def compact_near_dup_store(spark, work_dir: str,
     ``c<N>`` tag in the surviving dir name doubles as the compaction
     watermark: _near_dup_process anti-joins a replayed batch's own rows
     out of the store when batch_id <= N (the manually-compacted-mid-batch
-    case), so replay idempotence survives compaction."""
-    for sub in ("sig_store", "sig_store_bands", "labels"):
+    case), so replay idempotence survives compaction. Refuses (ValueError)
+    a work dir of the older layout with a separate band store."""
+    _refuse_old_layout(spark, work_dir)
+    for sub in ("sig_store", "labels"):
         root = work_dir.rstrip("/") + "/" + sub
         # _store_listing completes/aborts any interrupted prior compaction
         fs, root_path, listing = _store_listing(spark, root)

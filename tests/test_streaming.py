@@ -6,6 +6,7 @@ watermark never drops live rows). The fixture rewrites datagen's random ts
 accordingly; signatures don't depend on ts, so batch comparison is exact.
 """
 
+import dataclasses
 import os
 
 import pandas as pd
@@ -101,7 +102,11 @@ def test_stateful_assemble_signatures(spark, timed_transcripts,
     assert len(got) > 0, "no conversations timed out"
     from pcompress_spark.operators.assemble import assemble
     from pcompress_spark.operators.signatures import compute_signatures
-    batch_sig = compute_signatures(assemble(batch_df), CFG).toPandas().set_index("conv_id")
+    batch_sig = compute_signatures(assemble(batch_df), CFG)
+    # a streamed row is a batch row: same columns in the same order,
+    # band_hashes included (the store is the band index)
+    assert list(got.columns) == batch_sig.columns
+    batch_sig = batch_sig.toPandas().set_index("conv_id")
     for r in got.itertuples():
         assert batch_sig.at[r.conv_id, "content_hash"] == r.content_hash, r.conv_id
         assert int(batch_sig.at[r.conv_id, "simhash"]) == r.simhash, r.conv_id
@@ -109,6 +114,8 @@ def test_stateful_assemble_signatures(spark, timed_transcripts,
         assert int(batch_sig.at[r.conv_id, "id_hash"]) == r.id_hash, r.conv_id
         assert list(batch_sig.at[r.conv_id, "minhash"]) == list(r.minhash), r.conv_id
         assert list(batch_sig.at[r.conv_id, "shingles"]) == list(r.shingles), r.conv_id
+        assert (list(batch_sig.at[r.conv_id, "band_hashes"])
+                == list(r.band_hashes)), r.conv_id
     # most conversations should have closed (all but the trailing horizon)
     assert len(got) >= 0.7 * len(batch_sig)
 
@@ -327,24 +334,80 @@ def test_near_dup_process_replay_idempotent(spark, timed_transcripts, tmp_path):
         p2[["conv_id_a", "conv_id_b", "match_kind"]])
 
 
-def test_incremental_band_store_is_per_batch(spark, timed_transcripts, tmp_path):
-    """The banded store persists each batch's OWN bands only — per-batch
-    banding work is proportional to the batch, never to stream lifetime
-    (the round-1 O(N^2)-lifetime rebuild is gone)."""
-    from pcompress_spark.operators.candidates import band_explode
+def test_near_dup_process_driver_matches_distributed(spark, timed_transcripts,
+                                                     tmp_path, monkeypatch):
+    """A micro-batch is a delta admitted by incremental_transcript_pairs:
+    its driver path (the default budget) and its distributed plan
+    (cc_local_edges=0) write identical pair rows, on every column."""
+    from pcompress_spark.functions import incremental
     from pcompress_spark.streaming.dedup_stream import _near_dup_process
 
-    batch_df = spark.createDataFrame(timed_transcripts)
-    sig = compute_signatures(assemble(batch_df), CFG)
-    half_a = sig.where(F.hash("conv_id") % 2 == 0).cache()
-    half_b = sig.subtract(half_a).cache()
-    store, pairs = str(tmp_path / "store"), str(tmp_path / "pairs")
-    _near_dup_process(half_a, 0, store=store, pairs_out=pairs, cfg=CFG)
-    _near_dup_process(half_b, 1, store=store, pairs_out=pairs, cfg=CFG)
-    for batch_id, half in ((0, half_a), (1, half_b)):
-        got = spark.read.parquet(f"{store}_bands/batch={batch_id}").count()
-        want = band_explode(half, CFG).count()
-        assert got == want, f"batch {batch_id}: band store {got} != own bands {want}"
+    calls = []
+    distributed_pairs = incremental._distributed_pairs
+
+    def counted(*args):
+        calls.append(args)
+        return distributed_pairs(*args)
+
+    monkeypatch.setattr(incremental, "_distributed_pairs", counted)
+    sig = compute_signatures(assemble(spark.createDataFrame(timed_transcripts)), CFG)
+    half = sig.where(F.hash("conv_id") % 2 == 0)
+    got = {}
+    for name, cfg in (("driver", CFG),
+                      ("distributed", dataclasses.replace(CFG, cc_local_edges=0))):
+        wd = tmp_path / name
+        kw = dict(store=str(wd / "sig_store"), pairs_out=str(wd / "pairs"), cfg=cfg)
+        _near_dup_process(half, 0, **kw)
+        _near_dup_process(sig.subtract(half), 1, **kw)
+        pdf = spark.read.parquet(str(wd / "pairs")).toPandas()
+        cols = sorted(pdf.columns)
+        got[name] = pdf[cols].sort_values(cols).reset_index(drop=True)
+        assert len(calls) == (0 if name == "driver" else 2), name
+    pd.testing.assert_frame_equal(got["driver"], got["distributed"],
+                                  check_exact=True)
+    # both kinds of evidence, and pairs across the two micro-batches
+    assert set(got["driver"]["match_kind"]) == {"near", "exact"}
+    assert (got["driver"]["batch"] == 1).any()
+
+
+def test_near_dup_process_leaves_no_persisted_frames(spark, timed_transcripts,
+                                                     tmp_path):
+    """A long-running stream must not accumulate cache entries: three
+    micro-batches on the distributed plan leave the tracked persist
+    registry as they found it."""
+    from pcompress_spark import cache
+    from pcompress_spark.streaming.dedup_stream import _near_dup_process
+
+    sig = compute_signatures(assemble(spark.createDataFrame(timed_transcripts)), CFG)
+    cfg = dataclasses.replace(CFG, cc_local_edges=0)
+    n_persisted = len(cache._PERSISTED)
+    for i in range(3):
+        _near_dup_process(sig.where(F.pmod(F.hash("conv_id"), F.lit(3)) == i), i,
+                          store=str(tmp_path / "sig_store"),
+                          pairs_out=str(tmp_path / "pairs"), cfg=cfg)
+    assert len(cache._PERSISTED) == n_persisted
+    assert spark.read.parquet(str(tmp_path / "pairs")).count() > 0
+
+
+def test_old_layout_work_dir_refused(spark, timed_transcripts, stream_input_dir,
+                                     tmp_path):
+    """A work dir from when the stream kept a separate band store holds
+    signature rows without band_hashes: starting a stream on it, or
+    compacting it, raises before any query starts."""
+    from pcompress_spark.streaming.dedup_stream import (
+        compact_near_dup_store, start_near_dup_stream)
+
+    wd = tmp_path / "old_layout"
+    (wd / "sig_store_bands" / "batch=0").mkdir(parents=True)
+    stream = spark.readStream.schema(
+        spark.createDataFrame(timed_transcripts).schema).parquet(stream_input_dir)
+    n_active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="sig_store_bands"):
+        start_near_dup_stream(stream, str(wd), CFG)
+    assert len(spark.streams.active) == n_active
+    assert not (wd / "ckpt").exists()
+    with pytest.raises(ValueError, match="sig_store_bands"):
+        compact_near_dup_store(spark, str(wd))
 
 
 def test_compact_near_dup_store(spark, timed_transcripts, tmp_path):
@@ -360,14 +423,12 @@ def test_compact_near_dup_store(spark, timed_transcripts, tmp_path):
     _near_dup_process(half_a, 0, store=store, pairs_out=pairs, cfg=CFG)
     _near_dup_process(half_b, 1, store=store, pairs_out=pairs, cfg=CFG)
     before_sig = spark.read.parquet(store).toPandas()
-    before_band = spark.read.parquet(store + "_bands").count()
     compact_near_dup_store(spark, str(wd))
     after_dirs = [d for d in os.listdir(store) if d.startswith("batch=")]
     assert after_dirs == ["batch=c1"]
     after_sig = spark.read.parquet(store).toPandas()
     assert len(after_sig) == len(before_sig)
     assert set(after_sig["conv_id"]) == set(before_sig["conv_id"])
-    assert spark.read.parquet(store + "_bands").count() == before_band
     # a subsequent batch still probes the compacted store
     extra = half_b.limit(5).withColumn("conv_id", F.concat(F.lit("re_"), "conv_id"))
     _near_dup_process(extra, 2, store=store, pairs_out=pairs, cfg=CFG)
@@ -393,6 +454,13 @@ def test_compaction_crash_recovery(spark, timed_transcripts, tmp_path):
     _near_dup_process(half_b, 1, store=store, pairs_out=pairs, cfg=CFG)
     n_store = spark.read.parquet(store).count()
 
+    # an UNMARKED tmp (crash mid-write) is discarded, originals untouched
+    os.makedirs(f"{store}/{_COMPACT_TMP_PREFIX}1")
+    dirs = _prior_batch_dirs(spark, store, batch_id=99)
+    assert sorted(os.path.basename(d) for d in dirs) == ["batch=0", "batch=1"]
+    assert not os.path.exists(f"{store}/{_COMPACT_TMP_PREFIX}1")
+    assert spark.read.parquet(store).count() == n_store
+
     # simulate the crash window: full merge written to the tagged tmp
     # (with _SUCCESS), one original already deleted, rename never ran
     tmp = f"{store}/{_COMPACT_TMP_PREFIX}1"
@@ -402,15 +470,6 @@ def test_compaction_crash_recovery(spark, timed_transcripts, tmp_path):
     dirs = _prior_batch_dirs(spark, store, batch_id=99)
     assert [os.path.basename(d) for d in dirs] == ["batch=c1"]
     assert spark.read.parquet(store).count() == n_store, "rows lost"
-
-    # an UNMARKED tmp (crash mid-write) is discarded, originals untouched
-    band_store = store + "_bands"
-    n_bands = spark.read.parquet(band_store).count()
-    os.makedirs(f"{band_store}/{_COMPACT_TMP_PREFIX}1")
-    dirs = _prior_batch_dirs(spark, band_store, batch_id=99)
-    assert sorted(os.path.basename(d) for d in dirs) == ["batch=0", "batch=1"]
-    assert not os.path.exists(f"{band_store}/{_COMPACT_TMP_PREFIX}1")
-    assert spark.read.parquet(band_store).count() == n_bands
 
 
 def test_streaming_labels_match_batch(spark, timed_transcripts, tmp_path):
@@ -523,40 +582,6 @@ def test_streaming_labels_enabled_mid_stream(spark, timed_transcripts, tmp_path)
     assert got == want
 
 
-def test_per_store_replay_watermark(spark, timed_transcripts, tmp_path):
-    """A crash between the sig-store and band-store writes followed by a
-    quiesced compaction leaves the batch inside sig_store's c<N> but absent
-    from the band store — the replay must rewrite ONLY the missing store
-    (band) and not duplicate the present one (sig)."""
-    from pcompress_spark.operators.candidates import band_explode
-    from pcompress_spark.streaming.dedup_stream import (
-        _compacted_through, _near_dup_process, compact_near_dup_store)
-
-    batch_df = spark.createDataFrame(timed_transcripts)
-    sig = compute_signatures(assemble(batch_df), CFG)
-    half_a = sig.where(F.hash("conv_id") % 2 == 0).cache()
-    half_b = sig.subtract(half_a).cache()
-    extra = half_b.limit(5).withColumn(
-        "conv_id", F.concat(F.lit("x_"), "conv_id")
-    ).withColumn("id_hash", F.xxhash64("conv_id")).cache()
-    wd = tmp_path / "wd_split"
-    store, pairs = str(wd / "sig_store"), str(wd / "pairs")
-    _near_dup_process(half_a, 0, store=store, pairs_out=pairs, cfg=CFG)
-    _near_dup_process(half_b, 1, store=store, pairs_out=pairs, cfg=CFG)
-    # batch 2 "crashes" after the sig-store write, before the band write
-    extra.write.parquet(f"{store}/batch=2")
-    compact_near_dup_store(spark, str(wd))
-    assert _compacted_through(spark, store) == 2
-    assert _compacted_through(spark, store + "_bands") == 1
-    n_sig = spark.read.parquet(store).count()
-
-    _near_dup_process(extra, 2, store=store, pairs_out=pairs, cfg=CFG)
-    assert spark.read.parquet(store).count() == n_sig, "sig rows duplicated"
-    got = spark.read.parquet(f"{store}_bands/batch=2").count()
-    assert got == band_explode(extra, CFG).count(), (
-        "band store missing the replayed batch's bands")
-
-
 def test_compact_file_uri_and_replay_watermark(spark, timed_transcripts, tmp_path):
     """Compaction must run through the Hadoop FileSystem API (here via an
     explicit file: URI — the same code path as HDFS/S3A), and a batch
@@ -576,18 +601,14 @@ def test_compact_file_uri_and_replay_watermark(spark, timed_transcripts, tmp_pat
     _near_dup_process(half_b, 1, store=store, pairs_out=pairs, cfg=CFG)
     p1 = spark.read.parquet(pairs).toPandas()
     n_store = spark.read.parquet(store).count()
-    n_bands = spark.read.parquet(store + "_bands").count()
 
     compact_near_dup_store(spark, wd)
     assert _compacted_through(spark, store) == 1
-    assert _compacted_through(spark, store + "_bands") == 1
     assert spark.read.parquet(store).count() == n_store
-    assert spark.read.parquet(store + "_bands").count() == n_bands
 
     # replay batch 1 into the compacted store
     _near_dup_process(half_b, 1, store=store, pairs_out=pairs, cfg=CFG)
     assert spark.read.parquet(store).count() == n_store, "rows duplicated"
-    assert spark.read.parquet(store + "_bands").count() == n_bands
     p2 = spark.read.parquet(pairs).toPandas()
     key = lambda df: set(zip(df["conv_id_a"], df["conv_id_b"], df["match_kind"]))
     assert key(p1) == key(p2)
