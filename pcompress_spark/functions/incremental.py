@@ -791,31 +791,51 @@ def incremental_transcript_clusters(
         corpus_labels = connected_components(
             csig.select("conv_id", "id_hash"), verify_pairs(csig, ccand, cfg), cfg
         )
-    labels = corpus_labels.select("conv_id", "cluster_id")
     if pairs is None:
         pairs = incremental_transcript_pairs(
             corpus_tr, delta_tr, cfg, corpus_sig=csig, delta_sig=dsig
         )
-    edges = pairs.select("conv_id_a", "conv_id_b")
+    changed, untouched = _clusters_core(
+        corpus_labels.select("conv_id", "cluster_id"),
+        pairs.select("conv_id_a", "conv_id_b"), dsig, cfg, stats)
+    return untouched.unionByName(changed)
+
+
+def _clusters_core(labels: DataFrame, edges: DataFrame, dsig: DataFrame,
+                   cfg: DedupConfig, stats: dict) -> tuple[DataFrame, DataFrame]:
+    """(the rows that may change, the untouched rows) of
+    incremental_transcript_clusters: the rows that may change are the new
+    labels of every touched member, evidence endpoint and delta
+    conversation; every other ``labels`` row passes through unchanged.
+
+    ``labels`` (conv_id, cluster_id) may also be a store's raw rows, with
+    older rows of a conversation beside its latest one (the stream's label
+    store): a conversation's label only ever falls, because components
+    only merge and the label is the component's min conv_id. So a cluster
+    id that stops being current never comes back, every row naming a
+    current id belongs to a current member of that component, and a stale
+    row only adds a star edge inside one current component. The changed
+    rows are then the same as from the latest rows alone; the untouched
+    rows are not, and a store caller uses only the changed ones."""
     budget = cfg.cc_local_edges
-    if budget <= 0:
-        stats.update(path="distributed", why="cc_local_edges=0 forces it")
+
+    def distributed(why: str) -> tuple[DataFrame, DataFrame]:
+        stats.update(path="distributed", why=why)
         return _distributed_clusters(labels, edges, dsig, cfg)
+
+    if budget <= 0:
+        return distributed("cc_local_edges=0 forces it")
     ev, delta = _fetch_with_ids(edges, ("conv_id_a", "conv_id_b"), dsig, budget)
     stats.update(edge_rows=len(ev), delta_rows=len(delta))
     if len(ev) > budget or len(delta) > budget:
-        stats.update(path="distributed", why=(
-            f"evidence or delta rows over cc_local_edges={budget}"))
-        return _distributed_clusters(labels, edges, dsig, cfg)
+        return distributed(f"evidence or delta rows over cc_local_edges={budget}")
     endpoints = set(delta) | set(ev["conv_id_a"]) | set(ev["conv_id_b"])
     touched = _where_in(labels, "conv_id", endpoints).select("cluster_id")
     members = _fetch(labels.join(F.broadcast(touched), "cluster_id", "left_semi"),
                      budget)
     stats["label_rows"] = len(members)
     if len(members) > budget:
-        stats.update(path="distributed", why=(
-            f"touched label rows over cc_local_edges={budget}"))
-        return _distributed_clusters(labels, edges, dsig, cfg)
+        return distributed(f"touched label rows over cc_local_edges={budget}")
     stats.update(path="driver", why="evidence, delta and touched label rows "
                  f"within cc_local_edges={budget}")
     nodes = endpoints | set(members["conv_id"])
@@ -825,18 +845,16 @@ def incremental_transcript_clusters(
     # every row of a touched cluster (conv_id is unique in ``labels``) and
     # every delta conversation (a replayed delta already sits in
     # ``labels``) exits through the CC side
-    untouched = _where_in(labels, "conv_id", nodes, negate=True)
-    return untouched.unionByName(cc)
+    return cc, _where_in(labels, "conv_id", nodes, negate=True)
 
 
 def _distributed_clusters(labels: DataFrame, edges: DataFrame, dsig: DataFrame,
-                          cfg: DedupConfig) -> DataFrame:
-    """The Spark plan of incremental_transcript_clusters: the same node
-    and edge sets as _driver_clusters, keyed by xxhash64(conv_id)."""
+                          cfg: DedupConfig) -> tuple[DataFrame, DataFrame]:
+    """The Spark plan of _clusters_core: the same node and edge sets as
+    _driver_clusters, keyed by xxhash64(conv_id). Its inputs are stored
+    tables or small frames, so nothing is persisted here."""
     from ..operators.cluster import connected_components
 
-    labels = cache.persist(labels)
-    edges = cache.persist(edges.distinct())
     d_ids = dsig.select("conv_id")
     ep = (
         edges.select(F.col("conv_id_a").alias("conv_id"))
@@ -866,7 +884,7 @@ def _distributed_clusters(labels: DataFrame, edges: DataFrame, dsig: DataFrame,
     untouched = labels.join(F.broadcast(touched), "cluster_id", "left_anti").join(
         F.broadcast(d_ids), "conv_id", "left_anti"
     )
-    return untouched.unionByName(cc)
+    return cc, untouched
 
 
 def incremental_admission(

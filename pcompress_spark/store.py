@@ -1,0 +1,191 @@
+"""The persistent index store shared by delta admission and the stream.
+
+pcompress's pipe and archive modes probe and extend one persistent global
+index (rabin/global/index.c:140-151, 485-558). Here each table of that
+index is a root dir of ``<key>=<name>`` unit dirs: ``batch=N`` per stream
+micro-batch (streaming/dedup_stream.py), ``run=<tag>`` per admitted delta
+(tools/run_incremental.py). This module owns the one protocol both keep:
+
+- **append** writes a unit (a replay overwrites its own unit);
+- **compaction** (quiesced) merges every unit into one ``<key>=c<G>`` dir:
+  the merge goes to a hidden tmp dir, then the names of the units it
+  merged go into the tmp as ``_units.json`` — the completion marker —
+  then exactly the listed units are deleted and the tmp is renamed;
+- **listing** first finishes a marked tmp that way and discards an
+  unmarked one, its units untouched, so no caller sees a half compaction;
+- **replay check**: a unit is compacted when a compacted dir's list names
+  it. Each list carries forward the lists it merged;
+- **full-table replace** (the CLI's labels table) uses the same tmp,
+  marker and rename step against one destination dir.
+
+Every file operation is on the Hadoop FileSystem API, so a store may live
+on HDFS or S3A as well as on a ``file:`` path."""
+
+from __future__ import annotations
+
+import json
+
+UNITS = "_units.json"
+# hidden ('.'-prefixed) from parquet reads of the root; the trailing
+# integer is the generation the tmp becomes
+_TMP = ".merge_tmp_c"
+# tmp dirs of the older layout, marked complete by parquet's _SUCCESS
+# alone: which of their units were merged cannot be told
+_OLD_TMPS = ("_compact_tmp_c", ".compact_tmp_c")
+
+
+def _fs(spark, path: str):
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    return hpath(path).getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def _is_compacted(name: str) -> bool:
+    return name.startswith("c") and name[1:].isdigit()
+
+
+def _old_layout(path: str) -> str:
+    return (f"{path} is from the older store layout, whose compactions kept "
+            f"no unit list ({UNITS}), so which units they merged cannot be "
+            "told; rebuild the store in a new directory")
+
+
+def _read_units(spark, d: str) -> set | None:
+    """The unit list in dir ``d``, or None if it has none."""
+    fs, hpath = _fs(spark, d)
+    if not fs.exists(hpath(f"{d}/{UNITS}")):
+        return None
+    stream = fs.open(hpath(f"{d}/{UNITS}"))
+    try:
+        # commons-io rides Spark's classpath; a py4j-side read loop can't
+        # see Java's mutations of a passed buffer (pass-by-value)
+        return set(json.loads(
+            spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")))
+    finally:
+        stream.close()
+
+
+def _stage(spark, df, tmp: str, names) -> None:
+    """Write ``df`` to ``tmp``, then its unit list: the completion marker."""
+    df.write.mode("overwrite").parquet(tmp)
+    fs, hpath = _fs(spark, tmp)
+    out = fs.create(hpath(f"{tmp}/{UNITS}"), True)
+    try:
+        out.write(json.dumps(sorted(names)).encode())
+    finally:
+        out.close()
+
+
+def _finish(spark, tmp: str, dst: str, victims) -> None:
+    """Delete ``victims`` (absent ones are skipped), rename the marked
+    ``tmp`` to ``dst``."""
+    fs, hpath = _fs(spark, tmp)
+    for v in victims:
+        fs.delete(hpath(v), True)
+    if not fs.rename(hpath(tmp), hpath(dst)):
+        raise IOError(f"rename failed: {tmp} -> {dst}")
+
+
+def listing(spark, root: str, key: str) -> tuple[list[tuple[str, str]], set]:
+    """([(unit name, dir path)] of the ``<key>=<name>`` dirs under
+    ``root``, the unit names its compacted dirs list), after finishing or
+    discarding an interrupted compaction. Raises ValueError, before any
+    write, on a store of the older layout."""
+    root = root.rstrip("/")
+    fs, hpath = _fs(spark, root)
+
+    def scan():
+        units, tmps = [], []
+        if not fs.exists(hpath(root)):
+            return units, tmps, set()
+        for st in fs.listStatus(hpath(root)):
+            name, path = st.getPath().getName(), str(st.getPath())
+            if name.startswith(_OLD_TMPS):
+                raise ValueError(_old_layout(path))
+            if name.startswith(key + "="):
+                units.append((name[len(key) + 1:], path))
+            elif name.startswith(_TMP):
+                tmps.append((name[len(_TMP):], path))
+        lists = [(p, _read_units(spark, p)) for n, p in units if _is_compacted(n)]
+        for p, names in lists:
+            if names is None:
+                raise ValueError(_old_layout(p))
+        return units, tmps, set().union(*(names for _, names in lists))
+
+    units, tmps, compacted = scan()
+    for gen, tmp in tmps:
+        merged = _read_units(spark, tmp)
+        if merged is None:
+            fs.delete(hpath(tmp), True)
+        else:
+            _finish(spark, tmp, f"{root}/{key}=c{gen}",
+                    [f"{root}/{key}={n}" for n in merged])
+    if tmps:
+        units, _, compacted = scan()
+    return units, compacted
+
+
+def append(df, root: str, key: str, name) -> str:
+    """Write ``df`` as unit ``name``; returns the unit's dir path."""
+    path = f"{root.rstrip('/')}/{key}={name}"
+    df.write.mode("overwrite").parquet(path)
+    return path
+
+
+def remove(spark, root: str, key: str, name) -> bool:
+    """Delete unit ``name``; whether it existed."""
+    path = f"{root.rstrip('/')}/{key}={name}"
+    fs, hpath = _fs(spark, path)
+    return bool(fs.delete(hpath(path), True))
+
+
+def compact(spark, root: str, key: str, exclude: str | None = None,
+            merge=None) -> dict:
+    """Merge every unit under ``root`` except ``exclude`` into one
+    ``<key>=c<G>`` dir. ``merge`` maps the union of their rows to the rows
+    kept (default: all). Returns {"merged_runs": n} and, if n > 1, "gen"."""
+    root = root.rstrip("/")
+    units, compacted = listing(spark, root, key)
+    units = [(n, p) for n, p in units if n != exclude]
+    if len(units) <= 1:
+        return {"merged_runs": 0}
+    gen = 1 + max((int(n[1:]) for n, _ in units if _is_compacted(n)), default=0)
+    df = spark.read.parquet(*[p for _, p in units])
+    tmp = f"{root}/{_TMP}{gen}"
+    _stage(spark, merge(df) if merge else df, tmp,
+           compacted | {n for n, _ in units})
+    _finish(spark, tmp, f"{root}/{key}=c{gen}", [p for _, p in units])
+    return {"merged_runs": len(units), "gen": gen}
+
+
+def stage_replace(spark, df, path: str) -> None:
+    """First half of a full-table replace: the new table goes to
+    ``<path>._tmp`` with its marker; ``path`` is untouched."""
+    path = path.rstrip("/")
+    _stage(spark, df, path + "._tmp", [path.rsplit("/", 1)[-1]])
+
+
+def commit_replace(spark, path: str) -> None:
+    """Second half: delete the old table, rename the staged tmp over it."""
+    path = path.rstrip("/")
+    _finish(spark, path + "._tmp", path, [path])
+
+
+def recover_replace(spark, path: str) -> None:
+    """Finish or abort an interrupted replace: a marked tmp with no table
+    is renamed into place (the crash hit between delete and rename); a tmp
+    beside an intact table was never committed and is deleted."""
+    path = path.rstrip("/")
+    fs, hpath = _fs(spark, path)
+    if fs.exists(hpath(path)):
+        fs.delete(hpath(path + "._tmp"), True)
+    elif _read_units(spark, path + "._tmp") is not None:
+        _finish(spark, path + "._tmp", path, [])
+
+
+def refuse_tag_manifest(spark, state_dir: str) -> None:
+    """Raise ValueError on a state dir compacted by the older CLI, which
+    kept a ``_compacted_tags.json`` tag manifest beside the tables."""
+    path = f"{state_dir.rstrip('/')}/_compacted_tags.json"
+    fs, hpath = _fs(spark, path)
+    if fs.exists(hpath(path)):
+        raise ValueError(_old_layout(path))

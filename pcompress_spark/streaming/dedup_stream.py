@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import store as index_store
 from ..config import DedupConfig
 from ..operators.signatures import band_hashes_col, compute_signatures
 
@@ -171,218 +172,47 @@ def stateful_assemble_signatures(
     )
 
 
-def _store_listing(spark, root: str):
-    """(fs, root Path, [(dir name, dir path str)]) of batch=* subdirs under
-    root, via the Hadoop FileSystem API so work_dir may live on HDFS/S3
-    (the spark-submit deployment target), not only the driver's local
-    disk. Completes (or aborts) an interrupted compaction first, so no
-    caller can ever observe the delete/rename window's intermediate
-    state."""
-    jvm = spark._jvm
-    root_path = jvm.org.apache.hadoop.fs.Path(root)
-    fs = root_path.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def scan():
-        batch_dirs, tmp_dirs = [], []
-        if fs.exists(root_path):
-            for status in fs.listStatus(root_path):
-                name = status.getPath().getName()
-                if name.startswith("batch="):
-                    batch_dirs.append((name, str(status.getPath())))
-                elif name.startswith(_COMPACT_TMP_PREFIX):
-                    tmp_dirs.append((name, str(status.getPath())))
-        return batch_dirs, tmp_dirs
-
-    batch_dirs, tmp_dirs = scan()
-    if tmp_dirs:
-        _recover_compaction(spark, fs, root, batch_dirs, tmp_dirs)
-        batch_dirs, _ = scan()
-    return fs, root_path, batch_dirs
-
-
-_COMPACT_TMP_PREFIX = "_compact_tmp_c"
-
-
-def _recover_compaction(spark, fs, root: str, batch_dirs, tmp_dirs) -> None:
-    """Finish or abort a compaction interrupted between its tmp write and
-    the final rename. A COMPLETE tmp (parquet _SUCCESS marker present)
-    holds the full merge of every batch id <= its c<N> tag, so recovery is:
-    delete any surviving originals with id <= N, then rename tmp ->
-    batch=c<N>. An incomplete tmp (no _SUCCESS — the crash hit mid-write)
-    is discarded and the untouched originals stand. Either way the store
-    is never observable in a half-compacted state."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    for name, p in tmp_dirs:
-        tag = int(name[len(_COMPACT_TMP_PREFIX):])
-        if not fs.exists(hpath(p + "/_SUCCESS")):
-            fs.delete(hpath(p), True)
-            continue
-        for bname, bp in batch_dirs:
-            bid = int(bname.split("=", 1)[1].lstrip("c"))
-            if bid <= tag:
-                fs.delete(hpath(bp), True)
-        if not fs.rename(hpath(p), hpath(root + f"/batch=c{tag}")):
-            raise IOError(
-                f"compaction recovery rename failed: {p} -> batch=c{tag}")
-
-
-def _store_state(spark, root: str, batch_id: int) -> tuple[list[str], int]:
-    """(prior batch dir paths excluding this batch's own, compacted-through
-    watermark) from ONE Hadoop listing (on S3A each is a LIST round-trip).
-    The watermark is the highest batch id merged into a ``batch=c<N>`` dir
-    (-1 if none): the dir NAME, written atomically by the compaction
-    rename — no side marker file to drift."""
-    _, _, listing = _store_listing(spark, root)
-    dirs = [p for name, p in listing if name != f"batch={batch_id}"]
-    wm = max(
-        (int(name.split("=", 1)[1][1:]) for name, _ in listing
-         if name.startswith("batch=c")),
-        default=-1,
-    )
-    return dirs, wm
-
-
-def _prior_batch_dirs(spark, root: str, batch_id: int) -> list[str]:
-    """batch=N subdirs under root, excluding this batch's own (replay
-    safety)."""
-    return _store_state(spark, root, batch_id)[0]
-
-
-def _compacted_through(spark, root: str) -> int:
-    """The store's compaction watermark (see _store_state)."""
-    return _store_state(spark, root, -1)[1]
-
-
-def _update_labels_store(spark, root: str, batch_id: int,
-                         batch_df: DataFrame, edges: DataFrame,
+def _update_labels_store(spark, root: str, listed, pairs_out: str,
+                         batch_id: int, batch_df: DataFrame,
                          cfg: DedupConfig) -> None:
-    """Streaming cluster maintenance — the per-batch twin of
-    functions.incremental.incremental_clusters.
+    """Streaming cluster maintenance: one micro-batch's label rows, from
+    the label core of functions.incremental.incremental_transcript_clusters
+    (_clusters_core), so a small batch takes the driver path.
 
-    The labels store holds rows (conv_id, id_hash, cluster_id, src_batch)
-    under ``batch=N`` subdirs; a conversation's CURRENT label is its row
-    with the highest src_batch (read_stream_labels resolves it). Per batch:
-    look up the current labels of this batch's evidence endpoints (a
-    broadcast-filtered map scan of the store), pull the members of the
-    touched clusters, run connected components over (touched label stars ∪
-    batch evidence edges), and write ONE dir of rows for touched members +
-    batch docs. Untouched conversations are never rewritten — their latest
-    rows simply remain the latest, so per-batch write volume is
-    O(batch + touched members), never O(stream lifetime).
+    The labels store (``listed``: its store.listing) holds rows (conv_id,
+    cluster_id, src_batch) under ``batch=N`` units; a conversation's
+    CURRENT label is its row with the highest src_batch
+    (read_stream_labels). The core reads the raw rows, stale ones included
+    (safe: a label only ever falls, see _clusters_core), and the batch
+    writes only the rows that may change — touched members, evidence
+    endpoints and its own conversations — so per-batch write volume is
+    O(batch + touched members), never O(stream lifetime). A replay
+    overwrites its own unit; a batch already compacted into the store has
+    nothing left to write.
 
-    Replay/compaction: rows carry src_batch in-data, so a replayed batch
-    whose rows were already compacted into a ``batch=c<N>`` dir restores
-    its pre-batch view by filtering src_batch == batch_id (no id anti-join
-    needed) and skips its own rewrite — same idempotence rule as the
-    signature store. Incremental-CC correctness: collapsing each
-    prior component to its label star preserves connectivity exactly, and
-    CC over (stars ∪ new edges) on the touched subgraph equals a full
-    recompute over the accumulated edge set restricted to those
-    components; min-conv_id labels therefore match the batch pipeline's
-    (cluster.connected_components' first-occurrence-wins rule).
+    Labels enabled MID-stream (pair batches from label-less runs, an empty
+    labels store): the first labeled batch takes the WHOLE pair store as
+    its evidence, so components the earlier pairs connect are not split.
+    Pre-enablement singletons (in no pair) stay absent until next seen."""
+    from ..functions.incremental import _clusters_core
 
-    Coverage when labels are enabled MID-stream (work_dir already holds
-    signature/pair batches from label-less runs): the caller folds the
-    WHOLE accumulated pair store into the first labeled batch's evidence
-    (_near_dup_process), and edge endpoints always enter the node set
-    straight from the evidence rows (``ep_nodes``) — so every
-    pair-connected conversation gets a label consistent with full pair
-    history. Pre-enablement SINGLETONS (never in any pair) stay absent
-    from the labels store until next seen — read_stream_labels covers
-    conversations seen since enablement plus pair-linked history, not the
-    full stream lifetime."""
-    import os
-
-    from ..operators.cluster import connected_components
-
-    prior, wm = _store_state(spark, root, batch_id)
-    own_in_store = batch_id <= wm
-    store = None
+    units, compacted = listed
+    own = str(batch_id)
+    if own in compacted:
+        return
+    prior = [p for n, p in units if n != own]
     if prior:
-        store = spark.read.parquet(*prior)
-        if own_in_store:
-            store = store.where(F.col("src_batch") != batch_id)
-
-    # evidence endpoints as nodes, independent of store membership: without
-    # this, an endpoint with no labels row (pair partner from a batch before
-    # labels were enabled) would be silently dropped from the CC node set
-    # and the new edge's connectivity lost
-    ep_nodes = (
-        edges.select(F.col("conv_id_a").alias("conv_id"),
-                     F.col("ih_a").alias("id_hash"))
-        .unionByName(
-            edges.select(F.col("conv_id_b").alias("conv_id"),
-                         F.col("ih_b").alias("id_hash")))
-    )
-    if store is not None:
-        ep = (
-            edges.select(F.col("conv_id_a").alias("conv_id"))
-            .unionByName(edges.select(F.col("conv_id_b").alias("conv_id")))
-            .unionByName(batch_df.select("conv_id"))
-            .distinct()
-        )
-        # current labels of endpoint docs -> touched cluster set. Both key
-        # sets are batch-evidence-bounded, so the store is only ever
-        # SCANNED behind a broadcast filter, never shuffled wholesale.
-        ep_rows = store.join(F.broadcast(ep), "conv_id", "left_semi")
-        touched = (
-            ep_rows.groupBy("conv_id")
-            .agg(F.max_by("cluster_id", "src_batch").alias("cluster_id"))
-            .select("cluster_id")
-            .distinct()
-        )
-        # members of touched clusters: docs with ANY row labeled into a
-        # touched cluster are candidates; latest-wins over ALL their rows
-        # then re-filters (a doc relabeled OUT of a touched cluster by a
-        # later batch must not be pulled back in). The candidate pull is a
-        # plain semi-join — AQE broadcasts it while the candidate set is
-        # small and degrades to a candidate-bounded shuffle for a viral
-        # touched cluster, never a corpus-bounded one.
-        cand_ids = (
-            store.join(F.broadcast(touched), "cluster_id", "left_semi")
-            .select("conv_id")
-            .distinct()
-        )
-        cur = (
-            store.join(cand_ids, "conv_id", "left_semi")
-            .groupBy("conv_id")
-            .agg(
-                F.max_by("cluster_id", "src_batch").alias("cluster_id"),
-                F.max_by("id_hash", "src_batch").alias("id_hash"),
-            )
-        )
-        members = cur.join(F.broadcast(touched), "cluster_id", "left_semi")
-        rep_ih = members.where(F.col("conv_id") == F.col("cluster_id")).select(
-            "cluster_id", F.col("id_hash").alias("rep_ih")
-        )
-        star = (
-            members.join(rep_ih, "cluster_id")
-            .where(F.col("conv_id") != F.col("cluster_id"))
-            .select(F.col("rep_ih").alias("ih_a"), F.col("id_hash").alias("ih_b"))
-        )
-        nodes = (
-            members.select("conv_id", "id_hash")
-            .unionByName(batch_df.select("conv_id", "id_hash"))
-            .unionByName(ep_nodes)
-            .distinct()
-        )
-        cc_edges = edges.select("ih_a", "ih_b").unionByName(star)
+        labels = spark.read.parquet(*prior).select("conv_id", "cluster_id")
+        evidence = [f"{pairs_out.rstrip('/')}/batch={own}"]
     else:
-        nodes = (
-            batch_df.select("conv_id", "id_hash")
-            .unionByName(ep_nodes)
-            .distinct()
-        )
-        cc_edges = edges.select("ih_a", "ih_b")
-
-    labels = connected_components(nodes, cc_edges, cfg)
-    out = labels.join(nodes, "conv_id").select(
-        "conv_id", "id_hash", "cluster_id",
-        F.lit(batch_id).cast("long").alias("src_batch"),
-    )
-    if not own_in_store:
-        out.write.mode("overwrite").parquet(
-            os.path.join(root, f"batch={batch_id}"))
+        labels = spark.createDataFrame([], "conv_id string, cluster_id string")
+        units, _ = index_store.listing(spark, pairs_out, "batch")
+        evidence = [p for _, p in units]
+    edges = spark.read.parquet(*evidence).select("conv_id_a", "conv_id_b")
+    changed, _ = _clusters_core(labels, edges, batch_df, cfg, {})
+    index_store.append(
+        changed.withColumn("src_batch", F.lit(batch_id).cast("long")),
+        root, "batch", own)
 
 
 def read_stream_labels(spark, work_dir: str) -> DataFrame:
@@ -394,10 +224,10 @@ def read_stream_labels(spark, work_dir: str) -> DataFrame:
 
     root = os.path.join(work_dir, "labels") if not work_dir.rstrip("/").endswith(
         "/labels") else work_dir
-    _, _, listing = _store_listing(spark, root)
-    if not listing:
+    units, _ = index_store.listing(spark, root, "batch")
+    if not units:
         return spark.createDataFrame([], "conv_id string, cluster_id string")
-    store = spark.read.parquet(*[p for _, p in listing])
+    store = spark.read.parquet(*[p for _, p in units])
     return store.groupBy("conv_id").agg(
         F.max_by("cluster_id", "src_batch").alias("cluster_id")
     )
@@ -418,14 +248,12 @@ def _near_dup_process(batch_df: DataFrame, batch_id: int, *, store: str,
     the batch joins the store.
 
     Writes are keyed by batch_id and overwritten on replay; store reads
-    EXCLUDE this batch's own subdir, so a replayed batch is admitted
-    against exactly the state it saw first. If the store was compacted past
-    this batch (batch_id <= its c<N> watermark — possible only when
-    compact_near_dup_store ran against a stream stopped MID-batch), its own
-    rows hide inside the merged dir: they are anti-joined back out by
-    id_hash before the probe, and the batch=<id> rewrite is skipped."""
-    import os
-
+    EXCLUDE this batch's own unit dir, so a replayed batch is admitted
+    against exactly the state it saw first. If the store was compacted
+    with this batch in it (possible only when compact_near_dup_store ran
+    against a stream stopped MID-batch), its own rows hide inside the
+    merged dir: they are anti-joined back out by id_hash before the probe,
+    and the batch=<id> rewrite is skipped."""
     from ..functions.incremental import incremental_transcript_pairs
 
     spark = batch_df.sparkSession
@@ -433,63 +261,46 @@ def _near_dup_process(batch_df: DataFrame, batch_id: int, *, store: str,
     try:
         if batch_df.count() == 0:
             return
-        # one listing yields both the prior dirs and the compaction watermark
-        prior, wm = _store_state(spark, store, batch_id)
-        own_in_store = batch_id <= wm
+        units, compacted = index_store.listing(spark, store, "batch")
+        # listed up front too: an old-layout labels store raises before
+        # this batch writes anything
+        labels_listed = (index_store.listing(spark, labels_store, "batch")
+                         if labels_store else None)
+        own = str(batch_id)
+        prior = [p for n, p in units if n != own]
         if prior:
             corpus = spark.read.parquet(*prior)
-            if own_in_store:
+            if own in compacted:
                 corpus = corpus.join(
                     F.broadcast(batch_df.select("id_hash").distinct()),
                     "id_hash", "left_anti")
         else:
             corpus = spark.createDataFrame([], batch_df.schema)
-        incremental_transcript_pairs(
+        index_store.append(incremental_transcript_pairs(
             None, None, cfg, corpus_sig=corpus, delta_sig=batch_df
-        ).write.mode("overwrite").parquet(
-            os.path.join(pairs_out, f"batch={batch_id}"))
-        if not own_in_store:
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(store, f"batch={batch_id}"))
+        ), pairs_out, "batch", own)
+        if own not in compacted:
+            index_store.append(batch_df, store, "batch", own)
         if labels_store:
-            # evidence = the just-written (materialized) pair parquet, so
-            # the verify join is never re-executed for the label update
-            ecols = ["conv_id_a", "conv_id_b", "ih_a", "ih_b"]
-            edges = spark.read.parquet(
-                os.path.join(pairs_out, f"batch={batch_id}")).select(*ecols)
-            # labels enabled MID-stream (pair batches exist, label store
-            # empty): fold the WHOLE accumulated pair store into the first
-            # labeled batch's evidence, so labels agree with pair history —
-            # otherwise components the earlier pairs connect would stay
-            # split forever (each later batch sees only its own edges).
-            # One-time cost bounded by the pair store (already the
-            # compactable evidence table); pre-enablement singletons that
-            # never touch a pair remain absent (_update_labels_store doc).
-            if not _prior_batch_dirs(spark, labels_store, batch_id):
-                prior_pairs = _prior_batch_dirs(spark, pairs_out, batch_id)
-                if prior_pairs:
-                    edges = edges.unionByName(
-                        spark.read.parquet(*prior_pairs).select(*ecols))
-            _update_labels_store(
-                spark, labels_store, batch_id,
-                batch_df.select("conv_id", "id_hash"),
-                edges,
-                cfg,
-            )
+            _update_labels_store(spark, labels_store, labels_listed, pairs_out,
+                                 batch_id, batch_df.select("conv_id"), cfg)
     finally:
         batch_df.unpersist()
 
 
 def _refuse_old_layout(spark, work_dir: str) -> None:
-    """Raise on a work dir of the older layout, which kept a separate band
-    store: its signature rows have no ``band_hashes``, so reading the store
-    would fail or drop those rows from every probe (null band keys)."""
-    path = spark._jvm.org.apache.hadoop.fs.Path(
-        work_dir.rstrip("/") + "/sig_store_bands")
+    """Raise ValueError on a work dir of an older layout: one that kept a
+    separate band store (its signature rows have no ``band_hashes``, so
+    reading the store would fail or drop those rows from every probe), or
+    whose compacted dirs have no unit list (pcompress_spark.store)."""
+    wd = work_dir.rstrip("/")
+    path = spark._jvm.org.apache.hadoop.fs.Path(wd + "/sig_store_bands")
     if path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
         raise ValueError(
             f"{work_dir} has the old near-dup stream layout (a separate "
             "sig_store_bands/ band store); start the stream in a new work dir")
+    for sub in ("sig_store", "labels"):
+        index_store.listing(spark, f"{wd}/{sub}", "batch")
 
 
 def start_near_dup_stream(
@@ -538,14 +349,19 @@ def start_near_dup_stream(
     pipeline's checkpoints), ``ckpt/`` (streaming checkpoint). Returns the
     started StreamingQuery; read results with
     ``spark.read.parquet(work_dir + "/pairs")`` (the ``batch`` partition
-    column records provenance). A work dir of the older layout, with a
-    separate band store beside ``sig_store/``, is refused with a ValueError
-    before any query starts.
+    column records provenance). ``sig_store/`` and ``labels/`` are unit
+    stores of pcompress_spark.store, the same append and compaction
+    protocol as tools/run_incremental.py's state tables. A work dir of an
+    older layout (a separate band store beside ``sig_store/``, or compacted
+    dirs without a unit list) is refused with a ValueError before any
+    query starts.
 
     ``with_labels=True`` additionally maintains a ``labels/batch=N/``
     store: per-batch incremental cluster maintenance (_update_labels_store
-    — the streaming twin of functions.incremental.incremental_clusters),
-    where a conversation's current assignment is its latest row; read it
+    — the same label core as
+    functions.incremental.incremental_transcript_clusters, so small batches
+    take its driver path), where a conversation's current assignment is
+    its latest row; read it
     with ``read_stream_labels(spark, work_dir)``. Accumulated labels equal
     the batch pipeline's clusters over the same closed conversations
     (components are the closure of the same pair evidence; min-conv_id
@@ -593,50 +409,23 @@ def start_near_dup_stream(
 def compact_near_dup_store(spark, work_dir: str,
                            exclude_batch: int | None = None) -> None:
     """Maintenance: merge the per-batch signature and label store dirs into
-    one ``batch=c<maxN>`` dir each and delete the originals — bounds the file
-    listing a long-lived stream accumulates. Entirely on the Hadoop
-    FileSystem API (listStatus/delete/rename), so it works wherever the
-    stream writes — HDFS, S3A, or local ``file:`` paths — not just the
-    driver's local disk.
+    one ``batch=c<G>`` dir each (pcompress_spark.store.compact) — bounds the
+    file listing a long-lived stream accumulates. Works wherever the
+    stream writes: HDFS, S3A or local ``file:`` paths.
 
     Safe to run while the stream is stopped/quiesced past those batches,
     or from inside the stream itself via start_near_dup_stream's
     ``compact_every`` hook, which passes ``exclude_batch`` = the in-flight
-    batch so an uncommitted attempt's own dirs are never merged. The
-    ``c<N>`` tag in the surviving dir name doubles as the compaction
-    watermark: _near_dup_process anti-joins a replayed batch's own rows
-    out of the store when batch_id <= N (the manually-compacted-mid-batch
-    case), so replay idempotence survives compaction. Refuses (ValueError)
-    a work dir of the older layout with a separate band store."""
+    batch so an uncommitted attempt's own dirs are never merged. A batch
+    replayed after compaction finds itself in the compacted dir's unit
+    list: _near_dup_process anti-joins its own rows out of the store and
+    skips its rewrites, so replay idempotence survives compaction. Refuses
+    (ValueError) a work dir of an older layout (_refuse_old_layout)."""
     _refuse_old_layout(spark, work_dir)
     for sub in ("sig_store", "labels"):
-        root = work_dir.rstrip("/") + "/" + sub
-        # _store_listing completes/aborts any interrupted prior compaction
-        fs, root_path, listing = _store_listing(spark, root)
-        dirs = [
-            (name, p) for name, p in listing
-            if exclude_batch is None or name != f"batch={exclude_batch}"
-        ]
-        if len(dirs) <= 1:
-            continue
-        tag = max(int(name.split("=", 1)[1].lstrip("c")) for name, _ in dirs)
-        hpath = spark._jvm.org.apache.hadoop.fs.Path
-        # crash-safe protocol: (1) write the FULL merge to a tagged tmp dir
-        # (parquet _SUCCESS marks completeness), (2) delete originals,
-        # (3) rename tmp -> batch=c<tag>. A crash anywhere in (2)/(3) is
-        # repaired by _recover_compaction on the next listing — the tmp
-        # holds everything <= tag, so finishing is always correct; a crash
-        # during (1) leaves an unmarked tmp that recovery discards with the
-        # originals untouched.
-        tmp = root + f"/{_COMPACT_TMP_PREFIX}{tag}"
-        spark.read.parquet(*[p for _, p in dirs]).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        for _, p in dirs:
-            fs.delete(hpath(p), True)
-        if not fs.rename(hpath(tmp), hpath(root + f"/batch=c{tag}")):
-            raise IOError(
-                f"compaction rename failed: {tmp} -> batch=c{tag}")
+        index_store.compact(
+            spark, f"{work_dir.rstrip('/')}/{sub}", "batch",
+            exclude=None if exclude_batch is None else str(exclude_batch))
 
 
 def start_decontam_stream(
@@ -682,9 +471,8 @@ def start_decontam_stream(
         rep = decontaminate(
             docs, benchmark, n=n, overlap_threshold=overlap_threshold
         ).withColumnRenamed("doc_id", "conv_id")
-        rep.write.mode("overwrite").parquet(
-            os.path.join(work_dir, "report", f"batch={batch_id}")
-        )
+        index_store.append(rep, os.path.join(work_dir, "report"), "batch",
+                           batch_id)
 
     writer = (
         asm.writeStream.foreachBatch(process)
@@ -738,13 +526,11 @@ def start_bench_probe_stream(
         # carries only the contaminated ones) — also what lets the
         # parity test compare against exactly the closed population
         batch_df = batch_df.persist()
-        batch_df.select("conv_id").write.mode("overwrite").parquet(
-            os.path.join(work_dir, "probed", f"batch={batch_id}")
-        )
+        index_store.append(batch_df.select("conv_id"),
+                           os.path.join(work_dir, "probed"), "batch", batch_id)
         rep = probe_bench_neardup(batch_df, buckets, bs, md5, cfg, threshold)
-        rep.write.mode("overwrite").parquet(
-            os.path.join(work_dir, "report", f"batch={batch_id}")
-        )
+        index_store.append(rep, os.path.join(work_dir, "report"), "batch",
+                           batch_id)
         batch_df.unpersist()
 
     writer = (

@@ -258,12 +258,16 @@ def test_cli_state_compaction(spark, tmp_path):
     """tools/run_incremental.py --compact: K deltas -> compact -> delta
     K+1 must produce byte-identical admission/pairs/labels to the
     uncompacted state (VERDICT r3 'done' criterion); plus crash recovery
-    of an interrupted compaction and the compacted-tag replay refusal."""
+    of an interrupted compaction, the compacted-tag replay refusal, and
+    the refusal of a state dir of the older tag-manifest layout."""
+    import json
     import os
     import shutil
     import sys as _sys
 
     import pandas as pd
+
+    from pcompress_spark import store
 
     REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     _sys.path.insert(0, os.path.join(REPO, "tools"))
@@ -328,11 +332,13 @@ def test_cli_state_compaction(spark, tmp_path):
         ri.main(["--delta", paths["delta2"], "--run-tag", "day2",
                  "--out", str(tmp_path / "oc")] + common)
 
-    # crash recovery, incomplete tmp: discarded, originals untouched
+    # crash recovery, incomplete tmp (no unit list): discarded, originals
+    # untouched
     sig_dir = os.path.join(state_a, "sig")
-    dead = os.path.join(sig_dir, ".compact_tmp_c9")
+    dead = os.path.join(sig_dir, f"{store._TMP}9")
     os.makedirs(dead)
-    ri._recover_state_compaction(spark, state_a, "sig")
+    runs_before = sorted(n for n, _ in store.listing(spark, sig_dir, "run")[0])
+    assert runs_before == ["c1", "day3"]
     assert not os.path.exists(dead)
 
     # crash recovery, complete tmp: originals deleted, tmp renamed in,
@@ -350,12 +356,33 @@ def test_cli_state_compaction(spark, tmp_path):
     before = sig_table(sig_dir)
     runs = [d for d in os.listdir(sig_dir) if d.startswith("run=")]
     assert len(runs) == 2  # run=c1 + run=day3
+    merged = store.listing(spark, sig_dir, "run")[1] | {"c1", "day3"}
+    tmp = os.path.join(sig_dir, f"{store._TMP}2")
     spark.read.parquet(
         *[os.path.join(sig_dir, d) for d in runs]
-    ).write.mode("overwrite").parquet(os.path.join(sig_dir, ".compact_tmp_c2"))
-    ri._recover_state_compaction(spark, state_a, "sig")
-    assert [d for d in os.listdir(sig_dir)
-            if d.startswith("run=")] == ["run=c2"]
+    ).write.mode("overwrite").parquet(tmp)
+    with open(os.path.join(tmp, store.UNITS), "w") as f:
+        json.dump(sorted(merged), f)
+    units, compacted = store.listing(spark, sig_dir, "run")
+    assert [n for n, _ in units] == ["c2"]
     pd.testing.assert_frame_equal(before, sig_table(sig_dir))
     # day3's tag is now recorded as compacted too
-    assert ri._manifest_read(spark, state_a)["day3"] == 2
+    assert {"day1", "day2", "day3"} <= compacted
+
+    # a state dir compacted by the older CLI (a tag manifest beside the
+    # tables, compacted dirs without unit lists) is refused before any write
+    state_old = str(tmp_path / "state_old")
+    shutil.copytree(state_b, state_old)
+    with open(os.path.join(state_old, "_compacted_tags.json"), "w") as f:
+        json.dump({"day1": 1}, f)
+    def tree():
+        return sorted(os.path.relpath(os.path.join(d, n), state_old)
+                      for d, ds, fs in os.walk(state_old) for n in ds + fs)
+
+    files = tree()
+    for argv in (["--compact"],
+                 ["--delta", paths["delta3"], "--run-tag", "day4",
+                  "--out", str(tmp_path / "od")]):
+        with pytest.raises(ValueError, match="_compacted_tags.json"):
+            ri.main(argv + ["--state-dir", state_old, "--master", "inherit"])
+    assert tree() == files

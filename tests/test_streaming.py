@@ -373,8 +373,8 @@ def test_near_dup_process_driver_matches_distributed(spark, timed_transcripts,
 def test_near_dup_process_leaves_no_persisted_frames(spark, timed_transcripts,
                                                      tmp_path):
     """A long-running stream must not accumulate cache entries: three
-    micro-batches on the distributed plan leave the tracked persist
-    registry as they found it."""
+    micro-batches on the distributed plan, pairs and label core alike,
+    leave the tracked persist registry as they found it."""
     from pcompress_spark import cache
     from pcompress_spark.streaming.dedup_stream import _near_dup_process
 
@@ -384,30 +384,45 @@ def test_near_dup_process_leaves_no_persisted_frames(spark, timed_transcripts,
     for i in range(3):
         _near_dup_process(sig.where(F.pmod(F.hash("conv_id"), F.lit(3)) == i), i,
                           store=str(tmp_path / "sig_store"),
-                          pairs_out=str(tmp_path / "pairs"), cfg=cfg)
+                          pairs_out=str(tmp_path / "pairs"),
+                          labels_store=str(tmp_path / "labels"), cfg=cfg)
     assert len(cache._PERSISTED) == n_persisted
     assert spark.read.parquet(str(tmp_path / "pairs")).count() > 0
+    assert spark.read.parquet(str(tmp_path / "labels" / "batch=2")).count() > 0
 
 
 def test_old_layout_work_dir_refused(spark, timed_transcripts, stream_input_dir,
                                      tmp_path):
     """A work dir from when the stream kept a separate band store holds
-    signature rows without band_hashes: starting a stream on it, or
-    compacting it, raises before any query starts."""
+    signature rows without band_hashes, and one compacted before compacted
+    dirs carried their unit list cannot tell which batches it merged:
+    starting a stream on either, compacting it, or admitting a batch into
+    it raises before any write."""
     from pcompress_spark.streaming.dedup_stream import (
-        compact_near_dup_store, start_near_dup_stream)
+        _near_dup_process, compact_near_dup_store, start_near_dup_stream)
 
-    wd = tmp_path / "old_layout"
-    (wd / "sig_store_bands" / "batch=0").mkdir(parents=True)
     stream = spark.readStream.schema(
         spark.createDataFrame(timed_transcripts).schema).parquet(stream_input_dir)
+    sig = compute_signatures(assemble(spark.createDataFrame(timed_transcripts)), CFG)
     n_active = len(spark.streams.active)
-    with pytest.raises(ValueError, match="sig_store_bands"):
-        start_near_dup_stream(stream, str(wd), CFG)
-    assert len(spark.streams.active) == n_active
-    assert not (wd / "ckpt").exists()
-    with pytest.raises(ValueError, match="sig_store_bands"):
-        compact_near_dup_store(spark, str(wd))
+    for name, old_dir, match in (
+            ("bands", "sig_store_bands/batch=0", "sig_store_bands"),
+            ("sig_list", "sig_store/batch=c1", "_units.json"),
+            ("labels_list", "labels/batch=c3", "_units.json")):
+        wd = tmp_path / name
+        (wd / old_dir).mkdir(parents=True)
+        before = sorted(p.relative_to(wd) for p in wd.rglob("*"))
+        with pytest.raises(ValueError, match=match):
+            start_near_dup_stream(stream, str(wd), CFG)
+        assert len(spark.streams.active) == n_active
+        with pytest.raises(ValueError, match=match):
+            compact_near_dup_store(spark, str(wd))
+        if name != "bands":
+            with pytest.raises(ValueError, match=match):
+                _near_dup_process(sig, 4, store=str(wd / "sig_store"),
+                                  pairs_out=str(wd / "pairs"),
+                                  labels_store=str(wd / "labels"), cfg=CFG)
+        assert sorted(p.relative_to(wd) for p in wd.rglob("*")) == before, name
 
 
 def test_compact_near_dup_store(spark, timed_transcripts, tmp_path):
@@ -437,12 +452,14 @@ def test_compact_near_dup_store(spark, timed_transcripts, tmp_path):
 
 def test_compaction_crash_recovery(spark, timed_transcripts, tmp_path):
     """A crash between compaction's delete loop and its final rename must
-    not lose the store: the next listing finishes the rename (complete tmp)
-    or discards an unmarked tmp with the originals untouched."""
+    not lose the store: the next listing finishes the rename (a tmp with
+    its unit list) or discards an unmarked tmp with the originals
+    untouched."""
+    import json
     import shutil
 
-    from pcompress_spark.streaming.dedup_stream import (
-        _COMPACT_TMP_PREFIX, _near_dup_process, _prior_batch_dirs)
+    from pcompress_spark.store import _TMP, UNITS, listing
+    from pcompress_spark.streaming.dedup_stream import _near_dup_process
 
     batch_df = spark.createDataFrame(timed_transcripts)
     sig = compute_signatures(assemble(batch_df), CFG)
@@ -454,21 +471,24 @@ def test_compaction_crash_recovery(spark, timed_transcripts, tmp_path):
     _near_dup_process(half_b, 1, store=store, pairs_out=pairs, cfg=CFG)
     n_store = spark.read.parquet(store).count()
 
-    # an UNMARKED tmp (crash mid-write) is discarded, originals untouched
-    os.makedirs(f"{store}/{_COMPACT_TMP_PREFIX}1")
-    dirs = _prior_batch_dirs(spark, store, batch_id=99)
-    assert sorted(os.path.basename(d) for d in dirs) == ["batch=0", "batch=1"]
-    assert not os.path.exists(f"{store}/{_COMPACT_TMP_PREFIX}1")
+    # an UNMARKED tmp (crash mid-write, parquet complete but no unit
+    # list yet) is discarded, originals untouched
+    tmp = f"{store}/{_TMP}1"
+    spark.read.parquet(f"{store}/batch=0", f"{store}/batch=1").write.parquet(tmp)
+    units, compacted = listing(spark, store, "batch")
+    assert sorted(n for n, _ in units) == ["0", "1"] and not compacted
+    assert not os.path.exists(tmp)
     assert spark.read.parquet(store).count() == n_store
 
-    # simulate the crash window: full merge written to the tagged tmp
-    # (with _SUCCESS), one original already deleted, rename never ran
-    tmp = f"{store}/{_COMPACT_TMP_PREFIX}1"
+    # simulate the crash window: full merge and its unit list written to
+    # the tmp, one original already deleted, rename never ran
     spark.read.parquet(f"{store}/batch=0", f"{store}/batch=1").write.parquet(tmp)
+    with open(f"{tmp}/{UNITS}", "w") as f:
+        json.dump(["0", "1"], f)
     shutil.rmtree(f"{store}/batch=0")
     # recovery runs inside the next listing: finishes delete + rename
-    dirs = _prior_batch_dirs(spark, store, batch_id=99)
-    assert [os.path.basename(d) for d in dirs] == ["batch=c1"]
+    units, compacted = listing(spark, store, "batch")
+    assert [n for n, _ in units] == ["c1"] and compacted == {"0", "1"}
     assert spark.read.parquet(store).count() == n_store, "rows lost"
 
 
@@ -511,6 +531,58 @@ def test_streaming_labels_match_batch(spark, timed_transcripts, tmp_path):
     got2 = {r.conv_id: r.cluster_id
             for r in read_stream_labels(spark, str(wd)).collect()}
     assert got2 == got
+
+
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+def test_streaming_labels_read_raw_store_rows(spark, timed_transcripts,
+                                              tmp_path, path):
+    """The label core reads the labels store's raw rows, stale ones
+    included. Micro-batches b, c (copy of b), a (copy of b), d (near copy
+    of b) leave stale rows (b, b) and (c, b) beside the current (b, a) and
+    (c, a); batch d touches b and c, and the labels still equal the batch
+    pipeline's connected components, on the driver path and the
+    distributed plan alike."""
+    from pcompress_spark.operators.candidates import candidate_pairs
+    from pcompress_spark.operators.cluster import connected_components
+    from pcompress_spark.operators.verify import verify_pairs
+    from pcompress_spark.streaming.dedup_stream import (
+        _near_dup_process, read_stream_labels)
+
+    t = timed_transcripts
+    n_words = t.groupby("conv_id")["text"].apply(
+        lambda x: sum(len(s.split()) for s in x))
+    src = t[t["conv_id"] == n_words.idxmax()]
+    convs = []
+    for cid in ("s-b", "s-c", "s-a", "s-d"):
+        rows = src.assign(conv_id=cid)
+        if cid == "s-d":
+            last = rows["turn_idx"].idxmax()
+            rows.loc[last, "text"] = rows.loc[last, "text"] + " one small edit"
+        convs.append(rows)
+    sig = compute_signatures(assemble(spark.createDataFrame(
+        pd.concat(convs, ignore_index=True))), CFG).cache()
+    wd = tmp_path / "wd_bcad"
+    kw = dict(store=str(wd / "sig_store"), pairs_out=str(wd / "pairs"),
+              labels_store=str(wd / "labels"))
+    # b, c and a leave the stale rows; d, which reads them, runs on the path
+    # under test
+    for i, cid in enumerate(("s-b", "s-c", "s-a")):
+        _near_dup_process(sig.where(F.col("conv_id") == cid), i, cfg=CFG, **kw)
+    raw = {(r.conv_id, r.cluster_id)
+           for r in spark.read.parquet(str(wd / "labels")).collect()}
+    assert {("s-b", "s-b"), ("s-c", "s-b"), ("s-c", "s-a")} <= raw
+    cfg = CFG if path == "driver" else dataclasses.replace(CFG, cc_local_edges=0)
+    _near_dup_process(sig.where(F.col("conv_id") == "s-d"), 3, cfg=cfg, **kw)
+    last = {r.conv_id for r in spark.read.parquet(
+        str(wd / "labels" / "batch=3")).collect()}
+    assert {"s-b", "s-c"} <= last
+    got = {r.conv_id: r.cluster_id
+           for r in read_stream_labels(spark, str(wd)).collect()}
+    cand, _ = candidate_pairs(sig, CFG)
+    want = {r.conv_id: r.cluster_id for r in connected_components(
+        sig.select("conv_id", "id_hash"), verify_pairs(sig, cand, CFG),
+        CFG).collect()}
+    assert got == want == dict.fromkeys(("s-a", "s-b", "s-c", "s-d"), "s-a")
 
 
 def test_streaming_labels_replay_idempotent(spark, timed_transcripts, tmp_path):
@@ -588,8 +660,9 @@ def test_compact_file_uri_and_replay_watermark(spark, timed_transcripts, tmp_pat
     replayed AFTER its rows were compacted (stream stopped mid-checkpoint,
     operator compacted anyway) must neither see its own rows in the store
     nor duplicate them: pairs and store contents stay identical."""
+    from pcompress_spark.store import listing
     from pcompress_spark.streaming.dedup_stream import (
-        _compacted_through, _near_dup_process, compact_near_dup_store)
+        _near_dup_process, compact_near_dup_store)
 
     batch_df = spark.createDataFrame(timed_transcripts)
     sig = compute_signatures(assemble(batch_df), CFG)
@@ -603,7 +676,7 @@ def test_compact_file_uri_and_replay_watermark(spark, timed_transcripts, tmp_pat
     n_store = spark.read.parquet(store).count()
 
     compact_near_dup_store(spark, wd)
-    assert _compacted_through(spark, store) == 1
+    assert listing(spark, store, "batch")[1] == {"0", "1"}
     assert spark.read.parquet(store).count() == n_store
 
     # replay batch 1 into the compacted store

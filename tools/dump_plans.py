@@ -4,6 +4,7 @@ relational stages). Run: python tools/dump_plans.py"""
 
 from __future__ import annotations
 
+import dataclasses
 import re
 import io
 import os
@@ -11,6 +12,8 @@ import sys
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pyspark.sql import functions as F
 
 from pcompress_spark.session import get_spark
 from pcompress_spark.config import DedupConfig
@@ -20,11 +23,15 @@ from pcompress_spark.operators.candidates import candidate_pairs
 from pcompress_spark.operators.verify import verify_pairs
 from pcompress_spark.operators.cluster import _large_star
 from pcompress_spark.operators.substring import substring_candidates
-from pcompress_spark.functions import doc_dedup
+from pcompress_spark.functions import doc_dedup, incremental
 from pcompress_spark.queries import relational
 from pcompress_spark.sources.tables import load_table, load_transcripts
 
 SF = "/root/testdata/sf0.01"
+# Spark jobs of tr_incremental_pairs' driver path at sf0.01, as measured in
+# this script (its corpus and delta signatures are computed, then bounded
+# fetches decide the path)
+TR_INC_DRIVER_JOBS = 7
 
 
 def plan_of(df) -> str:
@@ -55,7 +62,12 @@ def main() -> None:
     doc_sub_df = entry.queries()["doc_substring_pairs"](spark, SF)
     inc_pairs_df = entry.queries()["doc_incremental_pairs"](spark, SF)
     inc_cc_df = entry.queries()["doc_incremental_clusters"](spark, SF)
+    # the distributed plan of tr_incremental_pairs (at sf0.01 the default
+    # budget takes the driver path, whose result is a local relation)
+    entry_cfg = entry.CFG
+    entry.CFG = dataclasses.replace(entry_cfg, cc_local_edges=0)
     tr_inc_pairs_df = entry.queries()["tr_incremental_pairs"](spark, SF)
+    entry.CFG = entry_cfg
     tr_inc_cc_df = entry.queries()["tr_incremental_clusters"](spark, SF)
     turn_idx_df = entry.queries()["tr_turn_dedup_index"](spark, SF)
     ann_recall_df = entry.queries()["ann_recall_report"](spark, SF)
@@ -270,6 +282,23 @@ def main() -> None:
         else "FAIL tr incremental pairs: semi-joins not broadcast or "
         "signature table exchanged on a single pair-end key"
     )
+    # its driver path, at the default budget: the same query must run on
+    # the driver in a bounded number of Spark jobs (signatures, bounded
+    # fetches, endpoint rows)
+    sc = spark.sparkContext
+    sc.setJobGroup("tr_inc_driver", "tr incremental pairs, driver path")
+    st: dict = {}
+    t = load_transcripts(spark, SF)
+    is_delta = F.expr("CAST(substring(conv_id, 6) AS BIGINT) % 4 = 0")
+    incremental.incremental_transcript_pairs(
+        t.where(~is_delta), t.where(is_delta), entry.CFG, stats=st).collect()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("tr_inc_driver"))
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    ok = st.get("path") == "driver" and n_jobs <= TR_INC_DRIVER_JOBS
+    checks.append(
+        f"{'OK' if ok else 'FAIL'} tr incremental pairs driver path: path "
+        f"{st.get('path')} ({st.get('why')}), {n_jobs} Spark jobs (bound "
+        f"{TR_INC_DRIVER_JOBS})")
     tr_cc_plan = plan_of(tr_inc_cc_df)
     checks.append(
         "OK tr incremental clusters: untouched labels pass through a "
