@@ -134,7 +134,9 @@ def _cascade_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     cascade (the _pipeline_tables pattern applied to the cascade's own
     config): assemble under stable turn order, key by the md5_60
     surrogate, sign once at _CASCADE_CFG, write parquet keyed by
-    (scale tag, config hash, CORPUS FINGERPRINT). Later invocations —
+    (scale tag, config hash, CORPUS FINGERPRINT, signature format —
+    doc_dedup.DOCSIG_FORMAT, so a table written before doc_signatures
+    gained a column is rebuilt, not read). Later invocations —
     including every curate_transcripts fan-out branch — read parquet
     instead of re-running the shingling UDF. Values are identical to
     signing inline (signatures are per-document), so the tr_curation
@@ -158,7 +160,8 @@ def _cascade_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_fp = hashlib.sha256("\n".join(fp_parts).encode()).hexdigest()[:12]
     path = os.path.join(
         CACHE_DIR,
-        f"cascade_sig_{tag}_{_CASCADE_CFG.config_hash()}_{corpus_fp}")
+        f"cascade_sig_{tag}_{_CASCADE_CFG.config_hash()}_{corpus_fp}"
+        f"_f{doc_dedup.DOCSIG_FORMAT}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         tdocs = assemble(load_transcripts(spark, sf_dir)).select(
             kmv.md5_60(F.col("conv_id")).alias("doc_id"),
@@ -464,7 +467,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         time (rabin_dedup.c:975-994, 1026-1036), expressed entirely in
         Spark built-ins — assemble -> md5-60bit shingles -> bottom-K ->
         shared salted buckets -> exact-Jaccard verify, with ZERO Python
-        workers in the plan (plan-checked in PLANS.md)."""
+        workers in the plan (plan-checked by tools/dump_plans.py)."""
         from pcompress_spark.functions.kmv import kmv_near_pairs_transcripts
         return kmv_near_pairs_transcripts(load_transcripts(spark, sf_dir), CFG)
 

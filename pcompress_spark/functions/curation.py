@@ -222,10 +222,10 @@ def neardup_decontaminate(
     absent — anti-join the result against the corpus to drop leaks.
 
     Plan shape (the 100 TB path): rides incremental_lsh_pairs with the
-    benchmark as the delta — the corpus band table is probed with a
-    broadcast semi-join on the benchmark's bucket keys, so per-run work
+    benchmark as the delta — the corpus signatures' band_hashes are probed
+    with a broadcast semi-join on the benchmark's bucket keys, so per-run work
     is O(benchmark + touched buckets), never O(corpus); at scale pass the
-    corpus's persisted signature/band stage tables exactly as the daily
+    corpus's persisted signature stage table exactly as the daily
     admission loop does. Honest recall note: symmetric-Jaccard banding
     means a SHORT eval item embedded inside a LONG training doc can evade
     the bands — that containment case is ``decontaminate``'s (exact

@@ -46,6 +46,17 @@ def exact_dup_groups(docs: DataFrame) -> DataFrame:
     )
 
 
+def md5_star(docs: DataFrame) -> DataFrame:
+    """Exact-dup star edges (doc_id_a, doc_id_b): each content-md5 group's
+    min doc_id linked to every other member (connectivity of the group)."""
+    return (
+        exact_hash(docs).join(exact_dup_groups(docs), "content_md5")
+        .where(F.col("doc_id") != F.col("rep_doc_id"))
+        .select(F.col("rep_doc_id").alias("doc_id_a"),
+                F.col("doc_id").alias("doc_id_b"))
+    )
+
+
 def dedup_keep_first(docs: DataFrame) -> DataFrame:
     """Exact dedup: keep min doc_id per content hash (first-occurrence-wins,
     /root/reference/rabin/global/index.c:485-558). One shuffle; scales as a
@@ -196,8 +207,13 @@ _DOCSIG_SCHEMA = T.StructType(
         T.StructField("shingles", T.ArrayType(T.LongType()), False),
         T.StructField("minhash", T.ArrayType(T.LongType()), False),
         T.StructField("simhash", T.LongType(), False),
+        T.StructField("content_md5", T.StringType(), True),
     ]
 )
+# Bump when doc_signatures' columns change: cached signature tables carry it
+# in their path (__spark_entry__._cascade_signatures), so an older table is
+# rebuilt rather than read.
+DOCSIG_FORMAT = 2
 
 
 _DOCSIG_WIN_SCHEMA = T.StructType(
@@ -211,6 +227,10 @@ def doc_signatures(docs: DataFrame, cfg: DedupConfig,
     """MinHash/SimHash signatures for a documents table (shared kernels).
     id_hash = splitmix64(doc_id): the deterministic salting hash for
     hot-bucket sampling (same role as the transcript pipeline's id_hash).
+    Like compute_signatures, the row carries its index keys from signing
+    time on: ``band_hashes`` (signatures.band_hashes_col, the only band
+    index — doc_band_explode reads it) and ``content_md5`` (md5 of the raw
+    text, the exact-dup key of exact_hash).
     with_windows adds the content-defined substring window fingerprints
     (requires cfg.substring_enabled — the kernel only emits them then).
     Arrow-native (mapInArrow + flat kernel) like compute_signatures: the
@@ -240,8 +260,9 @@ def doc_signatures(docs: DataFrame, cfg: DedupConfig,
                     np.arange(0, (n + 1) * cfg.num_perm, cfg.num_perm,
                               dtype=np.int64)),
                 pa.array(flat["simhash"].view(np.int64), type=pa.int64()),
+                rb.column(rb.schema.get_field_index("content_md5")),
             ]
-            names = ["doc_id", "id_hash", "shingles", "minhash", "simhash"]
+            names = list(_DOCSIG_SCHEMA.fieldNames())
             if with_windows:
                 cols.append(
                     arrow_list_array(flat["wh_values"], flat["w_offsets"]))
@@ -249,19 +270,23 @@ def doc_signatures(docs: DataFrame, cfg: DedupConfig,
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
     schema = _DOCSIG_WIN_SCHEMA if with_windows else _DOCSIG_SCHEMA
-    return docs.select("doc_id", "text").mapInArrow(trim_after(_sign), schema=schema)
+    return (
+        docs.select("doc_id", "text", F.md5("text").alias("content_md5"))
+        .mapInArrow(trim_after(_sign), schema=schema)
+        .withColumn("band_hashes", band_hashes_col(cfg))
+    )
 
 
-def doc_band_explode(sig: DataFrame, cfg: DedupConfig) -> DataFrame:
+def doc_band_explode(sig: DataFrame) -> DataFrame:
     """doc signatures -> (doc_id, id_hash, band_idx, band_hash) exploded
-    band rows (docs below the shingle floor contribute nothing — they are
-    covered by the exact-hash path). Shared by the ad-hoc LSH query and the
-    incremental delta-vs-corpus path, so both band identically; the band
-    keys are the transcript engine's (signatures.band_hashes_col)."""
+    band rows of the stored ``band_hashes`` column (docs below the shingle
+    floor contribute nothing — they are covered by the exact-hash path).
+    Shared by the ad-hoc LSH query and the incremental delta-vs-corpus
+    path, so both band identically, with the transcript engine's keys."""
     return sig.where(F.size("shingles") > 0).select(
         "doc_id",
         "id_hash",
-        F.posexplode(band_hashes_col(cfg)).alias("band_idx", "band_hash"),
+        F.posexplode("band_hashes").alias("band_idx", "band_hash"),
     )
 
 
@@ -299,12 +324,12 @@ def minhash_lsh_pairs(
     # point this at a stage table via ``signatures``).
     if signatures is not None:
         sig = cache.persist(
-            signatures.select("doc_id", "id_hash", "shingles", "minhash")
+            signatures.select("doc_id", "id_hash", "shingles", "band_hashes")
             .join(docs.select("doc_id"), "doc_id", "left_semi")
         )
     else:
         sig = cache.persist(doc_signatures(docs, cfg))
-    banded = doc_band_explode(sig, cfg)
+    banded = doc_band_explode(sig)
     buckets, stats = bucket_members(
         banded, cfg, id_col="doc_id", salt_col="id_hash", persist_sizes=with_stats
     )
@@ -369,18 +394,8 @@ def neardup_clusters(docs: DataFrame, cfg: DedupConfig | None = None,
         F.col("doc_id_a").alias("ih_a"), F.col("doc_id_b").alias("ih_b")
     )
     if exact_star:
-        eh = exact_hash(docs)
-        reps = (
-            eh.groupBy("content_md5")
-            .agg(F.min("doc_id").alias("rep"), F.count(F.lit(1)).alias("n"))
-            .where(F.col("n") > 1)
-        )
-        star = (
-            eh.join(reps, "content_md5")
-            .where(F.col("doc_id") != F.col("rep"))
-            .select(F.col("rep").alias("ih_a"), F.col("doc_id").alias("ih_b"))
-        )
-        edges = edges.unionByName(star)
+        edges = edges.unionByName(md5_star(docs).select(
+            F.col("doc_id_a").alias("ih_a"), F.col("doc_id_b").alias("ih_b")))
     nodes = docs.select(
         F.col("doc_id").alias("conv_id"), F.col("doc_id").alias("id_hash")
     )
@@ -792,19 +807,7 @@ def source_overlap(docs: DataFrame, cfg: DedupConfig | None = None,
     near = minhash_lsh_pairs(docs, cfg, threshold).select(
         "doc_id_a", "doc_id_b"
     )
-    eh = exact_hash(docs)
-    reps = (
-        eh.groupBy("content_md5")
-        .agg(F.min("doc_id").alias("rep"), F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 1)
-    )
-    star = (
-        eh.join(reps, "content_md5")
-        .where(F.col("doc_id") != F.col("rep"))
-        .select(F.col("rep").alias("doc_id_a"),
-                F.col("doc_id").alias("doc_id_b"))
-    )
-    edges = near.unionByName(star).distinct()
+    edges = near.unionByName(md5_star(docs)).distinct()
     src = docs.select("doc_id", "source")
     ea = src.select(
         F.col("doc_id").alias("doc_id_a"), F.col("source").alias("src_a")

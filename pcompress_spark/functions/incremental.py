@@ -8,17 +8,23 @@ corpus without re-banding or re-pairing the corpus. Batch and stream share
 the transcript admission: streaming/dedup_stream._near_dup_process admits
 each micro-batch through incremental_transcript_pairs, with the stream's
 accumulated signature store as the corpus, so the signature table's
-``band_hashes`` column is the one band index both probe.
+``band_hashes`` column is the one band index both probe. Documents and
+transcripts share one admission core (_admission) and one label core
+(_clusters_core), each with a driver form and a distributed form; the
+document wrappers only map their evidence onto the cores' rows. Document
+PAIRS (incremental_lsh_pairs) keep their own plan: the oracle pins a
+different verify for them (md5-of-raw-text exact key, doc_id-ordered
+bucket cap, 6 dp Jaccard with no est-Jaccard prefilter).
 
-Scale shape, distributed path (the document twins always; the transcript
-functions above the driver budget):
+Scale shape, distributed path (document pairs always; the transcript
+pairs and both cores above the driver budget):
   - signatures are computed for the DELTA only when corpus signatures are
     supplied (at scale they are persisted stage tables from the corpus's
-    own dedup run — pass them via ``corpus_sig``/``corpus_bands``);
-  - the corpus band table is probed with a broadcast semi-join on the
-    delta's distinct bucket keys, so only corpus rows in TOUCHED buckets
-    survive a map-side filter over a 4-column scan: per-run shuffle work
-    is O(delta + touched members), never O(corpus);
+    own dedup run — pass them via ``corpus_sig``);
+  - the corpus band index (the signature table's ``band_hashes``) is
+    probed with a broadcast semi-join on the delta's distinct bucket keys,
+    so only corpus rows in TOUCHED buckets survive a map-side filter:
+    per-run shuffle work is O(delta + touched members), never O(corpus);
   - hot-bucket salting/capping (the shared ``bucket_members`` path) runs
     on the union membership of each touched bucket, which is bit-identical
     to what a full-corpus re-run would compute for that bucket — so the
@@ -27,7 +33,8 @@ functions above the driver budget):
     computes the full pair set in SQL and filters on the endpoint
     predicate, pinning the incremental plan to full-batch semantics.
 
-Scale shape, driver path (the transcript functions, small deltas): on
+Scale shape, driver path (small deltas; every function but document
+pairs): on
 perfbench's ingest_delta workload a distributed admission is ~180 Spark
 jobs of fixed scheduling cost on a few hundred rows, slower than
 rebuilding the corpus.
@@ -47,8 +54,9 @@ reach the executors as broadcast relations. The result returns as a
 small local DataFrame, so writing it is one job. A step over budget
 discards what it fetched and the distributed plan runs unchanged;
 ``cc_local_edges=0`` forces it. Both paths are bit-identical
-(tests/test_incremental_transcripts.py pins the parity), and the
-optional ``stats`` dict records which one ran and why.
+(tests/test_incremental_transcripts.py and tests/test_incremental.py pin
+the parity), and the transcript functions' optional ``stats`` dict
+records which one ran and why.
 """
 
 from __future__ import annotations
@@ -59,7 +67,7 @@ from pyspark.sql import functions as F
 from .. import cache
 from ..config import DedupConfig
 from ..operators.candidates import bucket_members, bucket_pairs
-from .doc_dedup import doc_band_explode, doc_signatures
+from .doc_dedup import doc_band_explode, doc_signatures, exact_hash
 
 
 def _delta_endpoint_pairs(cand: DataFrame, delta_ids: DataFrame) -> DataFrame:
@@ -91,32 +99,29 @@ def incremental_lsh_pairs(
     cfg: DedupConfig | None = None,
     threshold: float = 0.3,
     corpus_sig: DataFrame | None = None,
-    corpus_bands: DataFrame | None = None,
     delta_sig: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs (doc_id_a, doc_id_b, jaccard) between the
     delta and (corpus ∪ delta), WITHOUT re-pairing the corpus: every pair
     has >= 1 delta endpoint; corpus-corpus pairs are the corpus run's job.
 
-    ``corpus_sig``/``corpus_bands``: persisted stage tables from the
-    corpus's own dedup run. When omitted (ad-hoc/test use) they are
-    computed here from ``corpus`` — correct but O(corpus); production
-    callers at scale MUST pass them (module docstring).
-    ``delta_sig``: precomputed delta signatures — callers that also fold
-    signatures into state (tools/run_incremental.py) materialize them once
-    and pass them here so the Arrow signature kernels run a single time
-    per delta."""
+    ``corpus_sig``: the persisted doc_signatures table of the corpus's own
+    run; its stored ``band_hashes`` column is the corpus band index. When
+    omitted (ad-hoc/test use) it is computed here from ``corpus`` —
+    correct but O(corpus); production callers at scale MUST pass it
+    (module docstring). ``delta_sig``: precomputed delta signatures —
+    callers that also fold signatures into state (tools/run_incremental.py)
+    materialize them once and pass them here so the Arrow signature
+    kernels run a single time per delta."""
     cfg = cfg or DedupConfig(shingle_k=3, substring_enabled=False,
                              jaccard_threshold=threshold)
     csig = cache.persist(corpus_sig if corpus_sig is not None
                          else doc_signatures(corpus, cfg))
     dsig = cache.persist(delta_sig if delta_sig is not None
                          else doc_signatures(delta, cfg))
-    cbands = (corpus_bands if corpus_bands is not None
-              else doc_band_explode(csig, cfg))
-    dbands = doc_band_explode(dsig, cfg)
+    dbands = doc_band_explode(dsig)
     touched_keys = dbands.select("band_idx", "band_hash").distinct()
-    touched = cbands.join(
+    touched = doc_band_explode(csig).join(
         F.broadcast(touched_keys), ["band_idx", "band_hash"], "left_semi"
     )
     all_bands = touched.unionByName(dbands)
@@ -150,43 +155,49 @@ def incremental_lsh_pairs(
     )
 
 
-def corpus_md5_index(corpus: DataFrame) -> DataFrame:
-    """(content_md5, c_rep) exact-dup index over the corpus — min doc_id
-    per content hash, the relational form of the reference's persistent
-    global exact index (/root/reference/rabin/global/index.c:485-558).
-    At scale this is a stage table written ONCE by the corpus's own dedup
-    run; per-delta admission then probes it with a broadcast of the
-    delta's hashes instead of re-scanning + re-aggregating corpus text."""
-    return (
-        corpus.select(F.md5("text").alias("content_md5"), "doc_id")
-        .groupBy("content_md5")
-        .agg(F.min("doc_id").alias("c_rep"))
-    )
-
-
-def _delta_exact_edges(
-    corpus: DataFrame, delta: DataFrame, corpus_md5: DataFrame | None = None
-) -> DataFrame:
+def _delta_exact_edges(csig: DataFrame, delta: DataFrame) -> DataFrame:
     """Exact-dup edges with the delta endpoint first: (doc_id, partner)
-    where partner is the corpus exact-index hit (min corpus doc_id of the
-    hash — every such delta doc links there) and/or the earliest delta doc
-    with the same hash (d_min < doc_id). Both edges are emitted when both
-    exist — for CLUSTER connectivity more evidence never hurts, unlike
-    admission's single-partner verdict. The corpus index probe broadcasts
-    the delta hash set, so the index scan is map-side (no corpus shuffle
-    when ``corpus_md5`` is a persisted stage table)."""
-    cmd5 = corpus_md5 if corpus_md5 is not None else corpus_md5_index(corpus)
-    dmd5 = delta.select("doc_id", F.md5("text").alias("content_md5"))
-    dmin = dmd5.groupBy("content_md5").agg(F.min("doc_id").alias("d_min"))
-    e1 = cmd5.join(F.broadcast(dmd5), "content_md5").select(
-        "doc_id", F.col("c_rep").alias("partner")
+    where partner is the min corpus doc_id of the doc's content md5 and/or
+    the earliest delta doc with the same md5 (d_min < doc_id). The corpus
+    exact index is the signature table's ``content_md5`` column, probed
+    map-side with a BROADCAST of the delta's hashes; only the hit rows (a
+    delta-bounded set) reach the min, so no corpus-sized state shuffles."""
+    dmd5 = exact_hash(delta)
+    keys = F.broadcast(dmd5.select("content_md5").distinct())
+    c_rep = (
+        csig.select("content_md5", "doc_id")
+        .join(keys, "content_md5", "left_semi")
+        .groupBy("content_md5").agg(F.min("doc_id").alias("partner"))
     )
-    e2 = (
-        dmd5.join(dmin, "content_md5")
-        .where(F.col("d_min") < F.col("doc_id"))
-        .select("doc_id", F.col("d_min").alias("partner"))
+    d_min = dmd5.groupBy("content_md5").agg(F.min("doc_id").alias("partner"))
+    return (
+        dmd5.join(c_rep, "content_md5")
+        .unionByName(dmd5.join(d_min, "content_md5")
+                     .where(F.col("partner") < F.col("doc_id")))
+        .select("doc_id", "partner")
+        .distinct()
     )
-    return e1.unionByName(e2).distinct()
+
+
+def _doc_evidence(corpus: DataFrame, delta: DataFrame, cfg: DedupConfig,
+                  threshold: float, corpus_sig: DataFrame | None,
+                  pairs: DataFrame | None) -> DataFrame:
+    """A delta's duplicate evidence in the admission and label cores' row
+    form (conv_id_a, conv_id_b, match_kind) over doc_ids: the near pairs
+    (``pairs``, precomputed by callers that materialize the pair output,
+    else incremental_lsh_pairs) plus _delta_exact_edges as 'exact'."""
+    csig = (corpus_sig if corpus_sig is not None
+            else cache.persist(doc_signatures(corpus, cfg)))
+    if pairs is None:
+        pairs = incremental_lsh_pairs(corpus, delta, cfg, threshold,
+                                      corpus_sig=csig)
+    return pairs.select(
+        F.col("doc_id_a").alias("conv_id_a"), F.col("doc_id_b").alias("conv_id_b"),
+        F.lit("near").alias("match_kind"),
+    ).unionByName(_delta_exact_edges(csig, delta).select(
+        F.col("doc_id").alias("conv_id_a"), F.col("partner").alias("conv_id_b"),
+        F.lit("exact").alias("match_kind"),
+    ))
 
 
 def incremental_clusters(
@@ -196,8 +207,6 @@ def incremental_clusters(
     threshold: float = 0.3,
     corpus_labels: DataFrame | None = None,
     corpus_sig: DataFrame | None = None,
-    corpus_bands: DataFrame | None = None,
-    corpus_md5: DataFrame | None = None,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental cluster maintenance: merge a delta's duplicate evidence
@@ -216,86 +225,35 @@ def incremental_clusters(
                           restricted to that predicate) plus exact-md5
                           edges from delta docs to the corpus exact index
                           / earlier delta docs.
-    Components the delta never touches keep their corpus labels verbatim
-    (anti-join passthrough — their rows are never shuffled into the CC).
+    Components the delta never touches keep their corpus labels verbatim.
+    The merge is the transcript label core (_clusters_core) over doc_ids,
+    so it takes the driver union-find under ``cfg.cc_local_edges`` and the
+    distributed plan above it, bit-identically.
 
-    Scale shape (the point at 100 TB): with persisted stage tables passed
-    in (``corpus_labels``, ``corpus_sig``, ``corpus_bands``,
-    ``corpus_md5`` — all written once by the corpus's own run), per-delta
-    work is O(delta + touched buckets + touched components): the label
-    table is scanned map-side three times (touched-rep lookup, member
-    pull, anti-join passthrough) against BROADCAST delta-bounded key sets,
-    and the CC itself runs only on touched members + delta docs. Nothing
-    re-pairs, re-bands, or re-shuffles the corpus. When the persisted
-    inputs are omitted (ad-hoc/test use) they are computed here — correct
-    but O(corpus), per incremental_lsh_pairs' module docstring.
+    ``corpus_labels``/``corpus_sig``: persisted stage tables of the
+    corpus's own run; with both (and ``pairs``) supplied, ``corpus`` is
+    never scanned. When omitted (ad-hoc/test use) they are computed here
+    — correct but O(corpus). ``pairs``: precomputed near-dup evidence
+    (incremental_lsh_pairs), so the banding/verify chain executes ONCE
+    per run when the caller materializes it anyway.
 
     Reference analog: the persistent global index admits new blocks
     against prior occupants without revisiting them
     (/root/reference/rabin/global/index.c:140-151, 485-558); clustering is
     the backward-reference closure of those hits."""
-    from ..operators.cluster import connected_components
     from .doc_dedup import neardup_clusters
 
     cfg = cfg or DedupConfig(shingle_k=3, substring_enabled=False,
                              jaccard_threshold=threshold)
-    labels = cache.persist(
-        corpus_labels if corpus_labels is not None
-        else neardup_clusters(corpus, cfg, threshold)
-    )
-    # ``pairs``: precomputed near-dup evidence (doc_id_a, doc_id_b[, ...])
-    # from an earlier incremental_lsh_pairs run — callers that materialize
-    # the pair parquet anyway (tools/run_incremental.py) pass it back in so
-    # the banding/verify chain executes ONCE per run, not once per surface
-    # (the near-dup stream reads its just-written pair parquet for the same
-    # reason, streaming/dedup_stream.py _near_dup_process).
-    near = (
-        pairs if pairs is not None else incremental_lsh_pairs(
-            corpus, delta, cfg, threshold, corpus_sig, corpus_bands
-        )
-    ).select("doc_id_a", "doc_id_b")
-    exact = _delta_exact_edges(corpus, delta, corpus_md5).select(
-        F.col("doc_id").alias("doc_id_a"), F.col("partner").alias("doc_id_b")
-    )
-    edges = cache.persist(near.unionByName(exact).distinct())
-    endpoints = (
-        edges.select(F.col("doc_id_a").alias("doc_id"))
-        .unionByName(edges.select(F.col("doc_id_b").alias("doc_id")))
-        .distinct()
-    )
-    # delta-bounded key sets broadcast against the corpus-sized label scan
-    touched = (
-        labels.join(F.broadcast(endpoints), "doc_id", "left_semi")
-        .select("cluster_id")
-        .distinct()
-    )
-    members = labels.join(F.broadcast(touched), "cluster_id", "left_semi")
-    star = members.where(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("cluster_id").alias("doc_id_a"), F.col("doc_id").alias("doc_id_b")
-    )
-    nodes = (
-        delta.select("doc_id")
-        .unionByName(members.select("doc_id"))
-        .distinct()
-        .select(F.col("doc_id").alias("conv_id"), F.col("doc_id").alias("id_hash"))
-    )
-    cc_edges = edges.unionByName(star).select(
-        F.col("doc_id_a").alias("ih_a"), F.col("doc_id_b").alias("ih_b")
-    )
-    cc = connected_components(nodes, cc_edges, cfg).select(
-        F.col("conv_id").cast("long").alias("doc_id"),
-        F.col("cluster_id").cast("long").alias("cluster_id"),
-    )
-    # replay safety: when a prior attempt already merged THIS delta into
-    # corpus_labels (a re-run of a completed or commit-crashed daily run),
-    # a singleton delta doc sits in labels but is no edge endpoint, so its
-    # old row would pass the cluster anti-join while CC re-emits it via the
-    # delta node set — two rows for one doc. Delta docs therefore always
-    # exit through the CC side only.
-    untouched = labels.join(F.broadcast(touched), "cluster_id", "left_anti").join(
-        F.broadcast(delta.select("doc_id")), "doc_id", "left_anti"
-    )
-    return untouched.select("doc_id", "cluster_id").unionByName(cc)
+    if corpus_labels is None:
+        corpus_labels = cache.persist(neardup_clusters(corpus, cfg, threshold))
+    edges = _doc_evidence(corpus, delta, cfg, threshold, corpus_sig, pairs)
+    changed, untouched = _clusters_core(
+        corpus_labels.select(F.col("doc_id").alias("conv_id"), "cluster_id"),
+        edges.select("conv_id_a", "conv_id_b"),
+        delta.select(F.col("doc_id").alias("conv_id")), cfg, {})
+    return untouched.unionByName(changed).select(
+        F.col("conv_id").alias("doc_id"), "cluster_id")
 
 
 # ---- transcript driver path -------------------------------------------
@@ -314,13 +272,15 @@ def _fetch(df: DataFrame, limit: int):
 
 
 def _fetch_with_ids(pairs: DataFrame, cols: tuple, ids: DataFrame, limit: int):
-    """The string ``cols`` of ``pairs`` and the ``conv_id`` of ``ids`` in
-    ONE bounded job of at most 2 x ``limit`` + 1 rows: (pair rows, id
-    list). If the fetch was cut, one side holds more than ``limit``."""
-    blank = [F.lit(None).cast("string").alias(c) for c in cols[1:]]
+    """The ``cols`` of ``pairs`` and the ``conv_id`` of ``ids`` in ONE
+    bounded job of at most 2 x ``limit`` + 1 rows: (pair rows, id list).
+    If the fetch was cut, one side holds more than ``limit``. An id row
+    repeats its id, cast to each column's type, in every column: a null
+    would turn a long id column into float64 on the driver."""
+    types = dict(pairs.dtypes)
     rows = _fetch(
         pairs.select(*cols, F.lit(False).alias("is_id")).unionByName(
-            ids.select(F.col("conv_id").alias(cols[0]), *blank,
+            ids.select(*(F.col("conv_id").cast(types[c]).alias(c) for c in cols),
                        F.lit(True).alias("is_id"))),
         2 * limit)
     is_id = rows["is_id"].to_numpy(dtype=bool)
@@ -624,33 +584,48 @@ def incremental_transcript_admission(
 ) -> DataFrame:
     """Per-delta-conversation admission verdict from the evidence pairs
     (incremental_transcript_pairs): (conv_id, keep, dup_kind, dup_of) —
-    the transcript twin of incremental_admission, derived entirely from
-    the materialized pair table (no second verify pass).
+    derived entirely from the materialized pair table (no second verify
+    pass), by the admission core _admission; dup_of = '' when kept
+    (null-free output).
+
+    ``delta_ids``: one conv_id per delta conversation (the admission
+    universe — kept conversations appear with keep=1). ``stats``: as
+    incremental_transcript_pairs."""
+    return _admission(delta_ids, pairs, cfg or DedupConfig(), stats).withColumn(
+        "dup_of", F.coalesce("dup_of", F.lit("")))
+
+
+def _admission(delta_ids: DataFrame, pairs: DataFrame, cfg: DedupConfig,
+               stats: dict | None = None) -> DataFrame:
+    """The admission core of transcripts and documents, over ids of any one
+    type: (conv_id, keep, dup_kind, dup_of) per ``delta_ids`` conv_id from
+    evidence rows ``pairs`` (conv_id_a, conv_id_b, match_kind); dup_of is
+    null when kept (each public wrapper fills its own sentinel).
 
     Rule (deterministic, first-occurrence-wins with corpus priority —
     reference first-writer-wins at the index, rabin/global/index.c:485-558):
-    a delta conversation's duplicate partner is the MIN conv_id over its
-    pair neighbors that are either corpus conversations (priority
-    regardless of lexicographic order) or EARLIER (smaller conv_id) delta
-    conversations; exact outranks near when both exist. The exact
-    channel's star edges suffice for this rule: the star representative is
-    the content group's global min, so every member's min valid neighbor
-    IS the representative, and a delta representative of a group
-    containing corpus members sees them as member-side neighbors.
-    dup_of = '' when kept (null-free output).
+    a delta id's duplicate partner is the MIN id over its pair neighbors
+    that are either corpus ids (priority regardless of id order) or
+    EARLIER (smaller) delta ids; exact outranks near when both exist.
+    Admission is by partner EXISTENCE, not transitive kept-ness: a delta
+    id dropped as a dup of another DROPPED delta id stays dropped (its
+    content is covered by that partner's own dup chain). The transcript
+    exact channel's star edges suffice for this rule: the star
+    representative is the content group's global min, so every member's
+    min valid neighbor IS the representative, and a delta representative
+    of a group containing corpus members sees them as member-side
+    neighbors.
 
-    ``delta_ids``: one conv_id per delta conversation (the admission
-    universe — kept conversations appear with keep=1). When the pair list
-    and the delta ids each fit ``cfg.cc_local_edges`` rows, both are
-    fetched and the rule runs on the driver; otherwise as a Spark plan.
-    ``stats``: as incremental_transcript_pairs."""
-    budget = (cfg or DedupConfig()).cc_local_edges
+    When the pair list and the delta ids each fit ``cfg.cc_local_edges``
+    rows, both are fetched and the rule runs on the driver; otherwise as a
+    Spark plan. ``stats`` receives the path and why."""
+    budget = cfg.cc_local_edges
     stats = {} if stats is None else stats
     if budget <= 0:
         stats.update(path="distributed", why="cc_local_edges=0 forces it")
         return _distributed_admission(delta_ids, pairs)
-    prs, ids = _fetch_with_ids(
-        pairs, ("conv_id_a", "conv_id_b", "match_kind"), delta_ids, budget)
+    cols = ("conv_id_a", "conv_id_b", "match_kind")
+    prs, ids = _fetch_with_ids(pairs, cols, delta_ids, budget)
     stats.update(pair_rows=len(prs), delta_rows=len(ids))
     if len(prs) > budget or len(ids) > budget:
         stats.update(path="distributed", why=(
@@ -659,8 +634,8 @@ def incremental_transcript_admission(
     stats.update(path="driver", why=f"pair and delta rows within "
                  f"cc_local_edges={budget}")
     delta = set(ids)
-    best: dict[tuple[str, str], str] = {}
-    for a, b, kind in prs.itertuples(index=False):
+    best: dict = {}
+    for a, b, kind in zip(*(prs[c].tolist() for c in cols)):
         for me, nbr in ((a, b), (b, a)):
             if me in delta and (nbr not in delta or nbr < me):
                 key = (me, kind)
@@ -669,13 +644,14 @@ def incremental_transcript_admission(
     for c in sorted(delta):
         kind = ("exact" if (c, "exact") in best
                 else "near" if (c, "near") in best else "none")
-        rows.append((c, int(kind == "none"), kind, best.get((c, kind), "")))
+        rows.append((c, int(kind == "none"), kind, best.get((c, kind))))
+    t = delta_ids.schema["conv_id"].dataType.simpleString()
     return delta_ids.sparkSession.createDataFrame(
-        rows, "conv_id string, keep int, dup_kind string, dup_of string")
+        rows, f"conv_id {t}, keep int, dup_kind string, dup_of {t}")
 
 
 def _distributed_admission(delta_ids: DataFrame, pairs: DataFrame) -> DataFrame:
-    """The Spark plan of incremental_transcript_admission."""
+    """The Spark plan of _admission."""
     d_ids = delta_ids.select("conv_id").distinct()
     sym = pairs.select(
         F.col("conv_id_a").alias("conv_id"),
@@ -706,7 +682,7 @@ def _distributed_admission(delta_ids: DataFrame, pairs: DataFrame) -> DataFrame:
             F.when(F.col("exact_of").isNotNull(), F.lit("exact"))
             .when(F.col("near_of").isNotNull(), F.lit("near"))
             .otherwise(F.lit("none")).alias("dup_kind"),
-            F.coalesce("exact_of", "near_of", F.lit("")).alias("dup_of"),
+            F.coalesce("exact_of", "near_of").alias("dup_of"),
         )
     )
 
@@ -751,19 +727,20 @@ def incremental_transcript_clusters(
     pipeline's persisted cluster assignment without re-clustering the
     corpus — (conv_id, cluster_id) over corpus ∪ delta, cluster_id = min
     conv_id of the merged component (the pipeline's own label rule).
-    The transcript twin of incremental_clusters: untouched components
-    pass through one filter verbatim; CC runs only over touched members
-    + delta conversations + evidence endpoints, with each touched member
-    linked to its old cluster_id (the label star preserves corpus
-    connectivity exactly). Nodes are keyed by conv_id alone, so a touched
-    member that has no signature row (a conversation admitted by an
-    earlier delta, or this delta on a replay) keeps its place.
+    Like incremental_clusters, it runs the label core _clusters_core:
+    untouched components pass through one filter verbatim; CC runs only
+    over touched members + delta conversations + evidence endpoints, with
+    each touched member linked to its old cluster_id (the label star
+    preserves corpus connectivity exactly). Nodes are keyed by conv_id
+    alone, so a touched member that has no signature row (a conversation
+    admitted by an earlier delta, or this delta on a replay) keeps its
+    place.
 
     ``corpus_labels``: the pipeline's checkpointed clusters table. When
     omitted (ad-hoc/test use) the corpus's own cluster pass runs here —
     correct but O(corpus). ``pairs``: precomputed evidence (callers that
-    materialize the pair output pass it back, same contract as the doc
-    twin). ``stats``: as incremental_transcript_pairs.
+    materialize the pair output pass it back, as for documents).
+    ``stats``: as incremental_transcript_pairs.
 
     Scale shape: when the evidence, the delta and the touched label rows
     each fit ``cfg.cc_local_edges`` rows, one fetch of the evidence and
@@ -801,12 +778,15 @@ def incremental_transcript_clusters(
     return untouched.unionByName(changed)
 
 
-def _clusters_core(labels: DataFrame, edges: DataFrame, dsig: DataFrame,
+def _clusters_core(labels: DataFrame, edges: DataFrame, delta_ids: DataFrame,
                    cfg: DedupConfig, stats: dict) -> tuple[DataFrame, DataFrame]:
-    """(the rows that may change, the untouched rows) of
-    incremental_transcript_clusters: the rows that may change are the new
-    labels of every touched member, evidence endpoint and delta
-    conversation; every other ``labels`` row passes through unchanged.
+    """The label core of transcripts, documents and the stream, over ids of
+    any one type: (the rows that may change, the untouched rows) of
+    ``labels`` (conv_id, cluster_id) merged with evidence ``edges``
+    (conv_id_a, conv_id_b) and the conv_ids of ``delta_ids``. The rows
+    that may change are the new labels of every touched member, evidence
+    endpoint and delta id; every other ``labels`` row passes through
+    unchanged.
 
     ``labels`` (conv_id, cluster_id) may also be a store's raw rows, with
     older rows of a conversation beside its latest one (the stream's label
@@ -821,15 +801,17 @@ def _clusters_core(labels: DataFrame, edges: DataFrame, dsig: DataFrame,
 
     def distributed(why: str) -> tuple[DataFrame, DataFrame]:
         stats.update(path="distributed", why=why)
-        return _distributed_clusters(labels, edges, dsig, cfg)
+        return _distributed_clusters(labels, edges, delta_ids, cfg)
 
     if budget <= 0:
         return distributed("cc_local_edges=0 forces it")
-    ev, delta = _fetch_with_ids(edges, ("conv_id_a", "conv_id_b"), dsig, budget)
+    ev, delta = _fetch_with_ids(edges, ("conv_id_a", "conv_id_b"), delta_ids,
+                                budget)
     stats.update(edge_rows=len(ev), delta_rows=len(delta))
     if len(ev) > budget or len(delta) > budget:
         return distributed(f"evidence or delta rows over cc_local_edges={budget}")
-    endpoints = set(delta) | set(ev["conv_id_a"]) | set(ev["conv_id_b"])
+    endpoints = set(delta) | set(ev["conv_id_a"].tolist()) | set(
+        ev["conv_id_b"].tolist())
     touched = _where_in(labels, "conv_id", endpoints).select("cluster_id")
     members = _fetch(labels.join(F.broadcast(touched), "cluster_id", "left_semi"),
                      budget)
@@ -838,24 +820,26 @@ def _clusters_core(labels: DataFrame, edges: DataFrame, dsig: DataFrame,
         return distributed(f"touched label rows over cc_local_edges={budget}")
     stats.update(path="driver", why="evidence, delta and touched label rows "
                  f"within cc_local_edges={budget}")
-    nodes = endpoints | set(members["conv_id"])
+    nodes = endpoints | set(members["conv_id"].tolist())
+    t = labels.schema["conv_id"].dataType.simpleString()
     cc = labels.sparkSession.createDataFrame(
         _driver_clusters(ev, nodes, members, cfg.cc_max_iters),
-        "conv_id string, cluster_id string")
+        f"conv_id {t}, cluster_id {t}")
     # every row of a touched cluster (conv_id is unique in ``labels``) and
     # every delta conversation (a replayed delta already sits in
     # ``labels``) exits through the CC side
     return cc, _where_in(labels, "conv_id", nodes, negate=True)
 
 
-def _distributed_clusters(labels: DataFrame, edges: DataFrame, dsig: DataFrame,
+def _distributed_clusters(labels: DataFrame, edges: DataFrame,
+                          delta_ids: DataFrame,
                           cfg: DedupConfig) -> tuple[DataFrame, DataFrame]:
     """The Spark plan of _clusters_core: the same node and edge sets as
     _driver_clusters, keyed by xxhash64(conv_id). Its inputs are stored
     tables or small frames, so nothing is persisted here."""
     from ..operators.cluster import connected_components
 
-    d_ids = dsig.select("conv_id")
+    d_ids = delta_ids.select("conv_id")
     ep = (
         edges.select(F.col("conv_id_a").alias("conv_id"))
         .unionByName(edges.select(F.col("conv_id_b").alias("conv_id")))
@@ -879,8 +863,9 @@ def _distributed_clusters(labels: DataFrame, edges: DataFrame, dsig: DataFrame,
                                        F.xxhash64("conv_id_b").alias("ih_b")),
         cfg,
     )
-    # replay safety: delta conversations always exit through the CC side
-    # (same rule as the doc twin)
+    # replay safety: when a prior attempt already merged THIS delta into
+    # ``labels``, a singleton delta id sits there but is no edge endpoint;
+    # delta ids therefore always exit through the CC side only
     untouched = labels.join(F.broadcast(touched), "cluster_id", "left_anti").join(
         F.broadcast(d_ids), "conv_id", "left_anti"
     )
@@ -892,99 +877,26 @@ def incremental_admission(
     delta: DataFrame,
     cfg: DedupConfig | None = None,
     threshold: float = 0.3,
-    corpus_md5: DataFrame | None = None,
     corpus_sig: DataFrame | None = None,
-    corpus_bands: DataFrame | None = None,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Per-delta-doc admission decision against the corpus:
     (doc_id, keep, dup_kind, dup_of) — keep=1 admits the doc; dup_kind in
     ('exact', 'near', 'none'); dup_of is the duplicate partner (-1 when
     kept). Null-free output so the driver's value hash is unambiguous.
-    ``corpus_md5``: persisted (content_md5, c_rep) exact index from the
-    corpus's own run (corpus_md5_index) — pass it at scale so the exact
-    channel probes a stage table instead of re-hashing corpus text.
-    ``corpus_sig``/``corpus_bands``: same as incremental_lsh_pairs — with
-    all three stage tables supplied, ``corpus`` itself is never scanned.
 
-    Rule (single-pass, deterministic — first-occurrence-wins inside the
-    delta, reference first-writer-wins at the index
-    /root/reference/rabin/global/index.c:485-558):
-      - exact: a corpus doc with the same md5 exists (partner = min corpus
-        doc_id for that hash), or an EARLIER delta doc (smaller doc_id)
-        has the same md5 — whichever partner id is smaller;
-      - near: an LSH-verified pair (jaccard >= threshold) links the doc to
-        a corpus doc (corpus keeps priority regardless of id order) or to
-        a smaller-id delta doc; partner = min such neighbor;
-      - exact outranks near when both exist. Admission is by partner
-        EXISTENCE, not transitive kept-ness: a delta doc dropped as a dup
-        of another DROPPED delta doc stays dropped (its content is covered
-        by that partner's own dup chain), matching the reference's
-        index-hit semantics rather than a clustering pass."""
+    The verdict is the admission core _admission over doc_ids, fed the
+    near pairs (``pairs``, or incremental_lsh_pairs) and the exact-md5
+    edges (_delta_exact_edges): a corpus partner at any id order or an
+    earlier delta doc, the min such partner, exact outranking near — for
+    exact evidence the min of the corpus rep and the earliest same-md5
+    delta doc. ``corpus_sig``: the corpus's persisted doc_signatures table
+    (its band_hashes and content_md5 are the probed indexes); with it and
+    ``pairs`` supplied, ``corpus`` itself is never scanned."""
     cfg = cfg or DedupConfig(shingle_k=3, substring_enabled=False,
                              jaccard_threshold=threshold)
-    d_ids = delta.select("doc_id")
-    dmd5 = delta.select("doc_id", F.md5("text").alias("content_md5"))
-    # probe the (possibly persisted — corpus_md5) exact index with a
-    # BROADCAST of the delta's hash set: the index scan stays map-side and
-    # the surviving hit set is delta-bounded, so the left join below never
-    # shuffles corpus-sized state
-    crep_full = corpus_md5 if corpus_md5 is not None else corpus_md5_index(corpus)
-    crep = crep_full.join(
-        F.broadcast(dmd5.select("content_md5").distinct()), "content_md5"
-    )
-    dmin = dmd5.groupBy("content_md5").agg(F.min("doc_id").alias("d_min"))
-    exact = (
-        dmd5.join(F.broadcast(crep), "content_md5", "left")
-        .join(dmin, "content_md5")
-        .select(
-            "doc_id",
-            F.expr(
-                "CASE WHEN c_rep IS NOT NULL AND (d_min >= doc_id OR c_rep < d_min)"
-                " THEN c_rep WHEN d_min < doc_id THEN d_min END"
-            ).alias("exact_of"),
-        )
-    )
-    # ``pairs``: precomputed evidence, same contract as incremental_clusters
-    if pairs is None:
-        pairs = incremental_lsh_pairs(
-            corpus, delta, cfg, threshold, corpus_sig, corpus_bands
-        )
-    # partner rows: (delta doc, neighbor) — corpus neighbors always count,
-    # delta neighbors only when they have the smaller id
-    da = d_ids.withColumnRenamed("doc_id", "doc_id_a").withColumn("a_delta", F.lit(1))
-    db = d_ids.withColumnRenamed("doc_id", "doc_id_b").withColumn("b_delta", F.lit(1))
-    tagged = (
-        pairs.join(F.broadcast(da), "doc_id_a", "left")
-        .join(F.broadcast(db), "doc_id_b", "left")
-        .select(
-            "doc_id_a", "doc_id_b",
-            F.coalesce("a_delta", F.lit(0)).alias("a_delta"),
-            F.coalesce("b_delta", F.lit(0)).alias("b_delta"),
-        )
-    )
-    partners = (
-        # pair (a < b), b in delta: partner(b) = a (earlier delta doc or corpus)
-        tagged.where(F.col("b_delta") == 1)
-        .select(F.col("doc_id_b").alias("doc_id"), F.col("doc_id_a").alias("partner"))
-        .unionByName(
-            # a in delta, b in corpus: corpus priority ignores id order
-            tagged.where((F.col("a_delta") == 1) & (F.col("b_delta") == 0))
-            .select(F.col("doc_id_a").alias("doc_id"),
-                    F.col("doc_id_b").alias("partner"))
-        )
-    )
-    near = partners.groupBy("doc_id").agg(F.min("partner").alias("near_of"))
-    return (
-        d_ids.join(exact, "doc_id", "left")
-        .join(near, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("exact_of").isNotNull() | F.col("near_of").isNotNull(),
-                   F.lit(0)).otherwise(F.lit(1)).cast("int").alias("keep"),
-            F.when(F.col("exact_of").isNotNull(), F.lit("exact"))
-            .when(F.col("near_of").isNotNull(), F.lit("near"))
-            .otherwise(F.lit("none")).alias("dup_kind"),
-            F.coalesce("exact_of", "near_of", F.lit(-1)).cast("long").alias("dup_of"),
-        )
-    )
+    evidence = _doc_evidence(corpus, delta, cfg, threshold, corpus_sig, pairs)
+    d_ids = delta.select(F.col("doc_id").alias("conv_id"))
+    return _admission(d_ids, evidence, cfg).select(
+        F.col("conv_id").alias("doc_id"), "keep", "dup_kind",
+        F.coalesce("dup_of", F.lit(-1)).cast("long").alias("dup_of"))

@@ -17,7 +17,7 @@ that exact geometry in Spark built-ins only:
   verify               exact Jaccard via array_intersect     (codegen)
 
 No MapInPandas, no ArrowEvalPython, no Python worker processes anywhere
-in the plan (plan-checked in PLANS.md). The engine's other near-dup
+in the plan (plan-checked by tools/dump_plans.py). The engine's other near-dup
 channels pay an Arrow-serialize + Python-worker hop per executor for the
 signature stage; this channel keeps the entire path inside Tungsten
 whole-stage codegen. At 1000-executor scale that removes the Python

@@ -138,11 +138,9 @@ def remove(spark, root: str, key: str, name) -> bool:
     return bool(fs.delete(hpath(path), True))
 
 
-def compact(spark, root: str, key: str, exclude: str | None = None,
-            merge=None) -> dict:
+def compact(spark, root: str, key: str, exclude: str | None = None) -> dict:
     """Merge every unit under ``root`` except ``exclude`` into one
-    ``<key>=c<G>`` dir. ``merge`` maps the union of their rows to the rows
-    kept (default: all). Returns {"merged_runs": n} and, if n > 1, "gen"."""
+    ``<key>=c<G>`` dir. Returns {"merged_runs": n} and, if n > 1, "gen"."""
     root = root.rstrip("/")
     units, compacted = listing(spark, root, key)
     units = [(n, p) for n, p in units if n != exclude]
@@ -151,8 +149,7 @@ def compact(spark, root: str, key: str, exclude: str | None = None,
     gen = 1 + max((int(n[1:]) for n, _ in units if _is_compacted(n)), default=0)
     df = spark.read.parquet(*[p for _, p in units])
     tmp = f"{root}/{_TMP}{gen}"
-    _stage(spark, merge(df) if merge else df, tmp,
-           compacted | {n for n, _ in units})
+    _stage(spark, df, tmp, compacted | {n for n, _ in units})
     _finish(spark, tmp, f"{root}/{key}=c{gen}", [p for _, p in units])
     return {"merged_runs": len(units), "gen": gen}
 
@@ -182,10 +179,21 @@ def recover_replace(spark, path: str) -> None:
         _finish(spark, path + "._tmp", path, [])
 
 
-def refuse_tag_manifest(spark, state_dir: str) -> None:
-    """Raise ValueError on a state dir compacted by the older CLI, which
-    kept a ``_compacted_tags.json`` tag manifest beside the tables."""
-    path = f"{state_dir.rstrip('/')}/_compacted_tags.json"
-    fs, hpath = _fs(spark, path)
-    if fs.exists(hpath(path)):
-        raise ValueError(_old_layout(path))
+def refuse_old_state(spark, state_dir: str) -> None:
+    """Raise ValueError on a CLI state dir of an older layout: one
+    compacted by the older CLI, which kept a ``_compacted_tags.json`` tag
+    manifest beside the tables, or a document state with ``bands/`` and
+    ``md5/`` tables, whose ``sig/`` rows lack the ``band_hashes`` and
+    ``content_md5`` columns that replaced both."""
+    sd = state_dir.rstrip("/")
+    fs, hpath = _fs(spark, sd)
+    if fs.exists(hpath(f"{sd}/_compacted_tags.json")):
+        raise ValueError(_old_layout(f"{sd}/_compacted_tags.json"))
+    for table in ("bands", "md5"):
+        if fs.exists(hpath(f"{sd}/{table}")):
+            raise ValueError(
+                f"{sd}/{table} is from the older document state layout, which "
+                "kept separate band and md5 tables; the sig/ table's "
+                "band_hashes and content_md5 columns replaced them, and its "
+                "older rows lack both, so bootstrap the state again in a new "
+                "directory")

@@ -1,11 +1,14 @@
 """Incremental delta-vs-corpus dedup (functions/incremental.py).
 
 The load-bearing claim: the incremental path — which bands only the delta
-and probes the corpus band store through a broadcast semi-join on touched
-bucket keys — emits EXACTLY the pairs a full-corpus re-run would emit,
-restricted to >= 1 delta endpoint. These tests pin that equivalence, the
-precomputed-stage-table input path, and the admission rule.
+and probes the corpus signature table's band_hashes through a broadcast
+semi-join on touched bucket keys — emits EXACTLY the pairs a full-corpus
+re-run would emit, restricted to >= 1 delta endpoint. These tests pin that
+equivalence, the precomputed-stage-table input path, the admission rule,
+and the parity of the admission and label cores' two paths on documents.
 """
+
+import dataclasses
 
 import pytest
 from pyspark.sql import functions as F
@@ -39,21 +42,15 @@ def test_incremental_equals_filtered_full_batch(spark, split):
 
 
 def test_precomputed_corpus_stage_tables(spark, split, tmp_path):
-    """Production shape: corpus signatures/bands come from persisted stage
-    tables of the corpus's own run — results must be identical to the
-    compute-inline path."""
+    """Production shape: corpus signatures (whose band_hashes column is the
+    band index) come from the persisted stage table of the corpus's own
+    run — results must be identical to the compute-inline path."""
     corpus, delta = split
     sig_path = str(tmp_path / "corpus_sig")
-    band_path = str(tmp_path / "corpus_bands")
-    csig = doc_dedup.doc_signatures(corpus, CFG)
-    csig.write.parquet(sig_path)
-    doc_dedup.doc_band_explode(spark.read.parquet(sig_path), CFG).write.parquet(
-        band_path
-    )
+    doc_dedup.doc_signatures(corpus, CFG).write.parquet(sig_path)
     incr = incremental.incremental_lsh_pairs(
         corpus, delta, CFG, threshold=0.3,
         corpus_sig=spark.read.parquet(sig_path),
-        corpus_bands=spark.read.parquet(band_path),
     )
     inline = incremental.incremental_lsh_pairs(corpus, delta, CFG, threshold=0.3)
     assert _pairs_set(incr) == _pairs_set(inline)
@@ -203,21 +200,17 @@ def test_incremental_clusters_synthetic_merge(spark):
 
 
 def test_incremental_clusters_persisted_stage_tables(spark, split, tmp_path):
-    """Production shape: labels/signatures/bands/md5-index all come from
-    persisted stage tables — output identical to the inline path."""
+    """Production shape: labels and signatures (band and md5 indexes
+    included) come from persisted stage tables — output identical to the
+    inline path."""
     corpus, delta = split
-    p = {k: str(tmp_path / k) for k in ("labels", "sig", "bands", "md5")}
+    p = {k: str(tmp_path / k) for k in ("labels", "sig")}
     doc_dedup.neardup_clusters(corpus, CFG, 0.3).write.parquet(p["labels"])
     doc_dedup.doc_signatures(corpus, CFG).write.parquet(p["sig"])
-    doc_dedup.doc_band_explode(spark.read.parquet(p["sig"]), CFG).write.parquet(
-        p["bands"])
-    incremental.corpus_md5_index(corpus).write.parquet(p["md5"])
     staged = incremental.incremental_clusters(
         corpus, delta, CFG, threshold=0.3,
         corpus_labels=spark.read.parquet(p["labels"]),
         corpus_sig=spark.read.parquet(p["sig"]),
-        corpus_bands=spark.read.parquet(p["bands"]),
-        corpus_md5=spark.read.parquet(p["md5"]),
     )
     inline = incremental.incremental_clusters(corpus, delta, CFG, threshold=0.3)
     as_map = lambda df: {r.doc_id: r.cluster_id for r in df.collect()}
@@ -252,6 +245,59 @@ def test_admission_exact_branch_synthetic(spark):
     assert rows[8].keep == 1 and rows[8].dup_kind == "none" and rows[8].dup_of == -1
     assert rows[12].keep == 0 and rows[12].dup_kind == "exact" and rows[12].dup_of == 8
     assert rows[16].keep == 0 and rows[16].dup_kind == "near" and rows[16].dup_of == 1
+
+
+def test_doc_cores_driver_matches_distributed(spark, split, monkeypatch):
+    """Doc admission and doc labels run the transcript cores (_admission,
+    _clusters_core): the default config takes their driver path, so the
+    distributed plans are made to raise there, and cc_local_edges=0 takes
+    the distributed plans; outputs and schemas are bit-identical. Planted
+    docs add what the split lacks: an exact copy of a corpus doc, an exact
+    copy inside the delta and a near copy of a corpus doc."""
+    base = ("the quick brown fox jumps over the lazy dog and then "
+            "wanders far away into the deep green forest tonight")
+    other = "something else entirely unique about minhash bands"
+    rows = "doc_id long, text string"
+    corpus = split[0].select("doc_id", "text").unionByName(
+        spark.createDataFrame([(1000001, base)], rows))
+    delta = split[1].select("doc_id", "text").unionByName(spark.createDataFrame(
+        [(1000004, base), (1000008, other), (1000012, other),
+         (1000016, base.replace("tonight", "tomorrow"))], rows))
+
+    # the path-independent inputs once, as the production loop passes them
+    csig = doc_dedup.doc_signatures(corpus, CFG).cache()
+    labels = doc_dedup.neardup_clusters(corpus, CFG, 0.3).cache()
+    pairs = incremental.incremental_lsh_pairs(corpus, delta, CFG,
+                                              corpus_sig=csig).cache()
+
+    def run(cfg):
+        out = []
+        for df in (incremental.incremental_admission(
+                       corpus, delta, cfg, corpus_sig=csig, pairs=pairs),
+                   incremental.incremental_clusters(
+                       corpus, delta, cfg, corpus_labels=labels,
+                       corpus_sig=csig, pairs=pairs)):
+            out.append((df.dtypes, sorted(tuple(r) for r in df.collect())))
+        return out
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("distributed plan at the default config")
+
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "_distributed_admission", refuse)
+        m.setattr(incremental, "_distributed_clusters", refuse)
+        driver = run(CFG)
+    assert driver == run(dataclasses.replace(CFG, cc_local_edges=0))
+    adm = {r[0]: r[1:] for r in driver[0][1]}
+    assert adm[1000004] == (0, "exact", 1000001)
+    assert adm[1000008] == (1, "none", -1)
+    assert adm[1000012] == (0, "exact", 1000008)
+    assert adm[1000016] == (0, "near", 1000001)
+    merged = dict(driver[1][1])
+    assert merged[1000004] == merged[1000016] == merged[1000001]
+    assert merged[1000012] == merged[1000008] == 1000008
+    for df in (csig, labels, pairs):
+        df.unpersist()
 
 
 def test_cli_state_compaction(spark, tmp_path):
@@ -301,13 +347,12 @@ def test_cli_state_compaction(spark, tmp_path):
     shutil.copytree(state_a, state_b)
     assert ri.main(["--compact", "--state-dir", state_a,
                     "--master", "inherit"]) == 0
-    for t in ("sig", "bands", "md5"):
-        subs = [d for d in os.listdir(os.path.join(state_a, t))
-                if d.startswith("run=")]
-        assert subs == ["run=c1"], (t, subs)
-    # md5 re-min'd at merge: one row per content hash
-    md5 = pd.read_parquet(os.path.join(state_a, "md5"))
-    assert md5["content_md5"].is_unique
+    assert sorted(os.listdir(state_a)) == ["labels", "sig"]
+    subs = [d for d in os.listdir(os.path.join(state_a, "sig"))
+            if d.startswith("run=")]
+    assert subs == ["run=c1"], subs
+    # the merge keeps one signature row per doc
+    assert pd.read_parquet(os.path.join(state_a, "sig"))["doc_id"].is_unique
 
     # delta K+1 on both branches: byte-identical outputs and labels
     for st, out in ((state_a, "oa"), (state_b, "ob")):
@@ -369,20 +414,37 @@ def test_cli_state_compaction(spark, tmp_path):
     # day3's tag is now recorded as compacted too
     assert {"day1", "day2", "day3"} <= compacted
 
-    # a state dir compacted by the older CLI (a tag manifest beside the
-    # tables, compacted dirs without unit lists) is refused before any write
-    state_old = str(tmp_path / "state_old")
-    shutil.copytree(state_b, state_old)
-    with open(os.path.join(state_old, "_compacted_tags.json"), "w") as f:
-        json.dump({"day1": 1}, f)
-    def tree():
-        return sorted(os.path.relpath(os.path.join(d, n), state_old)
-                      for d, ds, fs in os.walk(state_old) for n in ds + fs)
+    # older layouts are refused before any write, the tree left byte for
+    # byte as it was: a state dir compacted by the older CLI (a tag
+    # manifest beside the tables, compacted dirs without unit lists), and
+    # a docs state with the bands/ and md5/ tables the signature table's
+    # band_hashes and content_md5 columns replaced
+    import hashlib
+    import pathlib
 
-    files = tree()
-    for argv in (["--compact"],
-                 ["--delta", paths["delta3"], "--run-tag", "day4",
-                  "--out", str(tmp_path / "od")]):
-        with pytest.raises(ValueError, match="_compacted_tags.json"):
-            ri.main(argv + ["--state-dir", state_old, "--master", "inherit"])
-    assert tree() == files
+    def tree(root):
+        return {str(p.relative_to(root)): p.is_file() and hashlib.sha256(
+                    p.read_bytes()).hexdigest()
+                for p in pathlib.Path(root).rglob("*")}
+
+    for name, plant, match in (
+            ("state_old", "_compacted_tags.json", "_compacted_tags.json"),
+            ("state_old_bands", "bands", "bands is from the older document"),
+            ("state_old_md5", "md5", "md5 is from the older document")):
+        state_old = str(tmp_path / name)
+        shutil.copytree(state_b, state_old)
+        if plant.endswith(".json"):
+            with open(os.path.join(state_old, plant), "w") as f:
+                json.dump({"day1": 1}, f)
+        else:
+            # an older docs state's table: its units hold sig/'s layout
+            shutil.copytree(os.path.join(state_old, "sig"),
+                            os.path.join(state_old, plant))
+        files = tree(state_old)
+        for argv in (["--compact"],
+                     ["--delta", paths["delta3"], "--run-tag", "day4",
+                      "--out", str(tmp_path / "od")]):
+            with pytest.raises(ValueError, match=match):
+                ri.main(argv + ["--state-dir", state_old, "--master", "inherit"])
+        assert tree(state_old) == files
+        assert not os.path.exists(tmp_path / "od")

@@ -1,6 +1,7 @@
-"""Dump physical plans for the engine's key operators to PLANS.md and check
-plan-quality invariants (scan pruning, broadcast placement, no Python in
-relational stages). Run: python tools/dump_plans.py"""
+"""Dump physical plans for the engine's key operators to .cache/PLANS.md
+(untracked; each run rewrites it) and check plan-quality invariants (scan
+pruning, broadcast placement, no Python in relational stages). Prints the
+checks and exits 1 if any fails. Run: python tools/dump_plans.py"""
 
 from __future__ import annotations
 
@@ -61,9 +62,14 @@ def main() -> None:
     tier_df = entry.queries()["tr_tier_attribution"](spark, SF)
     doc_sub_df = entry.queries()["doc_substring_pairs"](spark, SF)
     inc_pairs_df = entry.queries()["doc_incremental_pairs"](spark, SF)
-    inc_cc_df = entry.queries()["doc_incremental_clusters"](spark, SF)
-    # the distributed plan of tr_incremental_pairs (at sf0.01 the default
-    # budget takes the driver path, whose result is a local relation)
+    # the distributed plans of the doc label merge and tr_incremental_pairs
+    # (at sf0.01 the default budget takes the driver path, whose result is
+    # a local relation)
+    doc_delta = (F.col("doc_id") % 4) == 0
+    inc_cc_df = incremental.incremental_clusters(
+        docs.where(~doc_delta), docs.where(doc_delta),
+        DedupConfig(shingle_k=3, substring_enabled=False,
+                    jaccard_threshold=0.3, cc_local_edges=0), threshold=0.3)
     entry_cfg = entry.CFG
     entry.CFG = dataclasses.replace(entry_cfg, cc_local_edges=0)
     tr_inc_pairs_df = entry.queries()["tr_incremental_pairs"](spark, SF)
@@ -584,8 +590,10 @@ def main() -> None:
     out.append("## Plan-quality checks\n")
     out.extend(f"- {c}" for c in checks)
     out.append("")
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                           "PLANS.md"), "w") as f:
+    dump = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        ".cache", "PLANS.md")
+    os.makedirs(os.path.dirname(dump), exist_ok=True)
+    with open(dump, "w") as f:
         f.write("\n".join(out))
     print("\n".join(checks))
     bad = [c for c in checks if c.startswith("FAIL")]

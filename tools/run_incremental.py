@@ -9,18 +9,18 @@ persistent global index admits new blocks against prior occupants without
 revisiting them (/root/reference/rabin/global/index.c:140-151, 485-558).
 
 State layout under --state-dir (parquet stage tables, the "persisted
-corpus run" inputs of functions/incremental.py):
+corpus run" inputs of functions/incremental.py), the same in both modes:
 
-    sig/     doc signatures        (store units: run=<tag>/)
-    bands/   exploded LSH bands    (store units)
-    md5/     exact-dup index rows  (store units; re-min'd on read)
+    sig/     signatures            (store units: run=<tag>/)
     labels/  cluster assignment    (FULL table, atomically replaced per run)
 
-sig/, bands/ and md5/ are unit stores of pcompress_spark.store, the same
-append, listing and compaction protocol as the near-dup stream's stores.
-Periodic maintenance: ``--compact`` merges each table's run=<tag> units
-into one ``run=c<G>`` dir (md5 re-min'd at merge), so a year of daily
-deltas doesn't leave every probe listing 365 subdirs. Run it quiesced (no
+sig/ is the only index: its band_hashes column is the band index and its
+content hash (docs: content_md5, transcripts: content_hash) the exact
+index. It is a unit store of pcompress_spark.store, the same append,
+listing and compaction protocol as the near-dup stream's stores.
+Periodic maintenance: ``--compact`` merges sig/'s run=<tag> units into
+one ``run=c<G>`` dir, so a year of daily deltas doesn't leave every probe
+listing 365 subdirs. Run it quiesced (no
 delta in flight). It is crash-safe: the merge goes to a hidden tmp dir,
 the list of merged units goes into that tmp as its completion marker,
 then exactly the listed units are deleted and the tmp is renamed; the
@@ -28,9 +28,11 @@ next listing finishes a marked tmp and discards an unmarked one.
 Admission results for future deltas are byte-identical (tests pin this).
 A replay of a tag in a compacted dir's unit list is refused with an
 explanation (its appends can no longer be deleted-and-redone; the delta
-was committed before compaction by the quiesce contract). A state dir
+was committed before compaction by the quiesce contract). A state dir of
+an older layout is refused with a ValueError before any write: one
 compacted by an older release, which kept a tag manifest beside the
-tables instead, is refused with a ValueError before any write.
+tables, and a docs state with bands/ and md5/ tables, whose sig/ rows
+lack the columns that replaced them.
 
 Bootstrap once from the existing corpus:
 
@@ -49,7 +51,7 @@ the admission verdict and the label merge), and delta_sig/ (the delta's
 signatures, materialized once — pair generation and the state fold both
 read it, so the Arrow kernel chain runs a single time per delta).
 Admitted (keep=1) docs'
-signature/band/md5 rows are appended to the state; labels/ is rewritten
+signature rows are appended to the state; labels/ is rewritten
 with the merged assignment (corpus ∪ delta — dropped dups keep a label row
 recording which cluster absorbed them). Scale note: state appends and all
 probes are O(delta + touched); only the labels rewrite is O(corpus
@@ -66,7 +68,7 @@ Crash safety / idempotent re-run protocol:
   - every output that depends on pre-run state (pairs, admission, the
     merged labels) is MATERIALIZED before any state mutation: labels are
     staged to labels._tmp first (with the store's completion marker), the
-    sig/bands/md5 folds run next, and the labels commit (delete + rename)
+    sig/ fold runs next, and the labels commit (delete + rename)
     happens last (pcompress_spark.store's full-table replace);
   - an interrupted commit is recovered at the next run's start: a marked
     labels._tmp with no labels/ is renamed into place; a stale tmp next to
@@ -140,15 +142,6 @@ def _delete_run_dirs(spark, paths: dict, tag: str, delta, id_col: str) -> bool:
             "admit it against a corpus that already contains it — nothing "
             "to do.")
     return prior
-
-
-def _min_md5(md5):
-    """One (content_md5, c_rep) row per content hash, c_rep the min doc_id:
-    the md5 index is appended per run and re-min'd on read and at
-    compaction (min of per-run mins == global min)."""
-    from pyspark.sql import functions as F
-
-    return md5.groupBy("content_md5").agg(F.min("c_rep").alias("c_rep"))
 
 
 def _default_tag(delta_df) -> str:
@@ -234,12 +227,10 @@ def _close_run(adm, **fields) -> int:
     return 0
 
 
-def _transcripts_run(spark, ap, args, cfg) -> int:
+def _transcripts_run(spark, ap, args, cfg, paths: dict) -> int:
     """--mode transcripts: the daily-ingest loop on the PRIMARY axis.
-    State is leaner than docs mode — sig/ (the transcript signature table;
-    bands derive map-only from its precomputed band_hashes column and the
-    exact channel rides its content_hash, so no bands/ or md5/ dirs) plus
-    labels/. Same crash-safety protocol (module docstring). Bootstrap can
+    Same state layout and crash-safety protocol as docs mode (module
+    docstring); sig/ holds the transcript signature table. Bootstrap can
     also start from an existing pipeline work_dir by pointing --corpus at
     its input table; the signatures computed here are bit-identical to the
     pipeline's checkpointed stage table at the same config."""
@@ -251,9 +242,6 @@ def _transcripts_run(spark, ap, args, cfg) -> int:
     from pcompress_spark.operators.cluster import connected_components
     from pcompress_spark.operators.signatures import compute_signatures
     from pcompress_spark.operators.verify import verify_pairs
-
-    sd = args.state_dir.rstrip("/")
-    paths = {k: f"{sd}/{k}" for k in ("sig", "labels")}
 
     if args.bootstrap:
         if not args.corpus:
@@ -270,7 +258,8 @@ def _transcripts_run(spark, ap, args, cfg) -> int:
         store.stage_replace(spark, labels, paths["labels"])
         store.commit_replace(spark, paths["labels"])
         print(json.dumps({"bootstrapped": True, "mode": "transcripts",
-                          "state_dir": sd, "convs": sig_t.count()}))
+                          "state_dir": args.state_dir.rstrip("/"),
+                          "convs": sig_t.count()}))
         return 0
 
     delta, tag, corpus_sig, corpus_labels = _open_run(
@@ -313,7 +302,7 @@ def main(argv: list[str] | None = None) -> int:
                     help="documents parquet (bootstrap only)")
     ap.add_argument("--delta", default=None, help="delta documents parquet")
     ap.add_argument("--state-dir", required=True,
-                    help="persistent corpus state (sig/ bands/ md5/ labels/)")
+                    help="persistent corpus state (sig/ labels/)")
     ap.add_argument("--out", default=None,
                     help="per-run output dir (admission/ pairs/)")
     ap.add_argument("--bootstrap", action="store_true",
@@ -328,8 +317,8 @@ def main(argv: list[str] | None = None) -> int:
                          "delta's file listing, so re-runs are idempotent; "
                          "an explicit tag must be unique per delta)")
     ap.add_argument("--compact", action="store_true",
-                    help="merge the per-run append subdirs of the state "
-                         "tables into one run=c<G> dir each and exit "
+                    help="merge the per-run append subdirs of the sig/ "
+                         "table into one run=c<G> dir and exit "
                          "(quiesced maintenance — no delta run may be in "
                          "flight; admission behavior is unchanged)")
     args = ap.parse_args(argv)
@@ -346,15 +335,12 @@ def main(argv: list[str] | None = None) -> int:
         shuffle_partitions=args.shuffle_partitions,
     )
     sd = args.state_dir.rstrip("/")
-    store.refuse_tag_manifest(spark, sd)
+    store.refuse_old_state(spark, sd)
+    paths = {k: f"{sd}/{k}" for k in ("sig", "labels")}
     if args.compact:
-        tables = ("sig",) if args.mode == "transcripts" else (
-            "sig", "bands", "md5")
-        summary = {t: store.compact(spark, f"{sd}/{t}", "run",
-                                    merge=_min_md5 if t == "md5" else None)
-                   for t in tables}
         print(json.dumps({"compacted": True, "mode": args.mode,
-                          "state_dir": sd, "tables": summary}))
+                          "state_dir": sd, "tables": {
+                              "sig": store.compact(spark, paths["sig"], "run")}}))
         return 0
 
     overrides = json.loads(args.config_json) if args.config_json else {}
@@ -363,12 +349,11 @@ def main(argv: list[str] | None = None) -> int:
         # with its checkpointed stage tables at the same config hash
         overrides.setdefault("jaccard_threshold", args.threshold)
         cfg = DedupConfig(**overrides)
-        return _transcripts_run(spark, ap, args, cfg)
+        return _transcripts_run(spark, ap, args, cfg, paths)
     overrides.setdefault("shingle_k", 3)
     overrides.setdefault("substring_enabled", False)
     overrides.setdefault("jaccard_threshold", args.threshold)
     cfg = DedupConfig(**overrides)
-    paths = {k: f"{sd}/{k}" for k in ("sig", "bands", "md5", "labels")}
 
     if args.bootstrap:
         if not args.corpus:
@@ -377,10 +362,6 @@ def main(argv: list[str] | None = None) -> int:
         sig_t = spark.read.parquet(store.append(
             doc_dedup.doc_signatures(corpus, cfg), paths["sig"], "run",
             "bootstrap"))
-        store.append(doc_dedup.doc_band_explode(sig_t, cfg),
-                     paths["bands"], "run", "bootstrap")
-        store.append(incremental.corpus_md5_index(corpus),
-                     paths["md5"], "run", "bootstrap")
         store.stage_replace(
             spark, doc_dedup.neardup_clusters(corpus, cfg, args.threshold),
             paths["labels"])
@@ -391,10 +372,6 @@ def main(argv: list[str] | None = None) -> int:
 
     delta, tag, corpus_sig, corpus_labels = _open_run(
         spark, ap, args, paths, "doc_id")
-    corpus_bands = spark.read.parquet(paths["bands"]).drop("run")
-    # admitted docs append RAW (content_md5, c_rep=doc_id) rows; re-min on
-    # read keeps the index shape without a rewrite-per-run
-    corpus_md5 = _min_md5(spark.read.parquet(paths["md5"]))
     # corpus text is never read in this loop: every probe rides the stage
     # tables. The `corpus` argument only backstops missing stage tables,
     # so pass an empty frame to make an accidental corpus scan impossible.
@@ -409,36 +386,26 @@ def main(argv: list[str] | None = None) -> int:
     # chain over the delta runs a single time per daily run
     pairs = _written(spark, incremental.incremental_lsh_pairs(
         empty_corpus, delta, cfg, args.threshold,
-        corpus_sig=corpus_sig, corpus_bands=corpus_bands,
-        delta_sig=delta_sig,
+        corpus_sig=corpus_sig, delta_sig=delta_sig,
     ), f"{args.out}/pairs")
     adm = _written(spark, incremental.incremental_admission(
         empty_corpus, delta, cfg, args.threshold,
-        corpus_md5=corpus_md5, corpus_sig=corpus_sig,
-        corpus_bands=corpus_bands, pairs=pairs,
+        corpus_sig=corpus_sig, pairs=pairs,
     ), f"{args.out}/admission")
     labels = incremental.incremental_clusters(
         empty_corpus, delta, cfg, args.threshold,
-        corpus_labels=corpus_labels, corpus_sig=corpus_sig,
-        corpus_bands=corpus_bands, corpus_md5=corpus_md5, pairs=pairs,
+        corpus_labels=corpus_labels, corpus_sig=corpus_sig, pairs=pairs,
     )
     # stage the merged labels BEFORE mutating any state (the clusters plan
-    # reads corpus_labels/sig/bands — materialize it while they are still
+    # reads corpus_labels/sig — materialize it while they are still
     # pre-run), fold next, commit the labels rename last
     store.stage_replace(spark, labels, paths["labels"])
-
-    kept = adm.where(F.col("keep") == 1).select("doc_id")
-    admitted = delta.join(kept, "doc_id", "left_semi")
     # fold = the already-materialized delta signatures filtered to the
     # admitted subset (signatures are per-doc deterministic, so this is
     # bit-identical to recomputing them — without a second kernel pass)
-    dsig = delta_sig.join(kept, "doc_id", "left_semi")
-    dsig_t = spark.read.parquet(store.append(dsig, paths["sig"], "run", tag))
-    store.append(doc_dedup.doc_band_explode(dsig_t, cfg),
-                 paths["bands"], "run", tag)
-    store.append(_min_md5(admitted.select(
-        F.md5("text").alias("content_md5"), F.col("doc_id").alias("c_rep"))),
-        paths["md5"], "run", tag)
+    store.append(delta_sig.join(
+        adm.where(F.col("keep") == 1).select("doc_id"), "doc_id", "left_semi"
+    ), paths["sig"], "run", tag)
     store.commit_replace(spark, paths["labels"])
     return _close_run(adm, run=tag, delta_docs=delta.count(), out=args.out)
 
