@@ -239,36 +239,46 @@ def neardup_decontaminate(
                              jaccard_threshold=threshold)
     pairs = incremental_lsh_pairs(docs, benchmark, cfg=cfg,
                                   threshold=threshold)
-    bids = benchmark.select(F.col("doc_id").alias("bid"))
-    # orient the >=1-bench-endpoint pair set to (train doc, bench doc);
-    # bench-bench pairs (possible when the benchmark self-duplicates) are
-    # dropped — they are the eval suite's hygiene problem, not the corpus's
-    p1 = (
-        pairs.join(F.broadcast(bids), F.col("doc_id_b") == F.col("bid"),
-                   "left_semi")
-        .join(F.broadcast(bids), F.col("doc_id_a") == F.col("bid"),
-              "left_anti")
-        .select(F.col("doc_id_a").alias("doc_id"),
-                F.col("doc_id_b").alias("bench_id"), "jaccard")
-    )
-    p2 = (
-        pairs.join(F.broadcast(bids), F.col("doc_id_a") == F.col("bid"),
-                   "left_semi")
-        .join(F.broadcast(bids), F.col("doc_id_b") == F.col("bid"),
-              "left_anti")
-        .select(F.col("doc_id_b").alias("doc_id"),
-                F.col("doc_id_a").alias("bench_id"), "jaccard")
-    )
-    hits = p1.unionByName(p2)
+    return _bench_rollup(_bench_oriented(pairs, benchmark, "doc_id"), "doc_id")
+
+
+def _bench_oriented(pairs: DataFrame, bench: DataFrame, id_col: str) -> DataFrame:
+    """Pairs (<id_col>_a, <id_col>_b, jaccard) with >= 1 endpoint among
+    the id_col values of ``bench``, oriented to (id_col, bench_id, jaccard
+    rounded to 6 dp): the training end first. Bench-bench pairs (possible
+    when the benchmark self-duplicates) are dropped — they are the eval
+    suite's hygiene problem, not the corpus's."""
+    bids = F.broadcast(bench.select(F.col(id_col).alias("bid")))
+
+    def orient(train_col: str, bench_col: str) -> DataFrame:
+        return (
+            pairs.join(bids, F.col(bench_col) == F.col("bid"), "left_semi")
+            .join(bids, F.col(train_col) == F.col("bid"), "left_anti")
+            .select(F.col(train_col).alias(id_col),
+                    F.col(bench_col).alias("bench_id"),
+                    F.round("jaccard", 6).alias("jaccard"))
+        )
+
+    return orient(f"{id_col}_a", f"{id_col}_b").unionByName(
+        orient(f"{id_col}_b", f"{id_col}_a"))
+
+
+def _bench_rollup(hits: DataFrame, id_col: str) -> DataFrame:
+    """Benchmark hits (id_col, bench_id, jaccard) -> one row per
+    CONTAMINATED id: (id_col, n_bench_hits, max_jaccard, top_bench_id). A
+    (train, bench) pair that surfaces more than once (identical text also
+    collides in LSH) counts once, at its max jaccard; top_bench_id is the
+    (jaccard DESC, bench id ASC) arg-max partner."""
     return (
-        hits.groupBy("doc_id")
+        hits.groupBy(id_col, "bench_id").agg(F.max("jaccard").alias("jaccard"))
+        .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_bench_hits"),
             F.round(F.max("jaccard"), 6).alias("max_jaccard"),
             F.min(F.struct((-F.col("jaccard")).alias("nj"),
                            F.col("bench_id").alias("b"))).alias("w"),
         )
-        .select("doc_id", "n_bench_hits", "max_jaccard",
+        .select(id_col, "n_bench_hits", "max_jaccard",
                 F.col("w.b").alias("top_bench_id"))
     )
 
@@ -309,25 +319,6 @@ def neardup_decontaminate_transcripts(
     near = incremental_transcript_pairs(
         corpus_tr, benchmark_tr, cfg, corpus_sig=csig, delta_sig=bsig
     ).where(F.col("match_kind") == "near")
-    bids = bsig.select(F.col("conv_id").alias("bid"))
-    p1 = (
-        near.join(F.broadcast(bids), F.col("conv_id_b") == F.col("bid"),
-                  "left_semi")
-        .join(F.broadcast(bids), F.col("conv_id_a") == F.col("bid"),
-              "left_anti")
-        .select(F.col("conv_id_a").alias("conv_id"),
-                F.col("conv_id_b").alias("bench_id"),
-                F.round("jaccard", 6).alias("jaccard"))
-    )
-    p2 = (
-        near.join(F.broadcast(bids), F.col("conv_id_a") == F.col("bid"),
-                  "left_semi")
-        .join(F.broadcast(bids), F.col("conv_id_b") == F.col("bid"),
-              "left_anti")
-        .select(F.col("conv_id_b").alias("conv_id"),
-                F.col("conv_id_a").alias("bench_id"),
-                F.round("jaccard", 6).alias("jaccard"))
-    )
     bench_hash = bsig.groupBy("content_hash").agg(
         F.min("conv_id").alias("bench_id"))
     ex = (
@@ -335,24 +326,8 @@ def neardup_decontaminate_transcripts(
         .select("conv_id", "bench_id",
                 F.lit(1.0).cast("double").alias("jaccard"))
     )
-    # a pair can surface through both channels (identical text also
-    # collides in LSH) — collapse to one hit per (train, bench) first
-    hits = (
-        p1.unionByName(p2).unionByName(ex)
-        .groupBy("conv_id", "bench_id")
-        .agg(F.max("jaccard").alias("jaccard"))
-    )
-    return (
-        hits.groupBy("conv_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_bench_hits"),
-            F.round(F.max("jaccard"), 6).alias("max_jaccard"),
-            F.min(F.struct((-F.col("jaccard")).alias("nj"),
-                           F.col("bench_id").alias("b"))).alias("w"),
-        )
-        .select("conv_id", "n_bench_hits", "max_jaccard",
-                F.col("w.b").alias("top_bench_id"))
-    )
+    return _bench_rollup(
+        _bench_oriented(near, bsig, "conv_id").unionByName(ex), "conv_id")
 
 
 def bench_probe_index(benchmark_sig: DataFrame, cfg=None):
@@ -401,57 +376,34 @@ def probe_bench_neardup(
     to its max jaccard.
 
     Plan shape: the bench index is BROADCAST (eval suites are small);
-    candidate pairs are benchmark-bounded, so the verify rides the
-    audited double-broadcast composite-key shape — the corpus signature
-    table is scanned, never exchanged on a pair-end key."""
+    candidate pairs are benchmark-bounded, so the verify is the shared
+    double-broadcast verify.jaccard_pairs, with the corpus table probed
+    for one pair end and the bench table for the other — the corpus
+    signature table is scanned, never exchanged on a pair-end key."""
     from ..config import DedupConfig
     from ..operators.candidates import band_explode
+    from ..operators.verify import jaccard_pairs
 
     cfg = cfg or DedupConfig()
     threshold = cfg.jaccard_threshold if threshold is None else threshold
-    cbands = band_explode(sig, cfg)
     cand = (
-        cbands.join(F.broadcast(bench_buckets), ["band_idx", "band_hash"])
+        band_explode(sig, cfg)
+        .join(F.broadcast(bench_buckets), ["band_idx", "band_hash"])
         .select(F.col("id_hash").alias("ih_c"), F.explode("ids").alias("ih_b"))
         .where(F.col("ih_c") != F.col("ih_b"))
         .distinct()
     )
-    bare = F.broadcast(cand)
-    a = sig.select(F.col("id_hash").alias("ih_c"), "conv_id",
-                   F.col("shingles").alias("sh_a")).join(bare, "ih_c")
-    b = bench_sig.select(F.col("id_hash").alias("ih_b"),
-                         F.col("conv_id").alias("bench_id"),
-                         F.col("shingles").alias("sh_b")).join(bare, "ih_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(1.0))
-    near = (
-        a.join(b, ["ih_c", "ih_b"])
-        .select("conv_id", "bench_id", F.round(jac, 6).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+    near = jaccard_pairs(cand, sig, bench_sig, "id_hash", threshold,
+                         pair=("ih_c", "ih_b"), carry=("conv_id",)).select(
+        F.col("conv_id_a").alias("conv_id"),
+        F.col("conv_id_b").alias("bench_id"), "jaccard")
     ex = (
         sig.join(F.broadcast(bench_md5), "content_hash")
         .where(F.col("conv_id") != F.col("bench_id"))
         .select("conv_id", "bench_id",
                 F.lit(1.0).cast("double").alias("jaccard"))
     )
-    hits = (
-        near.unionByName(ex)
-        .groupBy("conv_id", "bench_id")
-        .agg(F.max("jaccard").alias("jaccard"))
-    )
-    return (
-        hits.groupBy("conv_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_bench_hits"),
-            F.round(F.max("jaccard"), 6).alias("max_jaccard"),
-            F.min(F.struct((-F.col("jaccard")).alias("nj"),
-                           F.col("bench_id").alias("b"))).alias("w"),
-        )
-        .select("conv_id", "n_bench_hits", "max_jaccard",
-                F.col("w.b").alias("top_bench_id"))
-    )
+    return _bench_rollup(near.unionByName(ex), "conv_id")
 
 
 def boilerplate_ngrams(docs: DataFrame, n: int = 3, min_df: int = 5) -> DataFrame:

@@ -15,17 +15,14 @@ kernels). Scale notes per function.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import cache
 from ..config import DedupConfig
-from ..kernels import signatures_for_texts, splitmix64, trim_after
+from ..kernels import splitmix64, trim_after
 from ..operators.signatures import band_hashes_col
 from .text import norm_words
 
@@ -46,14 +43,21 @@ def exact_dup_groups(docs: DataFrame) -> DataFrame:
     )
 
 
-def md5_star(docs: DataFrame) -> DataFrame:
-    """Exact-dup star edges (doc_id_a, doc_id_b): each content-md5 group's
-    min doc_id linked to every other member (connectivity of the group)."""
+def md5_star(hashed: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Exact-dup star edges (<id_col>_a, <id_col>_b) over (id_col,
+    content_md5) rows: each content-md5 group's min id linked to every
+    other member (connectivity of the group). Documents pass
+    exact_hash(docs); the KMV transcript channel its normalized-text md5."""
+    reps = (
+        hashed.groupBy("content_md5")
+        .agg(F.min(id_col).alias("rep"), F.count(F.lit(1)).alias("n"))
+        .where(F.col("n") > 1)
+    )
     return (
-        exact_hash(docs).join(exact_dup_groups(docs), "content_md5")
-        .where(F.col("doc_id") != F.col("rep_doc_id"))
-        .select(F.col("rep_doc_id").alias("doc_id_a"),
-                F.col("doc_id").alias("doc_id_b"))
+        hashed.join(reps, "content_md5")
+        .where(F.col(id_col) != F.col("rep"))
+        .select(F.col("rep").alias(f"{id_col}_a"),
+                F.col(id_col).alias(f"{id_col}_b"))
     )
 
 
@@ -297,7 +301,8 @@ def minhash_lsh_pairs(
     with_stats: bool = False,
     signatures: DataFrame | None = None,
 ):
-    """MinHash+LSH near-dup pairs with exact shingle-Jaccard verify.
+    """MinHash+LSH near-dup pairs (doc_id_a, doc_id_b, jaccard), verified
+    by the shared set-Jaccard verify (operators.verify.jaccard_pairs).
     The scale path: shuffles only (band_idx, band_hash) buckets — never the
     quadratic pair space. Same LSH geometry as the transcript engine, and
     the SAME shared salted/capped/LOGGED bucket implementation
@@ -312,7 +317,8 @@ def minhash_lsh_pairs(
     semi join. Signatures are per-document, so filtering a full-corpus
     table to any subset is value-identical to signing the subset; the
     expensive text-shingling UDF is skipped entirely."""
-    from ..operators.candidates import bucket_members, bucket_pairs
+    from ..operators.candidates import bucket_candidates
+    from ..operators.verify import jaccard_pairs
 
     cfg = cfg or DedupConfig(shingle_k=3, substring_enabled=False,
                              jaccard_threshold=threshold)
@@ -329,21 +335,10 @@ def minhash_lsh_pairs(
         )
     else:
         sig = cache.persist(doc_signatures(docs, cfg))
-    banded = doc_band_explode(sig)
-    buckets, stats = bucket_members(
-        banded, cfg, id_col="doc_id", salt_col="id_hash", persist_sizes=with_stats
-    )
-    cand = bucket_pairs(buckets, "doc_id_a", "doc_id_b").distinct()
-    a = sig.select(F.col("doc_id").alias("doc_id_a"), F.col("shingles").alias("sh_a"))
-    b = sig.select(F.col("doc_id").alias("doc_id_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(1.0))
-    pairs = (
-        cand.join(a, "doc_id_a").join(b, "doc_id_b")
-        .select("doc_id_a", "doc_id_b", F.round(jac, 6).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+    cand, stats = bucket_candidates(
+        doc_band_explode(sig), cfg, ("doc_id_a", "doc_id_b"), id_col="doc_id",
+        salt_col="id_hash", persist_sizes=with_stats)
+    pairs = jaccard_pairs(cand, sig, sig, "doc_id", threshold)
     return (pairs, stats) if with_stats else pairs
 
 
@@ -394,7 +389,7 @@ def neardup_clusters(docs: DataFrame, cfg: DedupConfig | None = None,
         F.col("doc_id_a").alias("ih_a"), F.col("doc_id_b").alias("ih_b")
     )
     if exact_star:
-        edges = edges.unionByName(md5_star(docs).select(
+        edges = edges.unionByName(md5_star(exact_hash(docs)).select(
             F.col("doc_id_a").alias("ih_a"), F.col("doc_id_b").alias("ih_b")))
     nodes = docs.select(
         F.col("doc_id").alias("conv_id"), F.col("doc_id").alias("id_hash")
@@ -454,7 +449,9 @@ def dedup_keep_best(docs: DataFrame, cfg: DedupConfig | None = None,
 def simhash_pairs(docs: DataFrame, max_hamming: int = 6,
                   cfg: DedupConfig | None = None,
                   with_stats: bool = False):
-    """Near-dup pairs by SimHash Hamming distance <= max_hamming.
+    """Near-dup pairs (doc_id_a, doc_id_b, hamming) by SimHash Hamming
+    distance <= max_hamming: the shared SimHash plan
+    (operators.candidates.simhash_pairs) over doc_id members.
 
     Candidate generation — multi-index segment PAIRS: split the 64-bit
     fingerprint into 8 contiguous 8-bit segments and index every pair of
@@ -469,50 +466,19 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 6,
     band, and the shared bucket_members path salts + caps + LOGS anything
     still hot (reference eviction analog,
     /root/reference/rabin/global/index.c:539-547). For d > 6 the pair-key
-    guarantee breaks; this function refuses rather than silently losing
+    guarantee breaks; the plan refuses rather than silently losing
     recall."""
-    from ..operators.candidates import (bucket_members, bucket_pairs,
-                                        simhash_band_expr)
+    from ..operators.candidates import simhash_pairs as shared_simhash_pairs
 
-    n_segs = 8
-    if max_hamming > n_segs - 2:
-        raise ValueError(
-            f"segment-pair multi-index guarantees recall only for "
-            f"max_hamming <= {n_segs - 2}; got {max_hamming}"
-        )
     cfg = cfg or DedupConfig(shingle_k=3, substring_enabled=False)
     # persisted for the same three-way fan-out as minhash_lsh_pairs: the
     # signature UDF must run once per query, not once per reference
     sig = cache.persist(doc_signatures(docs, cfg).select(
         "doc_id", "id_hash", "simhash"
     ))
-    bands = simhash_band_expr("simhash", n_segs)
-    banded = sig.select(
-        "doc_id", "id_hash", F.explode(bands).alias("band")
-    ).select("doc_id", "id_hash", "band.band_idx", "band.band_hash")
-    buckets, stats = bucket_members(
-        banded, cfg, id_col="doc_id", salt_col="id_hash", persist_sizes=with_stats
-    )
-    cand = bucket_pairs(buckets, "doc_id_a", "doc_id_b").distinct()
-    a = sig.select(F.col("doc_id").alias("doc_id_a"), F.col("simhash").alias("sh_a"))
-    b = sig.select(F.col("doc_id").alias("doc_id_b"), F.col("simhash").alias("sh_b"))
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    pairs = (
-        cand.join(a, "doc_id_a").join(b, "doc_id_b")
-        .select("doc_id_a", "doc_id_b", ham.cast("long").alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
-    )
+    pairs, stats = shared_simhash_pairs(sig, cfg, "doc_id", max_hamming,
+                                        persist_sizes=with_stats)
     return (pairs, stats) if with_stats else pairs
-
-
-_DOC_SUB_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id_a", T.LongType(), False),
-        T.StructField("doc_id_b", T.LongType(), False),
-        T.StructField("n_windows", T.IntegerType(), False),
-        T.StructField("lcs_tokens", T.LongType(), False),
-    ]
-)
 
 
 def doc_substring_pairs(docs: DataFrame,
@@ -520,63 +486,28 @@ def doc_substring_pairs(docs: DataFrame,
     """Containment channel for the documents table: (doc_id_a, doc_id_b,
     n_windows, lcs_tokens) pairs sharing long verbatim token runs — the
     case Jaccard misses entirely (a short doc embedded in a much longer
-    one has tiny Jaccard but total containment). Doc twin of the
-    transcript substring pass (operators/substring.py; reference analog:
-    bsdiff long-match search, /root/reference/bsdiff/bsdiff.c:142-254).
-
-    Scale shape: content-defined window fingerprints (position-independent
-    selection) -> ONE shuffle keyed by window hash through the shared
-    salted/capped/logged ``bucket_members`` path -> JVM pair explosion ->
-    exact longest-common-token-run verify (rolling-hash binary search in
-    an Arrow-batched UDF) only over flagged pairs."""
-    from ..kernels import lcs_kernel, tokens_to_hashes
-    from ..operators.candidates import bucket_members, bucket_pairs
+    one has tiny Jaccard but total containment). The transcript substring
+    operators (operators/substring.py; reference analog: bsdiff long-match
+    search, bsdiff/bsdiff.c:142-254 in pcompress) run over doc_id as
+    their long conv_id: substring_candidates keys its window buckets by
+    doc_id (salted by id_hash), and verify_substring_pairs measures the
+    longest common token run of the raw texts, only over flagged pairs."""
+    from ..operators.substring import (substring_candidates,
+                                       verify_substring_pairs)
 
     cfg = cfg or DedupConfig(shingle_k=3, substring_enabled=True)
     sig = doc_signatures(docs, cfg, with_windows=True)
-    exploded = (
-        sig.where(F.size("win_hashes") > 0)
-        .select(
-            "doc_id",
-            "id_hash",
-            F.lit(0).alias("band_idx"),
-            F.explode(F.array_distinct("win_hashes")).alias("band_hash"),
-        )
-    )
-    buckets, _stats = bucket_members(
-        exploded, cfg, id_col="doc_id", salt_col="id_hash", persist_sizes=False
-    )
-    cand = (
-        bucket_pairs(buckets, "doc_id_a", "doc_id_b")
-        .groupBy("doc_id_a", "doc_id_b")
-        .agg(F.count(F.lit(1)).cast("int").alias("n_windows"))
-        .where(F.col("n_windows") >= cfg.substring_min_windows)
-    )
-    a = docs.select(F.col("doc_id").alias("doc_id_a"), F.col("text").alias("text_a"))
-    b = docs.select(F.col("doc_id").alias("doc_id_b"), F.col("text").alias("text_b"))
-    joined = cand.join(a, "doc_id_a").join(b, "doc_id_b").select(
-        "doc_id_a", "doc_id_b", "n_windows", "text_a", "text_b"
-    )
-    max_chars = cfg.max_token_chars
-    lcs_fn = lcs_kernel(getattr(cfg, "substring_verify", "rolling"))
-
-    def _verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lcs = [
-                lcs_fn(tokens_to_hashes(ta, max_chars),
-                       tokens_to_hashes(tb, max_chars))
-                for ta, tb in zip(pdf["text_a"], pdf["text_b"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id_a": pdf["doc_id_a"].values,
-                    "doc_id_b": pdf["doc_id_b"].values,
-                    "n_windows": pdf["n_windows"].values,
-                    "lcs_tokens": pd.array(lcs, dtype="int64"),
-                }
-            )
-
-    return joined.mapInPandas(trim_after(_verify), schema=_DOC_SUB_SCHEMA)
+    cand, _stats = substring_candidates(
+        sig.withColumnRenamed("doc_id", "conv_id"), cfg, persist_sizes=False)
+    ver = verify_substring_pairs(
+        cand.select(F.col("ih_a").alias("conv_id_a"),
+                    F.col("ih_b").alias("conv_id_b"), "n_windows"),
+        docs.select(F.col("doc_id").alias("conv_id"),
+                    F.col("text").alias("doc_text")),
+        cfg)
+    return ver.select(F.col("conv_id_a").alias("doc_id_a"),
+                      F.col("conv_id_b").alias("doc_id_b"),
+                      "n_windows", "lcs_tokens")
 
 
 # routes per content class — the D6 adaptive-algorithm dispatch made real:
@@ -609,6 +540,8 @@ def recall_report(docs: DataFrame, cfg: DedupConfig | None = None,
     Reference analog: the similarity-index hit-rate statistics pcompress
     prints per archive (dedup ratio accounting, pcompress.c stats path);
     here the statistic is pinned to an exact ground truth instead."""
+    from ..operators.verify import recall_row, rounded_jaccard
+
     cfg = cfg or DedupConfig(shingle_k=3, substring_enabled=False,
                              jaccard_threshold=design_threshold)
     sig = cache.persist(doc_signatures(docs, cfg))
@@ -622,15 +555,10 @@ def recall_report(docs: DataFrame, cfg: DedupConfig | None = None,
                     F.col("shingles").alias("sh_a"))
     b = side.select(F.col("doc_id").alias("doc_id_b"), "lang",
                     F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.round(
-        F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(1.0)), 6
-    )
     truth = (
         a.join(b, ["lang"])
         .where(F.col("doc_id_a") < F.col("doc_id_b"))
-        .select("doc_id_a", "doc_id_b", jac.alias("jaccard"))
+        .select("doc_id_a", "doc_id_b", rounded_jaccard().alias("jaccard"))
         .where(F.col("jaccard") >= truth_threshold)
     )
     found = truth.join(
@@ -638,17 +566,7 @@ def recall_report(docs: DataFrame, cfg: DedupConfig | None = None,
         .select("doc_id_a", "doc_id_b"),
         ["doc_id_a", "doc_id_b"], "left_semi",
     )
-    nt = truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
-    nf = found.agg(F.count(F.lit(1)).cast("long").alias("n_found"))
-    return nt.crossJoin(nf).select(
-        F.lit(float(truth_threshold)).alias("truth_threshold"),
-        "n_truth", "n_found",
-        F.round(
-            F.when(F.col("n_truth") > 0,
-                   F.col("n_found").cast("double") / F.col("n_truth"))
-            .otherwise(F.lit(1.0)), 6,
-        ).alias("recall"),
-    )
+    return recall_row(truth, found, truth_threshold)
 
 
 def doc_tier_attribution(docs: DataFrame, cfg: DedupConfig | None = None,
@@ -807,7 +725,7 @@ def source_overlap(docs: DataFrame, cfg: DedupConfig | None = None,
     near = minhash_lsh_pairs(docs, cfg, threshold).select(
         "doc_id_a", "doc_id_b"
     )
-    edges = near.unionByName(md5_star(docs)).distinct()
+    edges = near.unionByName(md5_star(exact_hash(docs))).distinct()
     src = docs.select("doc_id", "source")
     ea = src.select(
         F.col("doc_id").alias("doc_id_a"), F.col("source").alias("src_a")

@@ -12,9 +12,13 @@ accumulated signature store as the corpus, so the signature table's
 transcripts share one admission core (_admission) and one label core
 (_clusters_core), each with a driver form and a distributed form; the
 document wrappers only map their evidence onto the cores' rows. Document
-PAIRS (incremental_lsh_pairs) keep their own plan: the oracle pins a
-different verify for them (md5-of-raw-text exact key, doc_id-ordered
-bucket cap, 6 dp Jaccard with no est-Jaccard prefilter).
+PAIRS (incremental_lsh_pairs) keep the document verify rule the oracle
+pins (doc_id-ordered bucket cap, 6 dp Jaccard with no est-Jaccard
+prefilter), but share the operators: both pair functions band the touched
+corpus rows with the delta's (_touched_bands), count candidates with
+candidates.bucket_candidates and keep pairs with a delta endpoint
+(_delta_endpoint_pairs); documents then verify with verify.jaccard_pairs,
+transcripts with verify.near_pairs.
 
 Scale shape, distributed path (document pairs always; the transcript
 pairs and both cores above the driver budget):
@@ -66,31 +70,34 @@ from pyspark.sql import functions as F
 
 from .. import cache
 from ..config import DedupConfig
-from ..operators.candidates import bucket_members, bucket_pairs
+from ..operators.candidates import bucket_candidates
 from .doc_dedup import doc_band_explode, doc_signatures, exact_hash
 
 
-def _delta_endpoint_pairs(cand: DataFrame, delta_ids: DataFrame) -> DataFrame:
-    """Candidate pairs with >= 1 endpoint in ``delta_ids`` (doc_id col).
-    Touched buckets can still emit corpus-corpus pairs (a hot bucket may
-    salt-drop its delta members); those are already known from the
-    corpus's own run and are filtered here. The delta id set is the small
-    side by construction (a daily batch), so both semi-joins broadcast."""
-    return (
-        cand.join(
-            F.broadcast(delta_ids.withColumnRenamed("doc_id", "doc_id_a")),
-            "doc_id_a",
-            "left_semi",
-        )
-        .unionByName(
-            cand.join(
-                F.broadcast(delta_ids.withColumnRenamed("doc_id", "doc_id_b")),
-                "doc_id_b",
-                "left_semi",
-            )
-        )
-        .distinct()
-    )
+def _delta_endpoint_pairs(pairs: DataFrame, delta_ids: DataFrame,
+                          a_col: str, b_col: str) -> DataFrame:
+    """Rows of ``pairs`` with >= 1 endpoint (``a_col`` or ``b_col``) in the
+    one-column ``delta_ids``. Touched buckets can still emit corpus-corpus
+    pairs (a hot bucket may salt-drop its delta members); those are
+    already known from the corpus's own run and are filtered here. The
+    delta id set is the small side by construction (a daily batch), so
+    both semi-joins broadcast."""
+    key = delta_ids.columns[0]
+    return pairs.join(
+        F.broadcast(delta_ids.withColumnRenamed(key, a_col)), a_col, "left_semi"
+    ).unionByName(pairs.join(
+        F.broadcast(delta_ids.withColumnRenamed(key, b_col)), b_col, "left_semi"
+    )).distinct()
+
+
+def _touched_bands(cbands: DataFrame, dbands: DataFrame) -> DataFrame:
+    """The delta's band rows plus the corpus band rows of every bucket the
+    delta touches: the corpus band scan is filtered map-side by a
+    BROADCAST semi-join on the delta's distinct bucket keys, so per-run
+    work is O(delta + touched members), never O(corpus)."""
+    keys = F.broadcast(dbands.select("band_idx", "band_hash").distinct())
+    return cbands.join(keys, ["band_idx", "band_hash"], "left_semi").unionByName(
+        dbands)
 
 
 def incremental_lsh_pairs(
@@ -104,6 +111,11 @@ def incremental_lsh_pairs(
     """MinHash-LSH near-dup pairs (doc_id_a, doc_id_b, jaccard) between the
     delta and (corpus ∪ delta), WITHOUT re-pairing the corpus: every pair
     has >= 1 delta endpoint; corpus-corpus pairs are the corpus run's job.
+    Candidates come from the touched corpus bands ∪ the delta bands
+    through the shared bucket_candidates; the delta-endpoint filter and
+    the shared set-Jaccard verify (operators.verify.jaccard_pairs) follow.
+    The pair list is delta-endpoint-bounded, so it broadcasts to both
+    verify probes.
 
     ``corpus_sig``: the persisted doc_signatures table of the corpus's own
     run; its stored ``band_hashes`` column is the corpus band index. When
@@ -113,46 +125,22 @@ def incremental_lsh_pairs(
     callers that also fold signatures into state (tools/run_incremental.py)
     materialize them once and pass them here so the Arrow signature
     kernels run a single time per delta."""
+    from ..operators.verify import jaccard_pairs
+
     cfg = cfg or DedupConfig(shingle_k=3, substring_enabled=False,
                              jaccard_threshold=threshold)
     csig = cache.persist(corpus_sig if corpus_sig is not None
                          else doc_signatures(corpus, cfg))
     dsig = cache.persist(delta_sig if delta_sig is not None
                          else doc_signatures(delta, cfg))
-    dbands = doc_band_explode(dsig)
-    touched_keys = dbands.select("band_idx", "band_hash").distinct()
-    touched = doc_band_explode(csig).join(
-        F.broadcast(touched_keys), ["band_idx", "band_hash"], "left_semi"
-    )
-    all_bands = touched.unionByName(dbands)
-    buckets, _stats = bucket_members(
-        all_bands, cfg, id_col="doc_id", salt_col="id_hash", persist_sizes=False
-    )
-    cand = bucket_pairs(buckets, "doc_id_a", "doc_id_b").distinct()
-    cand = _delta_endpoint_pairs(cand, dsig.select("doc_id"))
+    pair = ("doc_id_a", "doc_id_b")
+    cand, _stats = bucket_candidates(
+        _touched_bands(doc_band_explode(csig), doc_band_explode(dsig)), cfg,
+        pair, id_col="doc_id", salt_col="id_hash", persist_sizes=False)
+    cand = _delta_endpoint_pairs(cand, dsig.select("doc_id"), *pair)
     all_sig = csig.select("doc_id", "shingles").unionByName(
-        dsig.select("doc_id", "shingles")
-    )
-    # verify shape (same rule as operators/verify.near_pairs): BROADCAST the
-    # bare pair list to BOTH probe joins and join the enriched sides on the
-    # composite pair key — a chained cand ⋈ a ⋈ b plan would shuffle+sort
-    # the corpus-wide shingle-ARRAY table on the second join key (the
-    # O(corpus) exchange this architecture forbids). The pair list is
-    # delta-endpoint-bounded by construction (a daily batch), so it always
-    # broadcasts.
-    bare = F.broadcast(cand.select("doc_id_a", "doc_id_b"))
-    a = all_sig.select(F.col("doc_id").alias("doc_id_a"),
-                       F.col("shingles").alias("sh_a")).join(bare, "doc_id_a")
-    b = all_sig.select(F.col("doc_id").alias("doc_id_b"),
-                       F.col("shingles").alias("sh_b")).join(bare, "doc_id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(1.0))
-    return (
-        a.join(b, ["doc_id_a", "doc_id_b"])
-        .select("doc_id_a", "doc_id_b", F.round(jac, 6).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+        dsig.select("doc_id", "shingles"))
+    return jaccard_pairs(cand, all_sig, all_sig, "doc_id", threshold)
 
 
 def _delta_exact_edges(csig: DataFrame, delta: DataFrame) -> DataFrame:
@@ -539,35 +527,19 @@ def incremental_transcript_pairs(
 
 def _distributed_pairs(csig: DataFrame, dsig: DataFrame,
                        cfg: DedupConfig) -> DataFrame:
-    """The distributed plan of incremental_transcript_pairs."""
+    """The distributed plan of incremental_transcript_pairs: candidate_pairs'
+    bucket-and-count step over the touched band rows, then verify_pairs'
+    two channels restricted to >= 1 delta endpoint."""
     from ..operators.candidates import band_explode
     from ..operators.verify import exact_pairs, near_pairs
 
-    dbands = band_explode(dsig, cfg)
-    touched = band_explode(csig, cfg).join(
-        F.broadcast(dbands.select("band_idx", "band_hash").distinct()),
-        ["band_idx", "band_hash"],
-        "left_semi",
-    )
-    buckets, _stats = bucket_members(
-        touched.unionByName(dbands), cfg, persist_sizes=False
-    )
-    cand = bucket_pairs(buckets, "ih_a", "ih_b").groupBy("ih_a", "ih_b").agg(
-        F.count(F.lit(1)).cast("int").alias("n_bands")
-    )
+    cand, _stats = bucket_candidates(
+        _touched_bands(band_explode(csig, cfg), band_explode(dsig, cfg)), cfg,
+        persist_sizes=False)
     d_ih = dsig.select("id_hash")
-
-    def touching_delta(pairs: DataFrame) -> DataFrame:
-        return pairs.join(
-            F.broadcast(d_ih.withColumnRenamed("id_hash", "ih_a")), "ih_a",
-            "left_semi",
-        ).unionByName(pairs.join(
-            F.broadcast(d_ih.withColumnRenamed("id_hash", "ih_b")), "ih_b",
-            "left_semi",
-        )).distinct()
-
     sig_all = csig.unionByName(dsig)
-    near = near_pairs(sig_all, touching_delta(cand), cfg)
+    near = near_pairs(sig_all, _delta_endpoint_pairs(cand, d_ih, "ih_a", "ih_b"),
+                      cfg)
     # exact channel: star only the content-hash groups the delta touches
     # (identical to the full run's star for those groups — group membership
     # is hash-determined), then keep edges with a delta endpoint
@@ -575,7 +547,8 @@ def _distributed_pairs(csig: DataFrame, dsig: DataFrame,
         F.broadcast(dsig.select("content_hash").distinct()),
         "content_hash", "left_semi",
     )
-    return near.unionByName(touching_delta(exact_pairs(sig_exact)))
+    return near.unionByName(
+        _delta_endpoint_pairs(exact_pairs(sig_exact), d_ih, "ih_a", "ih_b"))
 
 
 def incremental_transcript_admission(

@@ -14,7 +14,8 @@ that exact geometry in Spark built-ins only:
   bottom-K sketch      array_sort + slice                    (codegen)
   1-of-K candidates    explode(kmv) -> the SHARED salted/capped/LOGGED
                        bucket_members (operators/candidates.py)
-  verify               exact Jaccard via array_intersect     (codegen)
+  verify               exact Jaccard via array_intersect     (codegen;
+                       the shared operators/verify.jaccard_pairs)
 
 No MapInPandas, no ArrowEvalPython, no Python worker processes anywhere
 in the plan (plan-checked by tools/dump_plans.py). The engine's other near-dup
@@ -121,30 +122,14 @@ def _kmv_pairs(
     sig: DataFrame, cfg: DedupConfig, id_col: str, a_col: str, b_col: str,
     threshold: float, broadcast_pairs: bool = True,
 ) -> DataFrame:
-    """Shared candidate + verify tail over a persisted signature frame.
-
-    Verify rides the same double-broadcast shape as operators/verify.py:
-    the bare candidate pair list is broadcast against the signature table
-    TWICE (one map-side probe per pair end), and the two enriched sides
-    join on the composite (a, b) key — so the shingle-array table is only
-    ever SCANNED, never shuffled on a join key, and the one exchange in
-    the stage carries array payloads for candidate rows only. The naive
-    cand ⋈ sig_a ⋈ sig_b chain makes Spark shuffle + sort the corpus-keyed
-    array table on the second join once the pair list outgrows AQE's
-    broadcast estimate (the O(corpus) sort spill the repo invariant
-    forbids — see verify.py's module docstring for the measured history).
-
-    broadcast_pairs=False degrades the two probes to ordinary shuffled
-    joins — the same fallback regime as verify.near_pairs above its
-    broadcast_limit: when 1-of-K banding leaves a pair list too large to
-    broadcast, pair volume rivals corpus volume and a corpus-keyed
-    exchange is inherent to the question, not plan overhead. Callers at
-    that scale flip it from the pair count of a prior run or the bucket
-    stats; the channel's public entry points default to broadcast (pair
-    lists are candidate-bound, orders of magnitude under the corpus at
-    the design thresholds).
-    """
-    from ..operators.candidates import bucket_members, bucket_pairs
+    """Shared candidate + verify tail over a persisted signature frame:
+    1-of-K buckets through the shared bucket_candidates, then the shared
+    set-Jaccard verify (operators.verify.jaccard_pairs; broadcast_pairs
+    as there). The public entry points broadcast: pair lists are
+    candidate-bound, orders of magnitude under the corpus at the design
+    thresholds."""
+    from ..operators.candidates import bucket_candidates
+    from ..operators.verify import jaccard_pairs
 
     banded = sig.where(F.size("kmv") > 0).select(
         F.col(id_col),
@@ -152,26 +137,11 @@ def _kmv_pairs(
         F.lit(0).alias("band_idx"),
         F.explode("kmv").alias("band_hash"),
     )
-    buckets, _stats = bucket_members(
-        banded, cfg, id_col=id_col, salt_col="id_hash", persist_sizes=False
-    )
-    bare = bucket_pairs(buckets, a_col, b_col).distinct()
-    if broadcast_pairs:
-        bare = F.broadcast(bare)
-    a = sig.select(
-        F.col(id_col).alias(a_col), F.col("shingles").alias("sh_a")
-    ).join(bare, a_col)
-    b = sig.select(
-        F.col(id_col).alias(b_col), F.col("shingles").alias("sh_b")
-    ).join(bare, b_col)
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(1.0))
-    return (
-        a.join(b, [a_col, b_col])
-        .select(a_col, b_col, F.round(jac, 6).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+    cand, _stats = bucket_candidates(banded, cfg, (a_col, b_col),
+                                     id_col=id_col, salt_col="id_hash",
+                                     persist_sizes=False)
+    return jaccard_pairs(cand, sig, sig, id_col, threshold,
+                         pair=(a_col, b_col), broadcast_pairs=broadcast_pairs)
 
 
 def kmv_near_pairs(
@@ -239,6 +209,7 @@ def kmv_clusters_transcripts(
     union-find ON THE DRIVER (no executor Python workers either way)."""
     from ..operators.assemble import assemble
     from ..operators.cluster import connected_components
+    from .doc_dedup import md5_star
 
     cfg = cfg or DedupConfig()
     threshold = cfg.jaccard_threshold if threshold is None else threshold
@@ -249,17 +220,8 @@ def kmv_clusters_transcripts(
     )
     near = _kmv_pairs(sig, cfg, "conv_id", "conv_id_a", "conv_id_b", threshold)
     norm = F.trim(F.regexp_replace(F.lower("doc_text"), "[^a-z0-9]+", " "))
-    hashed = asm.select("conv_id", F.md5(norm).alias("content_md5"))
-    reps = (
-        hashed.groupBy("content_md5")
-        .agg(F.min("conv_id").alias("rep"), F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 1)
-    )
-    star = (
-        hashed.join(reps, "content_md5")
-        .where(F.col("conv_id") != F.col("rep"))
-        .select(F.col("rep").alias("conv_id_a"), F.col("conv_id").alias("conv_id_b"))
-    )
+    star = md5_star(asm.select("conv_id", F.md5(norm).alias("content_md5")),
+                    "conv_id")
     edges = near.select("conv_id_a", "conv_id_b").unionByName(star).select(
         md5_60(F.col("conv_id_a")).alias("ih_a"),
         md5_60(F.col("conv_id_b")).alias("ih_b"),
@@ -283,6 +245,8 @@ def kmv_recall_report(
     threshold. Output (truth_threshold, n_truth, n_found, recall) — the
     channel's twin of doc_recall_report / emb_pair_recall_report, pinning
     the north-rule headline (recall >= 0.99) for the UDF-free strategy."""
+    from ..operators.verify import recall_row, rounded_jaccard
+
     cfg = cfg or DedupConfig(shingle_k=k_shingle, substring_enabled=False,
                              jaccard_threshold=design_threshold)
     sig = cache.persist(
@@ -293,14 +257,9 @@ def kmv_recall_report(
                     F.col("shingles").alias("sh_a"))
     b = side.select(F.col("doc_id").alias("doc_id_b"),
                     F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.round(
-        F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(1.0)), 6
-    )
     truth = (
         a.join(b, F.col("doc_id_a") < F.col("doc_id_b"))
-        .select("doc_id_a", "doc_id_b", jac.alias("jaccard"))
+        .select("doc_id_a", "doc_id_b", rounded_jaccard().alias("jaccard"))
         .where(F.col("jaccard") >= truth_threshold)
     )
     found = truth.join(
@@ -308,14 +267,4 @@ def kmv_recall_report(
                    design_threshold).select("doc_id_a", "doc_id_b"),
         ["doc_id_a", "doc_id_b"], "left_semi",
     )
-    nt = truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
-    nf = found.agg(F.count(F.lit(1)).cast("long").alias("n_found"))
-    return nt.crossJoin(nf).select(
-        F.lit(float(truth_threshold)).alias("truth_threshold"),
-        "n_truth", "n_found",
-        F.round(
-            F.when(F.col("n_truth") > 0,
-                   F.col("n_found").cast("double") / F.col("n_truth"))
-            .otherwise(F.lit(1.0)), 6,
-        ).alias("recall"),
-    )
+    return recall_row(truth, found, truth_threshold)

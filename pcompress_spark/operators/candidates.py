@@ -149,6 +149,30 @@ def bucket_pairs(buckets: DataFrame, a_col: str, b_col: str) -> DataFrame:
     ).select(f"p.{a_col}", f"p.{b_col}")
 
 
+def bucket_candidates(
+    banded: DataFrame,
+    cfg: DedupConfig,
+    pair: tuple[str, str] = ("ih_a", "ih_b"),
+    id_col: str = "id_hash",
+    salt_col: str | None = None,
+    persist_sizes: bool = True,
+    count: str = "n_bands",
+) -> tuple[DataFrame, DataFrame]:
+    """The bucket-and-count step every banded channel shares: banded rows
+    -> (bucket_members) -> each bucket's C(m,2) member pairs -> one row per
+    pair, (a, b, <count>) with a < b and ``count`` the number of buckets
+    the pair shares; plus bucket_members' stats. ``pair`` names the pair
+    columns; ``id_col``/``salt_col``/``persist_sizes`` are bucket_members'."""
+    buckets, stats = bucket_members(banded, cfg, id_col=id_col,
+                                    salt_col=salt_col,
+                                    persist_sizes=persist_sizes)
+    a, b = pair
+    agg = bucket_pairs(buckets, a, b).groupBy(a, b).agg(
+        F.count(F.lit(1)).cast("int").alias(count)
+    )
+    return agg, stats
+
+
 def candidate_pairs(
     sig: DataFrame,
     cfg: DedupConfig,
@@ -156,23 +180,17 @@ def candidate_pairs(
 ) -> tuple[DataFrame, DataFrame]:
     """signatures -> ((ih_a, ih_b, n_bands) with ih_a < ih_b signed, stats).
     Long keys only — conv_ids are resolved at verify time."""
-    banded = band_explode(sig, cfg)
-    buckets, stats = bucket_members(banded, cfg, persist_sizes=persist_sizes)
-    pairs = bucket_pairs(buckets, "ih_a", "ih_b")
-    agg = pairs.groupBy("ih_a", "ih_b").agg(
-        F.count(F.lit(1)).cast("int").alias("n_bands")
-    )
-    return agg, stats
+    return bucket_candidates(band_explode(sig, cfg), cfg,
+                             persist_sizes=persist_sizes)
 
 
 def simhash_band_expr(col: str = "simhash", n_segs: int = 8,
                       seg_bits: int = 8) -> F.Column:
     """Array of C(n_segs,2) (band_idx, band_hash) structs from a 64-bit
-    SimHash column — the segment-PAIR multi-index shared by the document
-    and transcript SimHash channels (functions/doc_dedup.simhash_pairs,
-    simhash_candidate_pairs). 16-bit pair keys give a 65536-value keyspace
-    per band; pigeonhole guarantees recall for hamming <= n_segs - 2.
-    Arithmetic shiftright is safe under the & mask."""
+    SimHash column — the segment-PAIR multi-index of simhash_pairs, the
+    document and transcript SimHash channel. 16-bit pair keys give a
+    65536-value keyspace per band; pigeonhole guarantees recall for
+    hamming <= n_segs - 2. Arithmetic shiftright is safe under the & mask."""
     seg_pairs = [(i, j) for i in range(n_segs) for j in range(i + 1, n_segs)]
     mask = (1 << seg_bits) - 1
     return F.array(*[
@@ -188,48 +206,65 @@ def simhash_band_expr(col: str = "simhash", n_segs: int = 8,
     ])
 
 
-def simhash_candidate_pairs(
-    sig: DataFrame, cfg: DedupConfig, max_hamming: int = 6
-) -> DataFrame:
-    """SimHash similarity self-join for TRANSCRIPTS (J2 on the primary
-    axis, reference per-block similarity_hash probe
-    /root/reference/rabin/rabin_dedup.c:684-706, 1469-1489) over the
-    pipeline signatures table (conv_id, id_hash, simhash):
-    (conv_id_a, conv_id_b, hamming) with conv_id_a < conv_id_b.
+def simhash_pairs(
+    sig: DataFrame, cfg: DedupConfig, id_col: str, max_hamming: int = 6,
+    carry: tuple[str, ...] = (), persist_sizes: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """The SimHash channel of documents and transcripts (J2; reference
+    per-block similarity_hash probe,
+    rabin/rabin_dedup.c:684-706, 1469-1489 in pcompress): signature
+    rows (id_col, id_hash, simhash, *carry) -> ((<id_col>_a, <id_col>_b,
+    *carry_a, *carry_b, hamming) with hamming <= max_hamming and the pair
+    ordered by id_col, bucket stats).
 
-    Scale shape mirrors the MinHash path exactly: bands ride the 64-bit
-    id_hash through the shared salted/capped/logged bucket_members (member
-    AND salt = id_hash, like candidate_pairs), pairs explode JVM-side, and
-    conv_ids resolve only at verify time. Empty docs carry the sentinel
-    fingerprint and pair among themselves — identical in the oracle."""
+    Candidates: the segment-pair multi-index (simhash_band_expr), bucketed
+    by the shared salted/capped/logged bucket_members with id_col as the
+    member and id_hash as the salt; verify: exact popcount of the XOR.
+    Empty docs carry the sentinel fingerprint and pair among themselves —
+    identical in the oracle. For hamming > n_segs - 2 the pair-key
+    guarantee breaks; this refuses rather than silently losing recall."""
     n_segs = 8
     if max_hamming > n_segs - 2:
         raise ValueError(
             f"segment-pair multi-index guarantees recall only for "
             f"max_hamming <= {n_segs - 2}; got {max_hamming}"
         )
-    base = sig.select("conv_id", "id_hash", "simhash")
-    banded = base.select(
-        F.col("id_hash").alias("mem"),
+    a, b = f"{id_col}_a", f"{id_col}_b"
+    banded = sig.select(
+        *dict.fromkeys([id_col, "id_hash"]),
         F.explode(simhash_band_expr("simhash", n_segs)).alias("band"),
-    ).select("mem", "band.band_idx", "band.band_hash")
-    buckets, _stats = bucket_members(
-        banded, cfg, id_col="mem", persist_sizes=False
-    )
-    cand = bucket_pairs(buckets, "ih_a", "ih_b").distinct()
-    a = base.select(F.col("id_hash").alias("ih_a"),
-                    F.col("conv_id").alias("ca"),
-                    F.col("simhash").alias("sh_a"))
-    b = base.select(F.col("id_hash").alias("ih_b"),
-                    F.col("conv_id").alias("cb"),
-                    F.col("simhash").alias("sh_b"))
+    ).select(id_col, "id_hash", "band.band_idx", "band.band_hash")
+    cand, stats = bucket_candidates(banded, cfg, (a, b), id_col=id_col,
+                                    salt_col="id_hash",
+                                    persist_sizes=persist_sizes)
+
+    def side(key: str, s: str) -> DataFrame:
+        return sig.select(F.col(id_col).alias(key),
+                          F.col("simhash").alias(f"sh_{s}"),
+                          *(F.col(c).alias(f"{c}_{s}") for c in carry))
+
     ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("long")
-    return (
-        cand.join(a, "ih_a").join(b, "ih_b")
-        .select(
-            F.least("ca", "cb").alias("conv_id_a"),
-            F.greatest("ca", "cb").alias("conv_id_b"),
-            ham.alias("hamming"),
-        )
+    pairs = (
+        cand.join(side(a, "a"), a).join(side(b, "b"), b)
+        .select(a, b, *(f"{c}_{s}" for s in "ab" for c in carry),
+                ham.alias("hamming"))
         .where(F.col("hamming") <= max_hamming)
+    )
+    return pairs, stats
+
+
+def simhash_candidate_pairs(
+    sig: DataFrame, cfg: DedupConfig, max_hamming: int = 6
+) -> DataFrame:
+    """SimHash pairs for TRANSCRIPTS over the pipeline signatures table:
+    (conv_id_a, conv_id_b, hamming) with conv_id_a < conv_id_b — the
+    shared simhash_pairs plan with id_hash as the member (long keys
+    through the bucket shuffle, like candidate_pairs) and conv_ids
+    carried from the verify joins."""
+    pairs, _stats = simhash_pairs(sig, cfg, "id_hash", max_hamming,
+                                  carry=("conv_id",))
+    return pairs.select(
+        F.least("conv_id_a", "conv_id_b").alias("conv_id_a"),
+        F.greatest("conv_id_a", "conv_id_b").alias("conv_id_b"),
+        "hamming",
     )

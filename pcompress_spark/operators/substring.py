@@ -13,7 +13,7 @@ window is selected iff its own hash % stride == 0, the rabin-boundary trick,
 so selection is position-independent). Detection is then exactly the LSH
 shape: explode (win_hash), group, pair within bucket — one shuffle on the
 window hash, routed through THE shared salted/capped/logged bucket
-implementation (candidates.bucket_members) with band_idx=0 and
+implementation (candidates.bucket_candidates) with band_idx=0 and
 band_hash=win_hash: a viral boilerplate span shared by 10M conversations is
 salt-sampled map-side BEFORE the collect_list reducer ever materializes the
 membership (the same straggler/OOM guard the LSH path has; reference
@@ -31,37 +31,41 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import DedupConfig
-from .candidates import bucket_members, bucket_pairs
+from .candidates import bucket_candidates
 
 
 def substring_candidates(
     sig: DataFrame, cfg: DedupConfig, persist_sizes: bool = True
 ) -> tuple[DataFrame, DataFrame]:
-    """signatures -> ((ih_a, ih_b, n_windows) pairs (long id_hash keys)
-    sharing at least substring_min_windows distinct window fingerprints,
-    bucket stats for the metrics table).
+    """signatures -> ((ih_a, ih_b, n_windows) pairs sharing at least
+    substring_min_windows distinct window fingerprints, bucket stats for
+    the metrics table).
 
-    Routed through the shared ``bucket_members`` (band_idx=0,
+    The bucket member follows the type of the input's ``conv_id``: a
+    string conv_id (transcripts) rides its 64-bit id_hash, and a long one
+    (documents, whose doc_id is passed as conv_id) is its own member. Either
+    way id_hash salts hot buckets, and ih_a/ih_b hold the member keys.
+
+    Routed through the shared ``bucket_candidates`` (band_idx=0,
     band_hash=win_hash): hot window-hash buckets are salt-sampled map-side
     before the reducer, deterministically capped, and drops are logged —
     identical skew story to the LSH candidate stage. The window-hash
     shuffle carries only 8-byte ids."""
+    long_ids = isinstance(sig.schema["conv_id"].dataType, T.LongType)
+    mem = "conv_id" if long_ids else "id_hash"
     exploded = (
         sig.where(F.size("win_hashes") > 0)
         .select(
-            "id_hash",
+            *dict.fromkeys([mem, "id_hash"]),
             F.lit(0).alias("band_idx"),
             F.explode(F.array_distinct("win_hashes")).alias("band_hash"),
         )
     )
-    buckets, stats = bucket_members(exploded, cfg, persist_sizes=persist_sizes)
-    pairs = bucket_pairs(buckets, "ih_a", "ih_b")
-    cand = (
-        pairs.groupBy("ih_a", "ih_b")
-        .agg(F.count(F.lit(1)).cast("int").alias("n_windows"))
-        .where(F.col("n_windows") >= cfg.substring_min_windows)
-    )
-    return cand, stats
+    cand, stats = bucket_candidates(exploded, cfg, id_col=mem,
+                                    salt_col="id_hash",
+                                    persist_sizes=persist_sizes,
+                                    count="n_windows")
+    return cand.where(F.col("n_windows") >= cfg.substring_min_windows), stats
 
 
 def substring_pairs(
@@ -91,22 +95,15 @@ def substring_pairs(
     return (out, stats) if return_stats else out
 
 
-_VERIFY_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id_a", T.StringType(), False),
-        T.StructField("conv_id_b", T.StringType(), False),
-        T.StructField("n_windows", T.IntegerType(), False),
-        T.StructField("lcs_tokens", T.LongType(), False),
-    ]
-)
-
-
 def verify_substring_pairs(
     pairs: DataFrame, assembled: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
-    """Exact longest-common-token-run length for each flagged pair — the
-    true bsdiff long-match measurement (suffix-array search replaced by a
-    rolling-hash binary search, kernels.longest_common_run).
+    """Exact longest-common-token-run length for each flagged pair:
+    (conv_id_a, conv_id_b, n_windows) pairs and (conv_id, doc_text) texts
+    -> (conv_id_a, conv_id_b, n_windows, lcs_tokens), the conv_id type
+    taken from ``pairs``. The true bsdiff long-match measurement
+    (suffix-array search replaced by a rolling-hash binary search,
+    kernels.longest_common_run).
 
     Spark shape: two joins pull the pair texts (pairs << corpus; AQE
     broadcasts the pair side), then one Arrow-batched mapInPandas computes
@@ -146,4 +143,11 @@ def verify_substring_pairs(
                 }
             )
 
-    return joined.mapInPandas(trim_after(_verify), schema=_VERIFY_SCHEMA)
+    id_type = pairs.schema["conv_id_a"].dataType
+    schema = T.StructType([
+        T.StructField("conv_id_a", id_type, False),
+        T.StructField("conv_id_b", id_type, False),
+        T.StructField("n_windows", T.IntegerType(), False),
+        T.StructField("lcs_tokens", T.LongType(), False),
+    ])
+    return joined.mapInPandas(trim_after(_verify), schema=schema)

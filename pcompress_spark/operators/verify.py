@@ -50,7 +50,7 @@ minhash column and drops most pairs before the shingle columns are read
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
@@ -182,6 +182,62 @@ def verify_pairs(
     )
 
 
+def rounded_jaccard() -> Column:
+    """Exact Jaccard of the sorted-distinct set arrays sh_a and sh_b,
+    rounded to 6 dp (two empty sets count as 1.0): the pair rule of every
+    set-Jaccard channel but near_pairs, and of their brute-force audit
+    truths."""
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    return F.round(
+        F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(1.0)), 6
+    )
+
+
+def jaccard_pairs(
+    cand: DataFrame,
+    sig_a: DataFrame,
+    sig_b: DataFrame,
+    id_col: str,
+    threshold: float,
+    pair: tuple[str, str] | None = None,
+    carry: tuple[str, ...] = (),
+    broadcast_pairs: bool = True,
+) -> DataFrame:
+    """The set-Jaccard verify of the document MinHash, KMV, incremental
+    and benchmark-probe channels: candidate pairs (a, b) — named ``pair``,
+    default <id_col>_a/<id_col>_b — probed against ``sig_a`` for the a
+    end and ``sig_b`` for the b end (pass one table twice for a
+    self-join; each has id_col, shingles and the ``carry`` columns) ->
+    (a, b, *carry_a, *carry_b, jaccard) where jaccard = rounded_jaccard
+    >= threshold. No est-Jaccard prefilter (near_pairs has one).
+
+    Plan: near_pairs' double-broadcast shape — the bare pair list is
+    broadcast to both probe joins and the enriched sides join on the
+    composite (a, b) key, so the shingle tables are only scanned, never
+    exchanged on one pair-end key. ``broadcast_pairs=False`` degrades the
+    probes to shuffled joins — the regime of near_pairs above its
+    broadcast_limit, where pair volume rivals corpus volume and a
+    corpus-keyed exchange is inherent to the question."""
+    a_col, b_col = pair or (f"{id_col}_a", f"{id_col}_b")
+    bare = cand.select(a_col, b_col)
+    if broadcast_pairs:
+        bare = F.broadcast(bare)
+
+    def side(sig: DataFrame, key: str, s: str) -> DataFrame:
+        return sig.select(F.col(id_col).alias(key),
+                          F.col("shingles").alias(f"sh_{s}"),
+                          *(F.col(c).alias(f"{c}_{s}") for c in carry)
+                          ).join(bare, key)
+
+    return (
+        side(sig_a, a_col, "a").join(side(sig_b, b_col, "b"), [a_col, b_col])
+        .select(a_col, b_col, *(f"{c}_{s}" for s in "ab" for c in carry),
+                rounded_jaccard().alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
 def transcript_recall_report(
     sig: DataFrame, clusters: DataFrame, truth_threshold: float = 0.7
 ) -> DataFrame:
@@ -246,6 +302,14 @@ def transcript_recall_report(
         .join(c2, "conv_id_b")
         .where(F.col("cl_a") == F.col("cl_b"))
     )
+    return recall_row(truth, found, truth_threshold)
+
+
+def recall_row(truth: DataFrame, found: DataFrame,
+               truth_threshold: float) -> DataFrame:
+    """The one-row recall audit of the transcript, document and KMV
+    channels: (truth_threshold, n_truth, n_found, recall), recall =
+    n_found / n_truth rounded to 6 dp (1.0 when there is no truth)."""
     nt = truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
     nf = found.agg(F.count(F.lit(1)).cast("long").alias("n_found"))
     return nt.crossJoin(nf).select(

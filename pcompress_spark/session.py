@@ -38,9 +38,7 @@ def get_spark(
     # the cluster master with local mode. None keeps the local default for
     # direct `python` invocations (bench, tests, tools).
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus if cpus.isdigit() else "32")
-    )
+    shuffle_partitions = shuffle_partitions or (int(cpus) if cpus.isdigit() else 32)
     b = SparkSession.builder.appName(app_name)
     if master != "inherit":
         b = b.master(master)
@@ -52,24 +50,20 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # shuffle-block codec, env-switchable for A/B benchmarking. zstd
-        # blocks are ~30-40% smaller than lz4 (less network on a real
+        # shuffle-block codec. zstd blocks are ~30-40% smaller than lz4 (less network on a real
         # cluster) but measured 10-20% SLOWER end-to-end on this single box
         # at >=4 cores — shuffle bytes never leave the page cache here, so
         # the extra compression CPU buys nothing; default stays lz4
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"))
+        .config("spark.io.compression.codec", "lz4")
         # LOCAL MODE ONLY: skip shuffle-block compression entirely — blocks
         # live in the page cache, and at 32 task threads the codec's
         # allocation churn measurably inflates the array-heavy exchanges
         # (A/B at local[32]: off won every attempt, best 81 s vs lz4 118 s,
         # pairs stage 15-18 s vs 15-40 s). A real cluster shuffles over the
         # network, where compression pays — so the default flips only when
-        # the master is local; SPARK_GRAFT_SHUFFLE_COMPRESS overrides both.
+        # the master is local.
         .config("spark.shuffle.compress",
-                os.environ.get(
-                    "SPARK_GRAFT_SHUFFLE_COMPRESS",
-                    "false" if master.startswith("local") else "true"))
+                "false" if master.startswith("local") else "true")
         # local mode: the driver JVM hosts ALL task threads — an undersized
         # heap GC-thrashes the text shuffle (measured 4-6x slowdown at 8g),
         # while an oversized one starves the 32 Python workers of RAM
@@ -83,9 +77,8 @@ def get_spark(
         # composed doc-curation count dropped 10.9 s -> 5.4 s from this
         # cap alone). 128 KB keeps human-readable plans intact; tooling
         # that needs full plans (tools/dump_plans.py) overrides via
-        # extra_conf/env.
-        .config("spark.sql.maxPlanStringLength",
-                os.environ.get("SPARK_GRAFT_MAX_PLAN_STR", "131072"))
+        # extra_conf.
+        .config("spark.sql.maxPlanStringLength", str(128 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -41,6 +41,17 @@ def test_incremental_equals_filtered_full_batch(spark, split):
     assert _pairs_set(incr) == _pairs_set(full)
 
 
+def test_empty_corpus_equals_batch(spark, split):
+    """A delta admitted against an empty corpus is the batch:
+    incremental_lsh_pairs with no corpus rows equals minhash_lsh_pairs."""
+    corpus, delta = split
+    docs = corpus.unionByName(delta)
+    incr = incremental.incremental_lsh_pairs(
+        docs.where(F.lit(False)), docs, CFG, threshold=0.3)
+    full = doc_dedup.minhash_lsh_pairs(docs, CFG, threshold=0.3)
+    assert _pairs_set(full) and _pairs_set(incr) == _pairs_set(full)
+
+
 def test_precomputed_corpus_stage_tables(spark, split, tmp_path):
     """Production shape: corpus signatures (whose band_hashes column is the
     band index) come from the persisted stage table of the corpus's own

@@ -207,3 +207,24 @@ def test_delta_admitted_twice(spark, fx, main, path):
     assert again["labels"]["conv_id"].is_unique
     for key in ("pairs", "admission", "labels"):
         pd.testing.assert_frame_equal(again[key], first[key], check_exact=True)
+
+
+@pytest.mark.parametrize("path", sorted(PATHS))
+def test_delta_against_empty_index_equals_batch(spark, fx, path):
+    """A batch is a delta admitted against an empty index: with no corpus
+    rows, incremental_transcript_pairs over signatures S equals
+    verify_pairs over candidate_pairs(S), on every column. S (the corpus
+    and the main delta) holds the planted five-member family, so the
+    batch salts a bucket above bucket_cap."""
+    sig = fx["csig"].unionByName(fx["main"])
+    cand, stats = candidate_pairs(sig, CFG, persist_sizes=False)
+    assert stats.first()["max_bucket_size"] > CFG.bucket_cap
+    batch = _tidy(verify_pairs(sig, cand, CFG))
+    empty = spark.createDataFrame([], EMPTY_TR)
+    st: dict = {}
+    got = incremental.incremental_transcript_pairs(
+        empty, empty, PATHS[path], corpus_sig=fx["csig"].where(F.lit(False)),
+        delta_sig=sig, stats=st)
+    assert st["path"] == path
+    assert len(batch) > 0
+    pd.testing.assert_frame_equal(_tidy(got), batch, check_exact=True)

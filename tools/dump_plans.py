@@ -88,6 +88,7 @@ def main() -> None:
     budget_df = entry.queries()["doc_budget_selection"](spark, SF)
     kmv_doc_df = entry.queries()["doc_kmv_near_pairs"](spark, SF)
     kmv_tr_df = entry.queries()["tr_kmv_near_pairs"](spark, SF)
+    minhash_df = entry.queries()["doc_minhash_lsh_pairs"](spark, SF)
     tr_cur_df = entry.queries()["tr_curation"](spark, SF)
     tr_deco_df = entry.queries()["tr_decontamination"](spark, SF)
     kmeans_df = entry.queries()["emb_kmeans"](spark, SF)
@@ -481,24 +482,29 @@ def main() -> None:
     )
 
     # the KMV channel's headline property: the ENTIRE near-dup path is
-    # JVM whole-stage codegen — not one Python-worker node in the plan
+    # JVM whole-stage codegen — not one Python-worker node in the plan.
+    # doc_minhash_lsh_pairs shares the KMV verify (verify.jaccard_pairs)
+    # but signs with the Arrow kernels, so only the verify shape is
+    # checked for it
     PY_NODES = ("MapInPandas", "BatchEvalPython", "ArrowEvalPython",
                 "FlatMapGroupsInPandas", "PythonUDF")
-    for name, df in (("doc_kmv_near_pairs", kmv_doc_df),
-                     ("tr_kmv_near_pairs", kmv_tr_df)):
+    for name, df, jvm_only in (("doc_kmv_near_pairs", kmv_doc_df, True),
+                               ("tr_kmv_near_pairs", kmv_tr_df, True),
+                               ("doc_minhash_lsh_pairs", minhash_df, False)):
         p = plan_of(df)
-        py_hits = [n for n in PY_NODES if n in p]
+        py_hits = [n for n in PY_NODES if n in p] if jvm_only else []
         # verify tail must ride the double-broadcast shape: pair list
         # broadcast to BOTH shingle probes (+ the hot-bucket salt
         # broadcast = >= 3), and the shingle-array table never exchanged
         # on a single pair-end key (the composite (a, b) exchange carries
-        # both keys, so this single-key pattern cannot match it)
+        # both keys, so this single-key pattern cannot match it; long ids
+        # render as doc_id_a#NNNL)
         bad_kmv_exchange = re.search(
-            r"hashpartitioning\((doc_id|conv_id)_[ab]#\d+, \d+\)", p)
+            r"hashpartitioning\((doc_id|conv_id)_[ab]#\d+L?, \d+\)", p)
         checks.append(
-            f"OK {name}: zero Python nodes in plan; pair list broadcast "
-            "to both probes; no corpus-keyed array exchange; no "
-            "cartesian stage"
+            f"OK {name}: {'zero Python nodes in plan; ' if jvm_only else ''}"
+            "pair list broadcast to both probes; no corpus-keyed array "
+            "exchange; no cartesian stage"
             if not py_hits and p.count("BroadcastHashJoin") >= 3
             and not bad_kmv_exchange
             and "CartesianProduct" not in p
