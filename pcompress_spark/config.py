@@ -75,17 +75,19 @@ class DedupConfig:
     # components: edge sets at or below this ride a driver union-find
     # (16 B/edge -> 32 MB at the default, the same order as what a
     # broadcast join ships through the driver); larger sets take the
-    # distributed large-star/small-star loop. (2) Transcript delta
-    # admission (functions/incremental.py): a delta is admitted on the
-    # driver when, on narrow columns, its rows x ``bands``, the touched
-    # corpus bucket memberships, the candidate pair rows, the pair list
-    # and the touched label rows each fit this budget, and the shingles
-    # and minhash of the candidate endpoints (sized from n_tokens before
-    # they are fetched) fit 16 B x this budget; otherwise the distributed
-    # plan runs. The admission crossover was not measured: the budget is
-    # reused, not tuned. Output is bit-identical either way — a
-    # physical-strategy knob like autoBroadcastJoinThreshold; 0 forces
-    # both distributed paths. The chosen path is logged (metrics.json;
+    # distributed large-star/small-star loop. (2) Transcript admission
+    # (functions/incremental.py): a delta is admitted on the driver when,
+    # on narrow columns, its rows x ``bands``, the touched corpus bucket
+    # memberships, the candidate pair rows, the pair list and the touched
+    # label rows each fit this budget, and the shingles and minhash of the
+    # candidate endpoints (sized from n_tokens before they are fetched)
+    # fit 16 B x this budget; otherwise the distributed plan runs. A batch
+    # pipeline run is one delta admitted against an empty index, so the
+    # same budget also picks the path of the pipeline's candidates, pairs
+    # and clusters stages. No crossover between the paths was measured:
+    # the budget is reused, not tuned. Output is bit-identical either way
+    # — a physical-strategy knob like autoBroadcastJoinThreshold; 0 forces
+    # every distributed path. The chosen path is logged (metrics.json;
     # the ``stats`` dicts).
     cc_local_edges: int = 2_000_000
 

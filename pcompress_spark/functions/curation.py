@@ -209,6 +209,7 @@ def neardup_decontaminate(
     benchmark: DataFrame,
     threshold: float = 0.3,
     cfg=None,
+    corpus_sig: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate decontamination: training documents that are a
     verified MinHash near-dup (shingle Jaccard >= threshold) of ANY
@@ -224,9 +225,10 @@ def neardup_decontaminate(
     Plan shape (the 100 TB path): rides incremental_lsh_pairs with the
     benchmark as the delta — the corpus signatures' band_hashes are probed
     with a broadcast semi-join on the benchmark's bucket keys, so per-run work
-    is O(benchmark + touched buckets), never O(corpus); at scale pass the
-    corpus's persisted signature stage table exactly as the daily
-    admission loop does. Honest recall note: symmetric-Jaccard banding
+    is O(benchmark + touched buckets), never O(corpus). ``corpus_sig``:
+    incremental_lsh_pairs' — the corpus's persisted doc_signatures table,
+    passed exactly as the daily admission loop does; when omitted the
+    corpus is signed here, O(corpus). Honest recall note: symmetric-Jaccard banding
     means a SHORT eval item embedded inside a LONG training doc can evade
     the bands — that containment case is ``decontaminate``'s (exact
     grams) and the substring channel's job; this operator targets
@@ -238,7 +240,7 @@ def neardup_decontaminate(
     cfg = cfg or DedupConfig(shingle_k=3, substring_enabled=False,
                              jaccard_threshold=threshold)
     pairs = incremental_lsh_pairs(docs, benchmark, cfg=cfg,
-                                  threshold=threshold)
+                                  threshold=threshold, corpus_sig=corpus_sig)
     return _bench_rollup(_bench_oriented(pairs, benchmark, "doc_id"), "doc_id")
 
 
@@ -287,6 +289,7 @@ def neardup_decontaminate_transcripts(
     corpus_tr: DataFrame,
     benchmark_tr: DataFrame,
     cfg=None,
+    corpus_sig: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup decontamination on the PRIMARY axis: training
     conversations that duplicate a benchmark conversation, by either
@@ -303,7 +306,9 @@ def neardup_decontaminate_transcripts(
     another train conv would never meet the bench member through the
     star. Near evidence rides incremental_transcript_pairs with the
     benchmark as the delta (O(benchmark + touched buckets) per run — the
-    corpus is never re-paired; pass persisted stage tables at scale).
+    corpus is never re-paired). ``corpus_sig``: incremental_transcript_pairs'
+    — the pipeline's persisted signatures stage table; when omitted the
+    corpus is signed here, O(corpus).
     Tiny conversations below the shingle floor have no bands and are
     caught by the exact channel only — a paraphrased tiny conv is
     invisible to both, which is the documented LSH floor trade-off."""
@@ -314,7 +319,8 @@ def neardup_decontaminate_transcripts(
     from .incremental import incremental_transcript_pairs
 
     cfg = cfg or DedupConfig()
-    csig = cache.persist(compute_signatures(assemble(corpus_tr), cfg))
+    csig = (corpus_sig if corpus_sig is not None
+            else cache.persist(compute_signatures(assemble(corpus_tr), cfg)))
     bsig = cache.persist(compute_signatures(assemble(benchmark_tr), cfg))
     near = incremental_transcript_pairs(
         corpus_tr, benchmark_tr, cfg, corpus_sig=csig, delta_sig=bsig

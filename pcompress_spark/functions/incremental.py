@@ -65,6 +65,7 @@ records which one ran and why.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -247,6 +248,7 @@ def incremental_clusters(
 # ---- transcript driver path -------------------------------------------
 _PAIR_SCHEMA = ("conv_id_a string, conv_id_b string, jaccard double, "
                "match_kind string, ih_a long, ih_b long")
+_PAIR_COLS = [c.split()[0] for c in _PAIR_SCHEMA.split(", ")]
 # Driver bytes per budget unit for the one wide fetch (shingles + minhash
 # of the candidate endpoints): the 16 B/edge of connected components' edge
 # fetch, so the default budget bounds it at 32 MB.
@@ -279,8 +281,6 @@ def _where_in(df: DataFrame, col: str, keys, negate: bool = False) -> DataFrame:
     """Rows of ``df`` whose ``col`` is (``negate``: is not) in the driver
     key collection, shipped as a broadcast relation: a map-only semi (anti)
     join, with no key literals in the plan."""
-    import pandas as pd
-
     dtype = df.schema[col].dataType.simpleString()
     keys = pd.DataFrame({col: sorted(set(keys))},
                         dtype="int64" if dtype == "bigint" else object)
@@ -293,7 +293,6 @@ def _delta_keys(drows, cfg: DedupConfig):
     floor, like band_explode, and for every row the content key
     (b = ``bands``, h = xxhash64(content_hash))."""
     import numpy as np
-    import pandas as pd
 
     keyed = drows[drows["n_tokens"] >= cfg.shingle_k]
     bh = (np.stack(keyed["bh"].to_numpy()) if len(keyed)
@@ -335,36 +334,55 @@ def _corpus_hits(csig: DataFrame, dkeys, cfg: DedupConfig) -> DataFrame:
 
 
 def _driver_candidates(dkeys, hits, d_ih: set, cfg: DedupConfig, budget: int):
-    """Candidate pairs (a, b), a < b signed, with >= 1 delta endpoint, from
-    the full membership of every bucket the delta touches — bucket_members'
-    salting, signed sort and cap, then each delta member x every other
-    member of its capped bucket: O(delta members x cap), the same pair set
-    as bucket_pairs restricted to a delta endpoint. Self pairs (a replayed
-    row listed twice) are dropped; near_pairs drops them anyway, for their
-    shared content hash. Returns None when the pair rows would exceed
-    ``budget``, with the pair row count."""
+    """Candidate pairs (ih_a, ih_b, n_bands), ih_a < ih_b signed, with >= 1
+    delta endpoint, from the full membership of every bucket the delta
+    touches — bucket_members' salting, signed sort and cap, then each delta
+    member x every other member of its capped bucket: O(delta members x
+    cap), the same rows as bucket_candidates restricted to a delta
+    endpoint, n_bands the number of capped buckets the pair shares. Self
+    pairs (a replayed row listed twice) are dropped; near_pairs drops them
+    anyway, for their shared content hash. Returns (pairs or None when the
+    pair rows would exceed ``budget``, the pair row count, bucket_members'
+    stats over the touched buckets)."""
     import numpy as np
-    import pandas as pd
 
     cmem = hits.loc[hits["band_idx"] < cfg.bands,
                     ["id_hash", "band_idx", "band_hash"]]
     mem = pd.concat([cmem.set_axis(["ih", "b", "h"], axis=1),
                      dkeys[dkeys["b"] < cfg.bands]], ignore_index=True)
-    raw = mem.groupby(["b", "h"])["ih"].transform("size").to_numpy()
+    by_bucket = mem.groupby(["b", "h"])["ih"]
+    buckets = _bucket_stats(by_bucket.size(), cfg)
+    raw = by_bucket.transform("size").to_numpy()
     # pmod(id_hash, ceil(raw / cap)) == 0; the divisor is 1 below the cap
     mem = mem[mem["ih"].to_numpy() % -(-raw // cfg.bucket_cap) == 0]
     mem = mem.sort_values(["b", "h", "ih"])
     mem = mem[mem.groupby(["b", "h"]).cumcount().to_numpy() < cfg.bucket_cap]
-    is_d = mem["ih"].isin(d_ih).to_numpy()
+    mem = mem.assign(d=mem["ih"].isin(d_ih).to_numpy())
     size = mem.groupby(["b", "h"])["ih"].transform("size").to_numpy()
-    n_rows = int((size[is_d] - 1).sum())
+    n_rows = int((size[mem["d"].to_numpy()] - 1).sum())
     if n_rows > budget:
-        return None, n_rows
-    pr = mem[is_d].merge(mem, on=["b", "h"], suffixes=("_x", "_y"))
+        return None, n_rows, buckets
+    pr = mem[mem["d"]].merge(mem, on=["b", "h"], suffixes=("_x", "_y"))
     x, y = pr["ih_x"].to_numpy(), pr["ih_y"].to_numpy()
-    keep = x != y
-    cand = pd.DataFrame({"a": np.minimum(x, y)[keep], "b": np.maximum(x, y)[keep]})
-    return cand.drop_duplicates(), n_rows
+    # each unordered pair once per shared bucket: a delta-delta pair is
+    # listed from both ends, so keep its x < y listing only
+    keep = (x != y) & (~pr["d_y"].to_numpy() | (x < y))
+    cand = pd.DataFrame({"ih_a": np.minimum(x, y)[keep],
+                         "ih_b": np.maximum(x, y)[keep]})
+    cand = cand.groupby(["ih_a", "ih_b"]).size().rename("n_bands").reset_index()
+    return cand.astype({"n_bands": "int32"}), n_rows, buckets
+
+
+def _bucket_stats(sizes, cfg: DedupConfig) -> dict:
+    """bucket_members' stats row from the raw bucket sizes ``sizes``; over
+    no bucket, the sums and the max are null, as in Spark."""
+    if not len(sizes):
+        return {"n_buckets": 0, "n_hot_buckets": None,
+                "hot_member_rows": None, "max_bucket_size": None}
+    return {"n_buckets": len(sizes),
+            "n_hot_buckets": int((sizes > cfg.hot_bucket_threshold).sum()),
+            "hot_member_rows": int(sizes[sizes > cfg.bucket_cap].sum()),
+            "max_bucket_size": int(sizes.max())}
 
 
 def _verify(cand, wide, cfg: DedupConfig) -> list[tuple]:
@@ -374,7 +392,7 @@ def _verify(cand, wide, cfg: DedupConfig) -> list[tuple]:
 
     by_ih = dict(zip(wide["id_hash"].tolist(), wide.itertuples(index=False)))
     out = []
-    for x, y in sorted(zip(cand["a"].tolist(), cand["b"].tolist())):
+    for x, y in sorted(zip(cand["ih_a"].tolist(), cand["ih_b"].tolist())):
         a, b = by_ih[x], by_ih[y]
         agree = np.count_nonzero(np.asarray(a.minhash) == np.asarray(b.minhash))
         if (int(agree) / cfg.num_perm < cfg.minhash_prefilter
@@ -396,8 +414,6 @@ def _exact_star(drows, hits, d_ih: set, cfg: DedupConfig) -> list[tuple]:
     """exact_pairs' star over the content groups the delta touches, kept
     where an endpoint is a delta row. A corpus row whose content key only
     collides with the delta's forms a group without a delta row: no edge."""
-    import pandas as pd
-
     cols = ["conv_id", "id_hash", "content_hash"]
     rows = pd.concat([hits.loc[hits["band_idx"] == cfg.bands, cols], drows[cols]])
     exact = set()
@@ -422,10 +438,11 @@ def incremental_transcript_pairs(
     pairs (conv_id_a, conv_id_b, jaccard, match_kind, ih_a, ih_b) between
     a delta of new conversations and (corpus ∪ delta), every pair with
     >= 1 delta endpoint — the daily-ingest form of the transcript pipeline,
-    and the admission of every streaming micro-batch
+    the admission of every streaming micro-batch
     (streaming/dedup_stream._near_dup_process passes its signature store as
-    ``corpus_sig`` and the batch as ``delta_sig``; the documents twin is
-    incremental_lsh_pairs above). At the
+    ``corpus_sig`` and the batch as ``delta_sig``), and, over an empty
+    corpus, the batch pipeline's pair stage (batch_pairs; the documents
+    twin is incremental_lsh_pairs above). At the
     10^12-turn design point the corpus pipeline runs once and each day's
     conversations are admitted against its checkpointed stage tables —
     corpus text is never re-read, re-shingled, or re-paired.
@@ -435,7 +452,43 @@ def incremental_transcript_pairs(
     corpus_sig under work_dir/signatures). When omitted they are computed
     here — correct but O(corpus) for the corpus side. ``stats`` (optional
     dict) receives ``path`` ('driver' or 'distributed'), ``why``, and the
-    fetched row counts.
+    fetched row counts. The work is _pairs_core's."""
+    from ..operators.assemble import assemble
+    from ..operators.signatures import compute_signatures
+
+    cfg = cfg or DedupConfig()
+    # stored tables are scanned as they are: the driver path reads each once
+    csig = (corpus_sig if corpus_sig is not None
+            else cache.persist(compute_signatures(assemble(corpus_tr), cfg)))
+    dsig = (delta_sig if delta_sig is not None
+            else cache.persist(compute_signatures(assemble(delta_tr), cfg)))
+    return _pairs_core(csig, dsig, cfg, {} if stats is None else stats).pairs()
+
+
+def batch_pairs(sig: DataFrame, cfg: DedupConfig,
+                stats: dict | None = None) -> "_Admitted":
+    """A batch as one delta admitted against an empty index: _pairs_core
+    with every row of the signature table ``sig`` as the delta. Its pairs
+    are verify_pairs(sig, candidate_pairs(sig)), its candidates and bucket
+    stats candidate_pairs', its labels connected_components' — each
+    bit-identical, on either path. The one corpus build of the pipeline's
+    candidates/pairs/clusters stages, tools/run_incremental.py's
+    transcript bootstrap and incremental_transcript_clusters' label
+    fallback.
+
+    Reference analog: pcompress runs one dedup pass over its global index
+    whether that index is empty or populated
+    (rabin/global/index.c:140-151, 485-558)."""
+    return _pairs_core(None, sig, cfg, {} if stats is None else stats)
+
+
+def _pairs_core(csig: DataFrame | None, dsig: DataFrame, cfg: DedupConfig,
+                stats: dict) -> "_Admitted":
+    """The transcript admission core: the pairs of ``dsig`` against
+    ``csig`` (incremental_transcript_pairs' contract), with the candidate
+    rows and bucket stats behind them (_Admitted). ``csig`` None is an
+    empty index (batch_pairs): nothing is probed, and the distributed path
+    is candidate_pairs and verify_pairs themselves.
 
     Scale shape, driver path: every decision is made from narrow columns
     before any wide array leaves the executors. (1) The delta's narrow
@@ -464,21 +517,11 @@ def incremental_transcript_pairs(
 
     Reference analog: pipe-mode probes of the persistent segmented index
     (rabin/global/index.c:140-151, 485-558)."""
-    from ..operators.assemble import assemble
-    from ..operators.signatures import compute_signatures
-
-    cfg = cfg or DedupConfig()
-    stats = {} if stats is None else stats
-    # stored tables are scanned as they are: the driver path reads each once
-    csig = (corpus_sig if corpus_sig is not None
-            else cache.persist(compute_signatures(assemble(corpus_tr), cfg)))
-    dsig = (delta_sig if delta_sig is not None
-            else cache.persist(compute_signatures(assemble(delta_tr), cfg)))
     budget = cfg.cc_local_edges
 
-    def distributed(why: str) -> DataFrame:
+    def distributed(why: str) -> _Admitted:
         stats.update(path="distributed", why=why)
-        return _distributed_pairs(csig, dsig, cfg)
+        return _Admitted(csig, dsig, cfg)
 
     max_rows = budget // cfg.bands
     if max_rows <= 0:
@@ -493,19 +536,26 @@ def incremental_transcript_pairs(
                            f"cc_local_edges={budget}")
     if not len(drows):
         stats.update(path="driver", why="empty delta")
-        return dsig.sparkSession.createDataFrame([], _PAIR_SCHEMA)
+        return _Admitted(csig, dsig, cfg, cand=pd.DataFrame(
+            {"ih_a": [], "ih_b": [], "n_bands": []}, dtype="int64"),
+            buckets=_bucket_stats(pd.Series(dtype="int64"), cfg), rows=[],
+            drows=drows)
     dkeys = _delta_keys(drows, cfg)
-    hits = _fetch(_corpus_hits(csig, dkeys, cfg), budget)
+    hits = (_fetch(_corpus_hits(csig, dkeys, cfg), budget) if csig is not None
+            else pd.DataFrame({c: pd.Series(dtype=t) for c, t in (
+                ("id_hash", "int64"), ("n_tokens", "int64"), ("band_idx", "int32"),
+                ("band_hash", "int64"), ("conv_id", object),
+                ("content_hash", object))}))
     stats["corpus_rows"] = len(hits)
     if len(hits) > budget:
         return distributed("touched corpus bucket members and content-hash "
                            f"rows over cc_local_edges={budget}")
     d_ih = set(drows["id_hash"].tolist())
-    cand, n_rows = _driver_candidates(dkeys, hits, d_ih, cfg, budget)
+    cand, n_rows, buckets = _driver_candidates(dkeys, hits, d_ih, cfg, budget)
     stats["candidate_rows"] = n_rows
     if cand is None:
         return distributed(f"candidate pair rows over cc_local_edges={budget}")
-    ends = set(cand["a"].tolist()) | set(cand["b"].tolist())
+    ends = set(cand["ih_a"].tolist()) | set(cand["ih_b"].tolist())
     n_tok = dict(zip(hits["id_hash"].tolist(), hits["n_tokens"].tolist()))
     n_tok.update(zip(drows["id_hash"].tolist(), drows["n_tokens"].tolist()))
     # a row's shingles are at most n_tokens longs; its minhash num_perm
@@ -517,29 +567,125 @@ def incremental_transcript_pairs(
     near = []
     if ends:
         wide_cols = ("id_hash", "conv_id", "content_hash", "shingles", "minhash")
-        wide = _where_in(csig.select(*wide_cols).unionByName(
-            dsig.select(*wide_cols)), "id_hash", ends).toPandas()
+        rows = dsig.select(*wide_cols)
+        if csig is not None:
+            rows = csig.select(*wide_cols).unionByName(rows)
+        wide = _where_in(rows, "id_hash", ends).toPandas()
         near = _verify(cand, wide, cfg)
     stats.update(path="driver", why=f"every fetch within cc_local_edges={budget}")
-    return dsig.sparkSession.createDataFrame(
-        near + _exact_star(drows, hits, d_ih, cfg), _PAIR_SCHEMA)
+    return _Admitted(csig, dsig, cfg, cand=cand, buckets=buckets,
+                     rows=near + _exact_star(drows, hits, d_ih, cfg), drows=drows)
 
 
-def _distributed_pairs(csig: DataFrame, dsig: DataFrame,
-                       cfg: DedupConfig) -> DataFrame:
-    """The distributed plan of incremental_transcript_pairs: candidate_pairs'
-    bucket-and-count step over the touched band rows, then verify_pairs'
-    two channels restricted to >= 1 delta endpoint."""
-    from ..operators.candidates import band_explode
-    from ..operators.verify import exact_pairs, near_pairs
+class _Admitted:
+    """What _pairs_core hands back: the candidate rows (ih_a, ih_b,
+    n_bands), bucket_members' stats over the buckets the delta touches,
+    and the verified pairs. On the driver path ``rows`` holds the pairs
+    and ``cand``/``buckets`` are a pandas frame and a dict; on the
+    distributed path (``rows`` None) the candidates are planned when first
+    asked for and the pairs are _distributed_pairs'."""
 
-    cand, _stats = bucket_candidates(
+    def __init__(self, csig, dsig, cfg, cand=None, buckets=None, rows=None,
+                 drows=None):
+        self.csig, self.dsig, self.cfg = csig, dsig, cfg
+        self.cand, self.buckets = cand, buckets
+        self.rows, self.drows = rows, drows
+
+    def candidates(self) -> DataFrame:
+        if self.rows is not None:
+            return self.dsig.sparkSession.createDataFrame(
+                self.cand, "ih_a long, ih_b long, n_bands int").coalesce(1)
+        if self.cand is None:
+            self.cand, self.buckets = _distributed_candidates(
+                self.csig, self.dsig, self.cfg)
+        return self.cand
+
+    def lsh_buckets(self) -> dict:
+        """bucket_members' stats as a dict (distributed path: one job)."""
+        if self.rows is not None:
+            return self.buckets
+        self.candidates()
+        row = self.buckets.collect()
+        return row[0].asDict() if row else {}
+
+    def pairs(self, cand: DataFrame | None = None,
+              cand_rows: int | None = None) -> DataFrame:
+        """The verified pairs. Distributed path: verified from ``cand``, a
+        stored copy of candidates() when the caller wrote them (default:
+        the planned candidates); ``cand_rows`` is near_pairs'."""
+        if self.rows is not None:
+            # from pandas, over Arrow: a row list would be pickled through
+            # a second pool of Python workers
+            return self.dsig.sparkSession.createDataFrame(
+                pd.DataFrame(self.rows, columns=_PAIR_COLS), _PAIR_SCHEMA)
+        return _distributed_pairs(self.csig, self.dsig, self.cfg,
+                                  self.cand if cand is None else cand, cand_rows)
+
+    def labels(self, pairs: DataFrame | None = None,
+               stats: dict | None = None) -> DataFrame:
+        """connected_components(dsig's (conv_id, id_hash), pairs) when the
+        corpus is empty (batch_pairs): (conv_id, cluster_id), cluster_id
+        the min conv_id of the component. On the driver path, when the
+        distinct non-self edges fit ``cfg.cc_local_edges`` (the bound of
+        connected_components' local path), _driver_clusters labels the
+        pairs already on the driver and no edge is fetched back; otherwise
+        connected_components runs over ``pairs`` (default: self.pairs()).
+        ``stats`` receives connected_components' {"n_edges", "path"}."""
+        from ..operators.cluster import connected_components
+
+        stats = {} if stats is None else stats
+        n_edges = (len({(r[4], r[5]) for r in self.rows if r[4] != r[5]})
+                   if self.rows is not None else None)
+        if n_edges is None or n_edges > self.cfg.cc_local_edges:
+            return connected_components(
+                self.dsig.select("conv_id", "id_hash"),
+                self.pairs() if pairs is None else pairs, self.cfg, stats=stats)
+        stats.update(n_edges=n_edges, path="local_union_find")
+        edges = pd.DataFrame([r[:2] for r in self.rows],
+                             columns=["conv_id_a", "conv_id_b"])
+        no_labels = pd.DataFrame({"conv_id": [], "cluster_id": []})
+        # one file, as a stage written from the driver: the label table is
+        # the corpus side every later delta's label merge scans
+        return self.dsig.sparkSession.createDataFrame(pd.DataFrame(
+            _driver_clusters(edges, set(self.drows["conv_id"]), no_labels,
+                             self.cfg.cc_max_iters),
+            columns=["conv_id", "cluster_id"]),
+            "conv_id string, cluster_id string").coalesce(1)
+
+
+def _distributed_candidates(csig: DataFrame | None, dsig: DataFrame,
+                            cfg: DedupConfig):
+    """The distributed candidates of _pairs_core, with bucket_members'
+    stats: candidate_pairs' bucket-and-count step over the touched band
+    rows, kept where an endpoint is a delta row. Over an empty index
+    (``csig`` None) that is candidate_pairs(dsig). Nothing is persisted:
+    a stats read re-counts the bucket sizes."""
+    from ..operators.candidates import band_explode, candidate_pairs
+
+    if csig is None:
+        return candidate_pairs(dsig, cfg, persist_sizes=False)
+    cand, buckets = bucket_candidates(
         _touched_bands(band_explode(csig, cfg), band_explode(dsig, cfg)), cfg,
         persist_sizes=False)
-    d_ih = dsig.select("id_hash")
+    return _delta_endpoint_pairs(cand, dsig.select("id_hash"), "ih_a", "ih_b"), buckets
+
+
+def _distributed_pairs(csig: DataFrame | None, dsig: DataFrame,
+                       cfg: DedupConfig, cand: DataFrame | None = None,
+                       cand_rows: int | None = None) -> DataFrame:
+    """The distributed pairs of _pairs_core: verify_pairs' two channels
+    restricted to >= 1 delta endpoint — near pairs of ``cand`` (default:
+    _distributed_candidates; ``cand_rows`` is near_pairs') and the exact
+    star of the content groups the delta touches. Over an empty index
+    (``csig`` None) that is verify_pairs(dsig, cand)."""
+    from ..operators.verify import exact_pairs, near_pairs, verify_pairs
+
+    if cand is None:
+        cand = _distributed_candidates(csig, dsig, cfg)[0]
+    if csig is None:
+        return verify_pairs(dsig, cand, cfg, cand_rows=cand_rows)
     sig_all = csig.unionByName(dsig)
-    near = near_pairs(sig_all, _delta_endpoint_pairs(cand, d_ih, "ih_a", "ih_b"),
-                      cfg)
+    near = near_pairs(sig_all, cand, cfg, cand_rows=cand_rows)
     # exact channel: star only the content-hash groups the delta touches
     # (identical to the full run's star for those groups — group membership
     # is hash-determined), then keep edges with a delta endpoint
@@ -547,8 +693,8 @@ def _distributed_pairs(csig: DataFrame, dsig: DataFrame,
         F.broadcast(dsig.select("content_hash").distinct()),
         "content_hash", "left_semi",
     )
-    return near.unionByName(
-        _delta_endpoint_pairs(exact_pairs(sig_exact), d_ih, "ih_a", "ih_b"))
+    return near.unionByName(_delta_endpoint_pairs(
+        exact_pairs(sig_exact), dsig.select("id_hash"), "ih_a", "ih_b"))
 
 
 def incremental_transcript_admission(
@@ -710,7 +856,8 @@ def incremental_transcript_clusters(
     place.
 
     ``corpus_labels``: the pipeline's checkpointed clusters table. When
-    omitted (ad-hoc/test use) the corpus's own cluster pass runs here —
+    omitted (ad-hoc/test use) the corpus's own cluster pass runs here
+    (batch_pairs) —
     correct but O(corpus). ``pairs``: precomputed evidence (callers that
     materialize the pair output pass it back, as for documents).
     ``stats``: as incremental_transcript_pairs.
@@ -733,14 +880,7 @@ def incremental_transcript_clusters(
         csig = cache.persist(corpus_sig if corpus_sig is not None
                              else compute_signatures(assemble(corpus_tr), cfg))
     if corpus_labels is None:
-        from ..operators.candidates import candidate_pairs
-        from ..operators.cluster import connected_components
-        from ..operators.verify import verify_pairs
-
-        ccand, _ = candidate_pairs(csig, cfg, persist_sizes=False)
-        corpus_labels = connected_components(
-            csig.select("conv_id", "id_hash"), verify_pairs(csig, ccand, cfg), cfg
-        )
+        corpus_labels = batch_pairs(csig, cfg).labels()
     if pairs is None:
         pairs = incremental_transcript_pairs(
             corpus_tr, delta_tr, cfg, corpus_sig=csig, delta_sig=dsig

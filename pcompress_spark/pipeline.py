@@ -18,6 +18,17 @@ Stage graph (each node one parquet table under work_dir):
   transcripts -> signatures -> candidates -> pairs -> clusters
                       \\----------------------> substring_pairs
 
+candidates, pairs and clusters are one delta admitted against an empty
+index (functions/incremental.batch_pairs — the transcript admission core
+that deltas and stream micro-batches also run): when the signature table
+fits ``cfg.cc_local_edges`` the core computes candidate rows, bucket
+stats, verified pairs and union-find labels on the driver from a few
+bounded fetches, and each of the three stages is one write job; above the
+budget the stages are candidate_pairs, verify_pairs and
+connected_components. Output is bit-identical either way; metrics.json
+records the pair stage's path and why (``pairs``) beside
+``connected_components``.
+
 Scale notes: checkpointing signatures/candidates/pairs to parquet is the
 explicit "segcache" (reference spills segment metadata to a tempfile and
 mmaps it back, /root/reference/rabin/global/index.c:280-440). At the
@@ -39,12 +50,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
+from .functions import incremental
 from .operators.assemble import assemble
-from .operators.candidates import candidate_pairs
 from .operators.cluster import connected_components
 from .operators.signatures import compute_signatures
 from .operators.substring import substring_pairs
-from .operators.verify import verify_pairs
 
 
 # Bumped whenever a stage's output schema/semantics change: a resume only
@@ -312,26 +322,36 @@ class DedupPipeline:
             transcripts,
             parallelism=self.spark.sparkContext.defaultParallelism * 2)
         sig = self._run_stage("signatures", lambda: compute_signatures(asm, cfg))
-        cand_df, bucket_stats = candidate_pairs(sig, cfg)
-        cand = self._run_stage("candidates", cand_df)
+        # candidates, pairs and clusters: the signature table admitted as
+        # one delta against an empty index (incremental.batch_pairs),
+        # built on first use, so a run whose three stages all resume never
+        # builds it
+        pair_stats: dict = {}
+        built: list = []
+
+        def core():
+            if not built:
+                built.append(incremental.batch_pairs(sig, cfg, pair_stats))
+            return built[0]
+
+        cand = self._run_stage("candidates", lambda: core().candidates())
         # exact pair count from the stage manifest (zero extra jobs) drives
-        # the verify stage's broadcast-vs-shuffle decision for the pair list
+        # the distributed verify's broadcast-vs-shuffle decision
         cand_rows = self._stages[-1].rows
-        pairs = self._run_stage(
-            "pairs",
-            lambda: verify_pairs(sig, cand, cfg,
-                                 cand_rows=cand_rows if cand_rows >= 0 else None),
-        )
+        pairs = self._run_stage("pairs", lambda: core().pairs(
+            cand, cand_rows if cand_rows >= 0 else None))
 
         cc_stats: dict = {}
-        clusters = self._run_stage(
-            "clusters",
-            lambda: connected_components(
-                sig.select("conv_id", "id_hash"), pairs, cfg, stats=cc_stats),
-        )
+        # the pairs already on the driver when the core ran this run;
+        # otherwise connected_components over the stored pairs
+        clusters = self._run_stage("clusters", lambda: (
+            built[0].labels(pairs, cc_stats) if built else connected_components(
+                sig.select("conv_id", "id_hash"), pairs, cfg, stats=cc_stats)))
+        # a resumed stage carries the original run's path records forward
+        # instead of erasing them
+        if not pair_stats:
+            pair_stats = prior_metrics.get("pairs", {})
         if not cc_stats:
-            # clusters stage resumed -> CC never executed this run; carry the
-            # original run's path decision forward instead of erasing it
             cc_stats = prior_metrics.get("connected_components", {})
 
         tables: dict[str, DataFrame] = {
@@ -372,13 +392,13 @@ class DedupPipeline:
             if resumed.get("candidates") and "lsh_buckets" in prior_metrics:
                 lsh_buckets = prior_metrics["lsh_buckets"]
             else:
-                bucket_row = [r.asDict() for r in bucket_stats.collect()]
-                lsh_buckets = bucket_row[0] if bucket_row else {}
+                lsh_buckets = core().lsh_buckets()
             t_bucket = time.monotonic()
             metrics = {
                 "config_hash": cfg.config_hash(),
                 "stages": result.metrics_rows(),
                 "lsh_buckets": lsh_buckets,
+                "pairs": pair_stats,
                 "connected_components": cc_stats,
             }
             if sub_stats is not None:

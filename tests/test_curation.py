@@ -230,6 +230,52 @@ def test_tr_neardup_decontaminate_exact_and_near_channels(spark):
     assert (planted.top_bench_id == dn).all()
 
 
+def test_neardup_decontaminate_takes_corpus_sig(spark, docs):
+    """Both near-dup decontamination surfaces give the same rows when the
+    corpus's precomputed signature table is passed as ``corpus_sig`` as
+    when they sign the corpus themselves — and with ``corpus_sig`` given
+    the corpus itself is never read (an empty frame stands in for it)."""
+    import pandas as pd
+
+    from pcompress_spark.config import DedupConfig
+    from pcompress_spark.functions.doc_dedup import doc_signatures
+    from pcompress_spark.operators.assemble import assemble
+    from pcompress_spark.operators.signatures import compute_signatures
+    from pcompress_spark.sources.tables import load_transcripts
+
+    def tidy(df):
+        pdf = df.toPandas()
+        return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+
+    is_bench = (F.col("doc_id") % 17) == 0
+    bench = docs.where(is_bench).select("doc_id", "text")
+    corpus = docs.where(~is_bench).select("doc_id", "text")
+    clone = bench.where(F.length("text") >= 50).limit(1).select(
+        (F.lit(10_000_001) + F.col("doc_id")).alias("doc_id"), "text")
+    corpus = corpus.unionByName(clone)
+    dcfg = DedupConfig(shingle_k=3, substring_enabled=False, jaccard_threshold=0.3)
+    want = tidy(curation.neardup_decontaminate(corpus, bench, threshold=0.3))
+    got = tidy(curation.neardup_decontaminate(
+        corpus.limit(0), bench, threshold=0.3,
+        corpus_sig=doc_signatures(corpus, dcfg)))
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+    turns = load_transcripts(spark, SF)
+    is_tb = F.expr("CAST(substring(conv_id, 6) AS BIGINT) % 17 = 0")
+    tbench, tcorpus = turns.where(is_tb), turns.where(~is_tb)
+    donor = tbench.join(tbench.select("conv_id").distinct().orderBy("conv_id")
+                        .limit(1), "conv_id")
+    tcorpus = tcorpus.unionByName(
+        donor.withColumn("conv_id", F.concat(F.lit("aaaa-1-"), "conv_id")))
+    want = tidy(curation.neardup_decontaminate_transcripts(tcorpus, tbench))
+    got = tidy(curation.neardup_decontaminate_transcripts(
+        tcorpus.limit(0), tbench,
+        corpus_sig=compute_signatures(assemble(tcorpus), DedupConfig())))
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+
 def test_budget_mix_weights_and_prefix_rule(spark, docs):
     """Per-source budgets follow mean-quality^alpha ordering and never
     exceed the global budget; within a source the watermark prefix rule

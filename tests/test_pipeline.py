@@ -4,6 +4,7 @@ import json
 import os
 import shutil
 
+import pandas as pd
 import pytest
 
 from pcompress_spark.config import DedupConfig
@@ -230,3 +231,79 @@ def test_nonfile_fingerprint_cached_across_runs(
         F.xxhash64("conv_id") % 2 == 0)
     r3 = DedupPipeline(spark, cfg, work_dir=wd).run(smaller)
     assert not any(s.resumed for s in r3.stages)
+
+
+def _stage_tables(spark, wd):
+    """Every stage table of a run as sorted pandas (array cells as tuples),
+    with its Spark column types."""
+    out = {}
+    for st in ("signatures", "candidates", "pairs", "clusters", "substring_pairs"):
+        df = spark.read.parquet(os.path.join(wd, st))
+        pdf = df.toPandas()
+        for c in pdf.columns:
+            if pdf[c].dtype == object and len(pdf) and not isinstance(
+                    pdf[c].iloc[0], str):
+                pdf[c] = pdf[c].map(tuple)
+        cols = list(pdf.columns)
+        out[st] = (df.dtypes, pdf.sort_values(cols).reset_index(drop=True))
+    return out
+
+
+def test_driver_and_distributed_batch_paths_bit_identical(
+        spark, smoke_transcripts, tmp_path):
+    """The pair and cluster stages run as one delta admitted against an
+    empty index: on the driver under the default budget, as
+    candidate_pairs/verify_pairs/connected_components under
+    cc_local_edges=0. Every stage table, the LSH bucket stats and the
+    edge count are bit-identical, with bucket_cap low enough that hot
+    buckets are salted on both paths."""
+    import dataclasses
+
+    cfg = DedupConfig(bucket_cap=2)
+    got = {}
+    for name, c in (("driver", cfg),
+                    ("distributed", dataclasses.replace(cfg, cc_local_edges=0))):
+        wd = str(tmp_path / name)
+        DedupPipeline(spark, c, work_dir=wd).run(smoke_transcripts)
+        with open(os.path.join(wd, "metrics.json")) as f:
+            got[name] = (json.load(f), _stage_tables(spark, wd))
+    (m_drv, t_drv), (m_dist, t_dist) = got["driver"], got["distributed"]
+    assert (m_drv["pairs"]["path"], m_dist["pairs"]["path"]) == (
+        "driver", "distributed")
+    assert (m_drv["connected_components"]["path"],
+            m_dist["connected_components"]["path"]) == (
+        "local_union_find", "distributed_star")
+    assert m_drv["lsh_buckets"] == m_dist["lsh_buckets"]
+    assert m_drv["lsh_buckets"]["hot_member_rows"] > 0   # salting fired
+    assert (m_drv["connected_components"]["n_edges"]
+            == m_dist["connected_components"]["n_edges"] > 0)
+    for st, (types, pdf) in t_drv.items():
+        assert types == t_dist[st][0], st
+        pd.testing.assert_frame_equal(pdf, t_dist[st][1], check_exact=True)
+    assert len(t_drv["candidates"][1]) > 0
+    assert set(t_drv["pairs"][1]["match_kind"]) == {"exact", "near"}
+
+
+# Spark jobs of one DedupPipeline.run on the smoke fixture with a fresh
+# work_dir (input fingerprint count, signatures, the batch admission's
+# fetches and stage writes, substring, stats, lineage): 23-25 here. Computing
+# candidates, pairs and clusters through their own Spark plans took 40.
+PIPELINE_JOBS = 30
+
+
+def test_pipeline_spark_job_count(spark, smoke_transcripts, tmp_path):
+    """The pipeline's Spark jobs, counted by job group through the status
+    tracker, stay within PIPELINE_JOBS, and metrics.json records which
+    path the pair stage took and why."""
+    sc = spark.sparkContext
+    sc.setJobGroup("pipeline_jobs", "one DedupPipeline.run")
+    try:
+        DedupPipeline(spark, CFG, work_dir=str(tmp_path / "wd")).run(
+            smoke_transcripts)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("pipeline_jobs"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n_jobs <= PIPELINE_JOBS, n_jobs
+    with open(tmp_path / "wd" / "metrics.json") as f:
+        pair_path = json.load(f)["pairs"]
+    assert pair_path["path"] == "driver" and pair_path["why"]

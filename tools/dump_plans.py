@@ -102,10 +102,19 @@ def main() -> None:
     multiprobe_df = entry.queries()["ann_topk_multiprobe"](spark, SF)
     hardneg_lsh_df = entry.queries()["ann_hard_negatives_lsh"](spark, SF)
 
+    # the pipeline's pair stage under cc_local_edges=0 (the distributed
+    # fallback of the empty-index admission)
+    batch_st: dict = {}
+    batch = incremental.batch_pairs(
+        sig, dataclasses.replace(cfg, cc_local_edges=0), batch_st)
+    batch_pairs_df = batch.pairs(batch.candidates())
+
     sections = {
         "assemble + signatures (1 text shuffle, pinned-width UDF stage)": sig,
         "LSH candidates (band shuffle, broadcast hot-bucket salt, JVM pair explosion)": cand,
         "verify (AQE-broadcastable pair joins, JVM Jaccard)": pairs,
+        "pipeline pair stage at cc_local_edges=0 (empty-index admission, distributed fallback)":
+            batch_pairs_df,
         "connected-components large-star half-round (agg+join, no collect_set)": _large_star(
             pairs.selectExpr("ih_a as u", "ih_b as v")
         ),
@@ -262,6 +271,20 @@ def main() -> None:
         if n_pair_bcast >= 2 and not bad_corpus_exchange
         else "FAIL verify: signature table exchanged on a single pair-end key"
     )
+
+    # the pipeline's pair stage under cc_local_edges=0: the empty-index
+    # admission falls back to the distributed plan, which must be
+    # verify_pairs' own shape (pair list broadcast to both probes, no
+    # corpus-keyed exchange) with no delta-endpoint semi-join
+    batch_plan = plan_of(batch_pairs_df)
+    ok = (batch_st.get("path") == "distributed"
+          and batch_plan.count("BroadcastHashJoin") >= 2
+          and "LeftSemi" not in batch_plan
+          and not re.search(r"hashpartitioning\(ih_[ab]#\d+L, \d+\)", batch_plan))
+    checks.append(
+        f"{'OK' if ok else 'FAIL'} pipeline pair stage, cc_local_edges=0: path "
+        f"{batch_st.get('path')}; pair list broadcast to both probes, no "
+        "delta-endpoint semi-join, no corpus-keyed array exchange")
 
     inc_plan = plan_of(inc_pairs_df)
     n_semi_bcast = inc_plan.count("BroadcastHashJoin")

@@ -238,10 +238,7 @@ def _transcripts_run(spark, ap, args, cfg, paths: dict) -> int:
 
     from pcompress_spark.functions import incremental
     from pcompress_spark.operators.assemble import assemble
-    from pcompress_spark.operators.candidates import candidate_pairs
-    from pcompress_spark.operators.cluster import connected_components
     from pcompress_spark.operators.signatures import compute_signatures
-    from pcompress_spark.operators.verify import verify_pairs
 
     if args.bootstrap:
         if not args.corpus:
@@ -250,11 +247,7 @@ def _transcripts_run(spark, ap, args, cfg, paths: dict) -> int:
         sig_t = spark.read.parquet(store.append(
             compute_signatures(assemble(corpus), cfg),
             paths["sig"], "run", "bootstrap"))
-        cand, _ = candidate_pairs(sig_t, cfg, persist_sizes=False)
-        labels = connected_components(
-            sig_t.select("conv_id", "id_hash"),
-            verify_pairs(sig_t, cand, cfg), cfg,
-        )
+        labels = incremental.batch_pairs(sig_t, cfg).labels()
         store.stage_replace(spark, labels, paths["labels"])
         store.commit_replace(spark, paths["labels"])
         print(json.dumps({"bootstrapped": True, "mode": "transcripts",
