@@ -130,10 +130,12 @@ def incremental_lsh_pairs(
 
     cfg = cfg or DedupConfig(shingle_k=3, substring_enabled=False,
                              jaccard_threshold=threshold)
-    csig = cache.persist(corpus_sig if corpus_sig is not None
-                         else doc_signatures(corpus, cfg))
-    dsig = cache.persist(delta_sig if delta_sig is not None
-                         else doc_signatures(delta, cfg))
+    # stored tables are scanned as they are; only what is computed here
+    # is persisted
+    csig = (corpus_sig if corpus_sig is not None
+            else cache.persist(doc_signatures(corpus, cfg)))
+    dsig = (delta_sig if delta_sig is not None
+            else cache.persist(doc_signatures(delta, cfg)))
     pair = ("doc_id_a", "doc_id_b")
     cand, _stats = bucket_candidates(
         _touched_bands(doc_band_explode(csig), doc_band_explode(dsig)), cfg,
@@ -759,14 +761,25 @@ def _admission(delta_ids: DataFrame, pairs: DataFrame, cfg: DedupConfig,
             if me in delta and (nbr not in delta or nbr < me):
                 key = (me, kind)
                 best[key] = min(best.get(key, nbr), nbr)
-    rows = []
-    for c in sorted(delta):
-        kind = ("exact" if (c, "exact") in best
-                else "near" if (c, "near") in best else "none")
-        rows.append((c, int(kind == "none"), kind, best.get((c, kind))))
+    ids = sorted(delta)
+    kinds = ["exact" if (c, "exact") in best
+             else "near" if (c, "near") in best else "none" for c in ids]
     t = delta_ids.schema["conv_id"].dataType.simpleString()
-    return delta_ids.sparkSession.createDataFrame(
-        rows, f"conv_id {t}, keep int, dup_kind string, dup_of {t}")
+    return delta_ids.sparkSession.createDataFrame(pd.DataFrame({
+        "conv_id": pd.Series(ids, dtype=_id_dtype(t)),
+        "keep": pd.Series([int(k == "none") for k in kinds], dtype="int32"),
+        "dup_kind": pd.Series(kinds, dtype=object),
+        "dup_of": pd.Series([best.get(ck) for ck in zip(ids, kinds)],
+                            dtype=_id_dtype(t)),
+    }), f"conv_id {t}, keep int, dup_kind string, dup_of {t}")
+
+
+def _id_dtype(t: str) -> str:
+    """The pandas dtype of ids of Spark type ``t`` in a driver result built
+    over Arrow (a Python row list would be pickled through a second pool of
+    Python workers): long ids are nullable Int64, since a null would turn
+    int64 into float64; any other type stays objects."""
+    return "Int64" if t == "bigint" else "object"
 
 
 def _distributed_admission(delta_ids: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -935,8 +948,9 @@ def _clusters_core(labels: DataFrame, edges: DataFrame, delta_ids: DataFrame,
                  f"within cc_local_edges={budget}")
     nodes = endpoints | set(members["conv_id"].tolist())
     t = labels.schema["conv_id"].dataType.simpleString()
-    cc = labels.sparkSession.createDataFrame(
+    cc = labels.sparkSession.createDataFrame(pd.DataFrame(
         _driver_clusters(ev, nodes, members, cfg.cc_max_iters),
+        columns=["conv_id", "cluster_id"]).astype(_id_dtype(t)),
         f"conv_id {t}, cluster_id {t}")
     # every row of a touched cluster (conv_id is unique in ``labels``) and
     # every delta conversation (a replayed delta already sits in

@@ -995,10 +995,6 @@ def tokens_to_hashes(text: str, max_token_chars: int = 64) -> np.ndarray:
     return hash_tokens(np.asarray(toks, dtype=np.str_), max_token_chars)
 
 
-def content_hash_hex(norm_texts: pd.Series) -> pd.Series:
-    """SHA-256 hex of the normalized document text (exact-dup key; analog of
-    the per-block crypto hash, /root/reference/rabin/rabin_dedup.c:790-797)."""
-    return norm_texts.map(lambda t: hashlib.sha256(t.encode("utf-8")).hexdigest())
 
 
 def signatures_flat_for_texts(texts: pd.Series, cfg) -> dict:

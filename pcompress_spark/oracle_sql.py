@@ -198,8 +198,13 @@ SELECT DISTINCT sid, sh FROM {p}shr;
 def minhash_stmts(p: str, shd_table: str, num_perm: int = 128,
                   seed: int = 42) -> str:
     """TEMP TABLE ``{p}mh`` (sid, mh list of num_perm HUGEINTs) — OPH with
-    rotation densification (kernels.minhash_oph_flat), fill logic as in
-    minhash_ctes."""
+    rotation densification (kernels.minhash_oph_flat) over the distinct
+    shingle rows ``shd_table`` (sid, sh).
+
+    Densification closed form: two sequential circular left-fill passes
+    equal "each empty bin takes the value of the nearest non-empty bin to
+    its left, circularly" — expressed as a forward window fill plus a
+    wraparound fill from the partition's last non-empty bin."""
     if num_perm & (num_perm - 1):
         raise ValueError("oph requires power-of-two num_perm")
     shift = 64 - num_perm.bit_length() + 1
@@ -300,129 +305,6 @@ FROM prow_ GROUP BY sid;
 """
 
 
-def staged_smix(prefix: str, src: str, carry: list[str], expr: str, out: str) -> str:
-    """CTE chain applying splitmix64 to ``expr`` one stage per projection.
-
-    Returns SQL text defining ``{prefix}s1..{prefix}s3`` CTEs; the final CTE
-    ``{prefix}s3`` carries ``carry`` columns plus ``out``."""
-    cols = ", ".join(carry)
-    return f"""
-    {prefix}s0 AS (SELECT {cols}, sm0({expr}) AS z0 FROM {src}),
-    {prefix}s1 AS (SELECT {cols}, sm1(z0) AS z1 FROM {prefix}s0),
-    {prefix}s2 AS (SELECT {cols}, sm2(z1) AS z2 FROM {prefix}s1),
-    {prefix}s3 AS (SELECT {cols}, sm3(z2) AS {out} FROM {prefix}s2)"""
-
-
-def token_hash_ctes(p: str, src: str, sid_expr: str, text_expr: str,
-                    max_token_chars: int = 64) -> str:
-    """Normalized token-hash lists: defines ``{p}w`` (sid, ws word list) and
-    ``{p}th`` (sid, th token-hash list; docs with zero tokens excluded).
-    Mirrors kernels.normalize_texts + hash_tokens exactly."""
-    return f"""
-    {p}w AS (SELECT {sid_expr} AS sid, norm_words({text_expr}) AS ws FROM {src}),
-    {p}tr AS (SELECT sid, unnest(range(1, len(ws) + 1)) AS pos,
-                     fnv_raw(left(unnest(ws), {max_token_chars})) AS f0
-              FROM {p}w WHERE len(ws) > 0),
-    {staged_smix(p + "t", p + "tr", ["sid", "pos"], "f0", "th")},
-    {p}th AS MATERIALIZED (SELECT sid, list(th ORDER BY pos) AS th FROM {p}ts3 GROUP BY sid)"""
-
-
-def shingle_ctes(p: str, src_th: str, k: int) -> str:
-    """k-gram shingles from token-hash lists: defines ``{p}shp`` (sid,
-    positional shingle list) and ``{p}sh`` (sid, sorted-distinct shingle
-    list). Docs below the shingle floor (len < k) are excluded — the same
-    rule as the engine's n_tokens >= k band filter."""
-    return f"""
-    {p}h0 AS (SELECT sid,
-                     list_transform(range(1, len(th) - {k} + 2),
-                                    i -> horner64(th[i : i + {k} - 1])) AS hv
-              FROM {src_th} WHERE len(th) >= {k}),
-    {p}hr AS (SELECT sid, unnest(range(1, len(hv) + 1)) AS pos, unnest(hv) AS h0
-              FROM {p}h0),
-    {staged_smix(p + "g", p + "hr", ["sid", "pos"], "h0", "sh")},
-    {p}shp AS MATERIALIZED (SELECT sid, list(sh ORDER BY pos) AS shp FROM {p}gs3 GROUP BY sid),
-    {p}sh AS MATERIALIZED (SELECT sid, list_sort(list_distinct(shp)) AS sh FROM {p}shp)"""
-
-
-def minhash_ctes(p: str, src_sh: str, num_perm: int = 128, seed: int = 42) -> str:
-    """One-permutation-hashing MinHash with rotation densification
-    (kernels.minhash_oph_flat). Input ``{src_sh}`` must provide (sid, sh)
-    with sh a non-empty sorted-distinct shingle list; defines ``{p}mh``
-    (sid, mh list of num_perm HUGEINTs).
-
-    Densification closed form: two sequential circular left-fill passes
-    equal "each empty bin takes the value of the nearest non-empty bin to
-    its left, circularly" — expressed as a forward window fill plus a
-    wraparound fill from the partition's last non-empty bin."""
-    if num_perm & (num_perm - 1):
-        raise ValueError("oph requires power-of-two num_perm")
-    shift = 64 - num_perm.bit_length() + 1
-    c_route = (seed * 0xD1B54A32D192ED03) % M64
-    c_val = (seed * 0x9E3779B1) % M64
-    return f"""
-    {p}ex AS (SELECT sid, unnest(sh) AS s FROM {src_sh}),
-    {staged_smix(p + "r", p + "ex", ["sid", "s"], f"xor64(s, {c_route}{_H})", "routed")},
-    {staged_smix(p + "v", p + "rs3",
-                 ["sid", "routed"], f"(s + {c_val}{_H}) % {_M}", "val")},
-    {p}bm AS MATERIALIZED (SELECT sid, rsh64(routed, {shift})::INT AS bin, min(val) AS mval
-              FROM {p}vs3 GROUP BY sid, bin),
-    {p}grid AS (
-        SELECT d.sid, g.bin, b.mval
-        FROM (SELECT DISTINCT sid FROM {p}bm) d
-        CROSS JOIN (SELECT unnest(range(0, {num_perm}))::INT AS bin) g
-        LEFT JOIN {p}bm b ON b.sid = d.sid AND b.bin = g.bin),
-    {p}fill AS (
-        SELECT sid, bin, coalesce(
-            mval,
-            last_value(mval IGNORE NULLS) OVER (
-                PARTITION BY sid ORDER BY bin
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-            last_value(mval IGNORE NULLS) OVER (
-                PARTITION BY sid ORDER BY bin
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        ) AS v
-        FROM {p}grid),
-    {p}mh AS MATERIALIZED (SELECT sid, list(v ORDER BY bin) AS mh FROM {p}fill GROUP BY sid)"""
-
-
-def simhash_ctes(p: str, src_sh: str, sample_cap: int = 512) -> str:
-    """SimHash per doc (kernels.simhash_flat): majority vote per bit over
-    the bottom-``sample_cap`` sorted-distinct shingles; ties vote 1. Defines
-    ``{p}simh`` (sid, simh HUGEINT). Empty-shingle docs are absent (engine
-    assigns them the sentinel; join with coalesce at the call site)."""
-    return f"""
-    {p}cx AS (SELECT sid, unnest(CASE WHEN len(sh) > {sample_cap}
-                                 THEN sh[1 : {sample_cap}] ELSE sh END) AS s,
-                     least(len(sh), {sample_cap}) AS n
-              FROM {src_sh} WHERE len(sh) > 0),
-    {p}bits AS (SELECT sid, n, b.b AS b, sum((rsh64(s, b.b) % 2)::BIGINT) AS cnt
-                FROM {p}cx CROSS JOIN (SELECT unnest(range(0, 64))::INT AS b) b
-                GROUP BY sid, n, b.b),
-    {p}simh AS (SELECT sid,
-                       sum(CASE WHEN 2 * cnt >= n THEN 1{_H} << b ELSE 0{_H} END)
-                       % {_M} AS simh
-                FROM {p}bits GROUP BY sid)"""
-
-
-def window_ctes(p: str, src_shp: str, k: int, window: int, stride: int) -> str:
-    """Content-defined substring window fingerprints
-    (kernels.window_hashes_flat + stride selection): defines ``{p}win``
-    (sid, wh) rows — DISTINCT selected window hashes per doc."""
-    if window % k:
-        raise ValueError("window must be a multiple of shingle_k")
-    nsub = window // k
-    span = (nsub - 1) * k
-    return f"""
-    {p}w0 AS (SELECT sid,
-                     list_transform(range(1, len(shp) - {span} + 1),
-                         i -> horner64(list_transform(range(0, {nsub}),
-                                                      j -> shp[i + j * {k}]))) AS wv
-              FROM {src_shp} WHERE len(shp) > {span}),
-    {p}wr AS (SELECT sid, unnest(wv) AS w0 FROM {p}w0),
-    {staged_smix(p + "q", p + "wr", ["sid"], "w0", "wh")},
-    {p}win AS (SELECT DISTINCT sid, wh FROM {p}qs3 WHERE wh % {stride} = 0)"""
-
-
 def _pow_stage_ctes(p: str, src: str, n_stages: int = 40) -> str:
     """Powers table (i -> GOLD^i, GOLD^-i mod 2**64) over the row set
     ``{src}`` (must provide column i), via binary decomposition of the
@@ -453,36 +335,6 @@ def _pow_stage_ctes(p: str, src: str, n_stages: int = 40) -> str:
         f"exponent >= 2^{n_stages}') AS HUGEINT) ELSE ip END AS ip "
         f"FROM {p}pwa{n_stages - 1})")
     return ",\n    ".join(ctes)
-
-
-def prefix_hash_ctes(p: str, src_th: str) -> str:
-    """Polynomial prefix-hash lists (kernels._prefix_hashes) for exact
-    longest-common-run verification. Defines ``{p}pw`` (powers table i ->
-    GOLD^i and GOLD^-i mod 2**64, up to the corpus max token count) and
-    ``{p}pref`` (sid, n, pref list with pref[1] = hash of empty prefix = 0,
-    pref[i+1] = Horner hash of the first i token hashes).
-
-    prefix[i] = GOLD^i * sum_j(th[j] * GOLD^-(j+1)) — the inverse-power
-    trick turns the sequential Horner scan into a windowed running sum."""
-    return f"""
-    {p}irange AS (SELECT unnest(range(0, (SELECT coalesce(max(len(th)), 0) + 1
-                                          FROM {src_th}))) AS i),
-    {_pow_stage_ctes(p, p + "irange")},
-    {p}tr AS (SELECT sid, len(th) AS n, unnest(range(1, len(th) + 1)) AS j,
-                     unnest(th) AS thv
-              FROM {src_th}),
-    {p}wrow AS (SELECT t.sid, t.n, t.j, mulmod(t.thv, w.ip) AS wv
-                FROM {p}tr t JOIN {p}pw w ON w.i = t.j),
-    {p}srow AS (SELECT sid, n, j,
-                       sum(wv) OVER (PARTITION BY sid ORDER BY j
-                                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       % {_M} AS sv
-                FROM {p}wrow),
-    {p}prow AS (SELECT s.sid, s.n, s.j, mulmod(w.pp, s.sv) AS pv
-                FROM {p}srow s JOIN {p}pw w ON w.i = s.j),
-    {p}pref AS (SELECT sid, any_value(n) AS n,
-                       list_prepend(0{_H}, list(pv ORDER BY j)) AS pref
-                FROM {p}prow GROUP BY sid)"""
 
 
 def xxh64_long_ctes(p: str, src: str, carry: list[str], expr: str, out: str,

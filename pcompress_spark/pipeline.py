@@ -3,7 +3,9 @@
 Reference analogs:
   - per-chunk headers & checksums verified on every read
     (/root/reference/pcompress.c:799-833, 776-790) -> per-stage manifest
-    (config hash + row count) and per-partition lineage checksums;
+    (config hash, format, input fingerprint, row count and the stage's
+    stats record, checked on every resume) and per-partition lineage
+    checksums;
   - the metadata stream kept separate from data
     (/root/reference/meta_stream.c) -> metrics/lineage parquet tables
     written alongside stage outputs;
@@ -60,8 +62,9 @@ from .operators.substring import substring_pairs
 # Bumped whenever a stage's output schema/semantics change: a resume only
 # reuses checkpoints written by the same format (e.g. format 2 switched the
 # candidates/pairs tables to 64-bit id_hash keys; format 3 added the
-# precomputed band_hashes column to the signatures table).
-PIPELINE_FORMAT = 3
+# precomputed band_hashes column to the signatures table; format 4 put each
+# stage's stats record in its manifest).
+PIPELINE_FORMAT = 4
 
 
 @dataclass
@@ -71,6 +74,9 @@ class StageResult:
     seconds: float
     resumed: bool
     construct_seconds: float = 0.0
+    # the stage's metrics.json records ({top-level key: record}), kept in
+    # its manifest beside ``rows``
+    stats: dict = field(default_factory=dict)
 
 
 @dataclass
@@ -107,37 +113,42 @@ class DedupPipeline:
     def _manifest_path(self, name: str) -> str:
         return os.path.join(self.work_dir, f"{name}.manifest.json")
 
-    def _can_resume(self, name: str) -> bool:
-        if not self.work_dir:
-            return False
-        mp = self._manifest_path(name)
-        sd = self._stage_dir(name)
-        if not (os.path.exists(mp) and os.path.exists(os.path.join(sd, "_SUCCESS"))):
-            return False
+    def _resumable(self, name: str) -> dict | None:
+        """The stage's manifest when its output can be resumed: the output
+        dir carries ``_SUCCESS`` and the manifest matches this run's
+        config, format and input."""
+        if not (self.work_dir and os.path.exists(
+                os.path.join(self._stage_dir(name), "_SUCCESS"))):
+            return None
         try:
-            with open(mp) as f:
+            with open(self._manifest_path(name)) as f:
                 manifest = json.load(f)
         except (OSError, json.JSONDecodeError):
-            return False
-        return (
+            return None
+        ok = (
             manifest.get("config_hash") == self.cfg.config_hash()
             and manifest.get("format") == PIPELINE_FORMAT
             and manifest.get("input") == self._input_fp
         )
+        return manifest if ok else None
 
-    def _checkpoint(self, name: str, df: DataFrame) -> tuple[DataFrame, int, bool]:
-        """Write stage output (if work_dir set), record lineage, return the
-        (re-read) DataFrame + row count + resumed flag.
+    def _checkpoint(self, name: str, df: DataFrame,
+                    stats) -> tuple[DataFrame, int, dict]:
+        """Write stage output (if work_dir set), then its manifest; return
+        the (re-read) DataFrame, row count and stats record.
 
         Row counts ride on the write action via ``Observation`` (zero extra
         jobs); resumed stages read the count from the manifest (zero jobs).
         Keeping the per-stage serial overhead near zero is what makes the
         N->4N scaling efficiency hold: every constant-cost driver round-trip
-        is pure Amdahl serial fraction."""
+        is pure Amdahl serial fraction. ``stats`` (the re-read output ->
+        the stage's metrics.json records) runs after the write and before
+        the manifest, so its jobs are part of the stage and its record is
+        checked with the rows on every resume."""
         sd = self._stage_dir(name)
         if sd is None:
             df = df.localCheckpoint()  # cut lineage, keep in memory
-            return df, df.count(), False
+            return df, df.count(), {}
         # the re-read passes the just-written plan's schema explicitly:
         # skipping footer inference removes one driver round-trip per stage
         # (fixed serial cost — Amdahl fraction at N->4N). Resume is handled
@@ -158,18 +169,23 @@ class DedupPipeline:
             "overwrite"
         ).parquet(sd)
         rows = int(obs.get["rows"])
+        out = self.spark.read.schema(df.schema).parquet(sd)
+        record = stats(out) if stats else {}
         tmp = f"{mp}.tmp"
         with open(tmp, "w") as f:
             json.dump(
                 {"stage": name, "config_hash": self.cfg.config_hash(),
-                 "rows": rows, "format": PIPELINE_FORMAT, "input": self._input_fp},
-                f,
+                 "rows": rows, "format": PIPELINE_FORMAT, "input": self._input_fp,
+                 "stats": record},
+                f, default=str,
             )
         os.replace(tmp, mp)
-        return self.spark.read.schema(df.schema).parquet(sd), rows, False
+        return out, rows, record
 
-    def _run_stage(self, name: str, build) -> DataFrame:
-        """build: () -> DataFrame. Construction is timed separately because
+    def _run_stage(self, name: str, build, stats=None) -> DataFrame:
+        """build: () -> DataFrame; stats: (stored output) -> the stage's
+        metrics.json records, run only when a manifest is written
+        (_checkpoint). Construction is timed separately because
         some operators run driver-synchronized jobs at build time (the CC
         local-path probe, convergence checksums/localCheckpoints) — a fixed,
         core-count-independent cost that is pure Amdahl serial fraction at
@@ -180,21 +196,22 @@ class DedupPipeline:
         Resume is checked BEFORE construction: a resumed stage must not pay
         the operator's build-time driver jobs for output it is about to
         discard — "skips completed stages" means skips their work, not just
-        their write."""
+        their write. Its rows and stats come from its own validated
+        manifest, never from an earlier run's metrics.json."""
         t0 = time.monotonic()
-        if self._can_resume(name):
-            with open(self._manifest_path(name)) as f:
-                rows = json.load(f).get("rows", -1)
+        manifest = self._resumable(name)
+        if manifest is not None:
             out = self.spark.read.parquet(self._stage_dir(name))
-            self._stages.append(
-                StageResult(name, rows, time.monotonic() - t0, True))
+            self._stages.append(StageResult(
+                name, manifest["rows"], time.monotonic() - t0, True,
+                stats=manifest["stats"]))
             return out
         df = build() if callable(build) else build
         t1 = time.monotonic()
-        out, rows, resumed = self._checkpoint(name, df)
+        out, rows, record = self._checkpoint(name, df, stats)
         self._stages.append(
-            StageResult(name, rows, time.monotonic() - t0, resumed,
-                        construct_seconds=t1 - t0))
+            StageResult(name, rows, time.monotonic() - t0, False,
+                        construct_seconds=t1 - t0, stats=record))
         return out
 
     # ---- lineage ------------------------------------------------------
@@ -307,16 +324,6 @@ class DedupPipeline:
         self._stages = []
         self._input_fp = self._input_fingerprint(transcripts) if self.work_dir else None
         with_substring = cfg.substring_enabled if with_substring is None else with_substring
-        # the PRIOR run's metrics (if any): resumed stages reuse their
-        # recorded bucket/CC stats instead of re-running the stats jobs —
-        # resume must skip a stage's WORK, including its metrics collects
-        prior_metrics: dict = {}
-        if self.work_dir:
-            try:
-                with open(os.path.join(self.work_dir, "metrics.json")) as f:
-                    prior_metrics = json.load(f)
-            except (OSError, json.JSONDecodeError):
-                pass
 
         asm = assemble(
             transcripts,
@@ -334,25 +341,21 @@ class DedupPipeline:
                 built.append(incremental.batch_pairs(sig, cfg, pair_stats))
             return built[0]
 
-        cand = self._run_stage("candidates", lambda: core().candidates())
+        cand = self._run_stage("candidates", lambda: core().candidates(),
+                               lambda _: {"lsh_buckets": core().lsh_buckets()})
         # exact pair count from the stage manifest (zero extra jobs) drives
         # the distributed verify's broadcast-vs-shuffle decision
         cand_rows = self._stages[-1].rows
-        pairs = self._run_stage("pairs", lambda: core().pairs(
-            cand, cand_rows if cand_rows >= 0 else None))
+        pairs = self._run_stage("pairs", lambda: core().pairs(cand, cand_rows),
+                                lambda _: {"pairs": pair_stats})
 
         cc_stats: dict = {}
         # the pairs already on the driver when the core ran this run;
         # otherwise connected_components over the stored pairs
         clusters = self._run_stage("clusters", lambda: (
             built[0].labels(pairs, cc_stats) if built else connected_components(
-                sig.select("conv_id", "id_hash"), pairs, cfg, stats=cc_stats)))
-        # a resumed stage carries the original run's path records forward
-        # instead of erasing them
-        if not pair_stats:
-            pair_stats = prior_metrics.get("pairs", {})
-        if not cc_stats:
-            cc_stats = prior_metrics.get("connected_components", {})
+                sig.select("conv_id", "id_hash"), pairs, cfg, stats=cc_stats)),
+            lambda _: {"connected_components": cc_stats})
 
         tables: dict[str, DataFrame] = {
             "signatures": sig,
@@ -360,10 +363,12 @@ class DedupPipeline:
             "pairs": pairs,
             "clusters": clusters,
         }
-        sub_stats = None
         if with_substring:
             sub_df, sub_stats = substring_pairs(sig, pairs, cfg, return_stats=True)
-            tables["substring_pairs"] = self._run_stage("substring_pairs", sub_df)  # lazy frame, construct above
+            tables["substring_pairs"] = self._run_stage(
+                "substring_pairs", sub_df,  # lazy frame, construct above
+                lambda _: {"substring_buckets": next(
+                    (r.asDict() for r in sub_stats.collect()), {})})
 
         if with_tiers:
             from .operators.substring import verify_substring_pairs
@@ -378,54 +383,26 @@ class DedupPipeline:
                         "n_windows long, lcs_tokens long"
                 )
             tables["tiers"] = self._run_stage(
-                "tiers", tier_attribution(sig, clusters, ver, cfg)
-            )
+                "tiers", tier_attribution(sig, clusters, ver, cfg),
+                lambda out: {"tiers": {
+                    r["tier"]: r["n"] for r in out.groupBy("tier")
+                    .agg(F.count(F.lit(1)).alias("n")).collect()}})
 
-        # metrics + lineage tables (the reference's separate metadata stream)
+        # metrics + lineage tables (the reference's separate metadata
+        # stream): metrics.json is this run's stage records, each from the
+        # stage's own manifest when it resumed
         result = PipelineResult(tables, list(self._stages))
         if self.work_dir:
             t_fin = time.monotonic()
-            resumed = {s.name: s.resumed for s in self._stages}
-            # stats collects are part of a stage's WORK: a resumed stage
-            # reuses its recorded stats instead of re-running banding jobs
-            # for numbers the prior run already wrote
-            if resumed.get("candidates") and "lsh_buckets" in prior_metrics:
-                lsh_buckets = prior_metrics["lsh_buckets"]
-            else:
-                lsh_buckets = core().lsh_buckets()
-            t_bucket = time.monotonic()
-            metrics = {
-                "config_hash": cfg.config_hash(),
-                "stages": result.metrics_rows(),
-                "lsh_buckets": lsh_buckets,
-                "pairs": pair_stats,
-                "connected_components": cc_stats,
-            }
-            if sub_stats is not None:
-                if (resumed.get("substring_pairs")
-                        and "substring_buckets" in prior_metrics):
-                    metrics["substring_buckets"] = (
-                        prior_metrics["substring_buckets"])
-                else:
-                    sub_row = [r.asDict() for r in sub_stats.collect()]
-                    metrics["substring_buckets"] = (
-                        sub_row[0] if sub_row else {})
-            if "tiers" in tables:
-                if resumed.get("tiers") and "tiers" in prior_metrics:
-                    metrics["tiers"] = prior_metrics["tiers"]
-                else:
-                    metrics["tiers"] = {
-                        r["tier"]: r["n"]
-                        for r in tables["tiers"]
-                        .groupBy("tier")
-                        .agg(F.count(F.lit(1)).alias("n"))
-                        .collect()
-                    }
-            t_stats = time.monotonic()
+            metrics = {"config_hash": cfg.config_hash(),
+                       "stages": result.metrics_rows()}
+            for s in self._stages:
+                metrics.update(s.stats)
             # lineage derives purely from the signatures/clusters stage
             # outputs: when BOTH resumed (same config + input fingerprint),
             # the prior run's lineage parquet is bit-identical — rewriting
             # it would re-run two aggregation jobs per resumed invocation
+            resumed = {s.name: s.resumed for s in self._stages}
             lineage_path = os.path.join(self.work_dir, "lineage")
             if not (resumed.get("signatures") and resumed.get("clusters")
                     and os.path.exists(lineage_path)):
@@ -438,10 +415,7 @@ class DedupPipeline:
             # serial driver overhead is Amdahl fraction at N->4N; keep it
             # visible so regressions show up in metrics, not just wall clock
             metrics["finalize_seconds"] = {
-                "bucket_stats": round(t_bucket - t_fin, 3),
-                "substring_stats_and_tiers": round(t_stats - t_bucket, 3),
-                "lineage": round(time.monotonic() - t_stats, 3),
-            }
+                "lineage": round(time.monotonic() - t_fin, 3)}
             with open(os.path.join(self.work_dir, "metrics.json"), "w") as f:
                 json.dump(metrics, f, indent=2, default=str)
         return result

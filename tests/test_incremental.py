@@ -67,6 +67,26 @@ def test_precomputed_corpus_stage_tables(spark, split, tmp_path):
     assert _pairs_set(incr) == _pairs_set(inline)
 
 
+def test_supplied_signature_tables_are_not_persisted(spark, split, tmp_path):
+    """Stored signature tables passed as corpus_sig and delta_sig are
+    scanned as they are: the call persists nothing (the CLI passes its
+    whole stored sig/ table, so a persist there caches O(corpus) per run)."""
+    from pcompress_spark import cache
+
+    corpus, delta = split
+    stored = {}
+    for name, df in (("corpus", corpus), ("delta", delta)):
+        doc_dedup.doc_signatures(df, CFG).write.parquet(str(tmp_path / name))
+        stored[name] = spark.read.parquet(str(tmp_path / name))
+    n_persisted = len(cache._PERSISTED)
+    incr = incremental.incremental_lsh_pairs(
+        corpus, delta, CFG, threshold=0.3,
+        corpus_sig=stored["corpus"], delta_sig=stored["delta"])
+    assert len(cache._PERSISTED) == n_persisted
+    inline = incremental.incremental_lsh_pairs(corpus, delta, CFG, threshold=0.3)
+    assert _pairs_set(incr) and _pairs_set(incr) == _pairs_set(inline)
+
+
 def test_touched_bucket_probe_is_a_broadcast_semi_join(spark, split):
     """The corpus band scan must be filtered by a BROADCAST semi-join on
     the delta's bucket keys — never shuffled wholesale (per-run work is

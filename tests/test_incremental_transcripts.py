@@ -155,6 +155,51 @@ def test_driver_and_distributed_paths_bit_identical(spark, fx, main):
     assert lab["conv_id"].is_unique and len(lab) == fx["labels"].count() + n_delta
 
 
+def test_driver_results_built_from_pandas(spark, fx, monkeypatch):
+    """The driver path builds its admission and label frames from pandas,
+    over Arrow, as it builds its pairs: a Python row list would be pickled
+    through a second pool of Python workers. No createDataFrame call of a
+    driver-path transcript admission, transcript label merge or document
+    admission receives a list."""
+    from pyspark.sql import SparkSession
+
+    empty = spark.createDataFrame([], EMPTY_TR)
+    pairs = incremental.incremental_transcript_pairs(
+        empty, empty, CFG, corpus_sig=fx["csig"], delta_sig=fx["main"])
+    pairs = spark.createDataFrame(pairs.toPandas(), pairs.schema)
+    text = ("the quick brown fox jumps over the lazy dog and then wanders "
+            "far away into the deep green forest tonight")
+    docs = "doc_id long, text string"
+    corpus = spark.createDataFrame([(1, text)], docs)
+    delta = spark.createDataFrame(
+        [(4, text), (8, "something else entirely unique about minhash bands")],
+        docs)
+    create, data_types = SparkSession.createDataFrame, []
+
+    def recorded(self, data, *args, **kwargs):
+        data_types.append(type(data).__name__)
+        return create(self, data, *args, **kwargs)
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("distributed plan at the default config")
+
+    with monkeypatch.context() as m:
+        m.setattr(SparkSession, "createDataFrame", recorded)
+        m.setattr(incremental, "_distributed_admission", refuse)
+        m.setattr(incremental, "_distributed_clusters", refuse)
+        adm = incremental.incremental_transcript_admission(
+            fx["main"].select("conv_id"), pairs, CFG)
+        labels = incremental.incremental_transcript_clusters(
+            empty, empty, CFG, corpus_labels=fx["labels"],
+            corpus_sig=fx["csig"], delta_sig=fx["main"], pairs=pairs)
+        doc_adm = incremental.incremental_admission(corpus, delta, threshold=0.3)
+    assert data_types and "list" not in data_types, data_types
+    assert adm.count() == fx["main"].count()
+    assert labels.count() == fx["labels"].count() + fx["main"].count()
+    assert {r.doc_id: (r.keep, r.dup_kind, r.dup_of) for r in doc_adm.collect()} == {
+        4: (0, "exact", 1), 8: (1, "none", -1)}
+
+
 def test_over_budget_falls_back_to_distributed(spark, fx):
     """A small non-zero budget: the step that comes out over it discards
     what the driver path fetched and the distributed plan gives the same

@@ -37,10 +37,16 @@ def test_pipeline_end_to_end(spark, smoke_transcripts, tmp_path):
     assert set(lineage["stage"]) == {"signatures", "clusters"}
     assert lineage["rows"].sum() > 0
 
-    # full resume: every stage skipped, identical clusters
+    # full resume: every stage skipped, identical clusters, and every stage
+    # record read back from its manifest
     res2 = DedupPipeline(spark, CFG, work_dir=wd).run(smoke_transcripts)
     assert all(s.resumed for s in res2.stages), res2.metrics_rows()
     assert _clusters_dict(res) == _clusters_dict(res2)
+    with open(os.path.join(wd, "metrics.json")) as f:
+        resumed = json.load(f)
+    for key in ("lsh_buckets", "pairs", "connected_components",
+                "substring_buckets"):
+        assert resumed[key] == metrics[key], key
 
 
 def test_pipeline_tiers_stage(spark, smoke_transcripts, tmp_path):
@@ -185,6 +191,60 @@ def test_kill_before_manifest_and_truncated_manifest_recompute(
     res = run("a")
     assert [s.name for s in res.stages if not s.resumed] == ["signatures"]
     assert res.tables["signatures"].count() == 30
+
+
+@pytest.mark.parametrize("kill_at", [3, 5], ids=["in_pairs", "after_clusters"])
+def test_resumed_stage_stats_come_from_its_own_manifest(
+    spark, smoke_data, tmp_path, monkeypatch, kill_at
+):
+    """A run on input B killed partway, after a completed run on input A in
+    the same work_dir, then rerun on B: the resumed stages' stats must be
+    B's, read from B's manifests, never A's from A's metrics.json. The
+    kill is the ``kill_at``-th stage write's row count: in the pairs stage
+    (signatures and candidates resume), or in substring_pairs (every stage
+    up to clusters resumes). 30 conversations have no duplicate edges and
+    200 do, so lsh_buckets, pairs and connected_components all differ
+    between A and B."""
+    from pyspark.sql import Observation
+
+    tr = smoke_data.transcripts
+    ids = sorted(tr["conv_id"].unique())
+    inputs = {}
+    for name, n in (("a", 30), ("b", len(ids))):
+        inputs[name] = str(tmp_path / f"{name}.parquet")
+        tr[tr["conv_id"].isin(ids[:n])].to_parquet(inputs[name], index=False)
+
+    def metrics(name, wd):
+        DedupPipeline(spark, CFG, work_dir=wd).run(spark.read.parquet(inputs[name]))
+        with open(os.path.join(wd, "metrics.json")) as f:
+            return json.load(f)
+
+    keys = ("lsh_buckets", "pairs", "connected_components")
+    fresh = metrics("b", str(tmp_path / "fresh"))
+    wd = str(tmp_path / "wd")
+    first = metrics("a", wd)
+    assert all(first[k] != fresh[k] for k in keys), (first, fresh)
+
+    class Killed(Exception):
+        pass
+
+    get, calls = Observation.get, []
+
+    def kill(obs):
+        calls.append(obs)
+        if len(calls) == kill_at:
+            raise Killed
+        return get.fget(obs)
+
+    monkeypatch.setattr(Observation, "get", property(kill))
+    with pytest.raises(Killed):
+        metrics("b", wd)
+    monkeypatch.undo()
+
+    rerun = metrics("b", wd)
+    resumed = [s["stage"] for s in rerun["stages"] if s["resumed"]]
+    assert resumed == ["signatures", "candidates", "pairs", "clusters"][:kill_at - 1]
+    assert {k: rerun[k] for k in keys} == {k: fresh[k] for k in keys}
 
 
 def test_pipeline_no_workdir(spark, smoke_transcripts):
