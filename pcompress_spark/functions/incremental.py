@@ -170,9 +170,9 @@ def _delta_exact_edges(csig: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def _doc_evidence(corpus: DataFrame, delta: DataFrame, cfg: DedupConfig,
-                  threshold: float, corpus_sig: DataFrame | None,
-                  pairs: DataFrame | None) -> DataFrame:
+def doc_evidence(corpus: DataFrame, delta: DataFrame, cfg: DedupConfig,
+                 threshold: float, corpus_sig: DataFrame | None,
+                 pairs: DataFrame | None) -> DataFrame:
     """A delta's duplicate evidence in the admission and label cores' row
     form (conv_id_a, conv_id_b, match_kind) over doc_ids: the near pairs
     (``pairs``, precomputed by callers that materialize the pair output,
@@ -238,7 +238,7 @@ def incremental_clusters(
                              jaccard_threshold=threshold)
     if corpus_labels is None:
         corpus_labels = cache.persist(neardup_clusters(corpus, cfg, threshold))
-    edges = _doc_evidence(corpus, delta, cfg, threshold, corpus_sig, pairs)
+    edges = doc_evidence(corpus, delta, cfg, threshold, corpus_sig, pairs)
     changed, untouched = _clusters_core(
         corpus_labels.select(F.col("doc_id").alias("conv_id"), "cluster_id"),
         edges.select("conv_id_a", "conv_id_b"),
@@ -915,8 +915,8 @@ def _clusters_core(labels: DataFrame, edges: DataFrame, delta_ids: DataFrame,
     unchanged.
 
     ``labels`` (conv_id, cluster_id) may also be a store's raw rows, with
-    older rows of a conversation beside its latest one (the stream's label
-    store): a conversation's label only ever falls, because components
+    older rows of a conversation beside its latest one (a label store,
+    pcompress_spark.store.append_labels): a conversation's label only ever falls, because components
     only merge and the label is the component's min conv_id. So a cluster
     id that stops being current never comes back, every row naming a
     current id belongs to a current member of that component, and a stale
@@ -1022,7 +1022,7 @@ def incremental_admission(
     ``pairs`` supplied, ``corpus`` itself is never scanned."""
     cfg = cfg or DedupConfig(shingle_k=3, substring_enabled=False,
                              jaccard_threshold=threshold)
-    evidence = _doc_evidence(corpus, delta, cfg, threshold, corpus_sig, pairs)
+    evidence = doc_evidence(corpus, delta, cfg, threshold, corpus_sig, pairs)
     d_ids = delta.select(F.col("doc_id").alias("conv_id"))
     return _admission(d_ids, evidence, cfg).select(
         F.col("conv_id").alias("doc_id"), "keep", "dup_kind",

@@ -420,11 +420,3 @@ class DedupPipeline:
                 json.dump(metrics, f, indent=2, default=str)
         return result
 
-
-def run_dedup(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    cfg: DedupConfig | None = None,
-    work_dir: str | None = None,
-) -> PipelineResult:
-    return DedupPipeline(spark, cfg, work_dir).run(transcripts)

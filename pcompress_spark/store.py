@@ -15,8 +15,10 @@ micro-batch (streaming/dedup_stream.py), ``run=<tag>`` per admitted delta
   unmarked one, its units untouched, so no caller sees a half compaction;
 - **replay check**: a unit is compacted when a compacted dir's list names
   it. Each list carries forward the lists it merged;
-- **full-table replace** (the CLI's labels table) uses the same tmp,
-  marker and rename step against one destination dir.
+- **label units** (append_labels, read_labels): a label store's unit
+  holds only the rows the label core changed, and an id's current label
+  is the min cluster_id over its rows. The stream and the CLI both keep
+  their labels this way.
 
 Every file operation is on the Hadoop FileSystem API, so a store may live
 on HDFS or S3A as well as on a ``file:`` path."""
@@ -62,17 +64,6 @@ def _read_units(spark, d: str) -> set | None:
             spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")))
     finally:
         stream.close()
-
-
-def _stage(spark, df, tmp: str, names) -> None:
-    """Write ``df`` to ``tmp``, then its unit list: the completion marker."""
-    df.write.mode("overwrite").parquet(tmp)
-    fs, hpath = _fs(spark, tmp)
-    out = fs.create(hpath(f"{tmp}/{UNITS}"), True)
-    try:
-        out.write(json.dumps(sorted(names)).encode())
-    finally:
-        out.close()
 
 
 def _finish(spark, tmp: str, dst: str, victims) -> None:
@@ -131,11 +122,11 @@ def append(df, root: str, key: str, name) -> str:
     return path
 
 
-def remove(spark, root: str, key: str, name) -> bool:
-    """Delete unit ``name``; whether it existed."""
+def remove(spark, root: str, key: str, name) -> None:
+    """Delete unit ``name``, if it exists."""
     path = f"{root.rstrip('/')}/{key}={name}"
     fs, hpath = _fs(spark, path)
-    return bool(fs.delete(hpath(path), True))
+    fs.delete(hpath(path), True)
 
 
 def compact(spark, root: str, key: str, exclude: str | None = None) -> dict:
@@ -147,48 +138,87 @@ def compact(spark, root: str, key: str, exclude: str | None = None) -> dict:
     if len(units) <= 1:
         return {"merged_runs": 0}
     gen = 1 + max((int(n[1:]) for n, _ in units if _is_compacted(n)), default=0)
-    df = spark.read.parquet(*[p for _, p in units])
     tmp = f"{root}/{_TMP}{gen}"
-    _stage(spark, df, tmp, compacted | {n for n, _ in units})
+    spark.read.parquet(*[p for _, p in units]).write.mode("overwrite").parquet(tmp)
+    # the unit list goes in last: it is the completion marker
+    fs, hpath = _fs(spark, tmp)
+    out = fs.create(hpath(f"{tmp}/{UNITS}"), True)
+    try:
+        out.write(json.dumps(sorted(compacted | {n for n, _ in units})).encode())
+    finally:
+        out.close()
     _finish(spark, tmp, f"{root}/{key}=c{gen}", [p for _, p in units])
     return {"merged_runs": len(units), "gen": gen}
 
 
-def stage_replace(spark, df, path: str) -> None:
-    """First half of a full-table replace: the new table goes to
-    ``<path>._tmp`` with its marker; ``path`` is untouched."""
-    path = path.rstrip("/")
-    _stage(spark, df, path + "._tmp", [path.rsplit("/", 1)[-1]])
+def append_labels(spark, root: str, key: str, name, edges, delta_ids, cfg,
+                  id_col: str = "conv_id", listed=None,
+                  stats: dict | None = None) -> None:
+    """Append unit ``name`` of a label store: the rows the label core
+    (functions.incremental._clusters_core) changes when evidence ``edges``
+    (conv_id_a, conv_id_b) and the ids of ``delta_ids`` (column
+    ``id_col``) merge into the store's rows (``id_col``, cluster_id).
+    The core reads every unit but ``name``'s own raw, stale rows included,
+    so a replay merges into the state its first attempt saw. Only changed
+    rows are written, so a unit is O(delta + touched members). Nothing is
+    written when a compacted dir's list already names ``name``.
+    ``listed``: the store's listing, if the caller already took it;
+    ``stats``: the core's path record."""
+    from pyspark.sql import functions as F
+
+    from .functions.incremental import _clusters_core
+
+    units, compacted = listed or listing(spark, root, key)
+    if str(name) in compacted:
+        return
+    prior = [p for n, p in units if n != str(name)]
+    t = delta_ids.schema[id_col].dataType.simpleString()
+    labels = (spark.read.parquet(*prior).select(
+                  F.col(id_col).alias("conv_id"), "cluster_id") if prior
+              else spark.createDataFrame([], f"conv_id {t}, cluster_id {t}"))
+    changed, _ = _clusters_core(
+        labels, edges.select("conv_id_a", "conv_id_b"),
+        delta_ids.select(F.col(id_col).alias("conv_id")), cfg,
+        {} if stats is None else stats)
+    append(changed.withColumnRenamed("conv_id", id_col), root, key, name)
 
 
-def commit_replace(spark, path: str) -> None:
-    """Second half: delete the old table, rename the staged tmp over it."""
-    path = path.rstrip("/")
-    _finish(spark, path + "._tmp", path, [path])
+def read_labels(spark, root: str, key: str, id_col: str = "conv_id"):
+    """The current assignment (``id_col``, cluster_id) of a label store:
+    the min cluster_id over each id's rows. A label only ever falls
+    (components only merge, and the label is the component's min id), so
+    no ordering column is needed. An empty store reads as an empty frame
+    of string ids."""
+    from pyspark.sql import functions as F
 
-
-def recover_replace(spark, path: str) -> None:
-    """Finish or abort an interrupted replace: a marked tmp with no table
-    is renamed into place (the crash hit between delete and rename); a tmp
-    beside an intact table was never committed and is deleted."""
-    path = path.rstrip("/")
-    fs, hpath = _fs(spark, path)
-    if fs.exists(hpath(path)):
-        fs.delete(hpath(path + "._tmp"), True)
-    elif _read_units(spark, path + "._tmp") is not None:
-        _finish(spark, path + "._tmp", path, [])
+    units, _ = listing(spark, root, key)
+    if not units:
+        return spark.createDataFrame([], f"{id_col} string, cluster_id string")
+    return spark.read.parquet(*[p for _, p in units]).groupBy(id_col).agg(
+        F.min("cluster_id").alias("cluster_id"))
 
 
 def refuse_old_state(spark, state_dir: str) -> None:
     """Raise ValueError on a CLI state dir of an older layout: one
     compacted by the older CLI, which kept a ``_compacted_tags.json`` tag
-    manifest beside the tables, or a document state with ``bands/`` and
-    ``md5/`` tables, whose ``sig/`` rows lack the ``band_hashes`` and
-    ``content_md5`` columns that replaced both."""
+    manifest beside the tables; one whose ``labels/`` is a bare table
+    (files directly under it, no ``run=`` units) or has a ``labels._tmp``
+    beside it, from when each run replaced the whole labels table; or a
+    document state with ``bands/`` and ``md5/`` tables, whose ``sig/``
+    rows lack the ``band_hashes`` and ``content_md5`` columns that
+    replaced both."""
     sd = state_dir.rstrip("/")
     fs, hpath = _fs(spark, sd)
     if fs.exists(hpath(f"{sd}/_compacted_tags.json")):
         raise ValueError(_old_layout(f"{sd}/_compacted_tags.json"))
+    labels = f"{sd}/labels"
+    if fs.exists(hpath(labels + "._tmp")) or (fs.exists(hpath(labels)) and any(
+            st.isFile() for st in fs.listStatus(hpath(labels)))):
+        raise ValueError(
+            f"{labels} is from the older state layout, which replaced one "
+            "full labels table per run; the labels store now keeps run=<tag> "
+            "units of changed rows, so bootstrap the state again in a new "
+            "directory")
     for table in ("bands", "md5"):
         if fs.exists(hpath(f"{sd}/{table}")):
             raise ValueError(

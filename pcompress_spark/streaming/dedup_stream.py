@@ -175,62 +175,37 @@ def stateful_assemble_signatures(
 def _update_labels_store(spark, root: str, listed, pairs_out: str,
                          batch_id: int, batch_df: DataFrame,
                          cfg: DedupConfig) -> None:
-    """Streaming cluster maintenance: one micro-batch's label rows, from
-    the label core of functions.incremental.incremental_transcript_clusters
-    (_clusters_core), so a small batch takes the driver path.
-
-    The labels store (``listed``: its store.listing) holds rows (conv_id,
-    cluster_id, src_batch) under ``batch=N`` units; a conversation's
-    CURRENT label is its row with the highest src_batch
-    (read_stream_labels). The core reads the raw rows, stale ones included
-    (safe: a label only ever falls, see _clusters_core), and the batch
-    writes only the rows that may change — touched members, evidence
-    endpoints and its own conversations — so per-batch write volume is
-    O(batch + touched members), never O(stream lifetime). A replay
-    overwrites its own unit; a batch already compacted into the store has
-    nothing left to write.
+    """Streaming cluster maintenance: one micro-batch's ``batch=N`` unit of
+    the labels store (``listed``: its store.listing), written by
+    store.append_labels — the label store run_incremental keeps too, so
+    the batch writes only the rows the label core changes and a small
+    batch takes the core's driver path. A replay overwrites its own unit;
+    a batch already compacted into the store has nothing left to write.
 
     Labels enabled MID-stream (pair batches from label-less runs, an empty
     labels store): the first labeled batch takes the WHOLE pair store as
     its evidence, so components the earlier pairs connect are not split.
     Pre-enablement singletons (in no pair) stay absent until next seen."""
-    from ..functions.incremental import _clusters_core
-
-    units, compacted = listed
     own = str(batch_id)
-    if own in compacted:
-        return
-    prior = [p for n, p in units if n != own]
-    if prior:
-        labels = spark.read.parquet(*prior).select("conv_id", "cluster_id")
+    if any(n != own for n, _ in listed[0]):
         evidence = [f"{pairs_out.rstrip('/')}/batch={own}"]
     else:
-        labels = spark.createDataFrame([], "conv_id string, cluster_id string")
-        units, _ = index_store.listing(spark, pairs_out, "batch")
-        evidence = [p for _, p in units]
-    edges = spark.read.parquet(*evidence).select("conv_id_a", "conv_id_b")
-    changed, _ = _clusters_core(labels, edges, batch_df, cfg, {})
-    index_store.append(
-        changed.withColumn("src_batch", F.lit(batch_id).cast("long")),
-        root, "batch", own)
+        evidence = [p for _, p in index_store.listing(spark, pairs_out, "batch")[0]]
+    index_store.append_labels(spark, root, "batch", own,
+                              spark.read.parquet(*evidence), batch_df, cfg,
+                              listed=listed)
 
 
 def read_stream_labels(spark, work_dir: str) -> DataFrame:
     """Current cluster assignment from a stream's labels store
-    (start_near_dup_stream(with_labels=True)): latest row per conversation
-    — (conv_id, cluster_id). One groupBy over the accumulated label rows;
-    compact_near_dup_store bounds how many dirs that scan lists."""
+    (start_near_dup_stream(with_labels=True)): (conv_id, cluster_id), by
+    store.read_labels. compact_near_dup_store bounds how many dirs its
+    scan lists."""
     import os
 
     root = os.path.join(work_dir, "labels") if not work_dir.rstrip("/").endswith(
         "/labels") else work_dir
-    units, _ = index_store.listing(spark, root, "batch")
-    if not units:
-        return spark.createDataFrame([], "conv_id string, cluster_id string")
-    store = spark.read.parquet(*[p for _, p in units])
-    return store.groupBy("conv_id").agg(
-        F.max_by("cluster_id", "src_batch").alias("cluster_id")
-    )
+    return index_store.read_labels(spark, root, "batch")
 
 
 def _near_dup_process(batch_df: DataFrame, batch_id: int, *, store: str,
@@ -360,13 +335,13 @@ def start_near_dup_stream(
     store: per-batch incremental cluster maintenance (_update_labels_store
     — the same label core as
     functions.incremental.incremental_transcript_clusters, so small batches
-    take its driver path), where a conversation's current assignment is
-    its latest row; read it
-    with ``read_stream_labels(spark, work_dir)``. Accumulated labels equal
-    the batch pipeline's clusters over the same closed conversations
-    (components are the closure of the same pair evidence; min-conv_id
-    labels — pinned by the batch-parity test), with the same hot-bucket
-    scoping as the pair equivalence above.
+    take its driver path), where a batch writes only the label rows it
+    changes and a conversation's current assignment is the min cluster_id
+    over its rows; read it with ``read_stream_labels(spark, work_dir)``.
+    Accumulated labels equal the batch pipeline's clusters over the same
+    closed conversations (components are the closure of the same pair
+    evidence; min-conv_id labels — pinned by the batch-parity test), with
+    the same hot-bucket scoping as the pair equivalence above.
 
     Store compaction: pass ``compact_every=K`` to auto-compact the
     signature and label stores every K micro-batches. The hook runs at the

@@ -336,7 +336,7 @@ def test_cli_state_compaction(spark, tmp_path):
     K+1 must produce byte-identical admission/pairs/labels to the
     uncompacted state (VERDICT r3 'done' criterion); plus crash recovery
     of an interrupted compaction, the compacted-tag replay refusal, and
-    the refusal of a state dir of the older tag-manifest layout."""
+    the refusal of state dirs of older layouts."""
     import json
     import os
     import shutil
@@ -379,9 +379,10 @@ def test_cli_state_compaction(spark, tmp_path):
     assert ri.main(["--compact", "--state-dir", state_a,
                     "--master", "inherit"]) == 0
     assert sorted(os.listdir(state_a)) == ["labels", "sig"]
-    subs = [d for d in os.listdir(os.path.join(state_a, "sig"))
-            if d.startswith("run=")]
-    assert subs == ["run=c1"], subs
+    for t in ("sig", "labels"):
+        subs = [d for d in os.listdir(os.path.join(state_a, t))
+                if d.startswith("run=")]
+        assert subs == ["run=c1"], (t, subs)
     # the merge keeps one signature row per doc
     assert pd.read_parquet(os.path.join(state_a, "sig"))["doc_id"].is_unique
 
@@ -399,9 +400,13 @@ def test_cli_state_compaction(spark, tmp_path):
         pd.testing.assert_frame_equal(
             table(str(tmp_path / "oa" / sub)),
             table(str(tmp_path / "ob" / sub)))
-    pd.testing.assert_frame_equal(
-        table(os.path.join(state_a, "labels")),
-        table(os.path.join(state_b, "labels")))
+
+    def labels(st):
+        df = store.read_labels(spark, os.path.join(st, "labels"), "run",
+                               "doc_id").toPandas()
+        return df.sort_values(list(df.columns)).reset_index(drop=True)
+
+    pd.testing.assert_frame_equal(labels(state_a), labels(state_b))
 
     # replay of a compacted tag is refused with the real story
     with pytest.raises(SystemExit, match="compacted"):
@@ -447,9 +452,11 @@ def test_cli_state_compaction(spark, tmp_path):
 
     # older layouts are refused before any write, the tree left byte for
     # byte as it was: a state dir compacted by the older CLI (a tag
-    # manifest beside the tables, compacted dirs without unit lists), and
-    # a docs state with the bands/ and md5/ tables the signature table's
-    # band_hashes and content_md5 columns replaced
+    # manifest beside the tables, compacted dirs without unit lists), one
+    # whose labels/ is the bare full table each older run replaced (or has
+    # that replace's labels._tmp beside it), and a docs state with the
+    # bands/ and md5/ tables the signature table's band_hashes and
+    # content_md5 columns replaced
     import hashlib
     import pathlib
 
@@ -458,8 +465,12 @@ def test_cli_state_compaction(spark, tmp_path):
                     p.read_bytes()).hexdigest()
                 for p in pathlib.Path(root).rglob("*")}
 
+    bare_labels = labels(state_b)
     for name, plant, match in (
             ("state_old", "_compacted_tags.json", "_compacted_tags.json"),
+            ("state_old_labels", "labels", "labels is from the older state"),
+            ("state_old_labels_tmp", "labels._tmp",
+             "labels is from the older state"),
             ("state_old_bands", "bands", "bands is from the older document"),
             ("state_old_md5", "md5", "md5 is from the older document")):
         state_old = str(tmp_path / name)
@@ -467,6 +478,15 @@ def test_cli_state_compaction(spark, tmp_path):
         if plant.endswith(".json"):
             with open(os.path.join(state_old, plant), "w") as f:
                 json.dump({"day1": 1}, f)
+        elif plant.startswith("labels"):
+            # the older CLI's labels table, one bare parquet table, or the
+            # tmp copy its replace staged beside the table
+            if plant == "labels":
+                shutil.rmtree(os.path.join(state_old, plant))
+            os.makedirs(os.path.join(state_old, plant))
+            bare_labels.to_parquet(
+                os.path.join(state_old, plant, "part-00000.parquet"),
+                index=False)
         else:
             # an older docs state's table: its units hold sig/'s layout
             shutil.copytree(os.path.join(state_old, "sig"),
@@ -479,3 +499,77 @@ def test_cli_state_compaction(spark, tmp_path):
                 ri.main(argv + ["--state-dir", state_old, "--master", "inherit"])
         assert tree(state_old) == files
         assert not os.path.exists(tmp_path / "od")
+
+
+def test_cli_chained_transcript_ingest(spark, tmp_path):
+    """Three transcript deltas chained through tools/run_incremental.py,
+    with --compact between the 2nd and the 3rd. After each delta the label
+    store's reader gives what incremental_transcript_clusters' full-table
+    merge over the previous step's labels gives, one row per conversation,
+    and the run's labels unit holds fewer rows than the corpus (the write
+    is O(delta)). Each delta plants a copy of one corpus conversation
+    under a smaller conv_id, so that cluster's label falls every step and
+    stale rows sit in the store beside the current ones."""
+    import os
+    import sys as _sys
+
+    import pandas as pd
+
+    from pcompress_spark import store
+    from pcompress_spark.sources.tables import transcripts_path
+
+    REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    _sys.path.insert(0, os.path.join(REPO, "tools"))
+    import run_incremental as ri
+
+    tr = pd.read_parquet(transcripts_path(SF))
+    ids = sorted(tr["conv_id"].unique())
+    src = ids[0]
+    corpus_ids, delta_ids = ids[:40], [ids[40 + 8 * k:48 + 8 * k] for k in range(3)]
+    paths = {"corpus": str(tmp_path / "corpus.parquet")}
+    tr[tr["conv_id"].isin(corpus_ids)].to_parquet(paths["corpus"], index=False)
+    for k, (ds, copy_id) in enumerate(zip(delta_ids,
+                                          ("zdup-1", "adup-2", "0dup-3"))):
+        delta = pd.concat([tr[tr["conv_id"].isin(ds)],
+                           tr[tr["conv_id"] == src].assign(conv_id=copy_id)],
+                          ignore_index=True)
+        paths[k] = str(tmp_path / f"delta{k}.parquet")
+        delta.to_parquet(paths[k], index=False)
+    state = str(tmp_path / "state")
+    common = ["--mode", "transcripts", "--state-dir", state, "--master", "inherit"]
+    cfg = DedupConfig(jaccard_threshold=0.3)
+
+    def read_labels():
+        df = store.read_labels(spark, os.path.join(state, "labels"), "run")
+        return df.toPandas()
+
+    assert ri.main(["--bootstrap", "--corpus", paths["corpus"]] + common) == 0
+    prev = read_labels()
+    seen = set(corpus_ids)
+    for k in range(3):
+        if k == 2:
+            assert ri.main(["--compact"] + common) == 0
+        out = str(tmp_path / f"out{k}")
+        assert ri.main(["--delta", paths[k], "--out", out,
+                        "--run-tag", f"day{k}"] + common) == 0
+        want = incremental.incremental_transcript_clusters(
+            None, None, cfg,
+            corpus_labels=spark.createDataFrame(
+                prev, "conv_id string, cluster_id string"),
+            delta_sig=spark.read.parquet(f"{out}/delta_sig"),
+            pairs=spark.read.parquet(f"{out}/pairs")).toPandas()
+        got = read_labels()
+        seen |= set(pd.read_parquet(paths[k])["conv_id"])
+        assert got["conv_id"].is_unique
+        assert set(got["conv_id"]) == seen
+        assert (dict(zip(got["conv_id"], got["cluster_id"]))
+                == dict(zip(want["conv_id"], want["cluster_id"])))
+        unit = pd.read_parquet(os.path.join(state, "labels", f"run=day{k}"))
+        assert 0 < len(unit) < len(corpus_ids)
+        prev = want
+    # the planted copies' cluster took a smaller label at every step: the
+    # reader's min over stale rows gives the latest, 0dup-3
+    assert dict(zip(got["conv_id"], got["cluster_id"]))[src] == "0dup-3"
+    raw = pd.read_parquet(os.path.join(state, "labels"))
+    assert set(raw.loc[raw["conv_id"] == src, "cluster_id"]) == {
+        src, "adup-2", "0dup-3"}

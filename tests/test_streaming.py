@@ -526,7 +526,7 @@ def test_streaming_labels_match_batch(spark, timed_transcripts, tmp_path):
     assert {r.conv_id for r in half_b.select("conv_id").collect()} <= b1
     assert len(b1) < len(want)
 
-    # compaction (union-merge; src_batch rides in-row) preserves labels
+    # compaction (union-merge; the reader's min label needs no order) preserves labels
     compact_near_dup_store(spark, str(wd))
     got2 = {r.conv_id: r.cluster_id
             for r in read_stream_labels(spark, str(wd)).collect()}

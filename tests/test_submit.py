@@ -93,12 +93,14 @@ def test_get_spark_inherit_honors_launcher_master(tmp_path):
     assert "INHERIT_OK" in out.stdout
 
 
-def test_run_incremental_script_loop(tmp_path):
+def test_run_incremental_script_loop(spark, tmp_path):
     """tools/run_incremental.py (the daily-ingest spark-submit entry):
     bootstrap corpus state, admit a day-1 delta, then admit a day-2 delta
     whose exact copy of a day-1 ADMITTED doc must be dropped against the
     UPDATED state — the loop genuinely folds admitted docs into the corpus."""
     import pandas as pd
+
+    from pcompress_spark import store
 
     docs = pd.read_parquet("/root/testdata/sf0.001/documents.parquet")[
         ["doc_id", "text"]]
@@ -154,7 +156,11 @@ def test_run_incremental_script_loop(tmp_path):
     assert adm2.at[900002, "keep"] == 1
 
     # merged labels cover corpus + both deltas; the copy joined d's cluster
-    labels = pd.read_parquet(os.path.join(state, "labels")).set_index("doc_id")
+    def read_labels():
+        return store.read_labels(spark, os.path.join(state, "labels"), "run",
+                                 "doc_id").toPandas()
+
+    labels = read_labels().set_index("doc_id")
     assert set(labels.index) >= set(corpus["doc_id"]) | set(delta1["doc_id"]) | {
         900001, 900002}
     assert labels.at[900001, "cluster_id"] == labels.at[d, "cluster_id"]
@@ -165,17 +171,20 @@ def test_run_incremental_script_loop(tmp_path):
     # counts and labels are unchanged — no duplicate signature/md5 rows that
     # would poison future hot-bucket capping or pair outputs
     sig_rows = len(pd.read_parquet(os.path.join(state, "sig")))
+    label_rows = len(pd.read_parquet(os.path.join(state, "labels")))
     out2b = subprocess.run(
         [sys.executable, script, "--delta", d2path,
          "--out", str(tmp_path / "out2"), "--run-tag", "day2"] + common,
         capture_output=True, text=True, timeout=600, cwd=REPO, env=env)
     assert out2b.returncode == 0, out2b.stderr[-3000:]
     assert len(pd.read_parquet(os.path.join(state, "sig"))) == sig_rows
-    labels2_raw = pd.read_parquet(os.path.join(state, "labels"))
-    # exactly ONE row per doc after replay (set_index would mask dup rows)
-    assert len(labels2_raw) == len(labels)
-    assert labels2_raw["doc_id"].is_unique
-    labels2 = labels2_raw.set_index("doc_id")
+    # the raw label rows are unchanged, and the reader still gives exactly
+    # ONE row per doc (set_index would mask dup rows)
+    assert len(pd.read_parquet(os.path.join(state, "labels"))) == label_rows
+    labels2_read = read_labels()
+    assert len(labels2_read) == len(labels)
+    assert labels2_read["doc_id"].is_unique
+    labels2 = labels2_read.set_index("doc_id")
     assert labels2["cluster_id"].to_dict() == labels["cluster_id"].to_dict()
 
     # reused-tag guard: running a DIFFERENT delta under day2's tag must be
@@ -202,7 +211,7 @@ def test_run_incremental_script_loop(tmp_path):
     assert "collide" in (out3.stderr + out3.stdout)
 
 
-def test_run_incremental_transcripts_mode(tmp_path):
+def test_run_incremental_transcripts_mode(spark, tmp_path):
     """--mode transcripts: conversation-granular daily ingest — bootstrap
     signature/label state from a corpus of transcripts, then admit a delta
     whose planted exact copy of a corpus conversation must be dropped with
@@ -210,6 +219,7 @@ def test_run_incremental_transcripts_mode(tmp_path):
     the copy in that conversation's cluster."""
     import pandas as pd
 
+    from pcompress_spark import store
     from pcompress_spark.sources.tables import transcripts_path
 
     tr = pd.read_parquet(transcripts_path("/root/testdata/sf0.001"))
@@ -252,7 +262,8 @@ def test_run_incremental_transcripts_mode(tmp_path):
     assert adm.at["zdup-0000001", "dup_kind"] == "exact"
     assert adm.at["zdup-0000001", "dup_of"] == src_conv  # corpus priority
 
-    labels = pd.read_parquet(os.path.join(state, "labels"))
+    labels = store.read_labels(
+        spark, os.path.join(state, "labels"), "run").toPandas()
     assert labels["conv_id"].is_unique
     assert set(labels["conv_id"]) >= set(corpus["conv_id"]) | set(delta["conv_id"])
     lab = labels.set_index("conv_id")["cluster_id"]

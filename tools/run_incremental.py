@@ -12,16 +12,19 @@ State layout under --state-dir (parquet stage tables, the "persisted
 corpus run" inputs of functions/incremental.py), the same in both modes:
 
     sig/     signatures            (store units: run=<tag>/)
-    labels/  cluster assignment    (FULL table, atomically replaced per run)
+    labels/  cluster assignment    (store units: run=<tag>/, changed rows)
 
 sig/ is the only index: its band_hashes column is the band index and its
 content hash (docs: content_md5, transcripts: content_hash) the exact
-index. It is a unit store of pcompress_spark.store, the same append,
-listing and compaction protocol as the near-dup stream's stores.
-Periodic maintenance: ``--compact`` merges sig/'s run=<tag> units into
-one ``run=c<G>`` dir, so a year of daily deltas doesn't leave every probe
-listing 365 subdirs. Run it quiesced (no
-delta in flight). It is crash-safe: the merge goes to a hidden tmp dir,
+index. labels/ is a label store (pcompress_spark.store.append_labels):
+a run appends only the rows the label core changes, the bootstrap
+appends the batch labels, and a doc's current label is the min
+cluster_id over its rows (store.read_labels). Both are unit stores of
+pcompress_spark.store, the same append, listing and compaction protocol
+as the near-dup stream's stores. Periodic maintenance: ``--compact``
+merges each table's run=<tag> units into one ``run=c<G>`` dir, so a year
+of daily deltas doesn't leave every probe listing 365 subdirs. Run it
+quiesced (no delta in flight). It is crash-safe: the merge goes to a hidden tmp dir,
 the list of merged units goes into that tmp as its completion marker,
 then exactly the listed units are deleted and the tmp is renamed; the
 next listing finishes a marked tmp and discards an unmarked one.
@@ -31,8 +34,10 @@ explanation (its appends can no longer be deleted-and-redone; the delta
 was committed before compaction by the quiesce contract). A state dir of
 an older layout is refused with a ValueError before any write: one
 compacted by an older release, which kept a tag manifest beside the
-tables, and a docs state with bands/ and md5/ tables, whose sig/ rows
-lack the columns that replaced them.
+tables; one whose labels/ is a bare table (or has a labels._tmp beside
+it), from when each run replaced the whole labels table; and a docs
+state with bands/ and md5/ tables, whose sig/ rows lack the columns that
+replaced them.
 
 Bootstrap once from the existing corpus:
 
@@ -51,33 +56,28 @@ the admission verdict and the label merge), and delta_sig/ (the delta's
 signatures, materialized once — pair generation and the state fold both
 read it, so the Arrow kernel chain runs a single time per delta).
 Admitted (keep=1) docs'
-signature rows are appended to the state; labels/ is rewritten
-with the merged assignment (corpus ∪ delta — dropped dups keep a label row
-recording which cluster absorbed them). Scale note: state appends and all
-probes are O(delta + touched); only the labels rewrite is O(corpus
-label rows), a narrow table. The near-dup stream's labels store instead
-appends only the rows the same label core changes
-(streaming/dedup_stream._update_labels_store).
+signature rows are appended to the state; labels/ gets the run's changed
+label rows (delta docs, evidence endpoints and every member of a cluster
+they touch — dropped dups keep a label row recording which cluster
+absorbed them). Scale note: state appends, label appends and all probes
+are O(delta + touched); the label core reads the label rows, a narrow
+table.
 
 Crash safety / idempotent re-run protocol:
   - the default run tag is a HASH OF THE DELTA'S FILE LISTING, so
     re-running a crashed (or even completed) delta reuses the same tag;
-  - a run first DELETES any partial run=<tag> state subdirs from a prior
-    attempt, so state reads always see the pre-run corpus and appends are
-    never duplicated;
-  - every output that depends on pre-run state (pairs, admission, the
-    merged labels) is MATERIALIZED before any state mutation: labels are
-    staged to labels._tmp first (with the store's completion marker), the
-    sig/ fold runs next, and the labels commit (delete + rename)
-    happens last (pcompress_spark.store's full-table replace);
-  - an interrupted commit is recovered at the next run's start: a marked
-    labels._tmp with no labels/ is renamed into place; a stale tmp next to
-    an intact labels/ is deleted.
+  - a run first DELETES any partial run=<tag> units of sig/ and labels/
+    from a prior attempt, so state reads always see the pre-run corpus,
+    appends are never duplicated, and the id collision guard below holds
+    on a replay too;
+  - every output that depends on pre-run state (pairs, admission) is
+    MATERIALIZED before any state mutation; then the run=<tag> label unit
+    is appended (its core reads the pre-run labels), then the sig/ fold.
   A killed run at ANY point therefore re-runs to the same end state.
 
 Delta doc_ids must be disjoint from the corpus state's doc_ids (validated
-against the signature table before any work; a collision would produce
-conflicting duplicate label rows).
+against the sig/ and labels/ tables before any work, on a replay too; a
+collision would produce conflicting label rows).
 
 Input: parquet with columns (doc_id long, text string).
 """
@@ -94,27 +94,36 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pcompress_spark import store  # noqa: E402
 
 
-def _delete_run_dirs(spark, paths: dict, tag: str, delta, id_col: str) -> bool:
+def _delete_run_dirs(spark, paths: dict, tag: str, delta, id_col: str) -> None:
     """Idempotent re-run cleanup: finish or discard any interrupted
-    compaction (store.listing), then drop any run=<tag> appends a prior
-    attempt of THIS delta left behind, so state reads see the pre-run
-    corpus and the folds below never duplicate rows. Returns whether a
-    prior attempt existed (its labels merge may already be committed —
-    the caller relaxes the doc_id collision guard accordingly).
+    compaction (store.listing), then drop any run=<tag> units a prior
+    attempt of THIS delta left behind in sig/ and labels/, so state reads
+    see the pre-run corpus and the appends below never duplicate rows.
 
-    Guard against a REUSED tag (an operator passing another delta's
-    --run-tag by mistake): deleting a different delta's committed appends
-    would silently blind all future probes to its docs, so refuse unless
-    the existing run dir's doc_ids are a subset of this delta's."""
+    A tag in a compacted dir's unit list is refused: its units were merged
+    into a run=c<G> dir and can no longer be deleted-and-redone. Guard
+    against a REUSED tag (an operator passing another delta's --run-tag by
+    mistake): deleting a different delta's committed appends would
+    silently blind all future probes to its docs, so refuse unless the
+    existing sig/ unit's doc_ids are a subset of this delta's."""
     from pyspark.sql import functions as F
 
-    listed = {k: store.listing(spark, p, "run")
-              for k, p in paths.items() if k != "labels"}
-    units, compacted = listed["sig"]
-    prior = tag in dict(units)
-    if prior:
+    listed = {k: store.listing(spark, p, "run") for k, p in paths.items()}
+    if any(tag in compacted for _, compacted in listed.values()):
+        # the delta was fully committed before compaction (compaction only
+        # runs on quiesced, committed state), so a replay has nothing left
+        # to do — refuse with the real story instead of letting the
+        # collision guard fire
+        raise SystemExit(
+            f"run={tag} was committed and later compacted into a run=c<G> "
+            "dir; its admission outputs were finalized before compaction "
+            "and its state rows are merged. Re-running this delta would "
+            "admit it against a corpus that already contains it — nothing "
+            "to do.")
+    units = dict(listed["sig"][0])
+    if tag in units:
         foreign = (
-            spark.read.parquet(dict(units)[tag]).select(id_col)
+            spark.read.parquet(units[tag]).select(id_col)
             .join(F.broadcast(delta.select(id_col).distinct()),
                   id_col, "left_anti")
             .limit(5)
@@ -127,21 +136,8 @@ def _delete_run_dirs(spark, paths: dict, tag: str, delta, id_col: str) -> bool:
                 " — the tag belongs to a DIFFERENT delta; deleting it would"
                 " orphan those docs from all future dedup probes. Pass a"
                 " unique --run-tag (or omit it for the file-listing hash).")
-    for k in listed:
-        prior = store.remove(spark, paths[k], "run", tag) or prior
-    if not prior and tag in compacted:
-        # a compacted tag's appends were merged into a run=c<G> dir and can
-        # no longer be deleted-and-redone; the delta was fully committed
-        # before compaction (compaction only runs on quiesced, committed
-        # state), so a replay has nothing left to do — refuse with the
-        # real story instead of letting the collision guard fire
-        raise SystemExit(
-            f"run={tag} was committed and later compacted into a run=c<G> "
-            "dir; its admission outputs were finalized before compaction "
-            "and its state rows are merged. Re-running this delta would "
-            "admit it against a corpus that already contains it — nothing "
-            "to do.")
-    return prior
+    for p in paths.values():
+        store.remove(spark, p, "run", tag)
 
 
 def _default_tag(delta_df) -> str:
@@ -158,9 +154,8 @@ def _default_tag(delta_df) -> str:
 
 
 def _open_run(spark, ap, args, paths: dict, id_col: str):
-    """The start of every delta run, both modes: (delta, tag, corpus_sig,
-    corpus_labels), after the idempotent re-run cleanup and, on a first
-    attempt, the id collision guard."""
+    """The start of every delta run, both modes: (delta, tag, corpus_sig),
+    after the idempotent re-run cleanup and the id collision guard."""
     from pyspark.sql import functions as F
 
     if not args.delta or not args.out:
@@ -172,35 +167,31 @@ def _open_run(spark, ap, args, paths: dict, id_col: str):
         spark.catalog.refreshByPath(p)
     delta = spark.read.parquet(args.delta)
     tag = args.run_tag or _default_tag(delta)
-    prior_attempt = _delete_run_dirs(spark, paths, tag, delta, id_col)
-    store.recover_replace(spark, paths["labels"])
+    _delete_run_dirs(spark, paths, tag, delta, id_col)
     # drop the run=<tag> partition column the append layout induces — the
     # stage-table consumers expect the bare signature/band schemas
     corpus_sig = spark.read.parquet(paths["sig"]).drop("run")
-    corpus_labels = spark.read.parquet(paths["labels"])
-    # id spaces MUST be disjoint: a colliding id would get two
-    # conflicting label rows (untouched passthrough + fresh CC) and the
-    # admission verdict would compare the doc against itself-as-corpus.
-    # Probe labels ∪ signatures: labels also cover DROPPED delta docs
-    # (keep=0 rows are merged into labels but never folded into sig),
-    # signatures cover a crash window before the labels commit. Both
-    # probes are map-side broadcast filters over one narrow column.
-    # Skipped on a replay of this same tag — the first attempt validated
-    # disjointness, and its own committed labels would now false-positive.
-    if not prior_attempt:
-        clash = (
-            corpus_sig.select(id_col).unionByName(corpus_labels.select(id_col))
-            .join(F.broadcast(delta.select(id_col).distinct()),
-                  id_col, "left_semi")
-            .limit(5)
-            .collect()
-        )
-        if clash:
-            raise SystemExit(
-                f"delta {id_col}s collide with corpus state (sample: "
-                f"{sorted(set(r[id_col] for r in clash))}); {id_col} spaces "
-                "must be disjoint — re-key the delta before admission")
-    return delta, tag, corpus_sig, corpus_labels
+    # id spaces MUST be disjoint: a colliding id would get conflicting
+    # label rows and the admission verdict would compare the doc against
+    # itself-as-corpus. Probe labels ∪ signatures: labels also cover
+    # DROPPED delta docs (keep=0 rows get label rows but never fold into
+    # sig). A replay's own run=<tag> units are gone by now, so the guard
+    # holds on a replay too. Both probes are map-side broadcast filters
+    # over one narrow column.
+    clash = (
+        corpus_sig.select(id_col)
+        .unionByName(spark.read.parquet(paths["labels"]).select(id_col))
+        .join(F.broadcast(delta.select(id_col).distinct()),
+              id_col, "left_semi")
+        .limit(5)
+        .collect()
+    )
+    if clash:
+        raise SystemExit(
+            f"delta {id_col}s collide with corpus state (sample: "
+            f"{sorted(set(r[id_col] for r in clash))}); {id_col} spaces "
+            "must be disjoint — re-key the delta before admission")
+    return delta, tag, corpus_sig
 
 
 def _written(spark, df, path: str):
@@ -247,16 +238,14 @@ def _transcripts_run(spark, ap, args, cfg, paths: dict) -> int:
         sig_t = spark.read.parquet(store.append(
             compute_signatures(assemble(corpus), cfg),
             paths["sig"], "run", "bootstrap"))
-        labels = incremental.batch_pairs(sig_t, cfg).labels()
-        store.stage_replace(spark, labels, paths["labels"])
-        store.commit_replace(spark, paths["labels"])
+        store.append(incremental.batch_pairs(sig_t, cfg).labels(),
+                     paths["labels"], "run", "bootstrap")
         print(json.dumps({"bootstrapped": True, "mode": "transcripts",
                           "state_dir": args.state_dir.rstrip("/"),
                           "convs": sig_t.count()}))
         return 0
 
-    delta, tag, corpus_sig, corpus_labels = _open_run(
-        spark, ap, args, paths, "conv_id")
+    delta, tag, corpus_sig = _open_run(spark, ap, args, paths, "conv_id")
     # signatures ONCE (kernel chain runs a single time over the delta)
     delta_sig = _written(spark, compute_signatures(assemble(delta), cfg),
                          f"{args.out}/delta_sig")
@@ -270,15 +259,12 @@ def _transcripts_run(spark, ap, args, cfg, paths: dict) -> int:
     adm = _written(spark, incremental.incremental_transcript_admission(
         delta_sig.select("conv_id"), pairs, cfg, stats=steps["admission"]),
         f"{args.out}/admission")
-    labels = incremental.incremental_transcript_clusters(
-        empty_tr, empty_tr, cfg, corpus_labels=corpus_labels,
-        corpus_sig=corpus_sig, delta_sig=delta_sig, pairs=pairs,
-        stats=steps["clusters"])
-    store.stage_replace(spark, labels, paths["labels"])
+    store.append_labels(spark, paths["labels"], "run", tag, pairs,
+                        delta_sig.select("conv_id"), cfg,
+                        stats=steps["clusters"])
     store.append(delta_sig.join(
         adm.where(F.col("keep") == 1).select("conv_id"), "conv_id", "left_semi"
     ), paths["sig"], "run", tag)
-    store.commit_replace(spark, paths["labels"])
     return _close_run(adm, run=tag, mode="transcripts",
                       delta_convs=delta_sig.count(), out=args.out,
                       steps=steps)
@@ -311,7 +297,8 @@ def main(argv: list[str] | None = None) -> int:
                          "an explicit tag must be unique per delta)")
     ap.add_argument("--compact", action="store_true",
                     help="merge the per-run append subdirs of the sig/ "
-                         "table into one run=c<G> dir and exit "
+                         "and labels/ tables into one run=c<G> dir each "
+                         "and exit "
                          "(quiesced maintenance — no delta run may be in "
                          "flight; admission behavior is unchanged)")
     args = ap.parse_args(argv)
@@ -333,7 +320,8 @@ def main(argv: list[str] | None = None) -> int:
     if args.compact:
         print(json.dumps({"compacted": True, "mode": args.mode,
                           "state_dir": sd, "tables": {
-                              "sig": store.compact(spark, paths["sig"], "run")}}))
+                              k: store.compact(spark, p, "run")
+                              for k, p in paths.items()}}))
         return 0
 
     overrides = json.loads(args.config_json) if args.config_json else {}
@@ -355,16 +343,13 @@ def main(argv: list[str] | None = None) -> int:
         sig_t = spark.read.parquet(store.append(
             doc_dedup.doc_signatures(corpus, cfg), paths["sig"], "run",
             "bootstrap"))
-        store.stage_replace(
-            spark, doc_dedup.neardup_clusters(corpus, cfg, args.threshold),
-            paths["labels"])
-        store.commit_replace(spark, paths["labels"])
+        store.append(doc_dedup.neardup_clusters(corpus, cfg, args.threshold),
+                     paths["labels"], "run", "bootstrap")
         print(json.dumps({"bootstrapped": True, "state_dir": sd,
                           "docs": sig_t.count()}))
         return 0
 
-    delta, tag, corpus_sig, corpus_labels = _open_run(
-        spark, ap, args, paths, "doc_id")
+    delta, tag, corpus_sig = _open_run(spark, ap, args, paths, "doc_id")
     # corpus text is never read in this loop: every probe rides the stage
     # tables. The `corpus` argument only backstops missing stage tables,
     # so pass an empty frame to make an accidental corpus scan impossible.
@@ -385,21 +370,19 @@ def main(argv: list[str] | None = None) -> int:
         empty_corpus, delta, cfg, args.threshold,
         corpus_sig=corpus_sig, pairs=pairs,
     ), f"{args.out}/admission")
-    labels = incremental.incremental_clusters(
-        empty_corpus, delta, cfg, args.threshold,
-        corpus_labels=corpus_labels, corpus_sig=corpus_sig, pairs=pairs,
-    )
-    # stage the merged labels BEFORE mutating any state (the clusters plan
-    # reads corpus_labels/sig — materialize it while they are still
-    # pre-run), fold next, commit the labels rename last
-    store.stage_replace(spark, labels, paths["labels"])
+    # the label unit BEFORE the fold: the evidence's exact edges probe
+    # corpus_sig while it is still pre-run
+    store.append_labels(spark, paths["labels"], "run", tag,
+                        incremental.doc_evidence(
+                            empty_corpus, delta, cfg, args.threshold,
+                            corpus_sig, pairs),
+                        delta.select("doc_id"), cfg, id_col="doc_id")
     # fold = the already-materialized delta signatures filtered to the
     # admitted subset (signatures are per-doc deterministic, so this is
     # bit-identical to recomputing them — without a second kernel pass)
     store.append(delta_sig.join(
         adm.where(F.col("keep") == 1).select("doc_id"), "doc_id", "left_semi"
     ), paths["sig"], "run", tag)
-    store.commit_replace(spark, paths["labels"])
     return _close_run(adm, run=tag, delta_docs=delta.count(), out=args.out)
 
 
